@@ -297,9 +297,7 @@ object PlannerMechanisms {
   // partitions, asymmetric retention), which is the everyday state
   // of two independently-loaded 100 TB tables.
   def q251StoragePartitionedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -452,9 +450,7 @@ object PlannerMechanisms {
   // — unlike q243's fixture-scaled knobs, nothing is tuned for test
   // size; a filtered dim under the bar converts at any SF.
   def q257AqeJoinDemotion(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "10m")
     demotedJoin(s, dir)
@@ -501,9 +497,7 @@ object PlannerMechanisms {
   // expression, and the magic-invoke form keeps it inside whole-stage
   // codegen (an opaque UDF would fence the span).
   def q259V2FunctionCatalog(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     s.conf.set("spark.sql.catalog.graft_fns",
       classOf[graft.functions.GraftFunctionCatalog].getName)
     catalogFnReport(s, dir)
@@ -624,9 +618,7 @@ object PlannerMechanisms {
   // join — ordering metadata is what makes write-time sorting
   // actually purchasable.
   def q273ReportedOrdering(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

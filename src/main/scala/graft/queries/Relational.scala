@@ -402,9 +402,7 @@ object Relational {
   // runtime stats; AQE replans from observed sizes, handling drift
   // (today's hot key is not yesterday's) with no pipeline change.
   def q243AqeSkewJoin(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
       "1KB")
     s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1KB")
@@ -462,9 +460,7 @@ object Relational {
   // reorder is how the engine gets it right without hand-tuning
   // every query.
   def q242CboReorder(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     s.conf.set("spark.sql.cbo.enabled", "true")
     s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -569,9 +565,7 @@ object Relational {
   // ~8 MB broadcast bitmap. This is the standard semi-join reduction
   // for fact-to-large-dim joins.
   def q237RuntimeFilter(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     s.conf.set(
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
       "0")

@@ -539,9 +539,7 @@ object FormatQueries {
   // seconds from footers and a full-corpus scan; the same footers
   // feed row-group skipping (q63) and z-order pruning (q102).
   def q252AggPushdown(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     s.conf.set("spark.sql.parquet.aggregatePushdown", "true")
     s.conf.set("spark.sql.sources.useV1SourceList", "")
     footerAudit(s, dir)
@@ -674,9 +672,7 @@ object FormatQueries {
   // 9 999 days. The reject-don't-approximate contract is what makes
   // that safe to automate.
   def q261V2MetadataDelete(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q261", dir)
     val keyed = Tables.events(s, dir)
       .select((col("event_id") % 101).as("k"), col("event_id").as("v"))
@@ -721,9 +717,7 @@ object FormatQueries {
   // manifest IS the snapshot; no data movement, retention is the only
   // cost.
   def q263TimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q263", dir)
     // deterministic two-version history per invocation
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
@@ -940,9 +934,7 @@ object FormatQueries {
   // a full-table rewrite into a 10% one. The swap is atomic at the
   // manifest publish, so readers never see a half-updated table.
   def q274RowLevelUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q274", dir)
     // UPDATE is not idempotent: rebuild the table every invocation
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
@@ -981,9 +973,7 @@ object FormatQueries {
   // q274 (touch only groups the ON clause can reach) plus atomic
   // publish so a failed merge is a no-op, not a half-upsert.
   def q275MergeUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q275", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     def keyed(pred: org.apache.spark.sql.Column) =
@@ -1036,9 +1026,7 @@ object FormatQueries {
   // be proportional to the multi-file GROUPS, not the table — and the
   // publish must stay a metadata swap so readers never block.
   def q276CompactProcedure(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q276", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     def keyed(pred: org.apache.spark.sql.Column) =
@@ -1093,9 +1081,7 @@ object FormatQueries {
   // refused pushdowns are the honest price: manifest counts ignore
   // tombstones, so MoR reads must go through the merging scan.
   def q277MorDelete(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q277", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val keyed = Tables.events(s, dir)
@@ -1142,9 +1128,7 @@ object FormatQueries {
   // read-side merge — the same trade as q277, now for the write path
   // production pipelines use most.
   def q279MorUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q279", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val keyed = Tables.events(s, dir)
@@ -1194,9 +1178,7 @@ object FormatQueries {
   // files are untouched), distributed like any scan, and atomic at
   // the manifest swap, so readers never see a half-vacuumed table.
   def q280MorVacuum(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q280", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val keyed = Tables.events(s, dir)
@@ -1250,9 +1232,7 @@ object FormatQueries {
   // pointer. The audit step reading BY NUMBER is what makes the gate
   // real: the candidate is immutable while under review.
   def q283WriteAuditPublish(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q283", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     def keyed(i: Int) =
@@ -1306,9 +1286,7 @@ object FormatQueries {
   // scan time from the split, prunes like any column, and is exactly
   // what a targeted deletion vector then addresses.
   def q284MorLineage(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q284", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val keyed = Tables.events(s, dir)
@@ -1356,9 +1334,7 @@ object FormatQueries {
   // scan. It is the knob that turns keep-everything reproducibility
   // into a bounded retention window with named releases kept forever.
   def q285ExpireSnapshots(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q285", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     def keyed(i: Int) =
@@ -1429,9 +1405,7 @@ object FormatQueries {
   // which must cost METADATA, not a scan; t.files is thousands of
   // rows where the data is billions.
   def q286MetadataTables(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q286", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     def keyed(i: Int) =
@@ -1501,9 +1475,7 @@ object FormatQueries {
   // repartition discipline; bounded file counts (buckets, not
   // keys × tasks) and trustworthy read-side SPJ follow.
   def q287BucketTransformWrite(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q287", dir)
     SinkSource.fs(root)
       .delete(new org.apache.hadoop.fs.Path(root), true)
@@ -1566,9 +1538,7 @@ object FormatQueries {
   // defers rewriting to compaction, exactly Iceberg-v2/Delta-DV
   // upsert economics.
   def q288MorMerge(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q288", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val base = Tables.events(s, dir)
@@ -1631,9 +1601,7 @@ object FormatQueries {
   // rewrites, and how a typo'd condition fails instead of silently
   // truncating more than intended.
   def q289OverwriteByFilter(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q289", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val base = Tables.events(s, dir)
@@ -1682,9 +1650,7 @@ object FormatQueries {
   // O(metadata), and listing a petabyte table's partitions must never
   // open a data file.
   def q290PartitionDdl(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q290", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     SinkSource.write(
@@ -1737,9 +1703,7 @@ object FormatQueries {
   // enforced constraint is the only gate that doesn't depend on every
   // writer's discipline, and it costs one predicate per written row.
   def q291CheckConstraint(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q291", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     SinkSource.write(
@@ -1801,9 +1765,7 @@ object FormatQueries {
   // reconcile at read time forever, and compaction (q276) naturally
   // normalizes mixed-schema groups when it rewrites them anyway.
   def q292SinkSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q292", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     // batch 1: the base (k, v) contract
@@ -1883,9 +1845,7 @@ object FormatQueries {
   // O(history length) metadata, zero data files opened; reproducing
   // "what training saw at 3am" costs the same on any table size.
   def q293TimestampTravel(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q293", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     def batch(m: Long) = Tables.events(s, dir)
@@ -2086,9 +2046,7 @@ object FormatQueries {
   // — the files that changed and the vector diffs — never the table;
   // planning is manifest arithmetic, driver-side, zero data opened.
   def q296ChangeDataFeed(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q296", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     def batch(m: Long) = Tables.events(s, dir)
@@ -2157,9 +2115,7 @@ object FormatQueries {
   // corpus scale, with idempotence FROM THE FORMAT, not an external
   // bookkeeping store.
   def q297IncrementalMv(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q297", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     def batch(m: Long) = Tables.events(s, dir)
@@ -2227,9 +2183,7 @@ object FormatQueries {
   // only pay off if reads actually land on them — this rule is the
   // read-side half of incremental view maintenance.
   def q298MvRewrite(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     graft.GraftExtensions.register(s)
     val root = ShardPaths.resolve(s, "q298", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
@@ -2294,9 +2248,7 @@ object FormatQueries {
   // no data file is ever opened, safe beside live writers by grace,
   // not locks.
   def q299RemoveOrphans(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q299", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     def batch(m: Long) = Tables.events(s, dir)
@@ -2377,9 +2329,7 @@ object FormatQueries {
   // size) re-expressed over the psv manifest; planning cost is one
   // directory listing, metadata-proportional.
   def q301SplitPlanning(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q301", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     // one BIG single-key file (repartition(1): one task, one key)...
@@ -2440,9 +2390,7 @@ object FormatQueries {
   // work however large the table, and the bad snapshots stay
   // addressable until `expire` retires them.
   def q302Rollback(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q302", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val ev = Tables.events(s, dir)
@@ -2534,9 +2482,7 @@ object FormatQueries {
   // only affordable fix is exactly this — one schema publish, zero
   // file rewrites, with old files readable forever by field id.
   def q303TypeWidening(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q303", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     SinkSource.write(Tables.events(s, dir)
@@ -2637,9 +2583,7 @@ object FormatQueries {
   // arithmetic (orphans swept by remove_orphans), so a conflicting
   // loser aborts without having destroyed anything.
   def q304OccTransact(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q304", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val t = s"$root/t"
@@ -2733,9 +2677,7 @@ object FormatQueries {
   // zero scans; reads pay a hash-set probe per row only on files
   // older than the delete, and compaction retires even that.
   def q305EqualityDeletes(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q305", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val t = s"$root/t"
@@ -2823,9 +2765,7 @@ object FormatQueries {
   // query; the alternative (no layout verb) leaves zone maps
   // permanently useless on append-grown tables.
   def q306ClusteredRewrite(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q306", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val t = s"$root/t"
@@ -2896,9 +2836,7 @@ object FormatQueries {
   // size, with parent-side GC pinning shared bytes while any branch
   // lives.
   def q307Branches(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q307", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val t = s"$root/t"
@@ -2988,9 +2926,7 @@ object FormatQueries {
   // and null-skipping prunes the sparse-column access pattern
   // (`WHERE label IS NOT NULL`) that dominates curation reads.
   def q308NullStats(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q308", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val fields3 = Seq(SinkSchemas.SinkField(1, "k",
@@ -3098,9 +3034,7 @@ object FormatQueries {
   // initial-default read is the only shape where ADD COLUMN DEFAULT
   // costs one metadata publish and zero data movement.
   def q309ColumnDefaults(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q309", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val ev = Tables.events(s, dir)
@@ -3183,9 +3117,7 @@ object FormatQueries {
   // full-table opens into a handful of files at ~10 bits/row of
   // sidecar metadata, probed with candidate-proportional small reads.
   def q310BloomIndex(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q310", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val t = s"$root/t"
@@ -3269,9 +3201,7 @@ object FormatQueries {
   // non-identity eras are present (SpecEvolutionSpec pins the
   // matrix).
   def q311SpecEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q311", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val t = s"$root/t"
@@ -3340,9 +3270,7 @@ object FormatQueries {
   // ALTERs union by permanent field id or abort loudly
   // (MergeSchemaSpec pins the race matrix).
   def q312MergeSchemaWrite(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q312", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val t = s"$root/t"
@@ -3394,9 +3322,7 @@ object FormatQueries {
   // upstream. This is Iceberg/Delta's SPJ story re-expressed over
   // the psv manifest.
   def q313BucketSpj(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -3457,9 +3383,7 @@ object FormatQueries {
   // so the oracle independently recomputes each era's group counts
   // from the raw rows.
   def q314PartitionsMeta(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q314", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     val t = s"$root/t"
@@ -3506,9 +3430,7 @@ object FormatQueries {
   // it). The dim builds tiny and broadcasts, so the pruning subquery
   // reuses the broadcast — zero extra passes.
   def q315RuntimeFilePruning(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q315", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     s.conf.set("spark.sql.catalog.graft_dfp", classOf[SinkCatalog].getName)
@@ -3574,9 +3496,7 @@ object FormatQueries {
   // already on disk; compaction becomes an I/O optimization, not a
   // prerequisite for sane join plans.
   def q316MorBucketSpj(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -3646,9 +3566,7 @@ object FormatQueries {
   // I/O, and the runtime-filter surface must expose every covered
   // column or that clustering is wasted.
   def q317RuntimePruneNonKey(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      scala.util.Try(s.conf.set(k, v)) }
+    val s = Tables.isolated(spark)
     val root = ShardPaths.resolve(s, "q317", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     s.conf.set("spark.sql.catalog.graft_dfpv", classOf[SinkCatalog].getName)

@@ -91,8 +91,6 @@ object SinkChanges {
   private[sources] def partitionsFor(path: String, fromVersion: Int,
       toVersion: Int): Array[InputPartition] = {
     val out = Seq.newBuilder[InputPartition]
-    val fieldDefs = scala.collection.mutable.Map
-      .empty[Int, Seq[SinkSchemas.SinkField]]
     for (v <- (fromVersion + 1) to toVersion) {
       val prev = if (v == 1) Seq.empty
         else SinkSource.manifest(path, Some(v - 1))
@@ -138,11 +136,7 @@ object SinkChanges {
             "DELETE landed or reverted (value-keyed tombstones have " +
             "no metadata-derivable change rows); consumers must " +
             "resync from a full snapshot")
-      val sids = SinkSource.manifestSids(path, Some(v))
-      def fieldsOf(f: String): Seq[SinkSchemas.SinkField] = {
-        val sid = sids.getOrElse(f, 0)
-        fieldDefs.getOrElseUpdate(sid, SinkSchemas.fields(path, sid))
-      }
+      val fieldsOf = SinkSource.fileFields(path, Some(v))
       val dvPrev = (if (v == 1) Seq.empty
         else SinkSource.deleteSidecar(path, Some(v - 1)))
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
@@ -304,7 +298,7 @@ class SinkChangesMicroBatchStream(path: String, startingVersion: Int,
 /** Streams the partition's data file, emitting rows per its change
   * kind: inserts skip the birth tombstones, deletes emit ONLY the
   * positions in (current vectors − previous vectors). Position
-  * arithmetic matches [[SinkMorReader]]'s: 0-based line index. */
+  * arithmetic matches [[SinkReader]]'s: 0-based line index. */
 class SinkChangesReader(part: SinkChangesInputPartition,
     readFields: Seq[SinkSchemas.SinkField])
     extends PartitionReader[InternalRow] {

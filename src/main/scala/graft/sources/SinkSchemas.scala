@@ -54,7 +54,7 @@ object SinkSchemas {
 
   /** Pseudo-fields for the MoR metadata columns — negative ids so they
     * can never collide with a real (positive, monotonic) field id; the
-    * MoR reader serves them from the split context, not the line. */
+    * reader serves them from the split context, not the line. */
   val metaFile: SinkField = SinkField(-1, "_file", StringType)
   val metaPos: SinkField = SinkField(-2, "_pos", LongType)
 
@@ -82,7 +82,8 @@ object SinkSchemas {
 
   def structType(fields: Seq[SinkField]): StructType =
     StructType(fields.map { f =>
-      val base = StructField(f.name, f.dt, nullable = f.id != 1)
+      // the layout key and the MoR metadata pseudo-fields are never null
+      val base = StructField(f.name, f.dt, nullable = f.id > 1)
       // the engine's default-column machinery reads these metadata
       // keys: CURRENT_DEFAULT fills omitted INSERT columns at
       // analysis; EXISTS_DEFAULT documents what pre-ADD rows read
@@ -148,7 +149,8 @@ object SinkSchemas {
   }
 
   /** Publish `newFields` as the next schema version (refuse-existing
-    * rename — concurrent ALTERs lose loudly) and return its id. */
+    * rename — a concurrent store wins, and the loser gets the retryable
+    * [[SinkCommitRaceException]]) and return its id. */
   def store(path: String, newFields: Seq[SinkField]): Int = {
     val f = SinkSource.fs(path)
     val root = new Path(path)
@@ -170,8 +172,8 @@ object SinkSchemas {
     try out.write(body.getBytes("UTF-8")) finally out.close()
     if (!f.rename(tmp, new Path(root, s"_schema.v$next.psv"))) {
       f.delete(tmp, true)
-      throw new IllegalStateException(
-        s"lost a schema publish race at id $next under $path — retry")
+      throw new SinkCommitRaceException(
+        s"lost a schema publish race at id $next under $path")
     }
     next
   }
@@ -187,30 +189,19 @@ object SinkSchemas {
     if (newFields == base) return 0
     val f = SinkSource.fs(path)
     val root = new Path(path)
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    // a lost store race re-lists (the winner may have published
+    // exactly our fields — find-or-store must converge, not fail, now
+    // that commit-time schema merges call this concurrently with ALTERs)
+    SinkSource.retryRaces(path, "schema store", maxAttempts = 5) { _ =>
       val existing =
         if (!f.exists(root)) Seq.empty[Int]
         else f.listStatus(root).map(_.getPath.getName)
           .collect { case n if n.startsWith("_schema.v") && n.endsWith(".psv") =>
             n.stripPrefix("_schema.v").stripSuffix(".psv").toInt }
           .toSeq.sorted
-      existing.find(sid => fields(path, sid) == newFields) match {
-        case Some(sid) => return sid
-        case None =>
-          // a lost store race re-lists (the winner may have published
-          // exactly our fields — find-or-store must converge, not
-          // fail, now that commit-time schema merges call this
-          // concurrently with ALTERs)
-          try return store(path, newFields)
-          catch {
-            case e: IllegalStateException if attempt < 5 &&
-              e.getMessage.contains("schema publish race") => /* retry */
-          }
-      }
+      existing.find(sid => fields(path, sid) == newFields)
+        .getOrElse(store(path, newFields))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** The table's CURRENT fields as of a manifest version (default:

@@ -57,6 +57,16 @@ object Tables {
       case _ => df
     }
 
+  /** A fresh session carrying a copy of `spark`'s conf: the isolation a
+    * query needs to set session-local confs (catalogs, planner
+    * switches) without leaking them into its caller. */
+  def isolated(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      scala.util.Try(s.conf.set(k, v)) }
+    s
+  }
+
   /** Register every table as a temp view so `spark.sql` works too. */
   def registerAll(spark: SparkSession, dir: String): Unit =
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))

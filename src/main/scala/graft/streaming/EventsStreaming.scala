@@ -307,8 +307,7 @@ object EventsStreaming {
     * non-settable/static keys are skipped.
     */
   def streamSession(spark: SparkSession): SparkSession = {
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) => scala.util.Try(s.conf.set(k, v)) }
+    val s = graft.sources.Tables.isolated(spark)
     s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     s
   }

@@ -70,11 +70,11 @@ class QuietLocalFsSpec extends SparkSpec {
     val f = SinkSource.fs(root)
     val out = f.create(new Path(root, "data/extra.psv"), true)
     try out.write("2|20\n".getBytes("UTF-8")) finally out.close()
-    SinkSource.writeManifest(root,
-      Seq((1L, "extra.psv", 1L)), atVersion = Some(2))
+    SinkSource.writeManifest(root, 2,
+      SinkSource.Commit(Seq((1L, "extra.psv", 1L))))
     intercept[SinkCommitRaceException] {
-      SinkSource.writeManifest(root,
-        Seq((1L, "extra.psv", 1L)), atVersion = Some(2))
+      SinkSource.writeManifest(root, 2,
+        SinkSource.Commit(Seq((1L, "extra.psv", 1L))))
     }
   }
 

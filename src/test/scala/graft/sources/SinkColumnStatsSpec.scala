@@ -68,7 +68,7 @@ class SinkColumnStatsSpec extends SparkSpec {
     s.sql("DELETE FROM graft_cstm.t WHERE v % 7 = 1") // DVs land
     assert(SinkSource.deleteSidecar(s"$root/t").nonEmpty)
     import scala.jdk.CollectionConverters._
-    val cs = new SinkMorScan(s"$root/t", None).estimateStatistics()
+    val cs = new SinkScan(s"$root/t", mor = true).estimateStatistics()
       .columnStats().asScala
       .map { case (nr, st) => nr.fieldNames()(0) -> st }
     val k = cs("k")

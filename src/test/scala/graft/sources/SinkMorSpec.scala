@@ -74,7 +74,7 @@ class SinkMorSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("SinkManifestAggScan"),
       s"manifest counts ignore tombstones and must not serve MoR:\n$plan")
-    assert(plan.contains("SinkMorScan"),
+    assert(plan.contains("deletionStage("),
       s"MoR reads must go through the vector-merging scan:\n$plan")
   }
 

@@ -40,10 +40,53 @@ class SinkOccSpec extends SparkSpec {
     // and leave no trace
     val before = SinkSource.manifest(root)
     intercept[SinkCommitRaceException] {
-      SinkSource.writeManifest(root, before, atVersion = Some(1))
+      SinkSource.writeManifest(root, 1, SinkSource.Commit(before))
     }
     assert(SinkSource.currentVersion(root) == 1)
     assert(SinkSource.manifest(root) == before)
+  }
+
+  /** A concurrent append through the CAS: `name` lands in data/ and
+    * is committed as key 9's one-row file. */
+  private def racingAppend(root: String, name: String): Unit = {
+    val f = SinkSource.fs(root)
+    val out = f.create(new Path(root, s"data/$name"), true)
+    out.write("9|90\n".getBytes("UTF-8")); out.close()
+    SinkSource.transact(root)(_ => (Seq((9L, name, 1L)), Set.empty[String]))
+  }
+
+  test("publishCas: k lost races, then a publish on attempt k + 1") {
+    val root = freshTable("k_races")
+    val k = 3
+    var attempts = 0
+    val v = SinkSource.publishCas(root, "test publish") { base =>
+      attempts += 1
+      // a racer steals version base + 1 under the first k attempts
+      if (attempts <= k) racingAppend(root, s"race_$attempts.psv")
+      SinkSource.Commit(SinkSource.entriesAt(root, base))
+    }
+    assert(attempts == k + 1, s"k lost races must cost k + 1 attempts: $attempts")
+    assert(v == k + 2, s"v1 + k racing appends, then ours: $v")
+    assert(SinkSource.manifest(root).count(_._1 == 9L) == k,
+      "every racer's commit must survive the republish")
+  }
+
+  test("publishCas gives up after its attempt cap, naming the verb and path") {
+    val root = freshTable("always_races")
+    var attempts = 0
+    val ex = intercept[SinkConflictException] {
+      SinkSource.publishCas(root, "test publish", maxAttempts = 3) { base =>
+        attempts += 1
+        racingAppend(root, s"race_$attempts.psv")
+        SinkSource.Commit(SinkSource.entriesAt(root, base))
+      }
+    }
+    assert(attempts == 3, s"the cap bounds the attempts: $attempts")
+    assert(ex.getMessage.contains("test publish") &&
+      ex.getMessage.contains(root) && ex.getMessage.contains("gave up after 3"),
+      ex.getMessage)
+    assert(SinkSource.currentVersion(root) == 4,
+      "only the racers published: v1 + three appends")
   }
 
   test("transact retries over a concurrent append; both effects land") {

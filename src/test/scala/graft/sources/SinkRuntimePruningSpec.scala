@@ -85,7 +85,7 @@ class SinkRuntimePruningSpec extends SparkSpec {
       .repartition(3, col("k")), s"$root/t", overwrite = true)
     s.sql("DELETE FROM graft_rtpm.t WHERE k = 2 AND v = 2") // DV lands
     assert(SinkSource.deleteSidecar(s"$root/t").nonEmpty)
-    val scan = new SinkMorScan(s"$root/t", None)
+    val scan = new SinkScan(s"$root/t", mor = true)
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
       In("k", Array(2L, 4L))))
     val kept = scan.planInputPartitions()
@@ -93,7 +93,7 @@ class SinkRuntimePruningSpec extends SparkSpec {
       .groupBy(_._2).view.mapValues(_.map(_._1).toSet).toMap
     assert(kept.nonEmpty && kept.forall { p =>
       val name = new Path(
-        p.asInstanceOf[SinkMorInputPartition].file).getName
+        p.asInstanceOf[SinkInputPartition].file).getName
       keysOf(name).subsetOf(Set(2L, 4L))
     }, "runtime-kept MoR splits must all be key 2/4 groups")
     // the kept group's vectors still apply: the tombstoned row is gone
