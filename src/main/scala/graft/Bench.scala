@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every registered query on
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop
   * sink (count() alone would let Catalyst prune work a real consumer
-  * pays for). Prints ONE JSON line for the driver.
+  * pays for). Prints a full-precision JSON line, then the compact line
+  * that machine readers parse.
   */
 object Bench {
 
@@ -34,7 +35,7 @@ object Bench {
     75,70,45,67,75,69,74,55,74,34,30,56,33,24,69,32,16)
 
   def costOf(name: String): Int = {
-    val n = name.takeWhile(_ != '_').drop(1).toInt
+    val n = numberOf(name)
     if (n >= 1 && n <= priorCostCs.length) priorCostCs(n - 1) else Int.MaxValue
   }
 
@@ -55,24 +56,19 @@ object Bench {
     "q215_lsh_recall_eval", "q76_dedup_clusters", "q182_release_pipeline",
     "q232_tokenizer_apply", "q234_bitmap_cube")
 
+  private def numberOf(name: String): Int = name.takeWhile(_ != '_').drop(1).toInt
+
+  /** One board run: seconds per query that completed its timed pass,
+    * and the numbers of the queries whose timed pass threw (never
+    * reported as a time). */
+  case class Board(times: Seq[(String, Double)], failed: Seq[Int],
+      retries: Int, suspects: Seq[Int]) {
+    def total: Double = times.map(_._2).sum
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // quiet local FS: no chmod fork per create, no .crc twin
-      // (see graft.sources.QuietLocalFs — local-scheme only)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.QuietLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.sources.QuietLocalAbstractFs")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     // Session-level warmup before any per-query clock: the first jobs in
     // a JVM pay one-time costs (codegen framework, parquet reader,
     // shuffle machinery, JIT) that would otherwise land on the first
@@ -80,19 +76,37 @@ object Bench {
     Seq("q12_case_when", "q04_star_join", "q19_top_per_group").foreach { n =>
       try SparkEntry.queries.get(n)
         .foreach(_(spark, sfDir).write.format("noop").mode("overwrite").save())
-      catch { case _: Throwable => }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] session warm($n) failed: ${e.getMessage}") }
     }
-    // Per query: (1) drop the PREVIOUS query's state (caches, broadcasts,
-    // GC pressure) so queries stay isolated; (2) one UNTIMED pass at the
-    // TARGET sfDir — this pays every first-touch cost (Janino + JIT at
-    // real data shapes, OS page cache of the sf parquet, and .cache()
-    // materialization for the queries that declare cut-points); (3) the
-    // timed pass, with NO cache clear in between, measures the
-    // steady-state a repeat consumer sees — the same contract PERF.md's
-    // Probe reps record. Round 7 warmed at sf0.001 and cleared caches
-    // before the timed run, so sf0.1-shaped first-touch costs (q82 cache
-    // fill 22.5 s, q95 span-explode 9.4 s) landed in the public number
-    // while the builder's probes showed 1.5–3.4 s / 1.3–2.6 s steady.
+    val board = runBoard(spark, SparkEntry.queries, sfDir)
+    // Full-precision detail first (human/debug), compact line LAST: the
+    // benchmark record keeps only the trailing ~2000 chars of output,
+    // and sbt appends its own ~75-char "[success]" line after us, so the
+    // last JSON line must stay well under that budget or its head gets
+    // truncated and the record parses as null (rounds 1-3 all did).
+    println(fullLine(board, sfDir))
+    println(compactLine(board, sfDir))
+    spark.stop()
+  }
+
+  /** Per query: (1) drop the PREVIOUS query's state (caches, broadcasts,
+    * GC pressure) so queries stay isolated; (2) one UNTIMED pass at the
+    * TARGET sfDir — this pays every first-touch cost (Janino + JIT at
+    * real data shapes, OS page cache of the sf parquet, and .cache()
+    * materialization for the queries that declare cut-points); (3) the
+    * timed pass, with NO cache clear in between, measures the
+    * steady-state a repeat consumer sees — the same contract PERF.md's
+    * Probe reps record. Round 7 warmed at sf0.001 and cleared caches
+    * before the timed run, so sf0.1-shaped first-touch costs (q82 cache
+    * fill 22.5 s, q95 span-explode 9.4 s) landed in the public number
+    * while the builder's probes showed 1.5–3.4 s / 1.3–2.6 s steady.
+    * A query whose timed pass throws is reported in `failed`, never as
+    * a time: its time-to-failure would read as a fast line.
+    */
+  def runBoard(spark: SparkSession,
+      queries: Map[String, (SparkSession, String) => DataFrame],
+      sfDir: String): Board = {
     // The warm budget only bounds a pathological hang (ambient load can
     // 3× this box). Past it the remaining queries DEGRADE rather than
     // run stone-cold: a small-SF warm pass still pays the per-plan
@@ -116,6 +130,8 @@ object Bench {
       // number — the exact skew the warm pass exists to remove
       System.err.println(s"[bench] WARNING: warm-fallback dir " +
         s"$warmFallbackDir missing; post-budget queries will time cold")
+    def run(fn: (SparkSession, String) => DataFrame, dir: String): Unit =
+      fn(spark, dir).write.format("noop").mode("overwrite").save()
     var warmSpentNs = 0L
     var fallbackAnnounced = false
     var retried = 0
@@ -126,6 +142,7 @@ object Bench {
     // regression lands here too (it reproduces on the retry), which is
     // exactly the set a human should probe.
     val suspects = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val failed = scala.collection.mutable.ArrayBuffer.empty[Int]
     // COST-AWARE run order: queries run by DESCENDING prior-round cost
     // (prior full-run centiseconds by query number; name as
     // tiebreak), so if the warm budget ever exhausts, it exhausts on the CHEAP tail —
@@ -138,15 +155,15 @@ object Bench {
     // per-query clearCache isolation contract is unchanged — order
     // affects only WHICH queries get target-SF warms under a tight
     // budget, not what any query's timed pass measures.
-    val results = SparkEntry.queries.toSeq
+    val times = queries.toSeq
       .sortBy { case (name, _) =>
         (if (boundaryOwners(name)) 0 else 1, -costOf(name), name)
-      }.map { case (name, fn) =>
+      }.flatMap { case (name, fn) =>
       spark.catalog.clearCache()
       System.gc()
       if (warmSpentNs < warmBudgetNs) {
         val w0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try run(fn, sfDir)
         catch { case e: Throwable =>
           System.err.println(s"[bench] warm($name) failed: ${e.getMessage}") }
         warmSpentNs += System.nanoTime() - w0
@@ -156,15 +173,17 @@ object Bench {
             s"(${(warmSpentNs / 1e9).round} s); degrading to $warmFallbackDir warms")
           fallbackAnnounced = true
         }
-        try fn(spark, warmFallbackDir).write.format("noop").mode("overwrite").save()
+        try run(fn, warmFallbackDir)
         catch { case e: Throwable =>
           System.err.println(s"[bench] warm($name, fallback) failed: ${e.getMessage}") }
       }
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      val ok =
+        try { run(fn, sfDir); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
       val first = (System.nanoTime() - t0) / 1e9
       // AMBIENT-OUTLIER self-adjudication (round-18 verdict ask #3):
       // three rounds running, the driver artifact carried one >10×
@@ -177,88 +196,60 @@ object Bench {
       // reported plus a `retries` count: a real regression reproduces
       // and still shows; a scheduler hiccup doesn't get published.
       val prior = costOf(name)
-      val elapsed =
-        if (prior != Int.MaxValue && first > 1.0 && first * 100 > prior * 3L) {
-          retried += 1
-          System.err.println(f"[bench] $name ${first}%.2f s > 3x prior " +
-            f"${prior / 100.0}%.2f s; retrying once")
-          val r0 = System.nanoTime()
-          // Only a SUCCESSFUL retry may replace the first measurement:
-          // a retry that throws fails fast, and min(first, failureTime)
-          // would let a broken re-run mask a slow-but-correct first
-          // pass (ADVICE round-18).
-          val retryOk =
-            try {
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              true
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] $name retry failed: ${e.getMessage}")
-              false
-            }
-          val best =
-            if (retryOk) math.min(first, (System.nanoTime() - r0) / 1e9)
-            else first
-          if (best * 100 > prior * 3L)
-            suspects += name.takeWhile(_ != '_').drop(1).toInt
-          best
-        } else first
-      name -> elapsed
+      if (!ok) {
+        failed += numberOf(name)
+        None
+      } else if (prior != Int.MaxValue && first > 1.0 && first * 100 > prior * 3L) {
+        retried += 1
+        System.err.println(f"[bench] $name ${first}%.2f s > 3x prior " +
+          f"${prior / 100.0}%.2f s; retrying once")
+        val r0 = System.nanoTime()
+        // Only a SUCCESSFUL retry may replace the first measurement:
+        // a retry that throws fails fast, and min(first, failureTime)
+        // would let a broken re-run mask a slow-but-correct first
+        // pass (ADVICE round-18).
+        val retryOk =
+          try { run(fn, sfDir); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name retry failed: ${e.getMessage}")
+            false
+          }
+        val best =
+          if (retryOk) math.min(first, (System.nanoTime() - r0) / 1e9)
+          else first
+        if (best * 100 > prior * 3L) suspects += numberOf(name)
+        Some(name -> best)
+      } else Some(name -> first)
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+    Board(times, failed.sorted.toSeq, retried, suspects.sorted.toSeq)
+  }
+
+  private def ints(xs: Seq[Int]): String = xs.mkString("[", ",", "]")
+
+  /** Full-precision line: every successful query's seconds by name. */
+  def fullLine(b: Board, sfDir: String): String = {
+    val qs = b.times.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // Full-precision detail first (human/debug), compact line LAST: the
-    // driver machine-reads only the trailing ~2000 chars of output, and
-    // sbt appends its own ~75-char "[success]" line after us, so the
-    // last JSON line must stay well under that budget or its head gets
-    // truncated and the driver records parsed:null (rounds 1-3 all did).
-    val suspectsJson = suspects.sorted.mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","retries":$retried,"suspects":$suspectsJson,"queries":$qs,"sf":"$sfDir"}""")
+    s"""{"metric":"total","value":${b.total},"unit":"sec","retries":${b.retries},"suspects":${ints(b.suspects)},"failed":${ints(b.failed)},"queries":$qs,"sf":"$sfDir"}"""
+  }
+
+  /** Compact line for a 2000-char output tail (≤1900 chars): a
+    * centisecond ARRAY indexed by query number — the registry is
+    * gapless (EntryContractSpec), so queries_cs[i] is q(i+1), -1 for a
+    * failed query; ~5 chars/query keeps 0.01 s precision to ~350
+    * queries. Past the guard, the per-query data is dropped rather
+    * than the line.
+    */
+  def compactLine(b: Board, sfDir: String): String = {
     // Locale.ROOT: a comma-decimal default locale would emit invalid
     // JSON on the one line the driver machine-reads
-    def fmt(v: Double, dp: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
-    // The compact tail keys each query by its unique qNN number (the
-    // full names live in the full-precision line above). Seconds with
-    // two decimals for 185 queries overflow the 1900-char guard (round
-    // 9's line degraded to whole seconds, hiding every sub-second band
-    // from the machine-read artifact), so the primary encoding is
-    // integer CENTISECONDS under bare-number keys with the unit
-    // declared in-line ("q_unit":"cs") — 0.01 s precision for the full
-    // registry in ~1750 chars. If future growth overflows even that,
-    // degrade through the legacy seconds encodings rather than drop
-    // per-query data entirely.
-    val csLine = {
-      val qs = results.map { case (k, v) =>
-        "\"" + k.takeWhile(_ != '_').drop(1) + "\":" + math.round(v * 100)
-      }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","retries":$retried,"suspects":$suspectsJson,"queries":$qs,"q_unit":"cs","sf":"$sfDir"}"""
-    }
-    def secondsLine(dp: Int): String = {
-      val qs = results.map { case (k, v) =>
-        "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v, dp)
-      }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
-    }
-    // Second-preference encoding once the keyed dict overflows (~208
-    // queries): a centisecond ARRAY indexed by query number — the
-    // registry is gapless (DriverContractSpec), so queries_cs[i] is
-    // q(i+1); ~5 chars/query keeps 0.01 s precision to ~350 queries.
-    // lazy + maxOption: on an empty or filtered results map the eager
-    // keys.max threw before the fallback encodings could be considered
-    lazy val csArrLine = {
-      val byNum = results.map { case (k, v) =>
-        k.takeWhile(_ != '_').drop(1).toInt -> math.round(v * 100)
-      }.toMap
-      val arr = (1 to byNum.keys.maxOption.getOrElse(0))
-        .map(n => byNum.getOrElse(n, -1L))
-        .mkString("[", ",", "]")
-      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","retries":$retried,"suspects":$suspectsJson,"q_unit":"cs","q_index":"queries_cs[i] is q(i+1)","queries_cs":$arr,"sf":"$sfDir"}"""
-    }
-    println((LazyList(() => csLine, () => csArrLine)
-        ++ Seq(1, 0).map(dp => () => secondsLine(dp)))
-      .map(_()).find(_.length <= 1900)
-      .getOrElse(s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","queries":{},"sf":"$sfDir"}"""))
-    spark.stop()
+    val value = String.format(java.util.Locale.ROOT, "%.2f", Double.box(b.total))
+    val byNum = b.times.map { case (k, v) => numberOf(k) -> math.round(v * 100) }.toMap
+    val arr = (1 to (byNum.keys ++ b.failed).maxOption.getOrElse(0))
+      .map(n => byNum.getOrElse(n, -1L))
+      .mkString("[", ",", "]")
+    val line = s"""{"metric":"total","value":$value,"unit":"sec","retries":${b.retries},"suspects":${ints(b.suspects)},"failed":${ints(b.failed)},"q_unit":"cs","q_index":"queries_cs[i] is q(i+1)","queries_cs":$arr,"sf":"$sfDir"}"""
+    if (line.length <= 1900) line
+    else s"""{"metric":"total","value":$value,"unit":"sec","failed":${ints(b.failed)},"queries":{},"sf":"$sfDir"}"""
   }
 }

@@ -1,15 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 import graft.functions.{BpeApply, CountMinEstimate, DotProductLong, MinHashWindows, MinShingleMd5, ShingleSet, SimHash16, TopKByLong}
 
-/** Session extensions registering the engine's native functions for SQL
-  * use. Install with
-  * `spark.sql.extensions=graft.GraftExtensions` or call
-  * [[GraftExtensions.register]] on a live session.
+/** Session extensions: the engine's native functions for SQL use, the
+  * MV-substitution optimizer rule ([[graft.plans.RewriteToMv]]) and the
+  * native as-of join strategy ([[graft.plans.AsOfJoinStrategy]]).
+  * Installed only by [[GraftSession.builder]]
+  * (`spark.sql.extensions=graft.GraftExtensions`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions.{litInt, builders}
@@ -19,7 +20,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       e.injectFunction((
         FunctionIdentifier(name), new ExpressionInfo(getClass.getName, name), b))
     }
-    e.injectOptimizerRule(_ => graft.plans.RewriteDotProduct)
     e.injectOptimizerRule(s => new graft.plans.RewriteToMv(s))
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
@@ -47,21 +47,4 @@ object GraftExtensions {
     "topk_by" -> (exprs =>
       TopKByLong(exprs.head, exprs(1), litInt(exprs(2), "k"))
         .toAggregateExpression()))
-
-  /** Register on an existing session (tests, REPL). */
-  def register(spark: SparkSession): Unit = {
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
-    }
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies ++= Seq(graft.plans.AsOfJoinStrategy)
-    // MV substitution (q298): as an extra optimization it runs AFTER
-    // scan pushdown, which is why RewriteToMv also matches the
-    // post-pushdown DataSourceV2ScanRelation shape
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[graft.plans.RewriteToMv]))
-      spark.experimental.extraOptimizations ++=
-        Seq(new graft.plans.RewriteToMv(spark))
-  }
 }

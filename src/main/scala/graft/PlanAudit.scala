@@ -1,32 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected queries
   * and greps it for scale red flags — missing filter pushdown, missing
   * broadcast on dim joins, cartesian products, absent whole-stage
   * codegen. Usage: tools/run.sh graft.PlanAudit [queryName ...]
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE stays ON in Verify/Bench; here it would wrap the plan in
-      // AdaptiveSparkPlan(isFinalPlan=false) and hide codegen spans
-      .config("spark.sql.adaptive.enabled", "false")
-      // quiet local FS: no chmod fork per create, no .crc twin
-      // (see graft.sources.QuietLocalFs — local-scheme only)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.QuietLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.sources.QuietLocalAbstractFs")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // AQE stays ON in Verify/Bench; here it would wrap the plan in
+    // AdaptiveSparkPlan(isFinalPlan=false) and hide codegen spans
+    val spark = GraftSession.start(GraftSession.builder(GraftSession.cores)
+      .config("spark.sql.adaptive.enabled", "false"))
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,34 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run selected queries N times in one session to separate
   * per-query fixed overhead (planning, codegen, AQE rounds) from data
   * cost. Usage: tools/run.sh graft.Probe q01_pricing_summary [reps]
-  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_AQE=false.
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.codegen.wholeStage",
-        sys.env.getOrElse("SPARK_GRAFT_WSCG", "true"))
-      // quiet local FS: no chmod fork per create, no .crc twin
-      // (see graft.sources.QuietLocalFs — local-scheme only)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.QuietLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.sources.QuietLocalAbstractFs")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     val reps = args.lastOption.flatMap(_.toIntOption).getOrElse(3)
     val names = args.filterNot(_.forall(_.isDigit)) match {
       case Array() => Array("q01_pricing_summary")

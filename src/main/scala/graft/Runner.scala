@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.{SyntheticSources, Warehouse}
 
 /** End-to-end warehouse build main — the `process.py` equivalent
@@ -17,22 +15,7 @@ object Runner {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toDouble).getOrElse(1.0)
     val outDir = args.lift(1).getOrElse("/tmp/graft_warehouse")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-runner")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // quiet local FS: no chmod fork per create, no .crc twin
-      // (see graft.sources.QuietLocalFs — local-scheme only)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.QuietLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.sources.QuietLocalAbstractFs")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
 
     val t0 = System.nanoTime()
     val sources = SyntheticSources.generate(

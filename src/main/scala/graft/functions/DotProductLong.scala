@@ -40,8 +40,7 @@ case class DotProductLong(left: Expression, right: Expression)
   }
 
   // Length mismatch → null, matching `aggregate(zip_with(a,b,_*_),0,_+_)`
-  // (zip_with pads the shorter side with null, nulling the whole sum),
-  // so RewriteDotProduct is a sound rewrite for non-null element arrays.
+  // (zip_with pads the shorter side with null, nulling the whole sum).
   override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {

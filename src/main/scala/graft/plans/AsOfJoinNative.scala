@@ -164,8 +164,8 @@ case class AsOfJoinExec(
 object AsOfJoinNative {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
-  /** Requires [[AsOfJoinStrategy]] installed (GraftExtensions or
-    * `spark.experimental.extraStrategies`).
+  /** Plans through [[AsOfJoinStrategy]], which [[graft.GraftExtensions]]
+    * installs in every session [[graft.GraftSession]] builds.
     */
   def asOf(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightTs: String, payload: Seq[String]): DataFrame = {

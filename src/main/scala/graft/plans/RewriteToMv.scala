@@ -35,13 +35,13 @@ import graft.sources.{SinkMv, SinkSource, SinkTable}
   *
   * Output attribute ids are preserved through aliases, so parents of
   * the aggregate are untouched. Registration: set
-  * `graft.mv.registry` to a comma-separated list of MV paths and
-  * install via [[graft.GraftExtensions]] (injected rule or
-  * `experimental.extraOptimizations` — the rule matches both the
-  * pre-pushdown [[DataSourceV2Relation]] and the post-pushdown
-  * [[DataSourceV2ScanRelation]] shape, and always emits a scan
-  * relation, which both the pushdown rule and the planner pass
-  * through).
+  * `graft.mv.registry` to a comma-separated list of MV paths; the rule
+  * itself is injected by [[graft.GraftExtensions]] in every session
+  * [[graft.GraftSession]] builds. As an injected operator-optimization
+  * rule it runs before scan pushdown, so it matches the
+  * [[DataSourceV2Relation]] shape, and it emits a
+  * [[DataSourceV2ScanRelation]], which both the pushdown rule and the
+  * planner pass through.
   *
   * Scale notes (100 TB): the rewritten plan reads the GROUPS-sized MV
   * — no source scan, no shuffle, no aggregate at all (the metadata
@@ -70,11 +70,6 @@ class RewriteToMv(session: SparkSession) extends Rule[LogicalPlan] {
     * a sink scan eligible for substitution. */
   private def scanTarget(p: LogicalPlan): Option[(Seq[Attribute], String, Boolean)] =
     p match {
-      case sr: DataSourceV2ScanRelation => sr.relation.table match {
-        case t: SinkTable =>
-          t.mvRewriteInfo.map { case (path, mor) => (sr.output, path, mor) }
-        case _ => None
-      }
       case r: DataSourceV2Relation => r.table match {
         case t: SinkTable =>
           t.mvRewriteInfo.map { case (path, mor) => (r.output, path, mor) }

@@ -53,7 +53,6 @@ object OperatorQueries {
   // q47, so the custom physical operator is held to the identical
   // DuckDB ASOF JOIN ground truth as the composed form.
   def q66AsofNative(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(spark)
     val o = Tables.orders(spark, dir)
     val left = o.select(col("o_orderkey"), col("o_custkey").as("cliente"),
       col("o_orderdate").cast("date").as("fecha_evento"))

@@ -2161,7 +2161,8 @@ object FormatQueries {
 
   // --------------------------------------------------------------------
   // q298 — MATERIALIZED-VIEW QUERY REWRITING: an optimizer rule
-  // ([[graft.plans.RewriteToMv]], installed via GraftExtensions)
+  // ([[graft.plans.RewriteToMv]], installed with GraftExtensions by
+  // GraftSession)
   // substitutes the exact aggregate q297's MV maintains — whole-table
   // `k, COUNT(*), SUM(v)` — with a read of the MV's stored rows,
   // ONLY when provably answer-preserving: the MV's ledger watermark
@@ -2170,9 +2171,8 @@ object FormatQueries {
   // rewrites only for MoR reads), and every output column maps onto
   // a maintained one. Output attribute ids are preserved, so parents
   // never notice. New plan shape: the only logical-plan SUBSTITUTION
-  // in the registry (RewriteDotProduct canonicalizes expressions;
-  // this replaces a whole Aggregate subtree with a different
-  // relation).
+  // in the registry (this replaces a whole Aggregate subtree with a
+  // different relation).
   // Proof rides the hash twice: the "stale" arm aggregates AFTER an
   // un-refreshed append (a rewrite would answer stale numbers and
   // fail the hash), then the "fresh" arm runs with the SOURCE's data
@@ -2184,7 +2184,6 @@ object FormatQueries {
   // read-side half of incremental view maintenance.
   def q298MvRewrite(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    graft.GraftExtensions.register(s)
     val root = ShardPaths.resolve(s, "q298", dir)
     SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
     def batch(m: Long) = Tables.events(s, dir)

@@ -59,7 +59,8 @@ object Tables {
 
   /** A fresh session carrying a copy of `spark`'s conf: the isolation a
     * query needs to set session-local confs (catalogs, planner
-    * switches) without leaking them into its caller. */
+    * switches) without leaking them into its caller. It shares the
+    * extensions `spark` was built with (see [[graft.GraftSession]]). */
   def isolated(spark: SparkSession): SparkSession = {
     val s = spark.newSession()
     spark.conf.getAll.foreach { case (k, v) =>

@@ -3,20 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for suites (one per suite via lazy val). */
+/** Shared local SparkSession for suites (one per suite via lazy val):
+  * the product configuration at 4 cores, whatever SPARK_GRAFT_CPUS is. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder("4")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    .config("spark.hadoop.fs.file.impl",
-      "graft.sources.QuietLocalFileSystem")
-    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-      "graft.sources.QuietLocalAbstractFs")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

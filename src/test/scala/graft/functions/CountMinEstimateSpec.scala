@@ -38,7 +38,6 @@ class CountMinEstimateSpec extends SparkSpec {
   }
 
   test("cms_estimate is SQL-registered via GraftExtensions") {
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     Seq(1L, 1L, 2L).toDF("k").createOrReplaceTempView("cms_in")
     val est = spark.sql(

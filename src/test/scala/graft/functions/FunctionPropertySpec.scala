@@ -140,8 +140,7 @@ class FunctionPropertySpec extends SparkSpec {
         (got.isNullAt(0) || got.getLong(0) == expected.getLong(0))
     })
     // length mismatch → null on BOTH forms (zip_with pads the shorter
-    // side with null, nulling the whole sum) — the contract that makes
-    // RewriteDotProduct a sound rewrite
+    // side with null, nulling the whole sum)
     val mismatched = Seq((Seq(1L, 2L), Seq(3L))).toDF("a", "b")
     assert(mismatched.select(
       DotProductLong.dot_product_long(col("a"), col("b"))).first().isNullAt(0))

@@ -46,7 +46,6 @@ class ShingleSetSpec extends SparkSpec {
   }
 
   test("is SQL-registered via GraftExtensions") {
-    graft.GraftExtensions.register(spark)
     val out = spark.sql(
       "SELECT shingle_set(array('a','b','c','d'), 3) AS s").collect()(0)
       .getSeq[String](0)

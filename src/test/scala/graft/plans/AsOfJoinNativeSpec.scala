@@ -13,8 +13,6 @@ class AsOfJoinNativeSpec extends SparkSpec {
 
   import spark.implicits._
 
-  graft.GraftExtensions.register(spark)
-
   lazy val events = Seq(
     (1L, 100L, "e1"), (1L, 205L, "e2"), (1L, 300L, "e3"),
     (2L, 50L, "e4"), (2L, 400L, "e5"))

@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.GraftExtensions
 import graft.SparkSpec
 import graft.sources.{SinkCatalog, SinkMv, SinkSource}
 
@@ -19,8 +18,6 @@ import graft.sources.{SinkCatalog, SinkMv, SinkSource}
   *   - empty registry → no rewrite.
   */
 class MvRewriteSpec extends SparkSpec {
-
-  GraftExtensions.register(spark)
 
   private def fixture(tag: String): (String, () => DataFrame) = {
     val root = java.nio.file.Files

@@ -25,7 +25,6 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("native functions are SQL-callable after registration") {
-    graft.GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT dot_product_long(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d")
       .collect().head.getLong(0)
