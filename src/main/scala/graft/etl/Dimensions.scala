@@ -20,21 +20,14 @@ object Dimensions {
     * (`/root/reference/dimension.py:31-41`).
     */
   def dimUsuario(cotizante: DataFrame, beneficiario: DataFrame): DataFrame = {
-    val contrib = dimCotizanteBase(cotizante)
+    val contrib = cotizante
       .select("cedula", "nombre", "fecha_nacimiento", "sexo")
       .withColumnRenamed("cedula", "identificacion")
     val benef = beneficiario
       .select("id_beneficiario", "nombre", "fecha_nacimiento", "sexo")
-      .dropDuplicates()
       .withColumnRenamed("id_beneficiario", "identificacion")
     contrib.unionByName(benef).dropDuplicates()
   }
-
-  /** dim_cotizante (base form): drop the demographic attribute block
-    * (`/root/reference/dimension.py:23-28`). */
-  def dimCotizanteBase(cotizante: DataFrame): DataFrame =
-    cotizante.drop("id_ips", "direccion", "estado_civil", "estracto",
-      "tipo_discapacidad", "salario_base").dropDuplicates()
 
   /** dim_cotizante as loaded by the payment mart: demographic lookup by
     * 5-column natural key attaches demografica_id
@@ -93,7 +86,7 @@ object Dimensions {
   /** dim_enfermedad (`/root/reference/dimension.py:136-140`); renamed to
     * `nombre` at load (`/root/reference/processing/payment_process.py:63`). */
   def dimEnfermedad(preexistencias: DataFrame): DataFrame =
-    preexistencias.select("enfermedad").distinct().dropDuplicates()
+    preexistencias.select("enfermedad").dropDuplicates()
       .withColumnRenamed("enfermedad", "nombre")
 
   /** dim_empresa (`/root/reference/dimension.py:143-146`). */

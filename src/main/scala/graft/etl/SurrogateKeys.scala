@@ -1,8 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** In-engine surrogate keys, replacing the reference's
   * write-dim → read-back-via-JDBC → join round-trip (the warehouse's
@@ -10,14 +10,17 @@ import org.apache.spark.sql.functions._
   * medical_formula_process.py:112-121`, SURVEY §1.2).
   *
   * Keys are the global rank under a canonical order, computed in two
-  * phases with NO data-sized single-partition step: range-partition by
-  * the key order, rank within each partition, then add the partition's
-  * cumulative row offset. The offset table is one row per PARTITION
-  * (bounded by cluster parallelism, not data), so its prefix-sum
-  * window is trivially small. Everything stays a lazy Catalyst plan —
-  * no RDD round-trip, no job at construction time — and both readers
-  * of the sorted exchange share it (ReuseExchange; boundaries are
-  * deterministic for identical input regardless).
+  * phases with NO data-sized single-partition step: range-partition and
+  * sort by the key order, then Spark core's `RDD.zipWithIndex` counts
+  * every partition's rows in one job and numbers each row from its
+  * partition's offset. Both phases read the SAME materialized RDD, so
+  * the count and the numbering see one set of partition boundaries
+  * whatever adaptive execution does to the range exchange.
+  *
+  * The call is EAGER: a row's id needs the sizes of every partition
+  * before it, so `zipWithIndex` runs the range exchange and the count
+  * job when `assign` is called, not when the returned frame is first
+  * read.
   */
 object SurrogateKeys {
 
@@ -35,31 +38,15 @@ object SurrogateKeys {
     val named = orderCols.map(_.toString).toSet
     val tieBreakers = df.columns.filterNot(named.contains).map(col)
     val order = orderCols ++ tieBreakers
-    val reserved = Seq("_pid", "_local", "_offset")
-    require(!df.columns.exists(reserved.contains),
-      s"assign reserves internal column names ${reserved.mkString(", ")}")
-
-    val sorted = df.repartitionByRange(order: _*)
-      .withColumn("_pid", spark_partition_id())
-    // one count row per PARTITION (bounded by cluster parallelism,
-    // never the data); the prefix sum over it is a triangular
-    // self-join rather than a window — a constant-partition window
-    // would be optimized back to an unpartitioned WindowExec
-    val counts = sorted.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))
-    val offsets = counts.as("a")
-      .join(counts.as("b"), col("b._pid") < col("a._pid"), "left")
-      .groupBy(col("a._pid").as("_pid"))
-      .agg(coalesce(sum(col("b._cnt")), lit(0L)).as("_offset"))
-    val local = Window.partitionBy(col("_pid")).orderBy(order: _*)
-    val rank = col("_offset") + row_number().over(local)
-    sorted
-      .join(broadcast(offsets), Seq("_pid"))
-      .withColumn(idCol,
-        when(rank <= Int.MaxValue.toLong, rank.cast("int"))
-          .otherwise(raise_error(concat(
-            lit(s"surrogate id overflow in $idCol; use assignHashed: "),
-            rank.cast("string"))).cast("int")))
-      .drop("_pid", "_offset")
+    val sorted = df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
+    val keyed = sorted.rdd.zipWithIndex().map { case (row, i) =>
+      if (i >= Int.MaxValue)
+        throw new ArithmeticException(
+          s"surrogate id overflow in $idCol; use assignHashed: ${i + 1}")
+      Row.fromSeq(row.toSeq :+ (i + 1).toInt)
+    }
+    df.sparkSession.createDataFrame(keyed,
+      df.schema.add(idCol, IntegerType, nullable = false))
   }
 
   /** Scale path: a collision-free 64-bit key from the natural key,

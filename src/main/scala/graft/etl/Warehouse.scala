@@ -56,20 +56,19 @@ class Warehouse(spark: SparkSession, sources: String => DataFrame) {
     col("direccion"), col("estado_civil"), col("estracto"),
     col("tipo_discapacidad"), col("salario_base")).cache()
 
-  /** dim_cotizante enriched with demografica_id by natural-key lookup
-    * (payment variant; `keepProvieneOtraEps = true` for the retreat
-    * variant's extra boolean). Both variants are built once and cached
-    * — one build feeds two facts, the analytics layer, and writeAll.
+  /** dim_cotizante enriched with demografica_id by natural-key lookup,
+    * built and keyed ONCE in the retreat variant (with the booleanized
+    * proviene_otra_eps) and cached. The payment variant is that frame
+    * minus proviene_otra_eps: it is the last tie-breaker of the key
+    * order, so dropping it keeps every row's cotizante_id.
     */
-  private lazy val dimCotizantePago: DataFrame = assign(
-    Dimensions.dimCotizanteEnriched(sources("cotizante"), dimDemografica,
-      keepProvieneOtraEps = false), "cotizante_id", col("cedula")).cache()
   private lazy val dimCotizanteRetiro: DataFrame = assign(
     Dimensions.dimCotizanteEnriched(sources("cotizante"), dimDemografica,
       keepProvieneOtraEps = true), "cotizante_id", col("cedula")).cache()
 
   def dimCotizante(keepProvieneOtraEps: Boolean = false): DataFrame =
-    if (keepProvieneOtraEps) dimCotizanteRetiro else dimCotizantePago
+    if (keepProvieneOtraEps) dimCotizanteRetiro
+    else dimCotizanteRetiro.drop("proviene_otra_eps")
 
   // ---- facts ---------------------------------------------------------
   lazy val factMedicalFormula: DataFrame = Facts.factMedicalFormula(

@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -60,15 +61,40 @@ class PropertySpec extends SparkSpec {
 
   test("surrogate keys are invariant to input partitioning (global rank)") {
     import spark.implicits._
-    val df = (1 to 500).map(i => (i * 37 % 1000).toString).distinct.toDF("k")
-    def ids(parts: Int): Map[String, Int] =
+    val wide = (1 to 500).map(i => (i * 37 % 1000).toString).distinct.toDF("k")
+    // five rows: with AQE on the range exchange coalesces to ONE partition
+    val tiny = Seq("d", "b", "e", "a", "c").toDF("k")
+    def ids(df: DataFrame, parts: Int): Map[String, Int] =
       SurrogateKeys.assign(df.repartition(parts), "id", col("k"))
         .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    val one = ids(1)
-    assert(ids(7) == one && ids(32) == one)
-    // and the rank follows the key order
-    val sortedKeys = one.keys.toSeq.sorted
-    assert(sortedKeys.map(one) == (1 to sortedKeys.size))
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    try for (aqe <- Seq("true", "false"); df <- Seq(wide, tiny)) {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      // the rank follows the key order, whatever the input partitioning
+      val keys = df.collect().map(_.getString(0)).sorted.toSeq
+      val want = keys.zip(1 to keys.size).toMap
+      Seq(1, 7, 32).foreach { p =>
+        assert(ids(df, p) == want, s"aqe=$aqe partitions=$p rows=${keys.size}")
+      }
+      if (aqe == "true" && (df eq tiny))
+        assert(SurrogateKeys.assign(tiny.repartition(7), "id", col("k"))
+          .rdd.getNumPartitions == 1, "the tiny case no longer coalesces")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("surrogate keys stay dense 1..n in key order when the natural key repeats") {
+    import spark.implicits._
+    // AQE off: the range exchange keeps several partitions even for a
+    // handful of rows, so ids must carry across partition edges
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try check(Prop.forAll(Gen.nonEmptyListOf(Gen.zip(Gen.choose(0, 5), Gen.alphaStr))) { rows =>
+      val got = SurrogateKeys.assign(rows.toDF("k", "v"), "id", col("k"))
+        .collect().map(r => (r.getInt(2), (r.getInt(0), r.getString(1)))).sortBy(_._1)
+      got.map(_._1).toSeq == (1 to rows.size) &&
+        got.map(_._2).toSeq == rows.sorted
+    }, trials = 5)
+    finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   test("calendar fecha_id equals the dense rank of the date") {

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -47,6 +47,20 @@ class WarehouseSpec extends SparkSpec {
     assert(rows.forall(_.getAs[Int]("demografica_id") > 0))
     val retreat = wh.dimCotizante(keepProvieneOtraEps = true).orderBy("cedula").collect()
     assert(retreat.map(_.getAs[Boolean]("proviene_otra_eps")).toSeq == Seq(true, false))
+  }
+
+  test("payment and retreat dim_cotizante carry the same cotizante_id per cedula") {
+    def ids(df: DataFrame): Map[String, Int] = df.collect()
+      .map(r => r.getAs[String]("cedula") -> r.getAs[Int]("cotizante_id")).toMap
+    val payment = wh.dimCotizante()
+    assert(!payment.columns.contains("proviene_otra_eps"))
+    val retreat = ids(wh.dimCotizante(keepProvieneOtraEps = true))
+    assert(ids(payment) == retreat && retreat.size == 2)
+    // and they are the ids the payment variant gets when keyed on its own
+    val alone = SurrogateKeys.assign(Dimensions.dimCotizanteEnriched(
+      EtlFixtures.sources(spark)("cotizante"), wh.dimDemografica,
+      keepProvieneOtraEps = false), "cotizante_id", col("cedula"))
+    assert(ids(alone) == retreat)
   }
 
   test("fact_medical_formula has explode grain: one row per medicine code") {

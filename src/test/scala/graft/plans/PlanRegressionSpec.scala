@@ -88,13 +88,6 @@ class PlanRegressionSpec extends SparkSpec {
     // and their returned frame is a memory-sink scan, so the batch plan
     // check is meaningless for them (their state/join shapes are locked
     // in StreamingSpec instead).
-    // One documented exemption: SurrogateKeys.assign's triangular
-    // prefix-sum join over per-PARTITION counts is non-equi (b._pid <
-    // a._pid) and so necessarily a nested loop — but its input is one
-    // row per partition, bounded by cluster parallelism, never by data.
-    // It is recognized by its condition on the internal _pid column;
-    // any nested loop whose condition does NOT touch _pid is data-sized
-    // and fails the sweep.
     // predicate, not a frozen name list: the round-9 list silently
     // omitted newer streaming queries, which then ran a real
     // micro-batch per sweep and asserted on a memory-sink scan
@@ -121,11 +114,10 @@ class PlanRegressionSpec extends SparkSpec {
     val boundedGlobalWindows = Set("q116_global_median",
       "q155_global_percentiles", "q161_dimension_stats",
       "q175_pmi_collocations")
-    def dataSizedNestedLoops(
+    def nestedLoops(
         plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
       plan.collect {
-        case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-            if !j.condition.exists(_.toString.contains("_pid")) =>
+        case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec =>
           j.nodeName
         case c: org.apache.spark.sql.execution.joins.CartesianProductExec =>
           c.nodeName
@@ -136,7 +128,7 @@ class PlanRegressionSpec extends SparkSpec {
       .filterNot(streaming).foreach { q =>
         val plan = graft.SparkEntry.queries(q)(spark, dir)
           .queryExecution.executedPlan
-        val nested = dataSizedNestedLoops(plan)
+        val nested = nestedLoops(plan)
         val globalWins = plan.collect {
           case w: org.apache.spark.sql.execution.window.WindowExec
               if w.partitionSpec.isEmpty => w.nodeName
