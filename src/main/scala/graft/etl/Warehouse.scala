@@ -116,12 +116,6 @@ class Warehouse(spark: SparkSession, sources: String => DataFrame) {
     }
 }
 
-object Warehouse {
-  /** Build from a directory of reference-shaped parquet sources. */
-  def fromParquetDir(spark: SparkSession, dir: String): Warehouse =
-    new Warehouse(spark, name => spark.read.parquet(s"$dir/$name.parquet"))
-}
-
 /** Sinks (SURVEY §2.2): distributed writes replace the reference's
   * collect-to-driver + REST/SQLAlchemy loads (K1/K2/K4).
   */
@@ -131,10 +125,6 @@ object Sinks {
 
   def csv(df: DataFrame, path: String): Unit =
     df.write.option("header", "true").mode("overwrite").csv(path)
-
-  def jdbc(df: DataFrame, url: String, table: String,
-      props: java.util.Properties): Unit =
-    df.write.mode("append").jdbc(url, table, props)
 
   /** date → 'yyyy-MM-dd' string, the reference's pre-load normalization
     * (`/root/reference/processing/medical_formula_process.py:53-54`). */

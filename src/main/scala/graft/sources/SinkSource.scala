@@ -1053,13 +1053,14 @@ object SinkSource {
     * which case body RE-RUNS against the new head — so concurrent
     * APPENDS commute (each retry re-plans over the other's files) and
     * a transaction whose premise was destroyed fails the serializable
-    * validation loudly: any file it still wants to remove that the
-    * new head no longer cites was removed/rewritten by a concurrent
-    * commit, and republishing would resurrect or double-apply rows
-    * ([[SinkConflictException]], the ConcurrentModification
-    * contract). Removal here is CITATION arithmetic — un-cited files
-    * become orphans for `CALL remove_orphans`, never eager deletes, so
-    * a conflicting loser can abort without having destroyed anything.
+    * validation ([[checkPremise]]) loudly: any file it still wants to
+    * remove that the new head no longer cites was removed/rewritten by
+    * a concurrent commit, and republishing would resurrect or
+    * double-apply rows ([[SinkConflictException]], the
+    * ConcurrentModification contract). Removal here is CITATION
+    * arithmetic — un-cited files become orphans for `CALL
+    * remove_orphans`, never eager deletes, so a conflicting loser can
+    * abort without having destroyed anything.
     * Scale notes (100 TB): multi-writer tables are the production
     * default (ingest + compaction + retention race daily); the
     * validate-and-retry loop costs O(entries) metadata per attempt and
@@ -1074,13 +1075,7 @@ object SinkSource {
       attempts += 1
       val snap = entriesAt(path, base)
       val (add, remove) = body(snap)
-      val cited = snap.map(_._2).toSet
-      val gone = remove.filterNot(cited)
-      if (gone.nonEmpty)
-        throw new SinkConflictException(
-          s"serializable conflict on $path: files this transaction " +
-            s"consumes were removed or rewritten by a concurrent commit " +
-            s"(${gone.take(5).mkString(", ")})")
+      checkPremise(path, "transaction", remove, base, base)
       Commit(snap.filterNot(e => remove(e._2)) ++ add)
     }
     (v, attempts)
@@ -1133,31 +1128,119 @@ object SinkSource {
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
         .create(new SinkTable(path, Some(v), mor = mor), None, None))
 
-  /** Publish a REWRITE planned at snapshot `base`: `out.entries` (files
-    * already moved into data/) replace the `replaced` files, re-planned
-    * by file name onto whatever head the CAS lands on, so a concurrently
-    * appended file is carried — never dropped, never duplicated. The
-    * rewrite read `replaced` under `base`'s tombstones and materialized
-    * them (their vectors leave the sidecar); a concurrent commit that
-    * un-cited those files or changed their vectors or the equality-
-    * delete set would make the output resurrect or double rows, so the
-    * publish aborts with [[SinkConflictException]] instead. */
+  /** THE premise check of every commit that read `files` at snapshot
+    * `scanned` and now plans onto `head` (serializable isolation, the
+    * Iceberg/Delta conflict contract). The commit's output was computed
+    * FROM those files under `scanned`'s tombstones, so it aborts with
+    * [[SinkConflictException]] — re-plan from the new snapshot — when a
+    * concurrent commit
+    *   - un-cited any of them (a rewrite re-homed their rows: publishing
+    *     would duplicate or resurrect them, and positions in them are
+    *     meaningless now);
+    *   - changed their deletion vectors (a racing row-level commit
+    *     tombstoned rows this one also read: composing double-applies);
+    *   - changed the equality-delete set (value-keyed tombstones the
+    *     positional comparison cannot see: rows re-published above the
+    *     delete's sequence number would escape it).
+    * A commit that read nothing has no premise; `scanned == head` (a
+    * plan against the snapshot it read) leaves only the first check. */
+  private[sources] def checkPremise(path: String, what: String,
+      files: Set[String], scanned: Int, head: Int): Unit = {
+    if (files.isEmpty) return
+    val gone = files -- entriesAt(path, head).map(_._2)
+    if (gone.nonEmpty)
+      throw new SinkConflictException(
+        s"$what on $path: a concurrent commit removed or rewrote files " +
+          s"it scanned (${gone.take(5).mkString(", ")})")
+    if (scanned == head) return
+    def vecs(v: Int): Set[(String, String)] =
+      deleteSidecar(path, Some(v)).filter(p => files(p._1)).toSet
+    if (vecs(head) != vecs(scanned))
+      throw new SinkConflictException(
+        s"$what on $path: a concurrent row-level commit tombstoned rows " +
+          s"in files it scanned (scanned at v$scanned, head is v$head)")
+    def eqs(v: Int): Set[(String, Int, Int)] = eqDeletes(path, Some(v)).toSet
+    if (eqs(head) != eqs(scanned))
+      throw new SinkConflictException(
+        s"$what on $path: a concurrent equality delete landed after its " +
+          s"scan (scanned at v$scanned, head is v$head)")
+  }
+
+  /** Plan a REWRITE that read `replaced` at snapshot `scanned` onto
+    * `head`: `out.entries` replace the `replaced` files, re-planned by
+    * file name onto whatever head the CAS lands on, so a concurrently
+    * appended file is carried — never dropped, never duplicated — and
+    * the replaced files' vectors leave the sidecar with them
+    * ([[writeManifest]] keeps only vectors of cited files). Compaction,
+    * clustered rewrite and copy-on-write DML all publish this way. */
   private[sources] def publishRewrite(path: String, what: String,
-      base: Int, replaced: Set[String], out: Commit): Int =
-    publishCas(path, what) { head =>
-      val cur = entriesAt(path, head)
-      def vecs(v: Int): Set[(String, String)] =
-        deleteSidecar(path, Some(v)).filter(p => replaced(p._1)).toSet
-      val gone = replaced.filterNot(cur.map(_._2).toSet)
-      if (gone.nonEmpty || vecs(head) != vecs(base) ||
-          eqDeletes(path, Some(head)).toSet != eqDeletes(path, Some(base)).toSet)
-        throw new SinkConflictException(
-          s"$what on $path: a concurrent commit rewrote or tombstoned " +
-            s"files it replaces (planned at v$base, head is v$head)")
-      out.copy(entries = cur.filterNot(e => replaced(e._2)) ++ out.entries,
-        deletes = Some(deleteSidecar(path, Some(head))
-          .filterNot(p => replaced(p._1))))
+      scanned: Int, replaced: Set[String], out: Commit)(head: Int): Commit = {
+    checkPremise(path, what, replaced, scanned, head)
+    out.copy(entries =
+      entriesAt(path, head).filterNot(e => replaced(e._2)) ++ out.entries)
+  }
+
+  /** THE staged publish: every commit whose new files sit in a staging
+    * directory lands through here. Each CAS attempt runs `plan(head)` —
+    * the caller's premise validation and manifest planning — and the
+    * FIRST attempt then moves the staged vectors into deletes/ and data
+    * files into data/ ([[moveStaged]]), so validation always runs before
+    * the moves and again on every re-plan after a lost race. Readers see
+    * the old table or the complete new one: the manifest rename is the
+    * only commit point, and a failure after the moves leaves uncited
+    * files for `remove_orphans`, never rows. Drops `staging` after the
+    * publish; returns the published version. */
+  private[sources] def publishStaged(path: String, staging: Path,
+      what: String, staged: SinkCommitMessage)(plan: Int => Commit): Int = {
+    var moved = false
+    val v = publishCas(path, what) { head =>
+      val c = plan(head)
+      if (!moved) {
+        moveStaged(path, staging, "deletes", staged.vectors.map(_._2))
+        moveStaged(path, staging, "data", staged.entries.map(_._2))
+        moved = true
+      }
+      c
     }
+    fs(path).delete(staging, true)
+    v
+  }
+
+  /** The format's one move loop: renames `from/<name>` to
+    * `<path>/<dir>/<name>` for each name. Staged names are
+    * commit-unique, so an existing destination is a file some snapshot
+    * cites — replacing it would lose rows for its readers — and the
+    * move refuses instead. */
+  private[sources] def moveStaged(path: String, from: Path, dir: String,
+      names: Seq[String]): Unit = if (names.nonEmpty) {
+    val f = fs(path)
+    val to = new Path(path, dir)
+    f.mkdirs(to)
+    names.foreach { n =>
+      val dest = new Path(to, n)
+      if (f.exists(dest))
+        throw new IllegalStateException(
+          s"refusing to publish over existing file: $dest")
+      if (!f.rename(new Path(from, n), dest))
+        throw new IllegalStateException(s"staged file publish failed: $n")
+    }
+  }
+
+  /** A RAW (non-MoR) rewrite reads files without applying deletion
+    * vectors or equality deletes, then publishes their rows as new
+    * files — under fresh sequence numbers and with the old files'
+    * vectors retired, so tombstoned rows would resurrect. Compaction,
+    * clustered rewrite and copy-on-write DML refuse such a table at the
+    * snapshot `v` they read; a mor=true catalog merges the tombstones
+    * and materializes them instead. */
+  private[sources] def refuseRawRewrite(path: String, v: Int,
+      verb: String): Unit = {
+    def refuse(what: String) = throw new UnsupportedOperationException(
+      s"table $path carries $what; run $verb through a mor=true " +
+        "catalog (a raw rewrite would resurrect rows)")
+    if (eqDeletes(path, Some(v)).nonEmpty) refuse("equality deletes")
+    if (deleteSidecar(path, Some(v)).nonEmpty) refuse("deletion vectors")
+  }
 
   /** Publish an EQUALITY DELETE: drop every row (across all files
     * committed so far) whose `field` equals one of `values` — without
@@ -1415,6 +1498,26 @@ object SinkSource {
     }
   }
 
+  /** Eager GC of the vector files of retired (dataFile, vector) pairs,
+    * after the manifest stops citing them; failures are swallowed like
+    * [[gcData]]'s. */
+  private[sources] def gcVectors(path: String,
+      pairs: Seq[(String, String)]): Unit = {
+    val f = fs(path)
+    pairs.map(_._2).distinct.foreach { dv =>
+      try f.delete(new Path(path, s"deletes/$dv"), false)
+      catch { case _: Exception => }
+    }
+  }
+
+  /** A maintenance rewrite's output, staged as a scratch table written
+    * through the normal write path: its files (under `scratch/data`)
+    * with the fresh zone maps and null counts its manifest recorded. */
+  private[sources] def scratchMessage(scratch: Path): SinkCommitMessage = {
+    val sp = scratch.toString
+    SinkCommitMessage(manifest(sp), manifestStats(sp), manifestNulls(sp))
+  }
+
   /** Buffered LINE STREAM over a data file — the readers iterate it
     * instead of slurping the file into one String, so a task's heap
     * cost is a buffer, not the file size (the scale-correct idiom; at
@@ -1591,49 +1694,33 @@ class SinkCatalog extends CatalogPlugin with TableCatalog
     * surface production catalogs expose (Iceberg's
     * `rewrite_data_files` / `expire_snapshots` family): table upkeep
     * is a CATALOG verb with arguments and a result set, not an
-    * external script poking at files. */
+    * external script poking at files. One name → constructor table
+    * serves both the listing and the lookup. */
+  private def procedures: Seq[(String, () => org.apache.spark.sql
+      .connector.catalog.procedures.UnboundProcedure)] = Seq(
+    "compact" -> (() => new SinkCompactProcedure(root, mor)),
+    "tag" -> (() => new SinkTagProcedure(root)),
+    "expire" -> (() => new SinkExpireProcedure(root)),
+    "remove_orphans" -> (() => new SinkOrphanProcedure(root)),
+    "rollback" -> (() => new SinkRollbackProcedure(root)),
+    "rewrite_clustered" -> (() => new SinkRewriteProcedure(root, mor)),
+    "branch" -> (() => new SinkBranchProcedure(root)),
+    "fast_forward" -> (() => new SinkFastForwardProcedure(root)),
+    "drop_branch" -> (() => new SinkDropBranchProcedure(root)),
+    "build_bloom" -> (() => new SinkBloomProcedure(root)),
+    "evolve_spec" -> (() => new SinkEvolveSpecProcedure(root, bucketWrite)))
+
   override def listProcedures(namespace: Array[String])
       : Array[Identifier] =
     if (namespace.nonEmpty) Array.empty
-    else Array(Identifier.of(Array.empty, "compact"),
-      Identifier.of(Array.empty, "tag"),
-      Identifier.of(Array.empty, "expire"),
-      Identifier.of(Array.empty, "remove_orphans"),
-      Identifier.of(Array.empty, "rollback"),
-      Identifier.of(Array.empty, "rewrite_clustered"),
-      Identifier.of(Array.empty, "branch"),
-      Identifier.of(Array.empty, "fast_forward"),
-      Identifier.of(Array.empty, "drop_branch"),
-      Identifier.of(Array.empty, "build_bloom"),
-      Identifier.of(Array.empty, "evolve_spec"))
+    else procedures.map(p => Identifier.of(Array.empty, p._1)).toArray
 
   override def loadProcedure(ident: Identifier)
-      : org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure = {
-    if (ident.namespace.isEmpty && ident.name == "compact")
-      new SinkCompactProcedure(root, mor)
-    else if (ident.namespace.isEmpty && ident.name == "tag")
-      new SinkTagProcedure(root)
-    else if (ident.namespace.isEmpty && ident.name == "expire")
-      new SinkExpireProcedure(root)
-    else if (ident.namespace.isEmpty && ident.name == "remove_orphans")
-      new SinkOrphanProcedure(root)
-    else if (ident.namespace.isEmpty && ident.name == "rollback")
-      new SinkRollbackProcedure(root)
-    else if (ident.namespace.isEmpty && ident.name == "rewrite_clustered")
-      new SinkRewriteProcedure(root, mor)
-    else if (ident.namespace.isEmpty && ident.name == "branch")
-      new SinkBranchProcedure(root)
-    else if (ident.namespace.isEmpty && ident.name == "fast_forward")
-      new SinkFastForwardProcedure(root)
-    else if (ident.namespace.isEmpty && ident.name == "drop_branch")
-      new SinkDropBranchProcedure(root)
-    else if (ident.namespace.isEmpty && ident.name == "build_bloom")
-      new SinkBloomProcedure(root)
-    else if (ident.namespace.isEmpty && ident.name == "evolve_spec")
-      new SinkEvolveSpecProcedure(root, bucketWrite)
-    else
-      throw new java.util.NoSuchElementException(s"unknown procedure: $ident")
-  }
+      : org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure =
+    procedures.collectFirst {
+      case (n, make) if ident.namespace.isEmpty && n == ident.name => make()
+    }.getOrElse(throw new java.util.NoSuchElementException(
+      s"unknown procedure: $ident"))
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     if (namespace.nonEmpty) throw new NoSuchNamespaceException(namespace)
@@ -2539,26 +2626,13 @@ class SinkCompactProcedure(root: String, mor: Boolean = false)
         val m = SinkSource.entriesAt(path, base)
         val perKey = m.groupBy(_._1).view
           .mapValues(_.map(_._2).distinct).toMap
+        // a MoR compaction MATERIALIZES vectors and equality deletes
+        // (the rewritten files' new sequence numbers self-prune the
+        // eq headers); a raw one would resurrect their rows
+        if (!mor) SinkSource.refuseRawRewrite(path, base, "compact")
         val dvd = SinkSource.deleteSidecar(path, at)
         val dvdFiles = dvd.map(_._1).toSet
-        // equality deletes: a non-MoR compaction reads files RAW, so
-        // rewriting an eq-subject file would resurrect its deleted
-        // rows under a fresh sequence number — refuse loudly (eq
-        // deletes ride the MoR read path by design); a MoR compaction
-        // MATERIALIZES them instead, and the rewritten files' new
-        // sequence numbers self-prune the headers
         val eqs = SinkSource.eqDeletes(path, at)
-        if (eqs.nonEmpty && !mor)
-          throw new UnsupportedOperationException(
-            s"table $path carries equality deletes; compact it through " +
-              "a mor=true catalog (a raw rewrite would resurrect rows)")
-        // positional vectors get the same guard: a non-MoR compaction
-        // reads the vectored files unmerged yet drops their vectors
-        // from the new sidecar — tombstoned rows would resurrect
-        if (dvd.nonEmpty && !mor)
-          throw new UnsupportedOperationException(
-            s"table $path carries deletion vectors; compact it through " +
-              "a mor=true catalog (a raw rewrite would resurrect rows)")
         val seqs = SinkSource.fileSeqs(path, at)
         val eqSubject: String => Boolean = fl =>
           eqs.exists { case (_, _, s) => seqs.getOrElse(fl, 0) < s }
@@ -2621,38 +2695,17 @@ class SinkCompactProcedure(root: String, mor: Boolean = false)
             scratch.toString, overwrite = true,
             fields = if (curSid == 0) None else Some(curFields),
             forceSpec = if (curSpec._1 == 0) None else Some(curSpec))
-          val f = SinkSource.fs(path)
-          val tag = java.util.UUID.randomUUID().toString.take(8)
-          // the scratch table went through the normal write path, so
-          // its manifest carries fresh zone maps — remapped to the
-          // compacted names they publish under (stale carried stats
-          // are impossible: the rewritten files are NEW names)
-          val scratchStats = SinkSource.manifestStats(scratch.toString)
-          val compacted = SinkSource.manifest(scratch.toString).map {
-            case (k, fl, n) =>
-              val dest = s"c${tag}_$fl" // unique: never clobbers a live file
-              if (!f.rename(new Path(scratch, s"data/$fl"),
-                new Path(path, s"data/$dest")))
-                throw new IllegalStateException(s"compaction move failed: $fl")
-              (k, dest, n)
-          }
-          val compactedStats = scratchStats.map { case (fl, ss) =>
-            s"c${tag}_$fl" -> ss }
-          val compactedNulls = SinkSource.manifestNulls(scratch.toString)
-            .map { case (fl, ns) => s"c${tag}_$fl" -> ns }
+          val compacted = SinkSource.scratchMessage(scratch)
           val replaced = m.filter { case (k, _, _) => targets.contains(k) }
             .map(_._2).toSet
-          SinkSource.publishRewrite(path, "compact", base, replaced,
-            SinkSource.Commit(compacted,
-              newFileSchemaId = Some(curSid), newStats = compactedStats,
-              newNulls = compactedNulls, newFileSpecId = Some(curSpec._1)))
+          SinkSource.publishStaged(path, new Path(scratch, "data"),
+            "compact", compacted)(SinkSource.publishRewrite(path, "compact",
+              base, replaced,
+              compacted.commit(compacted.entries, curSid, curSpec._1)))
           SinkSource.gcData(path, replaced)
-          dvd.filter { case (df, _) => replaced.contains(df) }
-            .foreach { case (_, dv) =>
-              try f.delete(new Path(path, s"deletes/$dv"), false)
-              catch { case _: Exception => } }
-          f.delete(scratch, true)
-          filesAfter = filesBefore - replaced.size + compacted.size
+          SinkSource.gcVectors(path, dvd.filter(p => replaced(p._1)))
+          SinkSource.fs(path).delete(scratch, true)
+          filesAfter = filesBefore - replaced.size + compacted.entries.size
         }
         val row: InternalRow = new GenericInternalRow(Array[Any](
           targets.size.toLong, filesBefore, filesAfter))
@@ -3253,16 +3306,7 @@ class SinkRewriteProcedure(root: String, mor: Boolean = false)
           throw new UnsupportedOperationException(
             s"rewrite_clustered clusters by a BIGINT column (zone maps " +
               s"cover BIGINT); $column is ${SinkSchemas.typeName(fld.dt)}")
-        if (SinkSource.eqDeletes(path, at).nonEmpty && !mor)
-          throw new UnsupportedOperationException(
-            s"table $path carries equality deletes; rewrite through a " +
-              "mor=true catalog (a raw rewrite would resurrect rows)")
-        if (SinkSource.deleteSidecar(path, at).nonEmpty && !mor)
-          throw new UnsupportedOperationException(
-            s"table $path carries deletion vectors; rewrite through a " +
-              "mor=true catalog (a raw rewrite reads files unmerged yet " +
-              "publishes an empty sidecar — tombstoned rows would " +
-              "resurrect)")
+        if (!mor) SinkSource.refuseRawRewrite(path, base, "rewrite_clustered")
         // clustered rewrite lays one file per (key, range slice) —
         // the IDENTITY layout. Under an evolved current spec that
         // would contradict what new writes produce, so it refuses;
@@ -3296,37 +3340,21 @@ class SinkRewriteProcedure(root: String, mor: Boolean = false)
             .repartitionByRange(parts, col("k"), col(column)),
           scratch.toString, overwrite = true,
           fields = if (curSid == 0) None else Some(curFields))
-        val f = SinkSource.fs(path)
-        val tag = java.util.UUID.randomUUID().toString.take(8)
-        val scratchStats = SinkSource.manifestStats(scratch.toString)
-        val rewritten = SinkSource.manifest(scratch.toString).map {
-          case (k, fl, n) =>
-            val dest = s"z${tag}_$fl"
-            if (!f.rename(new Path(scratch, s"data/$fl"),
-              new Path(path, s"data/$dest")))
-              throw new IllegalStateException(s"rewrite move failed: $fl")
-            (k, dest, n)
-        }
-        val rewrittenStats = scratchStats.map { case (fl, ss) =>
-          s"z${tag}_$fl" -> ss }
-        val rewrittenNulls = SinkSource.manifestNulls(scratch.toString)
-          .map { case (fl, ns) => s"z${tag}_$fl" -> ns }
+        val rewritten = SinkSource.scratchMessage(scratch)
         val oldFiles = m.map(_._2).distinct
-        val oldVecs = SinkSource.deleteSidecar(path, at).map(_._2).distinct
+        val oldVecs = SinkSource.deleteSidecar(path, at)
         // full swap: every entry read is replaced, tombstones are
         // materialized
-        SinkSource.publishRewrite(path, "rewrite_clustered", base,
-          oldFiles.toSet, SinkSource.Commit(rewritten,
-            newFileSchemaId = Some(curSid), newStats = rewrittenStats,
-            newNulls = rewrittenNulls))
+        SinkSource.publishStaged(path, new Path(scratch, "data"),
+          "rewrite_clustered", rewritten)(SinkSource.publishRewrite(path,
+            "rewrite_clustered", base, oldFiles.toSet,
+            rewritten.commit(rewritten.entries, curSid, 0)))
         SinkSource.gcData(path, oldFiles)
-        oldVecs.foreach { dv =>
-          try f.delete(new Path(path, s"deletes/$dv"), false)
-          catch { case _: Exception => } }
-        f.delete(scratch, true)
+        SinkSource.gcVectors(path, oldVecs)
+        SinkSource.fs(path).delete(scratch, true)
         val row: InternalRow = new GenericInternalRow(Array[Any](
-          filesBefore, rewritten.map(_._2).distinct.size.toLong,
-          rewritten.map(_._3).sum))
+          filesBefore, rewritten.entries.map(_._2).distinct.size.toLong,
+          rewritten.entries.map(_._3).sum))
         val result: Scan = new LocalScan {
           override def rows(): Array[InternalRow] = Array(row)
           override def readSchema(): StructType = StructType(Seq(
@@ -3962,20 +3990,12 @@ class SinkDeltaScan(path: String, op: SinkDeltaOperation,
     scan.createReaderFactory()
 }
 
-case class SinkDvCommitMessage(entries: Seq[(String, String)],
-    dataEntries: Seq[(Long, String, Long)] = Seq.empty,
-    dataStats: Map[String, Seq[(Int, Long, Long)]] = Map.empty,
-    dataNulls: Map[String, Seq[(Int, Long)]] = Map.empty,
-    dataBlooms: Map[String, Seq[(Int, Int, Int, String)]] = Map.empty)
-    extends WriterCommitMessage
-
 class SinkDvBatchWrite(path: String, queryId: String,
     op: SinkDeltaOperation,
     fields: Seq[SinkSchemas.SinkField] = SinkSchemas.base, sid: Int = 0)
-    extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
+    extends SinkStagedWrite(path, queryId)
+    with org.apache.spark.sql.connector.write.DeltaBatchWrite {
   import org.apache.spark.sql.connector.write.DeltaWriterFactory
-
-  private def stagingDir = new Path(path, s"_staging/$queryId")
 
   // a MoR UPDATE's re-inserted rows are ordinary appends: they land
   // grouped under the CURRENT spec and stamped with its era
@@ -3988,104 +4008,23 @@ class SinkDvBatchWrite(path: String, queryId: String,
     new SinkDvWriterFactory(path, queryId, fields, spec._2, spec._3,
       bloomPolicy)
 
-  /** Publish: move staged vectors into deletes/ and staged data files
-    * (UPDATE's new rows) into data/, then write the next version with
-    * sidecar = previous active vectors + the new ones and manifest =
-    * previous entries + the appended ones, atomically. EXISTING data
-    * files are never touched. */
+  /** Publish the staged vectors (added to the head's sidecar) and
+    * UPDATE's staged new rows (appended to the head's entries) as one
+    * version; EXISTING data files are never touched. The vectors
+    * address (file, pos) pairs read at the scan's snapshot, so
+    * [[SinkSource.checkPremise]] guards exactly those files; concurrent
+    * appends commute. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dvs = messages.flatMap {
-      case m: SinkDvCommitMessage => m.entries
-    }.toSeq
-    val appended = messages.flatMap {
-      case m: SinkDvCommitMessage => m.dataEntries
-    }.toSeq
-    val appendedStats = messages.flatMap {
-      case m: SinkDvCommitMessage => m.dataStats
-    }.toMap
-    val appendedNulls = messages.flatMap {
-      case m: SinkDvCommitMessage => m.dataNulls
-    }.toMap
-    val appendedBlooms = messages.flatMap {
-      case m: SinkDvCommitMessage => m.dataBlooms
-    }.toMap
-    val f = SinkSource.fs(path)
-    val ourFiles = dvs.map(_._1).distinct.toSet
-    def conflictCheck(base: Int, head: Seq[(Long, String, Long)]): Unit = {
-      // SERIALIZABLE VALIDATION: the new vectors address (file, pos)
-      // pairs READ at the scan's snapshot. (a) a vector for a file the
-      // head no longer cites means a concurrent rewrite (compaction,
-      // CoW) re-homed those rows — the positions are meaningless now;
-      // (b) NEW tombstones on our files since the scan mean a
-      // concurrent row-level commit deleted/updated rows this
-      // operation also read — composing would double-apply (an UPDATE
-      // over a concurrently-updated row inserts twice). Both abort
-      // loudly; the statement re-runs against the new snapshot.
-      val cited = head.map(_._2).toSet
-      val gone = ourFiles.filterNot(cited)
-      if (gone.nonEmpty)
-        throw new SinkConflictException(
-          s"serializable validation failed for $path: a concurrent " +
-            s"commit rewrote files this operation tombstones " +
-            s"(${gone.take(5).mkString(", ")})")
-      val scanV = op.scannedVersion.get()
-      if (scanV >= 0 && ourFiles.nonEmpty) {
-        def vecsOn(v: Int): Set[(String, String)] =
-          if (v == 0) Set.empty
-          else SinkSource.deleteSidecar(path, Some(v))
-            .filter(p => ourFiles.contains(p._1)).toSet
-        if (vecsOn(base) != vecsOn(scanV))
-          throw new SinkConflictException(
-            s"serializable validation failed for $path: a concurrent " +
-              "row-level commit tombstoned rows this operation read " +
-              s"(scanned at v$scanV, head is v$base)")
-        // equality deletes tombstone by VALUE, not (file, pos), so the
-        // positional sidecar comparison above cannot see them — yet a
-        // MoR UPDATE racing an equality delete re-inserts the updated
-        // rows with a sequence number ABOVE the delete's, resurrecting
-        // rows the takedown targeted. Any change to the eq-delete set
-        // between scan and head therefore aborts too (same refusal
-        // class as the CDC feed's).
-        def eqsAt(v: Int): Set[(String, Int, Int)] =
-          if (v == 0) Set.empty
-          else SinkSource.eqDeletes(path, Some(v)).toSet
-        if (eqsAt(base) != eqsAt(scanV))
-          throw new SinkConflictException(
-            s"serializable validation failed for $path: a concurrent " +
-              "equality delete landed after this operation's scan " +
-              s"(scanned at v$scanV, head is v$base)")
-      }
+    val staged = SinkCommitMessage.merge(messages)
+    val vectored = staged.vectors.map(_._1).toSet
+    SinkSource.publishStaged(path, staging, "delta publish", staged) { head =>
+      SinkSource.checkPremise(path, "delta publish", vectored,
+        op.scannedVersion.get(), head)
+      staged.commit(SinkSource.entriesAt(path, head) ++ staged.entries,
+        sid, spec._1).copy(deletes = Some(
+          SinkSource.deleteSidecar(path, Some(head)) ++ staged.vectors))
     }
-    conflictCheck(SinkSource.currentVersion(path),
-      SinkSource.manifest(path)) // before any file moves
-    val dvDir = new Path(path, "deletes")
-    f.mkdirs(dvDir)
-    dvs.foreach { case (_, dv) =>
-      if (!f.rename(new Path(stagingDir, dv), new Path(dvDir, dv)))
-        throw new IllegalStateException(s"staged vector publish failed: $dv")
-    }
-    val dataDir = new Path(path, "data")
-    f.mkdirs(dataDir)
-    appended.foreach { case (_, fl, _) =>
-      if (!f.rename(new Path(stagingDir, fl), new Path(dataDir, fl)))
-        throw new IllegalStateException(s"staged data publish failed: $fl")
-    }
-    // CAS publish with revalidation (concurrent APPENDS commute with a
-    // delta commit; anything touching our files/rows aborted above)
-    SinkSource.publishCas(path, "delta publish") { base =>
-      val head = SinkSource.entriesAt(path, base)
-      conflictCheck(base, head)
-      val active = SinkSource.deleteSidecar(path, Some(base)) ++ dvs
-      SinkSource.Commit(head ++ appended, Some(active),
-        newFileSchemaId = Some(sid), newStats = appendedStats,
-        newNulls = appendedNulls, newFileSpecId = Some(spec._1),
-        newBlooms = appendedBlooms)
-    }
-    f.delete(stagingDir, true)
   }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    SinkSource.fs(path).delete(stagingDir, true)
 }
 
 class SinkDvWriterFactory(path: String, queryId: String,
@@ -4143,11 +4082,9 @@ class SinkDvWriter(path: String, queryId: String, partitionId: Int,
       try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
       (dataFile, name)
     }
-    val insertMsg = inserts.commit() match {
-      case m: SinkCommitMessage => m
+    inserts.commit() match {
+      case m: SinkCommitMessage => m.copy(vectors = entries)
     }
-    SinkDvCommitMessage(entries, insertMsg.entries, insertMsg.stats,
-      insertMsg.nulls, insertMsg.blooms)
   }
   override def abort(): Unit = inserts.abort()
   override def close(): Unit = inserts.close()
@@ -4173,6 +4110,10 @@ class SinkRowLevelOperation(path: String,
     * actually fed through the rewrite may be replaced. */
   private[sources] val scannedFiles =
     new java.util.concurrent.atomic.AtomicReference[Seq[String]](Seq.empty)
+  /** The snapshot version those files were read at — the premise the
+    * commit validates the head against, as [[SinkDeltaOperation]]'s. */
+  private[sources] val scannedVersion =
+    new java.util.concurrent.atomic.AtomicInteger(-1)
 
   override def command()
       : org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
@@ -4231,22 +4172,28 @@ class SinkRowLevelScan(path: String, op: SinkRowLevelOperation,
       case _ => true
     }
 
+  // the snapshot the whole scan plans from (every re-plan after
+  // runtime filtering reads the same one)
+  private lazy val version: Int = SinkSource.currentVersion(path)
+
   private def entries: Seq[(Long, String, Long)] = {
-    val fsp = SinkSource.fileSpecs(path)
-    val specDefs = SinkSource.partSpecs(path)
-    SinkSource.manifest(path).filter { case (k, fl, _) =>
+    val fsp = SinkSource.fileSpecs(path, Some(version))
+    val specDefs = SinkSource.partSpecs(path, Some(version))
+    SinkSource.entriesAt(path, version).filter { case (k, fl, _) =>
       keep(k, SinkSource.layoutOf(specDefs(fsp.getOrElse(fl, 0)))) }
   }
 
   override def description(): String = {
-    val all = SinkSource.manifest(path).size
+    val all = SinkSource.entriesAt(path, version).size
     s"SinkRowLevelScan(groups=${entries.size}/$all)"
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
+    SinkSource.refuseRawRewrite(path, version, "copy-on-write DML")
     val es = entries
     op.scannedFiles.set(es.map(_._2).distinct)
-    val fieldsOf = SinkSource.fileFields(path, None)
+    op.scannedVersion.set(version)
+    val fieldsOf = SinkSource.fileFields(path, Some(version))
     es.map(_._2).distinct.sorted
       .map(f => SinkInputPartition(new Path(path, s"data/$f").toString,
         fieldsOf(f)): InputPartition)
@@ -4257,20 +4204,19 @@ class SinkRowLevelScan(path: String, op: SinkRowLevelOperation,
     new SinkReaderFactory(readFields = fields)
 }
 
-/** The replace-data commit: stage like any write, then publish a
-  * manifest where the operation's scanned files are swapped for the
-  * staged ones — untouched groups' entries are carried over verbatim,
-  * so the rewrite's blast radius is exactly the scanned group set.
-  * Replaced data files are GC'd only after the manifest stops citing
-  * them (crash in between leaks a file, never a row — same discipline
-  * as deleteWhere).
+/** The replace-data commit: stage like any write, then publish the
+  * staged files as a rewrite of the operation's scanned files —
+  * untouched groups' entries are carried over verbatim, so the
+  * rewrite's blast radius is exactly the scanned group set, and the
+  * premise check aborts it if a concurrent commit rewrote or
+  * tombstoned what it read. Replaced data files are GC'd only after
+  * the manifest stops citing them (crash in between leaks a file,
+  * never a row — same discipline as deleteWhere).
   */
 class SinkReplaceDataWrite(path: String, queryId: String,
     op: SinkRowLevelOperation,
     fields: Seq[SinkSchemas.SinkField] = SinkSchemas.base, sid: Int = 0)
-    extends BatchWrite {
-
-  private def stagingDir = new Path(path, s"_staging/$queryId")
+    extends SinkStagedWrite(path, queryId) {
 
   // the CoW rewrite regroups the recomputed rows under the CURRENT
   // spec — a row-level DML on an evolved table migrates the touched
@@ -4287,70 +4233,14 @@ class SinkReplaceDataWrite(path: String, queryId: String,
       specKind = spec._2, specParam = spec._3, bloomPolicy = bloomPolicy)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val committed = messages.flatMap {
-      case m: SinkCommitMessage => m.entries
-    }.toSeq
-    val stats = messages.flatMap {
-      case m: SinkCommitMessage => m.stats
-    }.toMap
-    val nulls = messages.flatMap {
-      case m: SinkCommitMessage => m.nulls
-    }.toMap
-    val blooms = messages.flatMap {
-      case m: SinkCommitMessage => m.blooms
-    }.toMap
+    val staged = SinkCommitMessage.merge(messages)
     val replaced = op.scannedFiles.get().toSet
-    val f = SinkSource.fs(path)
-    def conflictCheck(head: Seq[(Long, String, Long)]): Unit = {
-      // SERIALIZABLE VALIDATION (the Iceberg/Delta conflict contract):
-      // this rewrite recomputed rows FROM the scanned files — if a
-      // concurrent commit replaced or removed any of them, publishing
-      // would duplicate its rows (the racer's replacement stays cited
-      // AND our recomputation of the same rows lands) or resurrect
-      // deleted ones; abort loudly instead, the statement re-runs
-      // against the new snapshot
-      val cited = head.map(_._2).toSet
-      val gone = replaced.filterNot(cited)
-      if (gone.nonEmpty)
-        throw new SinkConflictException(
-          s"serializable validation failed for $path: a concurrent " +
-            s"commit rewrote files this operation scanned " +
-            s"(${gone.take(5).mkString(", ")})")
-    }
-    conflictCheck(SinkSource.manifest(path)) // before any file moves
-    val dataDir = new Path(path, "data")
-    f.mkdirs(dataDir)
-    committed.foreach { case (_, fl, _) =>
-      val dest = new Path(dataDir, fl)
-      // names carry the statement's commit tag, so an existing dest is
-      // a live file of some snapshot — replacing it would corrupt
-      // history; refuse instead (same discipline as SinkBatchWrite)
-      if (f.exists(dest))
-        throw new IllegalStateException(
-          s"refusing to publish over existing data file: $dest")
-      if (!f.rename(new Path(stagingDir, fl), dest))
-        throw new IllegalStateException(s"staged file publish failed: $fl")
-    }
-    // CAS publish with revalidation: a lost rename race re-reads the
-    // head, re-runs the conflict check there, and republishes —
-    // concurrent APPENDS commute with a group rewrite; anything that
-    // touched the scanned groups aborts above. A conflict after the
-    // moves leaves the moved files orphaned (metadata-sized garbage
-    // for remove_orphans), never cited.
-    SinkSource.publishCas(path, "row-level publish") { base =>
-      val head = SinkSource.entriesAt(path, base)
-      conflictCheck(head)
-      val kept = head.filterNot { case (_, fl, _) => replaced.contains(fl) }
-      SinkSource.Commit(kept ++ committed,
-        newFileSchemaId = Some(sid), newStats = stats,
-        newNulls = nulls, newFileSpecId = Some(spec._1), newBlooms = blooms)
-    }
+    SinkSource.publishStaged(path, staging, "row-level publish", staged)(
+      SinkSource.publishRewrite(path, "row-level publish",
+        op.scannedVersion.get(), replaced,
+        staged.commit(staged.entries, sid, spec._1)))
     SinkSource.gcData(path, replaced)
-    f.delete(stagingDir, true)
   }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    SinkSource.fs(path).delete(stagingDir, true)
 }
 
 // ---- read side --------------------------------------------------------
@@ -5578,13 +5468,46 @@ class SinkBucketBound
   * column's non-null values, keyed by staged name then field id —
   * computed inline by the writer (the rows stream through it anyway,
   * so the stats are free) and published as `#stat` manifest headers
-  * for scan-time file skipping and metadata-only MIN/MAX.
+  * for scan-time file skipping and metadata-only MIN/MAX. `vectors`
+  * are a merge-on-read DML's staged deletion vectors, as
+  * (dataFile, vectorFile) pairs.
   */
 case class SinkCommitMessage(entries: Seq[(Long, String, Long)],
     stats: Map[String, Seq[(Int, Long, Long)]] = Map.empty,
     nulls: Map[String, Seq[(Int, Long)]] = Map.empty,
-    blooms: Map[String, Seq[(Int, Int, Int, String)]] = Map.empty)
-    extends WriterCommitMessage
+    blooms: Map[String, Seq[(Int, Int, Int, String)]] = Map.empty,
+    vectors: Seq[(String, String)] = Seq.empty)
+    extends WriterCommitMessage {
+
+  /** The manifest publish citing `cited`, which includes these staged
+    * files: they carry the writer's schema id `sid` and spec era
+    * `specId`, and their zone maps, null counts and blooms. */
+  private[sources] def commit(cited: Seq[(Long, String, Long)], sid: Int,
+      specId: Int): SinkSource.Commit =
+    SinkSource.Commit(cited, newFileSchemaId = Some(sid), newStats = stats,
+      newNulls = nulls, newFileSpecId = Some(specId), newBlooms = blooms)
+}
+
+object SinkCommitMessage {
+  /** Every task's message of one write, as one. */
+  def merge(messages: Array[WriterCommitMessage]): SinkCommitMessage = {
+    val ms = messages.toSeq.map { case m: SinkCommitMessage => m }
+    SinkCommitMessage(ms.flatMap(_.entries), ms.flatMap(_.stats).toMap,
+      ms.flatMap(_.nulls).toMap, ms.flatMap(_.blooms).toMap,
+      ms.flatMap(_.vectors))
+  }
+}
+
+/** A batch write whose tasks stage under `_staging/<queryId>`: commit
+  * publishes through [[SinkSource.publishStaged]], abort drops the
+  * staging directory. */
+abstract class SinkStagedWrite(path: String, queryId: String)
+    extends BatchWrite {
+  protected val staging = new Path(path, s"_staging/$queryId")
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    SinkSource.fs(path).delete(staging, true)
+}
 
 class SinkBatchWrite(path: String, queryId: String, truncate: Boolean,
     txn: Option[(String, Long)] = None,
@@ -5593,9 +5516,7 @@ class SinkBatchWrite(path: String, queryId: String, truncate: Boolean,
     declareSchema: Boolean = false,
     forcedSpec: Option[(Int, String, Int)] = None,
     mergeSchema: Boolean = false)
-    extends BatchWrite {
-
-  private def stagingDir = new Path(path, s"_staging/$queryId")
+    extends SinkStagedWrite(path, queryId) {
 
   // the partition spec this write lays files out under — resolved
   // ONCE, driver-side (or forced: the streaming sink resolves at
@@ -5612,39 +5533,16 @@ class SinkBatchWrite(path: String, queryId: String, truncate: Boolean,
       nameTag = SinkWriter.commitTag(queryId), fields = fields,
       specKind = spec._2, specParam = spec._3, bloomPolicy = bloomPolicy)
 
-  /** Runs ONCE on the driver, after every task reported success. The
-    * publish order is: move staged files into data/, then publish the
-    * next manifest version — readers either see the old table or the
-    * complete new one, never a prefix. Publishing REFUSES to land on
-    * an existing destination: staged names carry a commit-unique tag,
-    * so a collision means two applications raced the same name — and
-    * silently replacing a file the current (or a historical) manifest
-    * cites would lose rows for readers of those snapshots.
+  /** Runs ONCE on the driver, after every task reported success, and
+    * publishes through [[SinkSource.publishStaged]]: readers either see
+    * the old table or the complete new one, never a prefix, and a
+    * staged name that collides with a live file (two applications
+    * raced the same name) refuses rather than replacing rows readers
+    * of some snapshot still cite.
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val committed = messages.flatMap {
-      case m: SinkCommitMessage => m.entries
-    }.toSeq
-    val stats = messages.flatMap {
-      case m: SinkCommitMessage => m.stats
-    }.toMap
-    val nulls = messages.flatMap {
-      case m: SinkCommitMessage => m.nulls
-    }.toMap
-    val blooms = messages.flatMap {
-      case m: SinkCommitMessage => m.blooms
-    }.toMap
-    val f = SinkSource.fs(path)
-    val dataDir = new Path(path, "data")
-    f.mkdirs(dataDir)
-    committed.foreach { case (_, fl, _) =>
-      val dest = new Path(dataDir, fl)
-      if (f.exists(dest))
-        throw new IllegalStateException(
-          s"refusing to publish over existing data file: $dest")
-      if (!f.rename(new Path(stagingDir, fl), dest))
-        throw new IllegalStateException(s"staged file publish failed: $fl")
-    }
+    val staged = SinkCommitMessage.merge(messages)
+    val committed = staged.entries
     // overwrite-by-filter: matched keys' entries are swapped for the
     // staged files IN THIS version, everything else carried verbatim —
     // a partial truncate that never reads the kept groups.
@@ -5654,7 +5552,7 @@ class SinkBatchWrite(path: String, queryId: String, truncate: Boolean,
     // last-writer-wins (each version is internally consistent).
     var dropped: Seq[(Long, String, Long)] = Seq.empty
     var publishedFiles = Set.empty[String]
-    SinkSource.publishCas(path, "write publish") { base =>
+    SinkSource.publishStaged(path, staging, "write publish", staged) { base =>
       val head = SinkSource.entriesAt(path, base)
       // overwrite-by-filter is EXACT at manifest granularity only
       // when every matched group's key IS the rows' k — an evolved
@@ -5721,10 +5619,8 @@ class SinkBatchWrite(path: String, queryId: String, truncate: Boolean,
           }
         }
       publishedFiles = (prior ++ committed).map(_._2).toSet
-      SinkSource.Commit(prior ++ committed, txn = txn,
-        schemaId = declaredSid,
-        newFileSchemaId = Some(sid), newStats = stats,
-        newNulls = nulls, newFileSpecId = Some(spec._1), newBlooms = blooms)
+      staged.commit(prior ++ committed, sid, spec._1)
+        .copy(txn = txn, schemaId = declaredSid)
     }
     // GC only the files the REPLACED HEAD actually cited (both the
     // truncate and the deleteWhere branch), after the manifest stops
@@ -5738,11 +5634,7 @@ class SinkBatchWrite(path: String, queryId: String, truncate: Boolean,
     // applies an age grace for exactly this reason.
     SinkSource.gcData(path,
       dropped.map(_._2).distinct.filterNot(publishedFiles))
-    f.delete(stagingDir, true)
   }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    SinkSource.fs(path).delete(stagingDir, true)
 }
 
 class SinkWriterFactory(path: String, queryId: String,
@@ -5800,26 +5692,23 @@ class SinkStreamingWrite(path: String, queryId: String,
     new SinkStreamingWriterFactory(path, queryId, runTag, fields,
       specKind = spec._2, specParam = spec._3, bloomPolicy = bloomPolicy)
 
-  override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val f = SinkSource.fs(path)
-    val staging = new Path(path, s"_staging/$queryId/$epochId")
-    if (SinkSource.txns(path).get(queryId).exists(_ >= epochId)) {
-      // replayed epoch after recovery: already published — discard the
-      // replay's staged files, publish nothing twice
-      f.delete(staging, true)
-      return
-    }
+  /** One epoch's commit is a batch write staged under the epoch. */
+  private def epochWrite(epochId: Long): SinkBatchWrite =
     new SinkBatchWrite(path, s"$queryId/$epochId", truncate = false,
       txn = Some((queryId, epochId)), fields = fields, sid = sid,
       forcedSpec = Some(spec))
-      .commit(messages)
-  }
+
+  override def commit(epochId: Long,
+      messages: Array[WriterCommitMessage]): Unit =
+    // a replayed epoch after recovery is already published: discard the
+    // replay's staged files, publish nothing twice
+    if (SinkSource.txns(path).get(queryId).exists(_ >= epochId))
+      epochWrite(epochId).abort(messages)
+    else epochWrite(epochId).commit(messages)
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
-    SinkSource.fs(path).delete(
-      new Path(path, s"_staging/$queryId/$epochId"), true)
+    epochWrite(epochId).abort(messages)
 }
 
 class SinkStreamingWriterFactory(path: String, queryId: String,

@@ -324,20 +324,7 @@ object EventsStreaming {
       mode: OutputMode = OutputMode.Append): DataFrame = {
     val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
     q.processAllAvailable()
-    dumpProgress(q)
     q.stop()
     df.sparkSession.table(name)
   }
-
-  /** Dev-only micro-batch timeline dump (stderr, env-gated): the
-    * per-batch durationMs breakdown (triggerExecution, addBatch,
-    * walCommit, stateStore commit times...) that separates engine
-    * fixed cost from task work when optimizing the streaming tier.
-    * Inert unless SPARK_GRAFT_STREAM_PROF is set.
-    */
-  private[graft] def dumpProgress(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROF"))
-      q.recentProgress.foreach(p =>
-        System.err.println(s"[streamprof] ${q.name} ${p.json}"))
 }

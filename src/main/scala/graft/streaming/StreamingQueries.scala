@@ -476,7 +476,6 @@ object StreamingQueries {
       .start()
     // the mechanism: NO stop() — the trigger ends the query itself
     q.awaitTermination()
-    EventsStreaming.dumpProgress(q)
     (q.recentProgress.length, q.recentProgress.map(_.numInputRows).sum)
   }
 
@@ -1422,7 +1421,6 @@ object StreamingQueries {
       .parquet(s"$stage/*.parquet")
     val q = curationSinkStart(docs, outDir, ckptDir)
     q.processAllAvailable()
-    EventsStreaming.dumpProgress(q)
     q.stop()
     curationManifest(spark, outDir)
   }
@@ -1744,7 +1742,6 @@ object StreamingQueries {
       .option("checkpointLocation", ckpt)
       .format("memory").queryName("q272_mem").start()
     q.processAllAvailable()
-    EventsStreaming.dumpProgress(q)
     q.stop()
     ss.table("q272_mem").orderBy(col("k"))
   }
@@ -1978,7 +1975,6 @@ object StreamingQueries {
       .option("checkpointLocation", ckpt)
       .format("memory").queryName("q300_mem").start()
     q.processAllAvailable()
-    EventsStreaming.dumpProgress(q)
     q.stop()
     ss.table("q300_mem").filter(col("n_rows") > 0).orderBy(col("k"))
   }

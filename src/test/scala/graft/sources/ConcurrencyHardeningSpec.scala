@@ -92,7 +92,8 @@ class ConcurrencyHardeningSpec extends SparkSpec {
     val vBefore = SinkSource.currentVersion(root)
     val ex = intercept[SinkConflictException] {
       new SinkDvBatchWrite(root, "hard_eq", op)
-        .commit(Array(SinkDvCommitMessage(Seq((dataFile, "hard_eq_vec.psv")))))
+        .commit(Array(SinkCommitMessage(Seq.empty,
+          vectors = Seq((dataFile, "hard_eq_vec.psv")))))
     }
     assert(ex.getMessage.contains("equality delete"), ex.getMessage)
     assert(SinkSource.currentVersion(root) == vBefore,
@@ -129,6 +130,26 @@ class ConcurrencyHardeningSpec extends SparkSpec {
       s"the branch must survive its failed promotion intact: $branchRead")
   }
 
+  /** Raw-catalog UPDATE and DELETE of `table` at `path` — rows
+    * (i % 2, i) for i in 0..7 with v = 3 tombstoned — refuse with
+    * `reason` and leave the merged read at 0,1,2,4,5,6,7. */
+  private def rawDml(s: org.apache.spark.sql.SparkSession, table: String,
+      path: String, reason: String): Unit = {
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+    Seq(s"UPDATE $table SET v = v + 100 WHERE v = 1",
+        s"DELETE FROM $table WHERE v = 1").foreach { dml =>
+      val ex = intercept[Exception](s.sql(dml))
+      assert(messages(ex).contains(reason) &&
+        messages(ex).contains("mor=true"), messages(ex))
+      val vs = SinkSource.load(s, path, mor = true).select("v")
+        .collect().map(_.getLong(0)).sorted.toSeq
+      assert(vs == Seq(0L, 1L, 2L, 4L, 5L, 6L, 7L),
+        s"a refused $dml changed the table: $vs")
+    }
+  }
+
   test("rewrite_clustered and compact refuse deletion vectors through a raw catalog") {
     val root = temp("dvraw")
     val sMor = catalogFor("graft_hdvm", root, mor = true)
@@ -146,6 +167,22 @@ class ConcurrencyHardeningSpec extends SparkSpec {
       sRaw.sql("CALL graft_hdvr.compact('t')").collect()
     }
     assert(exC.getMessage.contains("deletion vectors"), exC.getMessage)
+    // copy-on-write DML through the raw catalog reads files the same
+    // raw way (rewritten rows would escape their vectors) and refuses
+    // the same way, leaving the table as it was
+    rawDml(sRaw, "graft_hdvr.t", s"$root/t", "deletion vectors")
+    // an equality-deleted table: every raw rewrite refuses too
+    SinkSource.write((0L until 8L).map(i => (i % 2, i)).toDF("k", "v")
+      .repartition(2, col("k")), s"$root/e", overwrite = true)       // v1
+    SinkSource.equalityDelete(s"$root/e", "v", Seq(3L))              // v2
+    Seq("CALL graft_hdvr.rewrite_clustered('e', 'v', 2)",
+        "CALL graft_hdvr.compact('e')").foreach { call =>
+      val ex = intercept[UnsupportedOperationException] {
+        sRaw.sql(call).collect()
+      }
+      assert(ex.getMessage.contains("equality deletes"), ex.getMessage)
+    }
+    rawDml(sRaw, "graft_hdvr.e", s"$root/e", "equality deletes")
     // the MoR catalog still materializes both verbs fine
     sMor.sql("CALL graft_hdvm.compact('t')").collect()
     assert(SinkSource.deleteSidecar(s"$root/t").isEmpty)

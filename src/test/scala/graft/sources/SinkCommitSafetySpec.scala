@@ -67,6 +67,27 @@ class SinkCommitSafetySpec extends SparkSpec {
       "a refused publish must not advance the manifest")
     assert(SinkSource.load(spark, root).collect().map(_.getLong(1)).toSeq
       == Seq(10L), "the live file's rows were replaced")
+    // the copy-on-write and merge-on-read DML commits publish their
+    // staged files through the same move, so they refuse the same way
+    import org.apache.spark.sql.connector.write.RowLevelOperation.Command
+    val dml: Seq[(String, SinkCommitMessage => Unit)] = Seq(
+      "clobber_cow" -> (m => new SinkReplaceDataWrite(root, "clobber_cow",
+        new SinkRowLevelOperation(root, Command.UPDATE)).commit(Array(m))),
+      "clobber_dv" -> (m => new SinkDvBatchWrite(root, "clobber_dv",
+        new SinkDeltaOperation(root, Command.UPDATE)).commit(Array(m))))
+    dml.foreach { case (q, commit) =>
+      val st = f.create(new Path(root, s"_staging/$q/$live"), true)
+      st.write("1|999\n".getBytes("UTF-8")); st.close()
+      val exDml = intercept[IllegalStateException] {
+        commit(SinkCommitMessage(Seq((1L, live, 1L))))
+      }
+      assert(exDml.getMessage.contains("refusing to publish"),
+        s"$q: ${exDml.getMessage}")
+      assert(SinkSource.manifest(root) == before,
+        s"$q: a refused publish must not advance the manifest")
+      assert(SinkSource.load(spark, root).collect().map(_.getLong(1)).toSeq
+        == Seq(10L), s"$q: the live file's rows were replaced")
+    }
   }
 
   test("metadata delete and truncate retire stale sidecar vectors") {

@@ -161,6 +161,26 @@ class SinkOccSpec extends SparkSpec {
     // validation runs before the moves)
     assert(!SinkSource.fs(root)
       .exists(new Path(root, "data/occ_cow_f1.psv")))
+    // an EQUALITY delete between the scan and the commit un-cites
+    // nothing, yet the rewritten rows would be re-published above its
+    // sequence number and escape it — the premise is gone all the same
+    val rootEq = freshTable("cow_eq")
+    val opEq = new SinkRowLevelOperation(rootEq,
+      org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE)
+    opEq.newScanBuilder(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Collections.emptyMap())).build()
+      .toBatch.planInputPartitions()
+    SinkSource.equalityDelete(rootEq, "v", Seq(10L))
+    stage(rootEq, "occ_cow_eq", "occ_cow_eq_f1.psv", "1|10\n")
+    val vBeforeEq = SinkSource.currentVersion(rootEq)
+    val exEq = intercept[SinkConflictException] {
+      new SinkReplaceDataWrite(rootEq, "occ_cow_eq", opEq)
+        .commit(Array(SinkCommitMessage(Seq((1L, "occ_cow_eq_f1.psv", 1L)))))
+    }
+    assert(exEq.getMessage.contains("equality delete"), exEq.getMessage)
+    assert(SinkSource.currentVersion(rootEq) == vBeforeEq,
+      "a CoW commit racing an equality delete must not publish")
   }
 
   test("MoR delta validates concurrent tombstones on its files at commit") {
@@ -187,7 +207,8 @@ class SinkOccSpec extends SparkSpec {
     val vBefore = SinkSource.currentVersion(root)
     val ex = intercept[SinkConflictException] {
       new SinkDvBatchWrite(root, "occ_dv", op)
-        .commit(Array(SinkDvCommitMessage(Seq((dataFile, "occ_dv_vec.psv")))))
+        .commit(Array(SinkCommitMessage(Seq.empty,
+          vectors = Seq((dataFile, "occ_dv_vec.psv")))))
     }
     assert(ex.getMessage.contains("tombstoned"), ex.getMessage)
     assert(SinkSource.currentVersion(root) == vBefore)
@@ -199,7 +220,8 @@ class SinkOccSpec extends SparkSpec {
     new SinkDeltaScan(root, op2).planInputPartitions()
     stage(root, "occ_dv2", "occ_dv2_vec.psv", "0\n")
     new SinkDvBatchWrite(root, "occ_dv2", op2)
-      .commit(Array(SinkDvCommitMessage(Seq((otherFile, "occ_dv2_vec.psv")))))
+      .commit(Array(SinkCommitMessage(Seq.empty,
+        vectors = Seq((otherFile, "occ_dv2_vec.psv")))))
     val vs = SinkSource.load(spark, root, mor = true).select("v")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(vs == Seq(2L, 20L), s"both tombstone sets must apply: $vs")
