@@ -92,11 +92,10 @@ object SinkChanges {
       toVersion: Int): Array[InputPartition] = {
     val out = Seq.newBuilder[InputPartition]
     for (v <- (fromVersion + 1) to toVersion) {
-      val prev = if (v == 1) Seq.empty
-        else SinkSource.manifest(path, Some(v - 1))
-      val cur = SinkSource.manifest(path, Some(v))
-      val prevSet = prev.map(_._2).toSet
-      val curSet = cur.map(_._2).toSet
+      val prev = SinkSource.state(path, Some(v - 1))
+      val cur = SinkSource.state(path, Some(v))
+      val prevSet = prev.files.keySet
+      val curSet = cur.files.keySet
       val removed = (prevSet -- curSet).toSeq.sorted
       if (removed.nonEmpty)
         throw new UnsupportedOperationException(
@@ -111,36 +110,24 @@ object SinkChanges {
       // posture for eq deletes), same resync contract as removals —
       // but only when the EFFECTIVE eq state changed: the set of
       // headers that actually APPLY to some cited file (file seq <
-      // delete seq). A version that self-prunes a DEAD header, or an
-      // eqOverride carry (rollback) re-publishing the same applying
-      // set, changes no rows and must not break the feed; a rollback
-      // that ADDS or REVERTS an applying delete changes rows with no
-      // metadata-derivable change set, so it refuses like a fresh
-      // delete would.
-      def effectiveEq(ver: Int,
-          entries: Seq[(Long, String, Long)]): Set[(String, Int, Int)] =
-        if (ver == 0) Set.empty
-        else {
-          val eqs = SinkSource.eqDeletes(path, Some(ver))
-          if (eqs.isEmpty) Set.empty
-          else {
-            val seqs = SinkSource.fileSeqs(path, Some(ver))
-            val cited = entries.map(_._2).distinct
-            eqs.filter { case (_, _, s) =>
-              cited.exists(f => seqs.getOrElse(f, 0) < s) }.toSet
-          }
-        }
-      if (effectiveEq(v, cur) != effectiveEq(v - 1, prev))
+      // delete seq). A version that self-prunes a DEAD header, or a
+      // rollback re-publishing the same applying set, changes no rows
+      // and must not break the feed; a rollback that ADDS or REVERTS
+      // an applying delete changes rows with no metadata-derivable
+      // change set, so it refuses like a fresh delete would.
+      def effectiveEq(st: SinkSource.TableState): Set[(String, Int, Int)] =
+        st.eqDeletes.filter { case (_, _, s) =>
+          st.files.values.exists(_.olderThan(s)) }.toSet
+      if (effectiveEq(cur) != effectiveEq(prev))
         throw new UnsupportedOperationException(
           s"change feed broken at version $v of $path: an EQUALITY " +
             "DELETE landed or reverted (value-keyed tombstones have " +
             "no metadata-derivable change rows); consumers must " +
             "resync from a full snapshot")
-      val fieldsOf = SinkSource.fileFields(path, Some(v))
-      val dvPrev = (if (v == 1) Seq.empty
-        else SinkSource.deleteSidecar(path, Some(v - 1)))
+      val fieldsOf = SinkSource.fileFields(path, cur)
+      val dvPrev = prev.vectorSidecar
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      val dvCur = SinkSource.deleteSidecar(path, Some(v))
+      val dvCur = cur.vectorSidecar
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       def abs(dv: String): String =
         new Path(path, s"deletes/$dv").toString

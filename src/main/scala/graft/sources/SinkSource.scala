@@ -17,6 +17,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import scala.jdk.CollectionConverters._
 
+import graft.sources.SinkSource.{FileMeta, TableState}
+
 /** DataSource V2 WRITE path with the full commit protocol — the sink
   * contract a production table format runs on. The registry's earlier
   * sinks are either engine-managed (parquet/ORC/CSV writers, q164's
@@ -177,9 +179,7 @@ object SinkSource {
     * id) or refuse loudly, never last-writer-wins. */
   def writeEvolved(df: DataFrame, path: String,
       overwrite: Boolean = false): Unit = {
-    val cur =
-      try SinkSchemas.currentFields(path)
-      catch { case _: java.util.NoSuchElementException => SinkSchemas.base }
+    val cur = SinkSchemas.currentFields(path)
     if (!df.schema.fieldNames.contains("k"))
       throw new IllegalArgumentException(
         s"mergeSchema write to $path: the frame must carry the layout " +
@@ -302,165 +302,246 @@ object SinkSource {
       try out.write(v.toString.getBytes("UTF-8")) finally out.close()
     } catch { case _: Exception => () }
 
-  /** One PARSED, immutable view of a `manifest.v<v>.psv`: the entry
-    * list plus every header family, each parsed AT MOST ONCE (lazy)
-    * and shared by all readers of that (path, version). Version files
-    * are write-once (the rename-refuses-existing CAS publishes them;
-    * nothing ever rewrites one), so a snapshot never goes stale — it
-    * can only become UNREACHABLE when `CALL expire` GCs the file,
-    * which the cache lookup re-checks on every access.
-    *
-    * Scale rationale (the round-17 verdict's #1 ask): a single plan of
-    * a sink scan consults the manifest ~8–12 times (entries, sids,
-    * stats, nulls, seqs, fspecs, blooms, eq-deletes …), and each
-    * helper used to fs.open + full-parse the file independently. At
-    * sf0.1 that is milliseconds; at 10⁵–10⁶ files per manifest it is
-    * the driver-side planning bottleneck. One physical read + one
-    * parse per family per (path, version) per JVM is the correct
-    * asymptote. */
-  private[sources] final class ManifestSnapshot(val lines: Seq[String]) {
-    lazy val entries: Seq[(Long, String, Long)] =
-      lines.filterNot(_.startsWith("#")).map { line =>
-        val c = line.split('|')
-        (c(0).toLong, c(1), c(2).toLong)
-      }
-    lazy val sids: Map[String, Int] =
-      lines.filterNot(_.startsWith("#")).map { line =>
-        val c = line.split('|')
-        c(1) -> (if (c.length > 3) c(3).toInt else 0)
-      }.toMap
-    lazy val stats: Map[String, Seq[(Int, Long, Long)]] =
-      lines.filter(_.startsWith("#stat|")).map { line =>
-        val c = line.split('|')
-        c(1) -> c(2).split(';').toSeq.map { part =>
-          val p = part.split(':')
-          (p(0).toInt, p(1).toLong, p(2).toLong)
-        }
-      }.toMap
-    lazy val schemaId: Int =
-      lines.find(_.startsWith("#schema|"))
-        .map(_.split('|')(1).toInt).getOrElse(0)
-    lazy val ts: Option[Long] =
-      lines.find(_.startsWith("#ts|")).map(_.split('|')(1).toLong)
-    lazy val nulls: Map[String, Seq[(Int, Long)]] =
-      lines.filter(_.startsWith("#null|")).map { line =>
-        val c = line.split('|')
-        c(1) -> c(2).split(';').toSeq.map { part =>
-          val p = part.split(':')
-          (p(0).toInt, p(1).toLong)
-        }
-      }.toMap
-    lazy val eqs: Seq[(String, Int, Int)] =
-      lines.filter(_.startsWith("#eq|")).map { line =>
-        val c = line.split('|')
-        (c(1), c(2).toInt, c(3).toInt)
-      }
-    lazy val seqs: Map[String, Int] =
-      lines.filter(_.startsWith("#seq|")).map { line =>
-        val c = line.split('|')
-        c(1) -> c(2).toInt
-      }.toMap
-    lazy val pspecs: Map[Int, (String, Int)] =
-      lines.filter(_.startsWith("#pspec|")).map { l =>
-        val c = l.split('|')
-        c(1).toInt -> ((c(2), if (c.length > 3) c(3).toInt else 0))
-      }.toMap
-    lazy val curSpecId: Int =
-      lines.find(_.startsWith("#curspec|"))
-        .map(_.split('|')(1).toInt).getOrElse(0)
-    lazy val fspecs: Map[String, Int] =
-      lines.filter(_.startsWith("#fspec|")).map { l =>
-        val c = l.split('|')
-        c(1) -> c(2).toInt
-      }.toMap
-    lazy val txnLedger: Map[String, Long] =
-      lines.filter(_.startsWith("#txn|")).map { line =>
-        val c = line.split('|')
-        c(1) -> c(2).toLong
-      }.toMap
-    lazy val blooms: Map[String, Seq[(Int, Int, Int, String)]] =
-      lines.filter(_.startsWith("#bloom|"))
-        .map { line =>
-          val c = line.split('|')
-          (c(1), (c(2).toInt, c(3).toInt, c(4).toInt, c(5)))
-        }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+  /** One cited data file: the (key, rows) entries the manifest lists
+    * for it and the immutable metadata of its bytes, each serialized to
+    * its own header family — the schema id its bytes were written with
+    * (the entries' optional 4th field, absent = 0), zone maps
+    * (`#stat|<file>|<id>:<min>:<max>;...`: min/max of non-null BIGINT
+    * values), exact null counts (`#null|<file>|<id>:<count>;...`),
+    * bloom filters (`#bloom|<file>|<id>|<mBits>|<kHashes>|<sidecar>`),
+    * the sequence number the file was committed at (`#seq|<file>|<v>`,
+    * None until a publish stamps it) and its partition-spec era
+    * (`#fspec|<file>|<id>`, absent = 0 = identity). Empty stats, nulls
+    * or blooms mean "no record": readers must treat absence as "cannot
+    * skip / cannot serve", never as "empty". A file that stays cited
+    * keeps its FileMeta from version to version. */
+  private[sources] final case class FileMeta(
+      entries: Seq[(Long, Long)],
+      sid: Int = 0,
+      stats: Seq[(Int, Long, Long)] = Seq.empty,
+      nulls: Seq[(Int, Long)] = Seq.empty,
+      blooms: Seq[(Int, Int, Int, String)] = Seq.empty,
+      seq: Option[Int] = None,
+      spec: Int = 0) {
+    def rows: Long = entries.map(_._2).sum
+    /** Older than equality delete sequence `s`, i.e. subject to it. */
+    def olderThan(s: Int): Boolean = seq.getOrElse(0) < s
   }
 
-  // Bounded LRU of parsed snapshots, keyed by the QUALIFIED manifest
-  // path and validated by (mtime, length) on every hit — so a test
-  // fixture that deletes and rebuilds a table in place re-reads, and a
-  // GC'd version still errors (the getFileStatus existence probe runs
+  /** One version of a table — the manifest `manifest.v<version>.psv`,
+    * parsed once into the cited `files` plus the table-level header
+    * families: `vectorSidecar`, the (dataFile, vectorFile) deletion
+    * vectors of the commit-unique sidecar the `#dv|<file>` header binds;
+    * `eqDeletes`, value-keyed tombstones (`#eq|<file>|<fieldId>|<seq>`)
+    * that drop rows of files older than `seq`; `specs`, the append-only
+    * partition specs (`#pspec|<id>|<kind>[|<param>]`; spec 0 =
+    * identity(k) is implicit) and `currentSpec` (`#curspec|<id>`), the
+    * one new writes lay files out under; `schemaId` (`#schema|<id>`);
+    * and `txns`, the streaming ledger (`#txn|<queryId>|<epoch>`) whose
+    * publish is the same rename as the epoch's files. `ts` (`#ts`) and
+    * `sidecar` (the bound file's name) record what the parsed manifest
+    * carried; every publish stamps its own. Version 0 is the empty
+    * table before the first commit.
+    *
+    * Every commit is a `TableState => TableState` over the head
+    * ([[publishCas]]); [[writeManifest]] serializes the result. */
+  private[sources] final case class TableState(
+      version: Int,
+      files: Map[String, FileMeta],
+      vectorSidecar: Seq[(String, String)] = Seq.empty,
+      eqDeletes: Seq[(String, Int, Int)] = Seq.empty,
+      specs: Map[Int, (String, Int)] = Map(0 -> (("identity", 0))),
+      currentSpec: Int = 0,
+      schemaId: Int = 0,
+      txns: Map[String, Long] = Map.empty,
+      ts: Option[Long] = None,
+      sidecar: Option[String] = None) {
+    /** (k, file, rows) in manifest order. */
+    lazy val entries: Seq[(Long, String, Long)] = files.toSeq
+      .flatMap { case (f, m) => m.entries.map { case (k, n) => (k, f, n) } }
+      .sortBy(e => (e._1, e._2))
+    /** (specId, kind, param) of the spec new writes lay files out under. */
+    def specInfo: (Int, String, Int) = specs.get(currentSpec) match {
+      case Some((kind, p)) => (currentSpec, kind, p)
+      case None => throw new IllegalStateException(
+        s"undeclared partition spec $currentSpec")
+    }
+    /** The layout-key function of `file`'s own era. */
+    def layoutOf(file: String): Long => Long =
+      SinkSource.layoutOf(specs(files.get(file).fold(0)(_.spec)))
+    /** This state keeping only the entries `keep` accepts (a file left
+      * with none is no longer cited). */
+    def keepEntries(keep: (Long, String) => Boolean): TableState =
+      copy(files = files.flatMap { case (f, m) =>
+        val es = m.entries.filter(e => keep(e._1, f))
+        if (es.isEmpty) None else Some(f -> m.copy(entries = es))
+      })
+    def without(names: Set[String]): TableState = copy(files = files -- names)
+    /** This state also citing `added`: a cited file gains the entries,
+      * a new one starts from `fresh(file)`. */
+    def cite(added: Seq[(Long, String, Long)],
+        fresh: String => FileMeta): TableState =
+      copy(files = added.groupBy(_._2).foldLeft(files) {
+        case (acc, (f, es)) =>
+          val m = acc.getOrElse(f, fresh(f))
+          acc.updated(f, m.copy(entries = m.entries ++ es.map(e => (e._1, e._3))))
+      })
+  }
+
+  private[sources] object TableState {
+    val empty: TableState = TableState(0, Map.empty)
+  }
+
+  // Bounded LRU of parsed states, keyed by the QUALIFIED manifest path
+  // and validated by (mtime, length) on every hit — so a test fixture
+  // that deletes and rebuilds a table in place re-reads, and a GC'd
+  // version still errors (the getFileStatus existence probe runs
   // before the cache is consulted). NEVER caches `currentVersion` —
   // head discovery must see every concurrent publish (CAS correctness).
-  // GRANULARITY ASSUMPTION (round-18 ADVICE): the (mtime, length)
-  // fingerprint cannot distinguish a delete-and-rebuild that lands an
-  // EQUAL-LENGTH file within the store's mtime granularity (1 s on
-  // some local/object stores). Safe for the production protocol —
-  // manifest versions are write-once, never rebuilt in place — and
-  // for the rebuild-in-place test-fixture pattern the rebuilt file
-  // would additionally need identical byte length for a stale hit; no
-  // current fixture rebuilds same-length. If one ever does, add a
-  // content checksum to the fingerprint for the rebuild path.
+  // Version files are write-once, so a state never goes stale; it can
+  // only become unreachable when `CALL expire` GCs the file. A plan
+  // reads every family from one state: one physical read and parse per
+  // (path, version) per JVM, the asymptote at 10⁵–10⁶ files.
+  // GRANULARITY ASSUMPTION: the (mtime, length) fingerprint cannot
+  // distinguish a delete-and-rebuild that lands an EQUAL-LENGTH file
+  // within the store's mtime granularity (1 s on some stores). Safe
+  // for the protocol (versions are never rebuilt in place); no fixture
+  // rebuilds same-length. If one ever does, add a content checksum.
   private val snapshotCache =
-    new java.util.LinkedHashMap[String, (Long, Long, ManifestSnapshot)](
+    new java.util.LinkedHashMap[String, (Long, Long, TableState)](
       16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Long, Long, ManifestSnapshot)])
+          e: java.util.Map.Entry[String, (Long, Long, TableState)])
           : Boolean = size() > 256
     }
   /** Physical manifest read+parse counts, per qualified manifest file
     * (test observability: the memo spec pins one parse per
     * (path, version) per JVM; keyed so parallel suites don't race the
-    * assertion). Bounded: a long-lived driver touching millions of
-    * versions must not grow this map forever — when it exceeds the
-    * cap it is cleared wholesale (counts restart at 0, which only
-    * ever makes the memo spec's "at most one parse" assertion
-    * stricter, never looser). */
+    * assertion). Bounded: when it exceeds the cap it is cleared
+    * wholesale (counts restart at 0, which only ever makes the memo
+    * spec's "at most one parse" assertion stricter). */
   private[graft] val manifestParses =
     scala.collection.concurrent.TrieMap.empty[String, Long]
   private val manifestParsesCap = 65536
 
-  private[sources] def snapshot(path: String, v: Int): ManifestSnapshot = {
+  /** THE table state of `version` (default: the head, the one place
+    * the head is resolved). A version that was GC'd or never written
+    * throws [[java.util.NoSuchElementException]] ([[stateIfPresent]]
+    * reads it as absent); a present manifest whose bound vector sidecar
+    * is missing throws [[java.io.FileNotFoundException]] — reading it
+    * as "no tombstones" would resurrect deleted rows. */
+  private[sources] def state(path: String,
+      version: Option[Int] = None): TableState = {
+    val v = version.getOrElse(currentVersion(path))
+    if (v == 0) return TableState.empty
     val f = fs(path)
     val mf = new Path(path, s"manifest.v$v.psv")
+    def absent = new java.util.NoSuchElementException(
+      s"no manifest at version $v under $path (GC'd or never written)")
     val st =
       try f.getFileStatus(mf)
-      catch {
-        case _: java.io.FileNotFoundException =>
-          throw new java.util.NoSuchElementException(
-            s"no manifest at version $v under $path (GC'd or never written)")
-      }
+      catch { case _: java.io.FileNotFoundException => throw absent }
+    // a sidecar gone under a manifest that is itself gone is a
+    // concurrent expire (absent); under a present one it is loud
+    def vanished(name: String): Nothing =
+      if (!f.exists(mf)) throw absent
+      else throw new java.io.FileNotFoundException(
+        s"sidecar $name bound by version $v vanished under $path")
     val key = f.makeQualified(mf).toString
-    snapshotCache.synchronized {
-      val hit = snapshotCache.get(key)
-      if (hit != null && hit._1 == st.getModificationTime &&
-          hit._2 == st.getLen) return hit._3
+    val hit = snapshotCache.synchronized(Option(snapshotCache.get(key)))
+      .collect { case (t, n, s) if t == st.getModificationTime &&
+        n == st.getLen => s }
+    hit match {
+      case Some(s) =>
+        s.sidecar.foreach(n => if (!f.exists(new Path(path, n))) vanished(n))
+        s
+      case None =>
+        if (manifestParses.size > manifestParsesCap) manifestParses.clear()
+        manifestParses.updateWith(key) {
+          case Some(n) => Some(n + 1); case None => Some(1L) }
+        val in = f.open(mf)
+        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+        val parsed = parse(v, body.linesIterator.filter(_.nonEmpty))
+        // manifests published before the `#dv` header bound the legacy
+        // `deletes.v<v>.psv` name
+        val sidecar = parsed.sidecar.orElse(Some(s"deletes.v$v.psv")
+          .filter(n => f.exists(new Path(path, n))))
+        val s = parsed.copy(sidecar = sidecar, vectorSidecar = sidecar.toSeq
+          .flatMap(n => cachedLines(path, n).getOrElse(vanished(n)))
+          .map { line =>
+            val c = line.split('|')
+            (c(0), c(1))
+          })
+        snapshotCache.synchronized {
+          snapshotCache.put(key, (st.getModificationTime, st.getLen, s))
+        }
+        s
     }
-    if (manifestParses.size > manifestParsesCap) manifestParses.clear()
-    manifestParses.updateWith(key) {
-      case Some(n) => Some(n + 1); case None => Some(1L) }
-    val in = f.open(mf)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val snap = new ManifestSnapshot(
-      body.linesIterator.filter(_.nonEmpty).toVector)
-    snapshotCache.synchronized {
-      snapshotCache.put(key, (st.getModificationTime, st.getLen, snap))
-    }
-    snap
   }
 
-  /** Raw manifest lines of the requested version — entries plus any
-    * `#`-prefixed header lines (the txn ledger). Served from the
-    * snapshot memo; the physical read happens at most once per
-    * (path, version) per JVM. */
-  private def manifestLines(path: String, v: Int): Seq[String] =
-    snapshot(path, v).lines
+  /** [[state]] of version `v`, or None when that manifest was GC'd
+    * (a concurrent `expire`) or never written. */
+  private[sources] def stateIfPresent(path: String,
+      v: Int): Option[TableState] =
+    try Some(state(path, Some(v)))
+    catch { case _: java.util.NoSuchElementException => None }
+
+  /** Manifest `lines` of version `v` as a state; the vectors of the
+    * `#dv` sidecar it names are [[state]]'s to read. */
+  private def parse(v: Int, lines: Iterator[String]): TableState = {
+    import scala.collection.mutable
+    val entries = Vector.newBuilder[(Long, String, Long, Int)]
+    val stats = mutable.Map.empty[String, Seq[(Int, Long, Long)]]
+    val nulls = mutable.Map.empty[String, Seq[(Int, Long)]]
+    val blooms = mutable.Map.empty[String, Seq[(Int, Int, Int, String)]]
+    val seqs = mutable.Map.empty[String, Int]
+    val fspecs = mutable.Map.empty[String, Int]
+    val eqs = Vector.newBuilder[(String, Int, Int)]
+    val specs = mutable.Map[Int, (String, Int)](0 -> (("identity", 0)))
+    val txns = mutable.Map.empty[String, Long]
+    var (curSpec, schemaId, ts, dv) =
+      (0, 0, Option.empty[Long], Option.empty[String])
+    def pairs(s: String): Seq[Array[String]] =
+      s.split(';').toSeq.map(_.split(':'))
+    lines.foreach { line =>
+      val c = line.split('|')
+      c(0) match {
+        case "#stat" => stats(c(1)) =
+          pairs(c(2)).map(p => (p(0).toInt, p(1).toLong, p(2).toLong))
+        case "#null" => nulls(c(1)) =
+          pairs(c(2)).map(p => (p(0).toInt, p(1).toLong))
+        case "#bloom" => blooms(c(1)) = blooms.getOrElse(c(1), Vector.empty) :+
+          ((c(2).toInt, c(3).toInt, c(4).toInt, c(5)))
+        case "#seq" => seqs(c(1)) = c(2).toInt
+        case "#fspec" => fspecs(c(1)) = c(2).toInt
+        case "#eq" => eqs += ((c(1), c(2).toInt, c(3).toInt))
+        case "#pspec" =>
+          specs(c(1).toInt) = ((c(2), if (c.length > 3) c(3).toInt else 0))
+        case "#curspec" => curSpec = c(1).toInt
+        case "#schema" => schemaId = c(1).toInt
+        case "#txn" => txns(c(1)) = c(2).toLong
+        case "#ts" => ts = Some(c(1).toLong)
+        case "#dv" => dv = Some(c(1))
+        case h if h.startsWith("#") => ()
+        case _ => entries += ((c(0).toLong, c(1), c(2).toLong,
+          if (c.length > 3) c(3).toInt else 0))
+      }
+    }
+    val files = entries.result().groupBy(_._2).map { case (f, es) =>
+      f -> FileMeta(es.map(e => (e._1, e._3)), es.head._4,
+        stats.getOrElse(f, Seq.empty), nulls.getOrElse(f, Seq.empty),
+        blooms.getOrElse(f, Seq.empty), Some(seqs.getOrElse(f, 0)),
+        fspecs.getOrElse(f, 0))
+    }
+    TableState(v, files, Seq.empty, eqs.result(), specs.toMap, curSpec,
+      schemaId, txns.toMap, ts, dv)
+  }
 
   // Line memo for the protocol's OTHER immutable small files — DV
   // sidecars (commit-unique salted names) and schema versions
   // (find-or-store by id, never rewritten) — same discipline as the
-  // manifest snapshot cache: qualified-path key, (mtime, length)
+  // manifest state cache: qualified-path key, (mtime, length)
   // validation on every hit, bounded LRU. A 10⁵-row deletion-vector
   // sidecar re-read by every MoR scan instance is the same
   // driver-side planning tax the manifest memo removes.
@@ -505,8 +586,8 @@ object SinkSource {
     * key's nullCount) are withheld — a deleted row would make them
     * overcounts, and CBO must never be fed a number presented as
     * exact that isn't. */
-  private[sources] def columnStatsOf(path: String,
-      pinnedVersion: Option[Int], flds: Seq[SinkSchemas.SinkField],
+  private[sources] def columnStatsOf(st: TableState,
+      flds: Seq[SinkSchemas.SinkField],
       entries: Seq[(Long, String, Long)], exact: Boolean)
       : java.util.Map[
         org.apache.spark.sql.connector.expressions.NamedReference,
@@ -515,11 +596,8 @@ object SinkSource {
     import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
     val out = new java.util.HashMap[NamedReference, ColumnStatistics]()
     if (entries.isEmpty) return out
-    val liveFiles = entries.map(_._2).distinct
-    val stats = SinkSource.manifestStats(path, pinnedVersion)
-    val nulls = SinkSource.manifestNulls(path, pinnedVersion)
-    val fsp = SinkSource.fileSpecs(path, pinnedVersion)
-    val allIdentity = liveFiles.forall(f => fsp.getOrElse(f, 0) == 0)
+    val live = entries.map(_._2).distinct.map(st.files)
+    val allIdentity = live.forall(_.spec == 0)
     def put(name: String, mn: Option[Long], mx: Option[Long],
         nc: Option[Long], ndv: Option[Long]): Unit = {
       if (mn.isEmpty && nc.isEmpty && ndv.isEmpty) return
@@ -553,93 +631,82 @@ object SinkSource {
           else put(fld.name, Some(keys.min), Some(keys.max), None, None)
         }
       } else {
-        val covered = liveFiles.forall(f =>
-          stats.get(f).exists(_.exists(_._1 == fld.id)))
-        val ranges =
-          if (!covered) (None, None)
-          else {
-            val rs = liveFiles.flatMap(f =>
-              stats(f).collect { case (id, mn, mx) if id == fld.id => (mn, mx) })
-            (Some(rs.map(_._1).min), Some(rs.map(_._2).max))
-          }
-        val nullCovered = exact && liveFiles.forall(f =>
-          nulls.get(f).exists(_.exists(_._1 == fld.id)))
-        val nullCount =
-          if (!nullCovered) None
-          else Some(liveFiles.flatMap(f =>
-            nulls(f).collect { case (id, n) if id == fld.id => n }).sum)
-        put(fld.name, ranges._1, ranges._2, nullCount, None)
+        val ranges = live.map(_.stats.collectFirst {
+          case (id, mn, mx) if id == fld.id => (mn, mx) })
+        val nullCounts = live.map(_.nulls.collectFirst {
+          case (id, n) if id == fld.id => n })
+        val covered = ranges.forall(_.isDefined)
+        put(fld.name,
+          if (covered) Some(ranges.flatten.map(_._1).min) else None,
+          if (covered) Some(ranges.flatten.map(_._2).max) else None,
+          if (exact && nullCounts.forall(_.isDefined))
+            Some(nullCounts.flatten.sum) else None,
+          None)
       }
     }
     out
   }
 
-  /** Manifest lines of the requested version (default: current), as
-    * (k, file, rows). Empty if the table was never committed; a pinned
-    * version that was GC'd or never existed is an error, not an empty
-    * table. */
+  // ---- views over one state (the accessors specs and queries read) ----
+
   private[sources] def manifest(path: String,
-      version: Option[Int] = None): Seq[(Long, String, Long)] = {
-    val v = version.getOrElse(currentVersion(path))
-    if (v == 0 && version.isEmpty) Seq.empty
-    else snapshot(path, v).entries
-  }
-
-  /** Per-file SCHEMA IDS of a version's entries (file → sid). The sid
-    * is the optional 4th entry field; its absence means 0 (the base
-    * schema), which keeps every pre-evolution manifest readable and
-    * byte-identical. */
+      version: Option[Int] = None): Seq[(Long, String, Long)] =
+    state(path, version).entries
   private[sources] def manifestSids(path: String,
-      version: Option[Int] = None): Map[String, Int] = {
-    val v = version.getOrElse(currentVersion(path))
-    if (v == 0) Map.empty
-    else snapshot(path, v).sids
-  }
+      version: Option[Int] = None): Map[String, Int] =
+    state(path, version).files.map { case (f, m) => f -> m.sid }
+  private[sources] def manifestStats(path: String, version: Option[Int] = None)
+      : Map[String, Seq[(Int, Long, Long)]] =
+    state(path, version).files.collect {
+      case (f, m) if m.stats.nonEmpty => f -> m.stats }
+  private[sources] def manifestNulls(path: String,
+      version: Option[Int] = None): Map[String, Seq[(Int, Long)]] =
+    state(path, version).files.collect {
+      case (f, m) if m.nulls.nonEmpty => f -> m.nulls }
+  private[graft] def manifestBlooms(path: String, version: Option[Int] = None)
+      : Map[String, Seq[(Int, Int, Int, String)]] =
+    state(path, version).files.collect {
+      case (f, m) if m.blooms.nonEmpty => f -> m.blooms }
+  private[graft] def fileSeqs(path: String,
+      version: Option[Int] = None): Map[String, Int] =
+    state(path, version).files.collect {
+      case (f, m) if m.seq.exists(_ != 0) => f -> m.seq.get }
+  private[sources] def fileSpecs(path: String,
+      version: Option[Int] = None): Map[String, Int] =
+    state(path, version).files.collect {
+      case (f, m) if m.spec != 0 => f -> m.spec }
+  private[graft] def schemaIdOf(path: String,
+      version: Option[Int] = None): Int = state(path, version).schemaId
+  private[graft] def eqDeletes(path: String,
+      version: Option[Int] = None): Seq[(String, Int, Int)] =
+    state(path, version).eqDeletes
+  private[graft] def partSpecs(path: String,
+      version: Option[Int] = None): Map[Int, (String, Int)] =
+    state(path, version).specs
+  private[graft] def currentSpecId(path: String,
+      version: Option[Int] = None): Int = state(path, version).currentSpec
+  private[graft] def txns(path: String,
+      version: Option[Int] = None): Map[String, Long] =
+    state(path, version).txns
+  private[graft] def deleteSidecar(path: String,
+      version: Option[Int] = None): Seq[(String, String)] =
+    state(path, version).vectorSidecar
+  /** Commit wall-clock of a version; None before timestamps existed. */
+  private[graft] def commitTs(path: String, v: Int): Option[Long] =
+    state(path, Some(v)).ts
 
-  /** THE per-file schema resolver: each data file of snapshot
-    * `version` (default: current) maps to the fields its bytes were
-    * serialized with — its manifest entry's sid, resolved through the
+  /** THE per-file schema resolver: each data file of `st` maps to the
+    * fields its bytes were serialized with, resolved through the
     * schema versions once per distinct sid. */
-  private[sources] def fileFields(path: String, version: Option[Int])
+  private[sources] def fileFields(path: String, st: TableState)
       : String => Seq[SinkSchemas.SinkField] = {
-    val sids = manifestSids(path, version)
     val defs = scala.collection.mutable.Map.empty[Int,
       Seq[SinkSchemas.SinkField]]
     file => {
-      val sid = sids.getOrElse(file, 0)
+      val sid = st.files.get(file).fold(0)(_.sid)
       defs.getOrElseUpdate(sid, SinkSchemas.fields(path, sid))
     }
   }
-
-  /** Per-file ZONE MAPS of a version's entries (file → per-field-id
-    * (min, max) of the file's non-null BIGINT values), from the
-    * `#stat|<file>|<id>:<min>:<max>[;...]` manifest headers. A file
-    * with no header (pre-stats history, or a column that was all-NULL
-    * in it) simply has no map — readers must treat absence as
-    * "cannot skip", never as "empty". */
-  private[sources] def manifestStats(path: String,
-      version: Option[Int] = None): Map[String, Seq[(Int, Long, Long)]] = {
-    val v = version.getOrElse(currentVersion(path))
-    if (v == 0) Map.empty
-    else snapshot(path, v).stats
-  }
-
-  /** The TABLE's schema id as of a manifest version (default: the
-    * current one): the `#schema|S` header, carried forward by every
-    * commit and bumped by an ALTER COLUMN publish. 0 = the base
-    * (k, v) contract — also the answer for a never-committed table. */
-  private[graft] def schemaIdOf(path: String,
-      version: Option[Int] = None): Int = {
-    val v = version.getOrElse(currentVersion(path))
-    if (v == 0) 0
-    else snapshot(path, v).schemaId
-  }
-
-  /** Commit wall-clock of a version (`#ts|<epochMillis>` header).
-    * None for versions published before timestamps were recorded. */
-  private[graft] def commitTs(path: String, v: Int): Option[Long] =
-    if (v == 0) None
-    else snapshot(path, v).ts
 
   /** TIMESTAMP AS OF resolution: the HIGHEST present version whose
     * commit wall-clock is at or before `tsMillis` — the snapshot a
@@ -666,91 +733,6 @@ object SinkSource {
     eligible.max
   }
 
-  /** Per-file NULL COUNTS of a version (`#null|<file>|<id>:<count>
-    * [;...]` headers): exact null counts per BIGINT field — unlike
-    * the min/max zone maps, a ZERO here is a positive claim ("no row
-    * of this file is NULL in this field"), which is what lets
-    * `COUNT(col)` answer from metadata and `IS NULL` prune whole
-    * files. A file with no record (pre-feature history, or a field
-    * the file predates) proves nothing — readers must treat absence
-    * as "cannot skip / cannot serve". */
-  private[sources] def manifestNulls(path: String,
-      version: Option[Int] = None): Map[String, Seq[(Int, Long)]] = {
-    val v = version.getOrElse(currentVersion(path))
-    if (v == 0) Map.empty
-    else snapshot(path, v).nulls
-  }
-
-  /** EQUALITY DELETES of a version (`#eq|<file>|<fieldId>|<seq>`
-    * headers): value-keyed tombstones — "drop every row whose FIELD
-    * equals one of these values" — the Iceberg-v2 equality-delete
-    * shape, complementary to the positional vectors: a takedown job
-    * knows the VALUES (spam doc ids, revoked user ids), not the
-    * (file, position) pairs, and must not pay a scan to find them.
-    * `seq` is the version the delete committed at; it applies to a
-    * data file iff the FILE's sequence number is lower — so a row
-    * re-inserted after the delete survives it (the semantic that
-    * distinguishes sequence-aware deletes from a mere value filter).
-    * Returns (eqFile, fieldId, seq) triples. */
-  private[graft] def eqDeletes(path: String,
-      version: Option[Int] = None): Seq[(String, Int, Int)] = {
-    val v = version.getOrElse(currentVersion(path))
-    if (v == 0) Seq.empty
-    else snapshot(path, v).eqs
-  }
-
-  /** Per-file SEQUENCE NUMBERS of a version (`#seq|<file>|<v>`
-    * headers): the version a data file was committed at, recorded —
-    * from the first equality delete onward — so later reads can
-    * order files against value-keyed tombstones. A file with no
-    * header predates every equality delete (implicit sequence 0). */
-  private[graft] def fileSeqs(path: String,
-      version: Option[Int] = None): Map[String, Int] = {
-    val v = version.getOrElse(currentVersion(path))
-    if (v == 0) Map.empty
-    else snapshot(path, v).seqs
-  }
-
-  /** PARTITION SPECS of a version (`#pspec|<id>|<kind>[|<param>]`
-    * headers): the table's registered layout specs, APPEND-ONLY and
-    * carried by every commit (Iceberg's spec list). Spec 0 is the
-    * implicit `identity(k)` every table is born with — never written,
-    * always present. Returns id -> (kind, param); kinds are
-    * "identity" (param unused) and "bucket" (param = modulus). */
-  private[graft] def partSpecs(path: String,
-      version: Option[Int] = None): Map[Int, (String, Int)] = {
-    val v = version.getOrElse(currentVersion(path))
-    val declared =
-      if (v == 0) Map.empty[Int, (String, Int)]
-      else snapshot(path, v).pspecs
-    declared + (0 -> (("identity", 0)))
-  }
-
-  /** The CURRENT partition spec id as of a version (`#curspec|<id>`
-    * header; absent = 0 = identity(k)) — the spec NEW writes lay
-    * files out under. Evolution changes this pointer; existing files
-    * keep their own era (see [[fileSpecs]]). */
-  private[graft] def currentSpecId(path: String,
-      version: Option[Int] = None): Int = {
-    val v = version.getOrElse(currentVersion(path))
-    if (v == 0) 0
-    else snapshot(path, v).curSpecId
-  }
-
-  /** Per-file PARTITION-SPEC ids (`#fspec|<file>|<id>` headers,
-    * absent = 0): the spec a data file's manifest KEY was computed
-    * under — its layout ERA. Immutable metadata of the file's bytes
-    * (like its schema id), carried forward while the file is cited.
-    * Readers consult a file's OWN era to interpret its key: an
-    * identity-era key IS the rows' k; a bucket-era key is pmod(k, m)
-    * and the file holds many k values. */
-  private[sources] def fileSpecs(path: String,
-      version: Option[Int] = None): Map[String, Int] = {
-    val v = version.getOrElse(currentVersion(path))
-    if (v == 0) Map.empty
-    else snapshot(path, v).fspecs
-  }
-
   /** The layout-key function of a spec: identity groups by the row's
     * k itself; bucket(m) by `((k % m) + m) % m` — [[SinkBucketFn]]'s
     * exact arithmetic, so engine-side `pmod(k, m)` expressions
@@ -763,101 +745,50 @@ object SinkSource {
         s"unknown partition spec $other")
     }
 
-  /** (specId, kind, param) of the spec NEW writes should use — the
-    * write paths resolve this once, driver-side, at writer-factory
-    * creation, so every staged file's grouping and its published
-    * `#fspec` stamp come from the same snapshot. */
-  private[sources] def currentSpecInfo(path: String,
-      version: Option[Int] = None): (Int, String, Int) = {
-    val id = currentSpecId(path, version)
-    val (kind, p) = partSpecs(path, version).getOrElse(id,
-      throw new IllegalStateException(s"undeclared partition spec $id"))
-    (id, kind, p)
-  }
-
-  /** The version's TRANSACTION LEDGER: highest epoch each streaming
-    * query has published INTO this version's history, carried forward
-    * by every commit as `#txn|queryId|epochId` manifest header lines
-    * (Delta's txn-action shape). Because the ledger lives inside the
-    * manifest, the manifest RENAME is the single atomic point that
-    * both publishes an epoch's files and records the epoch as done —
-    * there is no marker-file window where a crash could replay a
-    * published epoch. */
-  private[graft] def txns(path: String,
-      version: Option[Int] = None): Map[String, Long] = {
-    val v = version.getOrElse(currentVersion(path))
-    if (v == 0) Map.empty
-    else snapshot(path, v).txnLedger
-  }
-
-  /** One manifest publish: the entries the new version cites plus the
-    * header edits it makes over the previous version. Everything but
-    * `entries` defaults to "carry the previous version forward";
-    * [[writeManifest]] documents each family where it applies it. */
-  private[sources] case class Commit(
-      entries: Seq[(Long, String, Long)],
-      deletes: Option[Seq[(String, String)]] = None,
-      txn: Option[(String, Long)] = None,
-      schemaId: Option[Int] = None,
-      newFileSchemaId: Option[Int] = None,
-      newStats: Map[String, Seq[(Int, Long, Long)]] = Map.empty,
-      carrySids: Map[String, Int] = Map.empty,
-      addEq: Option[(String, Int)] = None,
-      eqOverride: Option[Seq[(String, Int, Int)]] = None,
-      carrySeqs: Map[String, Int] = Map.empty,
-      newNulls: Map[String, Seq[(Int, Long)]] = Map.empty,
-      newBlooms: Map[String, Seq[(Int, Int, Int, String)]] = Map.empty,
-      newFileSpecId: Option[Int] = None,
-      carryFspecs: Map[String, Int] = Map.empty,
-      specChange: Option[(String, Int)] = None,
-      specOverride: Option[Int] = None)
-
-  /** Publish `c` as manifest version `atVersion`: write a uniquely-
-    * named temp, rename to `manifest.v<atVersion>.psv` (atomic on
-    * HDFS/local; rename-refuses-existing resolves concurrent
-    * publishers). Every version is KEPT at publish time — the manifests
-    * are the table's snapshot history, which is what time travel (q263)
-    * and the changelog stream reader (q267) address; bounding that
-    * history is the [[SinkExpireProcedure]] lifecycle verb (`CALL
-    * expire`), which prunes to a keep_last horizon and GCs files only
-    * expired snapshots reference. (DATA files are also reclaimed
-    * eagerly by truncate and delete — an old snapshot stays readable
-    * only while its files live, i.e. across append-only history.)
-    * Every publish names its version: [[publishCas]] is the caller.
-    */
-  private[sources] def writeManifest(path: String, atVersion: Int,
-      c: Commit): Int = {
-    import c._
+  /** Publish `st` as manifest version `base.version + 1` — the CAS: the
+    * caller planned `st` on `base`, and the publish lands exactly there
+    * or fails with the retryable [[SinkCommitRaceException]], never
+    * silently rebasing onto a head the caller hasn't validated. Writes
+    * a uniquely-named temp and renames it to `manifest.v<n>.psv`
+    * (atomic on HDFS/local; rename-refuses-existing resolves concurrent
+    * publishers). Every version is KEPT — the manifests are the table's
+    * snapshot history (time travel, the changelog reader); `CALL
+    * expire` bounds it. [[publishCas]] is the caller.
+    *
+    * The derived rules live here, once:
+    *   - the vector sidecar keeps only vectors of cited files (a
+    *     dropped file's vector is dead weight), and is written to a
+    *     COMMIT-UNIQUE salted file before the manifest rename: two
+    *     commits racing one version each write their own, and the
+    *     rename atomically binds the winner's manifest to the winner's
+    *     list (the loser's is an orphan, never a lie);
+    *   - a file with no sequence number is born at this version when
+    *     equality deletes exist (younger than all of them), else 0;
+    *     `#seq` headers are written while any equality delete is listed;
+    *   - an equality delete no cited file is older than can never drop
+    *     a row again and is pruned (rewrites self-heal the table);
+    *   - blooms merge per field with the ones `base` records for the
+    *     same file, `st`'s winning (a build for a second column keeps
+    *     the first's header);
+    *   - every publish stamps its own commit wall-clock (`#ts`), so the
+    *     rename that publishes the snapshot is the one that dates it.
+    * Zero schema ids, spec ids and sequence numbers are not written,
+    * which keeps pre-feature manifests byte-identical. */
+  private[sources] def writeManifest(path: String, base: TableState,
+      st: TableState): Int = {
+    val next = base.version + 1
     val f = fs(path)
     val root = new Path(path)
     f.mkdirs(root)
-    // `atVersion` is the optimistic-concurrency CAS: the caller read
-    // its snapshot at atVersion-1 and this publish must land EXACTLY
-    // there or fail with the retryable race exception — never silently
-    // rebase onto a head the caller hasn't validated against
-    val next = atVersion
-    // DELETE SIDECAR (merge-on-read tombstones): every version carries
-    // its active deletion-vector list. `deletes = Some(...)` SETS the
-    // new version's list (a DV commit); None carries the previous
-    // version's forward so appends never drop tombstones. Either way
-    // the published sidecar keeps only vectors whose DATA FILE the new
-    // manifest still cites — a vector for a dropped file (metadata
-    // delete, truncate, replaced CoW group) is dead weight that would
-    // otherwise ride every later version forever. Written BEFORE the
-    // manifest rename — the rename is the only commit point, so an
-    // unreferenced sidecar is garbage, never a lie.
-    // The sidecar file is COMMIT-UNIQUE (salted name) and the manifest
-    // records it in a `#dv|<file>` header line (round-16 judge ask):
-    // two commits racing version `next` each write their OWN sidecar
-    // file, and the manifest rename — the single commit point —
-    // atomically binds the winner's manifest to the winner's vector
-    // list. A fixed `deletes.v<next>.psv` name let the loser overwrite
-    // the winner's list after the winner had already published. The
-    // loser's salted sidecar is an orphan (metadata-sized garbage,
-    // swept by `CALL expire`), never a lie.
-    val live = entries.map(_._2).toSet
-    val dvs = deletes.getOrElse(deleteSidecar(path, Some(next - 1)))
-      .filter { case (df, _) => live.contains(df) }
+    val eqAll = st.eqDeletes
+    val files = st.files.toSeq.sortBy(_._1).map { case (fl, m) =>
+      val fresh = m.blooms.map(_._1).toSet
+      fl -> m.copy(
+        seq = Some(m.seq.getOrElse(if (eqAll.nonEmpty) next else 0)),
+        blooms = (base.files.get(fl).fold(Seq.empty[(Int, Int, Int, String)])(
+          _.blooms.filterNot(b => fresh(b._1))) ++ m.blooms).sortBy(_._1))
+    }
+    val dvs = st.vectorSidecar.filter { case (df, _) => st.files.contains(df) }
     val dvHeader = if (dvs.isEmpty) "" else {
       val scName = s"deletes.v$next.${
         java.util.UUID.randomUUID().toString.take(8)}.psv"
@@ -873,165 +804,33 @@ object SinkSource {
       }
       s"#dv|$scName\n"
     }
-    // txn ledger: previous version's (queryId -> epoch) highwater map,
-    // advanced by this commit's txn if present — header lines, so the
-    // rename that publishes the files also records the epoch
-    val ledger = txn.fold(txns(path, Some(next - 1))) { case (q, e) =>
-      txns(path, Some(next - 1)) + (q -> e) }
-    // SCHEMA header: `schemaId = Some(S)` is an ALTER COLUMN publish
-    // (metadata-only snapshot); otherwise the previous version's id is
-    // carried forward. Emitted only when non-zero so pre-evolution
-    // manifests keep their historical bytes. Each entry carries the
-    // schema id its FILE was serialized with (inherited for carried
-    // entries, `newFileSchemaId` — the writer's schema at serialization
-    // time — for new ones), which is what scan-time reconciliation
-    // keys on.
-    val tableSid = schemaId.getOrElse(schemaIdOf(path, Some(next - 1)))
-    val prevSids = if (next == 1) Map.empty[String, Int]
-      else manifestSids(path, Some(next - 1))
-    // `carrySids`: the caller knows the files' TRUE serialization sids
-    // from a version the previous head no longer cites (rollback
-    // re-introduces files the "bad" commits dropped) — a sid is
-    // immutable metadata of a file's bytes, so any source that once
-    // recorded it is authoritative
-    def entrySid(file: String): Int =
-      prevSids.getOrElse(file, carrySids.getOrElse(file,
-        newFileSchemaId.getOrElse(tableSid)))
-    val schemaHeader = if (tableSid == 0) "" else s"#schema|$tableSid\n"
-    // commit wall-clock for TIMESTAMP AS OF — recorded at the commit
-    // point itself, so the rename that publishes the snapshot is the
-    // same action that timestamps it
-    val tsHeader = s"#ts|${System.currentTimeMillis()}\n"
-    // ZONE MAPS: a file's stats are immutable metadata of its bytes —
-    // carried forward verbatim for files the new version still cites
-    // (MoR tombstones only REMOVE rows, so the carried range stays a
-    // sound over-approximation), taken from `newStats` for files this
-    // commit publishes, and dropped with the files that left. A file
-    // with neither (pre-stats history) stays headerless — readers
-    // must not skip it.
-    val prevStats = if (next == 1) Map.empty[String, Seq[(Int, Long, Long)]]
-      else manifestStats(path, Some(next - 1))
-    val statHeader = entries.map(_._2).distinct.sorted.flatMap { file =>
-      prevStats.get(file).orElse(newStats.get(file)).map { ss =>
-        val body = ss.sortBy(_._1)
-          .map { case (id, mn, mx) => s"$id:$mn:$mx" }.mkString(";")
-        s"#stat|$file|$body\n"
-      }
-    }.mkString
-    // NULL COUNTS carry exactly like the zone maps: immutable
-    // metadata of a file's bytes, carried for cited files, taken
-    // from the writer for new ones, dropped with the files that left
-    val prevNulls = if (next == 1) Map.empty[String, Seq[(Int, Long)]]
-      else manifestNulls(path, Some(next - 1))
-    val nullHeader = entries.map(_._2).distinct.sorted.flatMap { file =>
-      prevNulls.get(file).orElse(newNulls.get(file)).map { ns =>
-        val body = ns.sortBy(_._1)
-          .map { case (id, n) => s"$id:$n" }.mkString(";")
-        s"#null|$file|$body\n"
-      }
-    }.mkString
-    // EQUALITY DELETES: carried forward (or overridden by rollback,
-    // which restores a snapshot's exact tombstone state), extended by
-    // this commit's `addEq`, and PRUNED when dead — an eq delete whose
-    // seq no cited file is older than can never drop a row again
-    // (rewrites/compaction bump file seqs past it, so the table
-    // self-heals out of the value-filter tax). File SEQUENCE NUMBERS
-    // are recorded for newly-cited files from the first eq delete
-    // onward (absent = implicit 0 = predates every eq delete, which
-    // is exactly right for pre-feature history).
-    val prevEq = eqOverride.getOrElse(
-      if (next == 1) Seq.empty else eqDeletes(path, Some(next - 1)))
-    val prevSeqs = if (next == 1) Map.empty[String, Int]
-      else fileSeqs(path, Some(next - 1))
-    val eqAll = prevEq ++ addEq.map { case (fl, fid) => (fl, fid, next) }
-    val citedFiles = entries.map(_._2).distinct
-    // a file CARRIED from the previous version without a recorded seq
-    // predates the eq regime — implicit 0, so deletes apply to it; a
-    // file NEWLY cited by this commit is born at `next`, strictly
-    // younger than any delete already recorded
-    val prevCited: Set[String] = if (next == 1) Set.empty
-      else manifest(path, Some(next - 1)).map(_._2).toSet
-    def seqOf(file: String): Int =
-      prevSeqs.getOrElse(file, carrySeqs.getOrElse(file,
-        if (prevCited.contains(file)) 0
-        else if (eqAll.nonEmpty) next else 0))
+    def perFile(tag: String)(body: FileMeta => Seq[String]): String =
+      files.flatMap { case (fl, m) => body(m).map(b => s"#$tag|$fl|$b\n") }
+        .mkString
     val eqLive = eqAll.filter { case (_, _, s) =>
-      citedFiles.exists(f => seqOf(f) < s) }
-    val eqHeader = eqLive.sorted
-      .map { case (fl, fid, s) => s"#eq|$fl|$fid|$s\n" }.mkString
-    val seqHeader =
-      if (eqAll.isEmpty) ""
-      else citedFiles.sorted.flatMap { f =>
-        val s = seqOf(f)
-        if (s == 0) None else Some(s"#seq|$f|$s\n")
-      }.mkString
-    // PARTITION SPECS: definitions are append-only and carried by
-    // every commit; `specChange` registers a definition (find-or-add)
-    // and makes it CURRENT; `specOverride` restores a snapshot's
-    // current-spec pointer (rollback). Each cited file records the
-    // spec ERA its manifest key was computed under (`#fspec`, absent
-    // = 0 = identity) — carried like schema ids for cited files,
-    // stamped from `newFileSpecId` for files this commit publishes,
-    // restored from `carryFspecs` for files a rollback re-introduces.
-    val prevSpecDefs: Map[Int, (String, Int)] =
-      if (next == 1) Map(0 -> (("identity", 0)))
-      else partSpecs(path, Some(next - 1))
-    val (allSpecDefs, curSpecId) = specChange match {
-      case None => (prevSpecDefs, specOverride.getOrElse(
-        if (next == 1) 0 else currentSpecId(path, Some(next - 1))))
-      case Some(d) => prevSpecDefs.find(_._2 == d) match {
-        case Some((id, _)) => (prevSpecDefs, id)
-        case None =>
-          val id = prevSpecDefs.keys.max + 1
-          (prevSpecDefs + (id -> d), id)
-      }
-    }
-    val specHeader = allSpecDefs.toSeq.filter(_._1 != 0).sortBy(_._1)
-      .map { case (id, (kind, p)) =>
-        if (p == 0) s"#pspec|$id|$kind\n" else s"#pspec|$id|$kind|$p\n"
+      files.exists(_._2.olderThan(s)) }
+    val header = s"#ts|${System.currentTimeMillis()}\n" +
+      (if (st.schemaId == 0) "" else s"#schema|${st.schemaId}\n") +
+      dvHeader +
+      perFile("stat")(m => Seq(m.stats).filter(_.nonEmpty).map(_.sortBy(_._1)
+        .map { case (id, mn, mx) => s"$id:$mn:$mx" }.mkString(";"))) +
+      perFile("null")(m => Seq(m.nulls).filter(_.nonEmpty).map(_.sortBy(_._1)
+        .map { case (id, n) => s"$id:$n" }.mkString(";"))) +
+      perFile("bloom")(_.blooms.map { case (fid, mb, k, bf) => s"$fid|$mb|$k|$bf" }) +
+      eqLive.sorted.map { case (fl, fid, s) => s"#eq|$fl|$fid|$s\n" }.mkString +
+      (if (eqAll.isEmpty) ""
+       else perFile("seq")(_.seq.filter(_ != 0).map(_.toString).toSeq)) +
+      st.specs.toSeq.filter(_._1 != 0).sortBy(_._1).map {
+        case (id, (kind, 0)) => s"#pspec|$id|$kind\n"
+        case (id, (kind, p)) => s"#pspec|$id|$kind|$p\n"
       }.mkString +
-      (if (curSpecId == 0) "" else s"#curspec|$curSpecId\n")
-    val prevFspecs = if (next == 1) Map.empty[String, Int]
-      else fileSpecs(path, Some(next - 1))
-    // carried files with no header are ERA 0 (the header is only
-    // written for nonzero eras) — `newFileSpecId` stamps only files
-    // this commit introduces, never the carried history
-    def entryFspec(file: String): Int =
-      prevFspecs.getOrElse(file, carryFspecs.getOrElse(file,
-        if (prevCited.contains(file)) 0 else newFileSpecId.getOrElse(0)))
-    val fspecHeader = citedFiles.sorted.flatMap { fl =>
-      val s = entryFspec(fl)
-      if (s == 0) None else Some(s"#fspec|$fl|$s\n")
-    }.mkString
-    // BLOOM headers: carried like stats (a bloom describes immutable
-    // file bytes), taken from the builder for newly-indexed files,
-    // dropped with the files that left — the bitsets themselves stay
-    // in their sidecars
-    val prevBlooms = if (next == 1)
-      Map.empty[String, Seq[(Int, Int, Int, String)]]
-      else manifestBlooms(path, Some(next - 1))
-    // merge PER FIELD, fresh-wins: a file may carry blooms for several
-    // columns built at different times (an incremental build for a
-    // second column must not drop the first's header, and vice versa)
-    val bloomHeader = entries.map(_._2).distinct.sorted.flatMap { file =>
-      val fresh = newBlooms.getOrElse(file, Seq.empty)
-      val carried = prevBlooms.getOrElse(file, Seq.empty)
-        .filterNot(b => fresh.exists(_._1 == b._1))
-      val bs = carried ++ fresh
-      if (bs.isEmpty) None
-      else Some(bs.sortBy(_._1).map { case (fid, m, k, bf) =>
-        s"#bloom|$file|$fid|$m|$k|$bf\n" }.mkString)
-    }.mkString
-    val header = tsHeader + schemaHeader + dvHeader + statHeader +
-      nullHeader + bloomHeader + eqHeader + seqHeader +
-      specHeader + fspecHeader +
-      ledger.toSeq.sorted
-      .map { case (q, e) => s"#txn|$q|$e\n" }.mkString
-    val body = header + entries.sortBy(e => (e._1, e._2))
-      .map { case (k, fl, n) =>
-        val sid = entrySid(fl)
-        if (sid == 0) s"$k|$fl|$n" else s"$k|$fl|$n|$sid"
-      }.mkString("\n") + "\n"
+      (if (st.currentSpec == 0) "" else s"#curspec|${st.currentSpec}\n") +
+      perFile("fspec")(m => Seq(m.spec).filter(_ != 0).map(_.toString)) +
+      st.txns.toSeq.sorted.map { case (q, e) => s"#txn|$q|$e\n" }.mkString
+    val body = header + st.entries.map { case (k, fl, n) =>
+      val sid = st.files(fl).sid
+      if (sid == 0) s"$k|$fl|$n" else s"$k|$fl|$n|$sid"
+    }.mkString("\n") + "\n"
     val tmp = new Path(root, s"_tmp_manifest_${java.util.UUID.randomUUID()}")
     val out = f.create(tmp, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
@@ -1071,12 +870,11 @@ object SinkSource {
       body: Seq[(Long, String, Long)] =>
         (Seq[(Long, String, Long)], Set[String])): (Int, Int) = {
     var attempts = 0
-    val v = publishCas(path, "transaction", maxAttempts) { base =>
+    val v = publishCas(path, "transaction", maxAttempts) { head =>
       attempts += 1
-      val snap = entriesAt(path, base)
-      val (add, remove) = body(snap)
-      checkPremise(path, "transaction", remove, base, base)
-      Commit(snap.filterNot(e => remove(e._2)) ++ add)
+      val (add, remove) = body(head.entries)
+      checkPremise(path, "transaction", remove, head.version, head)
+      head.without(remove).cite(add, _ => FileMeta(Seq.empty, head.schemaId))
     }
     (v, attempts)
   }
@@ -1099,25 +897,18 @@ object SinkSource {
   }
 
   /** THE manifest publish: every commit of the format lands through
-    * here — the single CAS choke point. Reads the head version `base`,
-    * lets `attempt(base)` plan the commit against exactly that
-    * snapshot (validating its premise, or throwing to abort), and
-    * publishes it at `base + 1`. A lost rename race re-reads the head
-    * and re-plans, so concurrent appends commute; `maxAttempts` lost
-    * races end in [[SinkConflictException]]. Returns the published
-    * version. */
+    * here — the single CAS choke point. Reads the head state, lets
+    * `attempt(head)` plan the new state against exactly that snapshot
+    * (validating its premise, or throwing to abort), and publishes it
+    * at `head.version + 1`. A lost rename race re-reads the head and
+    * re-plans, so concurrent appends commute; `maxAttempts` lost races
+    * end in [[SinkConflictException]]. Returns the published version. */
   private[sources] def publishCas(path: String, what: String,
-      maxAttempts: Int = 10)(attempt: Int => Commit): Int =
+      maxAttempts: Int = 10)(attempt: TableState => TableState): Int =
     retryRaces(path, what, maxAttempts) { _ =>
-      val base = currentVersion(path)
-      writeManifest(path, base + 1, attempt(base))
+      val head = state(path)
+      writeManifest(path, head, attempt(head))
     }
-
-  /** Snapshot `base`'s entries as a publish plans against them (a
-    * never-committed table's base 0 is empty). */
-  private[sources] def entriesAt(path: String,
-      base: Int): Seq[(Long, String, Long)] =
-    if (base == 0) Seq.empty else manifest(path, Some(base))
 
   /** A pinned read of snapshot `v`: what a rewrite (compaction,
     * clustered rewrite) reads, so its output holds exactly the rows of
@@ -1137,6 +928,7 @@ object SinkSource {
     *   - un-cited any of them (a rewrite re-homed their rows: publishing
     *     would duplicate or resurrect them, and positions in them are
     *     meaningless now);
+    *   - expired `scanned` itself (nothing is left to validate against);
     *   - changed their deletion vectors (a racing row-level commit
     *     tombstoned rows this one also read: composing double-applies);
     *   - changed the equality-delete set (value-keyed tombstones the
@@ -1145,39 +937,43 @@ object SinkSource {
     * A commit that read nothing has no premise; `scanned == head` (a
     * plan against the snapshot it read) leaves only the first check. */
   private[sources] def checkPremise(path: String, what: String,
-      files: Set[String], scanned: Int, head: Int): Unit = {
+      files: Set[String], scanned: Int, head: TableState): Unit = {
     if (files.isEmpty) return
-    val gone = files -- entriesAt(path, head).map(_._2)
+    val gone = files -- head.files.keySet
     if (gone.nonEmpty)
       throw new SinkConflictException(
         s"$what on $path: a concurrent commit removed or rewrote files " +
           s"it scanned (${gone.take(5).mkString(", ")})")
-    if (scanned == head) return
-    def vecs(v: Int): Set[(String, String)] =
-      deleteSidecar(path, Some(v)).filter(p => files(p._1)).toSet
-    if (vecs(head) != vecs(scanned))
+    if (scanned == head.version) return
+    val read = stateIfPresent(path, scanned).getOrElse(
+      throw new SinkConflictException(
+        s"$what on $path: its scanned snapshot v$scanned was expired " +
+          s"before the commit (head is v${head.version})"))
+    def vecs(st: TableState): Set[(String, String)] =
+      st.vectorSidecar.filter(p => files(p._1)).toSet
+    if (vecs(head) != vecs(read))
       throw new SinkConflictException(
         s"$what on $path: a concurrent row-level commit tombstoned rows " +
-          s"in files it scanned (scanned at v$scanned, head is v$head)")
-    def eqs(v: Int): Set[(String, Int, Int)] = eqDeletes(path, Some(v)).toSet
-    if (eqs(head) != eqs(scanned))
+          s"in files it scanned (scanned at v$scanned, head is v${head.version})")
+    if (head.eqDeletes.toSet != read.eqDeletes.toSet)
       throw new SinkConflictException(
         s"$what on $path: a concurrent equality delete landed after its " +
-          s"scan (scanned at v$scanned, head is v$head)")
+          s"scan (scanned at v$scanned, head is v${head.version})")
   }
 
   /** Plan a REWRITE that read `replaced` at snapshot `scanned` onto
-    * `head`: `out.entries` replace the `replaced` files, re-planned by
-    * file name onto whatever head the CAS lands on, so a concurrently
-    * appended file is carried — never dropped, never duplicated — and
-    * the replaced files' vectors leave the sidecar with them
-    * ([[writeManifest]] keeps only vectors of cited files). Compaction,
-    * clustered rewrite and copy-on-write DML all publish this way. */
+    * `head`: `out` cites the new files in place of the `replaced` ones,
+    * re-planned by file name onto whatever head the CAS lands on, so a
+    * concurrently appended file is carried — never dropped, never
+    * duplicated — and the replaced files' vectors leave the sidecar
+    * with them ([[writeManifest]] keeps only vectors of cited files).
+    * Compaction, clustered rewrite and copy-on-write DML publish this
+    * way. */
   private[sources] def publishRewrite(path: String, what: String,
-      scanned: Int, replaced: Set[String], out: Commit)(head: Int): Commit = {
+      scanned: Int, replaced: Set[String], out: TableState => TableState)(
+      head: TableState): TableState = {
     checkPremise(path, what, replaced, scanned, head)
-    out.copy(entries =
-      entriesAt(path, head).filterNot(e => replaced(e._2)) ++ out.entries)
+    out(head.without(replaced))
   }
 
   /** THE staged publish: every commit whose new files sit in a staging
@@ -1191,16 +987,17 @@ object SinkSource {
     * files for `remove_orphans`, never rows. Drops `staging` after the
     * publish; returns the published version. */
   private[sources] def publishStaged(path: String, staging: Path,
-      what: String, staged: SinkCommitMessage)(plan: Int => Commit): Int = {
+      what: String, staged: SinkCommitMessage)(
+      plan: TableState => TableState): Int = {
     var moved = false
     val v = publishCas(path, what) { head =>
-      val c = plan(head)
+      val next = plan(head)
       if (!moved) {
         moveStaged(path, staging, "deletes", staged.vectors.map(_._2))
         moveStaged(path, staging, "data", staged.entries.map(_._2))
         moved = true
       }
-      c
+      next
     }
     fs(path).delete(staging, true)
     v
@@ -1231,15 +1028,15 @@ object SinkSource {
     * files — under fresh sequence numbers and with the old files'
     * vectors retired, so tombstoned rows would resurrect. Compaction,
     * clustered rewrite and copy-on-write DML refuse such a table at the
-    * snapshot `v` they read; a mor=true catalog merges the tombstones
-    * and materializes them instead. */
-  private[sources] def refuseRawRewrite(path: String, v: Int,
+    * snapshot they read; a mor=true catalog merges the tombstones and
+    * materializes them instead. */
+  private[sources] def refuseRawRewrite(path: String, st: TableState,
       verb: String): Unit = {
     def refuse(what: String) = throw new UnsupportedOperationException(
       s"table $path carries $what; run $verb through a mor=true " +
         "catalog (a raw rewrite would resurrect rows)")
-    if (eqDeletes(path, Some(v)).nonEmpty) refuse("equality deletes")
-    if (deleteSidecar(path, Some(v)).nonEmpty) refuse("deletion vectors")
+    if (st.eqDeletes.nonEmpty) refuse("equality deletes")
+    if (st.vectorSidecar.nonEmpty) refuse("deletion vectors")
   }
 
   /** Publish an EQUALITY DELETE: drop every row (across all files
@@ -1280,11 +1077,11 @@ object SinkSource {
     // an equality delete carries the head's entries verbatim and
     // commutes with concurrent appends (their files get seq > ours,
     // correctly not subject)
-    publishCas(path, "equality-delete publish") { base =>
-      if (base == 0)
+    publishCas(path, "equality-delete publish") { head =>
+      if (head.version == 0)
         throw new IllegalStateException(
           s"cannot equality-delete from never-committed table $path")
-      Commit(manifest(path, Some(base)), addEq = Some((name, fld.id)))
+      head.copy(eqDeletes = head.eqDeletes :+ ((name, fld.id, head.version + 1)))
     }
   }
 
@@ -1323,23 +1120,6 @@ object SinkSource {
 
   // ---- bloom filters ------------------------------------------------------
 
-  /** Per-file BLOOM FILTERS of a version (`#bloom|<file>|<fieldId>|
-    * <m>|<k>|<bloomFile>` headers): the skipping mechanism for POINT
-    * lookups on columns clustering can't help — zone maps prune by
-    * range, useless when every file spans the domain; a bloom answers
-    * "value definitely absent from this file" for = / IN leaves
-    * whatever the layout. The bitsets live in SIDECAR files under
-    * blooms/ (the Iceberg-puffin shape) so manifests stay
-    * metadata-sized; headers carry forward like stats (a bloom
-    * describes immutable file bytes) and drop with their files.
-    * Returns file → (fieldId, mBits, kHashes, bloomFile). */
-  private[graft] def manifestBlooms(path: String,
-      version: Option[Int] = None): Map[String, Seq[(Int, Int, Int, String)]] = {
-    val v = version.getOrElse(currentVersion(path))
-    if (v == 0) Map.empty
-    else snapshot(path, v).blooms
-  }
-
   /** The table's BLOOM POLICY, inferred from its own head: the
     * (fieldId, bitsPerRow) pairs that `CALL build_bloom` has indexed.
     * Write paths resolve this once, driver-side, and every staged
@@ -1351,20 +1131,15 @@ object SinkSource {
     * write-side cost. bitsPerRow is recovered from each header's
     * mBits/rows ratio (the builder's own sizing arithmetic), taking
     * the max across files so coverage never quietly thins. */
-  private[sources] def bloomPolicy(path: String): Seq[(Int, Int)] = {
-    val blooms = manifestBlooms(path)
-    if (blooms.isEmpty) return Seq.empty
-    val rows = manifest(path).groupBy(_._2).view
-      .mapValues(_.map(_._3).sum).toMap
-    blooms.toSeq.flatMap { case (fl, bs) =>
-      val r = math.max(1L, rows.getOrElse(fl, 1L))
-      bs.map { case (fid, mBits, _, _) =>
+  private[sources] def bloomPolicy(st: TableState): Seq[(Int, Int)] =
+    st.files.values.toSeq.flatMap { m =>
+      val r = math.max(1L, m.rows)
+      m.blooms.map { case (fid, mBits, _, _) =>
         (fid, math.max(1L, math.min(64L,
           math.round(mBits.toDouble / r))).toInt)
       }
     }.groupBy(_._1).map { case (fid, xs) =>
       (fid, xs.map(_._2).max) }.toSeq.sorted
-  }
 
   /** Double-hashing bloom arithmetic over BIGINT values — shared by
     * the builder and the plan-time prober. Deterministic (no seeds to
@@ -1471,10 +1246,7 @@ object SinkSource {
         f.listStatus(st.getPath).map(_.getPath.getName)
           .collect { case n if n.startsWith("manifest.v") && n.endsWith(".psv") =>
             n.stripPrefix("manifest.v").stripSuffix(".psv").toInt }
-          .flatMap { v =>
-            try manifest(bp, Some(v)).map(_._2)
-            catch { case _: java.util.NoSuchElementException => Seq.empty }
-          }
+          .flatMap(v => stateIfPresent(bp, v).toSeq.flatMap(_.files.keys))
       }
       .collect { case n if n.startsWith(BorrowedPrefix) =>
         n.stripPrefix(BorrowedPrefix) }
@@ -1514,8 +1286,10 @@ object SinkSource {
     * through the normal write path: its files (under `scratch/data`)
     * with the fresh zone maps and null counts its manifest recorded. */
   private[sources] def scratchMessage(scratch: Path): SinkCommitMessage = {
-    val sp = scratch.toString
-    SinkCommitMessage(manifest(sp), manifestStats(sp), manifestNulls(sp))
+    val st = state(scratch.toString)
+    SinkCommitMessage(st.entries, st.files.map(f => f._1 -> f._2.stats)
+      .filter(_._2.nonEmpty), st.files.map(f => f._1 -> f._2.nulls)
+      .filter(_._2.nonEmpty))
   }
 
   /** Buffered LINE STREAM over a data file — the readers iterate it
@@ -1595,45 +1369,6 @@ object SinkSource {
     def hasNext: Boolean = nextLine != null
     def next(): String = { val l = nextLine; nextLine = advance(); l }
     def close(): Unit = in.close()
-  }
-
-  /** The sidecar FILE a version's manifest is bound to, if any: the
-    * `#dv|<file>` header names it (commit-unique, round 16); manifests
-    * published before the header existed fall back to the legacy
-    * `deletes.v<v>.psv` convention. None when the version has no
-    * tombstones (or the manifest itself is gone — concurrent expire). */
-  private[sources] def sidecarFile(path: String, v: Int): Option[String] = {
-    if (v == 0) return None
-    val f = fs(path)
-    val named =
-      try manifestLines(path, v).find(_.startsWith("#dv|"))
-        .map(_.split('|')(1))
-      catch { case _: java.util.NoSuchElementException => None }
-    named.orElse {
-      val legacy = s"deletes.v$v.psv"
-      if (f.exists(new Path(path, legacy))) Some(legacy) else None
-    }.filter(n => f.exists(new Path(path, n)))
-  }
-
-  /** Active (dataFile, deleteFile) pairs of the requested version's
-    * sidecar; empty if that version has no tombstones. */
-  private[graft] def deleteSidecar(path: String,
-      version: Option[Int] = None): Seq[(String, String)] = {
-    val v = version.getOrElse(currentVersion(path))
-    sidecarFile(path, v) match {
-      case None => Seq.empty
-      case Some(name) =>
-        // memoized read (sidecar names are commit-unique and the
-        // files immutable); a vanished file stays LOUD — silently
-        // returning empty would resurrect deleted rows
-        cachedLines(path, name).getOrElse(
-          throw new java.io.FileNotFoundException(
-            s"sidecar $name vanished under $path (concurrent expire?)"))
-          .map { line =>
-            val c = line.split('|')
-            (c(0), c(1))
-          }
-    }
   }
 }
 
@@ -1877,15 +1612,14 @@ class SinkCatalog extends CatalogPlugin with TableCatalog
   // concurrent ALTER is never lost: the CAS publishes on top of it
   private def applyColumnChanges(path: String,
       colChanges: Seq[TableChange]): Unit =
-    SinkSource.publishCas(path, "ALTER TABLE") { base =>
-      val fields = evolvedFields(path, base, colChanges)
-      SinkSource.Commit(SinkSource.entriesAt(path, base),
-        schemaId = Some(SinkSchemas.store(path, fields)))
+    SinkSource.publishCas(path, "ALTER TABLE") { head =>
+      head.copy(schemaId = SinkSchemas.store(path,
+        evolvedFields(path, SinkSchemas.fields(path, head.schemaId), colChanges)))
     }
 
-  private def evolvedFields(path: String, base: Int,
+  private def evolvedFields(path: String, current: Seq[SinkSchemas.SinkField],
       colChanges: Seq[TableChange]): Seq[SinkSchemas.SinkField] = {
-    var fields = SinkSchemas.currentFields(path, Some(base))
+    var fields = current
     def single(names: Array[String], what: String): String = {
       if (names.length != 1) throw new UnsupportedOperationException(
         s"$what: nested columns are not supported " +
@@ -2127,15 +1861,13 @@ class SinkTable(path: String, pinnedVersion: Option[Int] = None,
     * serves the schema AS OF n, and an un-evolved table resolves the
     * base contract with zero extra I/O beyond the manifest it reads
     * anyway. */
+  private lazy val tableSid: Int = pinnedVersion
+    .fold(Option(SinkSource.state(path)))(SinkSource.stateIfPresent(path, _))
+    .fold(0)(_.schemaId)
   private[sources] lazy val resolvedFields: Seq[SinkSchemas.SinkField] =
-    explicitFields.getOrElse {
-      try SinkSchemas.currentFields(path, pinnedVersion)
-      catch { case _: java.util.NoSuchElementException => SinkSchemas.base }
-    }
+    explicitFields.getOrElse(SinkSchemas.fields(path, tableSid))
   private[sources] lazy val resolvedSid: Int =
-    if (explicitFields.isDefined) 0
-    else try SinkSource.schemaIdOf(path, pinnedVersion)
-    catch { case _: java.util.NoSuchElementException => 0 }
+    if (explicitFields.isDefined) 0 else tableSid
 
   override def schema(): StructType = SinkSchemas.structType(resolvedFields)
 
@@ -2202,15 +1934,15 @@ class SinkTable(path: String, pinnedVersion: Option[Int] = None,
     * exact under any era.
     */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(keyAligned) && SinkSource.fileSpecs(path).isEmpty
+    filters.forall(keyAligned) &&
+      SinkSource.state(path).files.values.forall(_.spec == 0)
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     var doomed = Seq.empty[(Long, String, Long)]
-    SinkSource.publishCas(path, "DELETE") { base =>
-      val (d, kept) = SinkSource.entriesAt(path, base)
-        .partition { case (k, _, _) => filters.forall(matches(k, _)) }
-      doomed = d
-      SinkSource.Commit(kept)
+    SinkSource.publishCas(path, "DELETE") { head =>
+      def hit(k: Long) = filters.forall(matches(k, _))
+      doomed = head.entries.filter(e => hit(e._1))
+      head.keepEntries((k, _) => !hit(k))
     }
     // data files are dropped AFTER the manifest stops citing them; a
     // crash in between leaks a file (GC'd by the next truncating
@@ -2244,8 +1976,8 @@ class SinkPartitionedTable(path: String, mor: Boolean = false)
     * table, bucket(m, k) after an evolution — so `DESC` and the DDL
     * planner see the layout new writes actually use. */
   override def partitioning(): Array[Transform] =
-    SinkSource.partSpecs(path)(SinkSource.currentSpecId(path)) match {
-      case ("bucket", m) =>
+    SinkSource.state(path).specInfo match {
+      case (_, "bucket", m) =>
         Array(org.apache.spark.sql.connector.expressions.Expressions
           .bucket(m, "k"))
       case _ =>
@@ -2259,9 +1991,8 @@ class SinkPartitionedTable(path: String, mor: Boolean = false)
   /** Partition idents address the identity layout exactly; any other
     * era makes them ambiguous (k=5 vs bucket-id 5) — the DDL verbs
     * refuse rather than guess. */
-  private def refuseIfEvolved(verb: String): Unit =
-    if (SinkSource.currentSpecId(path) != 0 ||
-        SinkSource.fileSpecs(path).nonEmpty)
+  private def refuseIfEvolved(verb: String, st: TableState): Unit =
+    if (st.currentSpec != 0 || st.files.values.exists(_.spec != 0))
       throw new UnsupportedOperationException(
         s"$verb on $path: the partition spec evolved, so partition " +
           "identifiers are ambiguous across eras (an identity key and " +
@@ -2274,15 +2005,15 @@ class SinkPartitionedTable(path: String, mor: Boolean = false)
       "partitions exist by containing data; writes create them")
 
   override def dropPartition(ident: InternalRow): Boolean = {
-    refuseIfEvolved("DROP PARTITION")
+    val st = SinkSource.state(path)
+    refuseIfEvolved("DROP PARTITION", st)
     val k = ident.getLong(0)
-    if (!SinkSource.manifest(path).exists(_._1 == k)) return false
+    if (!st.entries.exists(_._1 == k)) return false
     var doomed = Seq.empty[String]
-    SinkSource.publishCas(path, "DROP PARTITION") { base =>
-      val (d, kept) = SinkSource.entriesAt(path, base).partition(_._1 == k)
-      val keptFiles = kept.map(_._2).toSet
-      doomed = d.map(_._2).distinct.filterNot(keptFiles)
-      SinkSource.Commit(kept)
+    SinkSource.publishCas(path, "DROP PARTITION") { head =>
+      val kept = head.keepEntries((key, _) => key != k)
+      doomed = head.files.keys.filterNot(kept.files.contains).toSeq
+      kept
     }
     // same discipline as deleteWhere: publish first, GC second — a
     // crash in between leaks a file, never a row
@@ -2303,15 +2034,14 @@ class SinkPartitionedTable(path: String, mor: Boolean = false)
     // values of that one spec (identity keys, or bucket ids after a
     // full migration). A MIXED table's keys span two value domains;
     // listing them as one column would be a lie, so refuse.
-    val fsp = SinkSource.fileSpecs(path)
-    val eras = (SinkSource.manifest(path).map(e =>
-      fsp.getOrElse(e._2, 0)) :+ SinkSource.currentSpecId(path)).distinct
+    val st = SinkSource.state(path)
+    val eras = (st.files.values.map(_.spec).toSeq :+ st.currentSpec).distinct
     if (eras.size > 1)
       throw new UnsupportedOperationException(
         s"SHOW PARTITIONS on $path: files span partition-spec eras " +
           s"(${eras.sorted.mkString(", ")}) — migrate with " +
           "rewrite_clustered before listing partitions")
-    val keys = SinkSource.manifest(path).map(_._1).distinct.sorted
+    val keys = st.entries.map(_._1).distinct.sorted
     val matching =
       if (names.isEmpty) keys
       else {
@@ -2492,12 +2222,11 @@ private[sources] object SinkZoneMaps {
     * (candidate-files-proportional small reads — the parquet-footer
     * access shape). Absence of a header, a non-point leaf, or a bloom
     * hit all mean "cannot skip". */
-  def bloomRejects(path: String, file: String,
-      blooms: Map[String, Seq[(Int, Int, Int, String)]],
+  def bloomRejects(path: String, blooms: Seq[(Int, Int, Int, String)],
       conjuncts: Seq[(Int, Filter)],
       cache: scala.collection.mutable.Map[String, Array[Byte]]): Boolean =
     conjuncts.exists { case (id, c) =>
-      blooms.get(file).flatMap(_.find(_._1 == id)) match {
+      blooms.find(_._1 == id) match {
         case Some((_, m, k, bf)) =>
           def absent(v: Any): Boolean = {
             val bits = cache.getOrElseUpdate(bf,
@@ -2621,21 +2350,19 @@ class SinkCompactProcedure(root: String, mor: Boolean = false)
         // the whole plan — targets, guards, the rewrite's read — is
         // pinned to ONE snapshot, so the rewrite replaces exactly the
         // rows it read; the publish re-plans onto the head by file name
-        val base = SinkSource.currentVersion(path)
-        val at = Some(base)
-        val m = SinkSource.entriesAt(path, base)
+        val head = SinkSource.state(path)
+        val base = head.version
+        val m = head.entries
         val perKey = m.groupBy(_._1).view
           .mapValues(_.map(_._2).distinct).toMap
         // a MoR compaction MATERIALIZES vectors and equality deletes
         // (the rewritten files' new sequence numbers self-prune the
         // eq headers); a raw one would resurrect their rows
-        if (!mor) SinkSource.refuseRawRewrite(path, base, "compact")
-        val dvd = SinkSource.deleteSidecar(path, at)
+        if (!mor) SinkSource.refuseRawRewrite(path, head, "compact")
+        val dvd = head.vectorSidecar
         val dvdFiles = dvd.map(_._1).toSet
-        val eqs = SinkSource.eqDeletes(path, at)
-        val seqs = SinkSource.fileSeqs(path, at)
         val eqSubject: String => Boolean = fl =>
-          eqs.exists { case (_, _, s) => seqs.getOrElse(fl, 0) < s }
+          head.eqDeletes.exists { case (_, _, s) => head.files(fl).olderThan(s) }
         // PARTITION-SPEC eras: compaction regroups rows BY MANIFEST
         // KEY, which is only coherent when every cited file and the
         // current spec agree on what a key means — a mixed table
@@ -2645,9 +2372,8 @@ class SinkCompactProcedure(root: String, mor: Boolean = false)
         // bucket-era tables compact fine (per bucket id, the grain
         // streaming appends actually fragment); mixed tables migrate
         // through rewrite_clustered first.
-        val fsp = SinkSource.fileSpecs(path, at)
-        val curSpec = SinkSource.currentSpecInfo(path, at)
-        val eras = (m.map(e => fsp.getOrElse(e._2, 0)) :+ curSpec._1).distinct
+        val curSpec = head.specInfo
+        val eras = (head.files.values.map(_.spec).toSeq :+ curSpec._1).distinct
         if (eras.size > 1)
           throw new UnsupportedOperationException(
             s"table $path spans partition-spec eras " +
@@ -2676,8 +2402,8 @@ class SinkCompactProcedure(root: String, mor: Boolean = false)
           // the table's CURRENT fields (shipped explicitly — the
           // scratch dir has no schema history), and the moved entries
           // are stamped with the current sid.
-          val curFields = SinkSchemas.currentFields(path, at)
-          val curSid = SinkSource.schemaIdOf(path, at)
+          val curSid = head.schemaId
+          val curFields = SinkSchemas.fields(path, curSid)
           // group addressing in ROW terms: under the identity spec a
           // manifest key is the rows' k; under bucket(m) it is
           // pmod(k, m) — the same arithmetic the writer groups by, so
@@ -2700,8 +2426,7 @@ class SinkCompactProcedure(root: String, mor: Boolean = false)
             .map(_._2).toSet
           SinkSource.publishStaged(path, new Path(scratch, "data"),
             "compact", compacted)(SinkSource.publishRewrite(path, "compact",
-              base, replaced,
-              compacted.commit(compacted.entries, curSid, curSpec._1)))
+              base, replaced, compacted.cite(_, curSid, curSpec._1)))
           SinkSource.gcData(path, replaced)
           SinkSource.gcVectors(path, dvd.filter(p => replaced(p._1)))
           SinkSource.fs(path).delete(scratch, true)
@@ -2847,31 +2572,30 @@ class SinkMetaTable(path: String, kind: String)
                   n.stripPrefix("manifest.v").stripSuffix(".psv").toInt }
                 .toSeq.sorted
             present.map { v =>
-              val m = SinkSource.manifest(path, Some(v))
+              val st = SinkSource.state(path, Some(v))
               new GenericInternalRow(Array[Any](
                 v.toLong,
-                m.map(_._2).distinct.size.toLong,
-                m.map(_._3).sum,
-                SinkSource.deleteSidecar(path, Some(v)).size.toLong,
+                st.files.size.toLong,
+                st.entries.map(_._3).sum,
+                st.vectorSidecar.size.toLong,
                 UTF8String.fromString(tagsByV.getOrElse(v, ""))))
                 : InternalRow
             }.toArray
           case "files" =>
-            val vecs = SinkSource.deleteSidecar(path)
+            val st = SinkSource.state(path)
+            val vecs = st.vectorSidecar
               .groupBy(_._1).view.mapValues(_.size.toLong).toMap
-            SinkSource.manifest(path).map { case (k, fl, n) =>
+            st.entries.map { case (k, fl, n) =>
               new GenericInternalRow(Array[Any](
                 k, UTF8String.fromString(fl), n,
                 vecs.getOrElse(fl, 0L))): InternalRow
             }.toArray
           case "partitions" =>
-            val fsp = SinkSource.fileSpecs(path)
-            val specs = SinkSource.partSpecs(path)
-            SinkSource.manifest(path)
-              .groupBy(e => (e._1, fsp.getOrElse(e._2, 0)))
+            val st = SinkSource.state(path)
+            st.entries.groupBy(e => (e._1, st.files(e._2).spec))
               .toSeq.sortBy { case ((k, sid), _) => (sid, k) }
               .map { case ((k, sid), es) =>
-                val tr = specs(sid) match {
+                val tr = st.specs(sid) match {
                   case ("identity", _) => "identity"
                   case (kind, p) => s"$kind($p)"
                 }
@@ -2954,31 +2678,20 @@ class SinkExpireProcedure(root: String)
         // aggressive concurrent horizon: a kept manifest that vanished
         // was expired by the other call, which also owns its
         // exclusively-cited files.
-        def tryManifest(v: Int): Seq[(Long, String, Long)] =
-          try SinkSource.manifest(path, Some(v))
-          catch { case _: java.util.NoSuchElementException => Seq.empty }
-        // survivors' citations: anything a kept snapshot can reach
-        // stays — data entries, sidecar vectors, AND equality-delete
-        // value files (cited by `#eq` headers, living under deletes/)
-        def tryEq(v: Int): Seq[String] =
-          try SinkSource.eqDeletes(path, Some(v)).map(_._1)
-          catch { case _: java.util.NoSuchElementException => Seq.empty }
-        val liveData = kept.flatMap(v => tryManifest(v).map(_._2)) ++
+        // Citations are read BEFORE the manifest deletions below:
+        // anything a kept snapshot reaches stays — data entries,
+        // sidecar vectors, AND equality-delete value files (cited by
+        // `#eq` headers, living under deletes/); doomed citations are
+        // reachable from expired snapshots ONLY
+        val keptStates = kept.toSeq.flatMap(SinkSource.stateIfPresent(path, _))
+        val expiredStates = expired.flatMap(SinkSource.stateIfPresent(path, _))
+        def deletes(st: TableState): Seq[String] =
+          st.vectorSidecar.map(_._2) ++ st.eqDeletes.map(_._1)
+        val doomedData = expiredStates.flatMap(_.files.keys).toSet --
+          keptStates.flatMap(_.files.keys) --
           SinkSource.branchCitedData(path) // branches pin shared bytes
-        val liveVecs = kept.flatMap(v =>
-          SinkSource.deleteSidecar(path, Some(v)).map(_._2)) ++
-          kept.flatMap(tryEq)
-        // doomed citations: reachable from expired snapshots ONLY
-        // (sidecar resolution rides the manifest read, so it must
-        // happen BEFORE the manifest deletions below)
-        val expiredRead = expired.map(v =>
-          (v, tryManifest(v),
-            SinkSource.deleteSidecar(path, Some(v)) ++
-              tryEq(v).map(("", _))))
-        val doomedData =
-          expiredRead.flatMap(_._2.map(_._2)).toSet -- liveData
-        val doomedVecs =
-          expiredRead.flatMap(_._3.map(_._2)).toSet -- liveVecs
+        val doomedVecs = expiredStates.flatMap(deletes).toSet --
+          keptStates.flatMap(deletes)
         // manifests go FIRST: a concurrent reader of an expired pin
         // fails loudly at planning instead of mid-scan on vanished data
         val removedVersions = expired.count { v =>
@@ -2988,8 +2701,7 @@ class SinkExpireProcedure(root: String)
         // sidecar FILES: everything a surviving manifest does not bind
         // is dead — expired versions' sidecars AND orphans from lost
         // commit races (salted names that no manifest header cites)
-        val boundSidecars = kept.flatMap(v =>
-          SinkSource.sidecarFile(path, v))
+        val boundSidecars = keptStates.flatMap(_.sidecar).toSet
         f.listStatus(new Path(path)).map(_.getPath.getName)
           .filter(n => n.startsWith("deletes.v") && n.endsWith(".psv"))
           .filterNot(boundSidecars)
@@ -3075,18 +2787,12 @@ class SinkOrphanProcedure(root: String)
           .collect { case n if n.startsWith("manifest.v") && n.endsWith(".psv") =>
             n.stripPrefix("manifest.v").stripSuffix(".psv").toInt }.toSeq.sorted
         // a vanished manifest mid-listing is a concurrent expire's work
-        def tryManifest(v: Int): Seq[(Long, String, Long)] =
-          try SinkSource.manifest(path, Some(v))
-          catch { case _: java.util.NoSuchElementException => Seq.empty }
-        val citedData = versions.flatMap(v => tryManifest(v).map(_._2)).toSet ++
+        val states = versions.flatMap(SinkSource.stateIfPresent(path, _))
+        val citedData = states.flatMap(_.files.keys).toSet ++
           SinkSource.branchCitedData(path) // branches pin shared bytes
-        val citedVecs = versions.flatMap(v =>
-          SinkSource.deleteSidecar(path, Some(v)).map(_._2)).toSet ++
-          versions.flatMap { v =>
-            // equality-delete value files are deletes/-dir citations too
-            try SinkSource.eqDeletes(path, Some(v)).map(_._1)
-            catch { case _: java.util.NoSuchElementException => Seq.empty }
-          }
+        // equality-delete value files are deletes/-dir citations too
+        val citedVecs = states.flatMap(st =>
+          st.vectorSidecar.map(_._2) ++ st.eqDeletes.map(_._1)).toSet
         def sweep(dir: String, cited: Set[String]): Long = {
           val d = new Path(path, dir)
           if (!f.exists(d)) return 0L
@@ -3103,11 +2809,8 @@ class SinkOrphanProcedure(root: String)
         // bloom sidecars: cited by `#bloom` headers; uncited bitsets
         // (dropped files' blooms, lost build races) are orphans too —
         // folded into the vector count (both are stats-sidecar debris)
-        val citedBlooms = versions.flatMap { v =>
-          try SinkSource.manifestBlooms(path, Some(v)).values.flatten
-            .map(_._4)
-          catch { case _: java.util.NoSuchElementException => Seq.empty }
-        }.toSet
+        val citedBlooms =
+          states.flatMap(_.files.values.flatMap(_.blooms.map(_._4))).toSet
         val bloomsRemoved = sweep("blooms", citedBlooms)
         // abandoned staging ATTEMPTS (crashed queries): whole attempt
         // dirs whose newest content predates the grace cutoff —
@@ -3190,8 +2893,7 @@ class SinkRollbackProcedure(root: String)
             s"cannot roll back to version $v of $path (history is 1..$cur)")
         // the target's full snapshot state; an expired manifest fails
         // loudly here (q263's pinned-read contract)
-        val entries = SinkSource.manifest(path, Some(v))
-        val dvs = SinkSource.deleteSidecar(path, Some(v))
+        val target = SinkSource.state(path, Some(v))
         // REFUSE when restore is physically impossible: truncate /
         // metadata-delete / CoW / compaction reclaim data files
         // eagerly, so a snapshot can be metadata-complete yet
@@ -3199,10 +2901,10 @@ class SinkRollbackProcedure(root: String)
         // manifest that cites missing files and every later read
         // would fail mid-scan instead of here
         val f = SinkSource.fs(path)
-        val missingData = entries.map(_._2).distinct.sorted
+        val missingData = target.files.keys.toSeq.sorted
           .filterNot(fl => f.exists(new Path(path, s"data/$fl")))
-        val missingVecs = (dvs.map(_._2) ++
-          SinkSource.eqDeletes(path, Some(v)).map(_._1)).distinct.sorted
+        val missingVecs = (target.vectorSidecar.map(_._2) ++
+          target.eqDeletes.map(_._1)).distinct.sorted
           .filterNot(dv => f.exists(new Path(path, s"deletes/$dv")))
         if (missingData.nonEmpty || missingVecs.nonEmpty)
           throw new IllegalStateException(
@@ -3211,25 +2913,17 @@ class SinkRollbackProcedure(root: String)
               s"vectors: ${missingVecs.take(5).mkString(",")})")
         val newVersion =
           if (v == cur) cur // restoring the head is a no-op, not a commit
-          else SinkSource.publishCas(path, "rollback") { _ =>
-            // the restored state is absolute: a lost race republishes
-            // the same snapshot on top of the new head
-            SinkSource.Commit(entries, Some(dvs),
-              schemaId = Some(SinkSource.schemaIdOf(path, Some(v))),
-              newStats = SinkSource.manifestStats(path, Some(v)),
-              carrySids = SinkSource.manifestSids(path, Some(v)),
-              eqOverride = Some(SinkSource.eqDeletes(path, Some(v))),
-              carrySeqs = SinkSource.fileSeqs(path, Some(v)),
-              newNulls = SinkSource.manifestNulls(path, Some(v)),
-              newBlooms = SinkSource.manifestBlooms(path, Some(v)),
-              // restore the snapshot's exact layout state: each
-              // re-introduced file's era and the current-spec pointer
-              carryFspecs = SinkSource.fileSpecs(path, Some(v)),
-              specOverride = Some(SinkSource.currentSpecId(path, Some(v))))
+          else SinkSource.publishCas(path, "rollback") { head =>
+            // the restored state is absolute — files with their
+            // metadata, vectors, equality deletes, schema and current
+            // spec — so a lost race republishes the same snapshot on
+            // top of the new head; the spec list and the txn ledger
+            // stay the head's (append-only history)
+            target.copy(specs = head.specs, txns = head.txns)
           }
         val row: InternalRow = new GenericInternalRow(Array[Any](
           v.toLong, newVersion.toLong,
-          entries.map(_._2).distinct.size.toLong, entries.map(_._3).sum))
+          target.files.size.toLong, target.entries.map(_._3).sum))
         val result: Scan = new LocalScan {
           override def rows(): Array[InternalRow] = Array(row)
           override def readSchema(): StructType = StructType(Seq(
@@ -3297,16 +2991,17 @@ class SinkRewriteProcedure(root: String, mor: Boolean = false)
         val path = new Path(root, table).toString
         // planned and read at ONE snapshot; the publish re-plans onto
         // the head by file name (see SinkSource.publishRewrite)
-        val base = SinkSource.currentVersion(path)
-        val at = Some(base)
-        val curFields = SinkSchemas.currentFields(path, at)
+        val head = SinkSource.state(path)
+        val base = head.version
+        val curSid = head.schemaId
+        val curFields = SinkSchemas.fields(path, curSid)
         val fld = curFields.find(_.name == column).getOrElse(
           throw new IllegalArgumentException(s"no column $column on $path"))
         if (fld.dt != LongType)
           throw new UnsupportedOperationException(
             s"rewrite_clustered clusters by a BIGINT column (zone maps " +
               s"cover BIGINT); $column is ${SinkSchemas.typeName(fld.dt)}")
-        if (!mor) SinkSource.refuseRawRewrite(path, base, "rewrite_clustered")
+        if (!mor) SinkSource.refuseRawRewrite(path, head, "rewrite_clustered")
         // clustered rewrite lays one file per (key, range slice) —
         // the IDENTITY layout. Under an evolved current spec that
         // would contradict what new writes produce, so it refuses;
@@ -3315,20 +3010,18 @@ class SinkRewriteProcedure(root: String, mor: Boolean = false)
         // era, the rewrite publishes everything as spec-0 files, and
         // mixed-era refusals (compact, SHOW PARTITIONS, metadata
         // delete) clear.
-        if (SinkSource.currentSpecId(path, at) != 0)
+        if (head.currentSpec != 0)
           throw new UnsupportedOperationException(
             s"rewrite_clustered on $path: the current partition spec " +
               "is not identity — evolve_spec('" + table + "', " +
               "'identity') first; the rewrite then migrates every " +
               "old-era file")
-        val m = SinkSource.entriesAt(path, base)
-        val filesBefore = m.map(_._2).distinct.size.toLong
-        if (m.isEmpty)
+        val filesBefore = head.files.size.toLong
+        if (head.files.isEmpty)
           throw new IllegalStateException(s"nothing to rewrite under $path")
         val spark = org.apache.spark.sql.SparkSession.active
         import org.apache.spark.sql.functions.col
         val scratch = new Path(path, s"_rewrite_${java.util.UUID.randomUUID()}")
-        val curSid = SinkSource.schemaIdOf(path, at)
         // the distributed sort: each (key, value-range) slice lands
         // whole in one task; the keyed writer keeps the one-key-per-
         // file layout invariant, so files split WITHIN a key by value
@@ -3341,16 +3034,14 @@ class SinkRewriteProcedure(root: String, mor: Boolean = false)
           scratch.toString, overwrite = true,
           fields = if (curSid == 0) None else Some(curFields))
         val rewritten = SinkSource.scratchMessage(scratch)
-        val oldFiles = m.map(_._2).distinct
-        val oldVecs = SinkSource.deleteSidecar(path, at)
+        val oldFiles = head.files.keySet
         // full swap: every entry read is replaced, tombstones are
         // materialized
         SinkSource.publishStaged(path, new Path(scratch, "data"),
           "rewrite_clustered", rewritten)(SinkSource.publishRewrite(path,
-            "rewrite_clustered", base, oldFiles.toSet,
-            rewritten.commit(rewritten.entries, curSid, 0)))
+            "rewrite_clustered", base, oldFiles, rewritten.cite(_, curSid, 0)))
         SinkSource.gcData(path, oldFiles)
-        SinkSource.gcVectors(path, oldVecs)
+        SinkSource.gcVectors(path, head.vectorSidecar)
         SinkSource.fs(path).delete(scratch, true)
         val row: InternalRow = new GenericInternalRow(Array[Any](
           filesBefore, rewritten.entries.map(_._2).distinct.size.toLong,
@@ -3450,17 +3141,18 @@ class SinkEvolveSpecProcedure(root: String, bucketWrite: Boolean = false)
         // carry the head verbatim, swap only the spec pointer; a lost
         // race re-checks against the new head (the no-op refusal must
         // hold against what actually published)
-        val newV = SinkSource.publishCas(path, "evolve_spec") { base =>
-          val curId = SinkSource.currentSpecId(path, Some(base))
-          if (SinkSource.partSpecs(path, Some(base))(curId) == d)
+        // definitions are append-only: find-or-add, then point at it
+        var specId = 0
+        val newV = SinkSource.publishCas(path, "evolve_spec") { head =>
+          if (head.specs(head.currentSpec) == d)
             throw new IllegalArgumentException(
               s"$transform is already the current spec of $path")
-          SinkSource.Commit(SinkSource.manifest(path, Some(base)),
-            specChange = Some(d))
+          specId = head.specs.collectFirst { case (id, `d`) => id }
+            .getOrElse(head.specs.keys.max + 1)
+          head.copy(specs = head.specs + (specId -> d), currentSpec = specId)
         }
         val row: InternalRow = new GenericInternalRow(Array[Any](
-          newV.toLong,
-          SinkSource.currentSpecId(path, Some(newV)).toLong,
+          newV.toLong, specId.toLong,
           org.apache.spark.unsafe.types.UTF8String.fromString(transform)))
         val result: Scan = new LocalScan {
           override def rows(): Array[InternalRow] = Array(row)
@@ -3524,16 +3216,15 @@ class SinkBloomProcedure(root: String)
           throw new IllegalArgumentException(
             s"bits_per_row must be in [1, 64], got $bitsPerRow")
         val path = new Path(root, table).toString
-        val fields = SinkSchemas.currentFields(path)
-        val fld = fields.find(_.name == column).getOrElse(
-          throw new IllegalArgumentException(s"no column $column on $path"))
+        val head = SinkSource.state(path)
+        val fld = SinkSchemas.fields(path, head.schemaId)
+          .find(_.name == column).getOrElse(
+            throw new IllegalArgumentException(s"no column $column on $path"))
         if (fld.dt != LongType)
           throw new UnsupportedOperationException(
             s"bloom indexes cover BIGINT columns; $column is " +
               SinkSchemas.typeName(fld.dt))
-        val m = SinkSource.manifest(path)
-        val fieldsOf = SinkSource.fileFields(path, None)
-        val rowsByFile = m.groupBy(_._2).view.mapValues(_.map(_._3).sum)
+        val fieldsOf = SinkSource.fileFields(path, head)
         // (file, absPath, position of the field in the FILE's schema,
         // mBits, kHashes) per file that HAS the field; files predating
         // the column are skipped — their rows have no values to index
@@ -3548,13 +3239,12 @@ class SinkBloomProcedure(root: String)
         // headers ARE the policy, [[SinkSource.bloomPolicy]]), the
         // steady state is ZERO uncovered files and the CALL is pure
         // metadata — the one-off full pass happens exactly once.
-        val covered = SinkSource.manifestBlooms(path)
-        val work = rowsByFile.toSeq
+        val work = head.files.toSeq
           // borrowed branch refs are another table's bytes — skipped;
           // absence of a header is the sound "cannot skip"
           .filterNot { case (fl, _) => fl.contains("/") }
-          .filterNot { case (fl, _) =>
-            covered.get(fl).exists(_.exists(_._1 == fld.id)) }
+          .collect { case (fl, m) if !m.blooms.exists(_._1 == fld.id) =>
+            (fl, m.rows) }
           .flatMap { case (fl, rows) =>
             val pos = fieldsOf(fl).indexWhere(_.id == fld.id)
             if (pos < 0) None
@@ -3589,16 +3279,17 @@ class SinkBloomProcedure(root: String)
             try out.write(bits) finally out.close()
             (fl, (mBits, k, name))
           }.collect().toMap // file-count-sized: header metadata only
-        val newBlooms = built.map { case (fl, (mBits, k, name)) =>
-          fl -> Seq((fld.id, mBits, k, name)) }
         // fully covered already: publish nothing (a no-op CALL must
         // not burn a version), report zero files indexed. Blooms
         // commute with concurrent appends (their new files simply lack
-        // headers until the next build)
+        // headers until the next build); the publish merges them with
+        // the file's other fields' blooms
         if (built.nonEmpty)
-          SinkSource.publishCas(path, "bloom publish") { base =>
-            SinkSource.Commit(SinkSource.manifest(path, Some(base)),
-              newBlooms = newBlooms)
+          SinkSource.publishCas(path, "bloom publish") { h =>
+            h.copy(files = h.files.map { case (fl, m) =>
+              fl -> built.get(fl).fold(m) { case (mBits, k, name) =>
+                m.copy(blooms = Seq((fld.id, mBits, k, name))) }
+            })
           }
         val row: InternalRow = new GenericInternalRow(Array[Any](
           built.size.toLong,
@@ -3664,38 +3355,31 @@ class SinkBranchProcedure(root: String)
         if (f.exists(branchDir))
           throw new IllegalArgumentException(
             s"branch $name already exists on $path")
-        if (SinkSource.schemaIdOf(path) != 0)
+        val head = SinkSource.state(path)
+        if (head.schemaId != 0)
           throw new UnsupportedOperationException(
             s"cannot branch $path: evolved schemas do not travel through " +
               "borrowed refs (compact/normalize first)")
-        if (SinkSource.deleteSidecar(path).nonEmpty ||
-            SinkSource.eqDeletes(path).nonEmpty)
+        if (head.vectorSidecar.nonEmpty || head.eqDeletes.nonEmpty)
           throw new UnsupportedOperationException(
             s"cannot branch $path: active tombstones do not travel " +
               "through borrowed refs (compact to materialize them first)")
-        if (SinkSource.currentSpecId(path) != 0 ||
-            SinkSource.fileSpecs(path).nonEmpty)
+        if (head.currentSpec != 0 || head.files.values.exists(_.spec != 0))
           throw new UnsupportedOperationException(
             s"cannot branch $path: evolved partition specs do not " +
               "travel through borrowed refs (the branch manifest would " +
               "lose file eras) — migrate with rewrite_clustered first")
-        val base = SinkSource.currentVersion(path)
-        val entries = SinkSource.manifest(path)
-        val borrowed = entries.map { case (k, fl, n) =>
-          (k, s"${SinkSource.BorrowedPrefix}$fl", n) }
-        val stats = SinkSource.manifestStats(path).map { case (fl, ss) =>
-          s"${SinkSource.BorrowedPrefix}$fl" -> ss }
-        val nulls = SinkSource.manifestNulls(path).map { case (fl, ns) =>
-          s"${SinkSource.BorrowedPrefix}$fl" -> ns }
         f.mkdirs(branchDir)
-        SinkSource.publishCas(branchDir.toString, "branch") { _ =>
-          SinkSource.Commit(borrowed, newStats = stats, newNulls = nulls)
+        SinkSource.publishCas(branchDir.toString, "branch") { b =>
+          b.copy(files = head.files.map { case (fl, m) =>
+            s"${SinkSource.BorrowedPrefix}$fl" ->
+              FileMeta(m.entries, stats = m.stats, nulls = m.nulls) })
         }
         SinkSource.writeBranches(path,
-          SinkSource.branches(path) + (name -> base))
+          SinkSource.branches(path) + (name -> head.version))
         val row: InternalRow = new GenericInternalRow(Array[Any](
           org.apache.spark.unsafe.types.UTF8String.fromString(name),
-          base.toLong, entries.map(_._2).distinct.size.toLong))
+          head.version.toLong, head.files.size.toLong))
         val result: Scan = new LocalScan {
           override def rows(): Array[InternalRow] = Array(row)
           override def readSchema(): StructType = StructType(Seq(
@@ -3758,12 +3442,10 @@ class SinkFastForwardProcedure(root: String)
             s"cannot fast-forward $name onto $path: main advanced from " +
               s"v$base to v$cur since the branch synchronized (no merge " +
               "semantics here — re-branch or rebase)")
-        if (SinkSource.deleteSidecar(branchDir.toString).nonEmpty ||
-            SinkSource.eqDeletes(branchDir.toString).nonEmpty)
+        val branch = SinkSource.state(branchDir.toString)
+        if (branch.vectorSidecar.nonEmpty || branch.eqDeletes.nonEmpty)
           throw new UnsupportedOperationException(
             s"branch $name carries tombstones; compact it first")
-        val bEntries = SinkSource.manifest(branchDir.toString)
-        val bStats = SinkSource.manifestStats(branchDir.toString)
         def local(fl: String): String =
           if (fl.startsWith(SinkSource.BorrowedPrefix))
             fl.stripPrefix(SinkSource.BorrowedPrefix)
@@ -3781,7 +3463,7 @@ class SinkFastForwardProcedure(root: String)
         val dataDir = new Path(path, "data")
         f.mkdirs(dataDir)
         var moved = 0L
-        val localFiles = bEntries.map(_._2).distinct
+        val localFiles = branch.files.keys.toSeq.sorted
           .filterNot(_.startsWith(SinkSource.BorrowedPrefix))
         localFiles.foreach { fl =>
           val dest = new Path(dataDir, fl)
@@ -3795,17 +3477,21 @@ class SinkFastForwardProcedure(root: String)
               s"branch file publish failed: $fl")
           moved += 1
         }
-        val entries = bEntries.map { case (k, fl, n) => (k, local(fl), n) }
-        val stats = bStats.map { case (fl, ss) => local(fl) -> ss }
-        val bNulls = SinkSource.manifestNulls(branchDir.toString)
-        val nulls = bNulls.map { case (fl, ns) => local(fl) -> ns }
+        // the branch's files under `name`: a file the target already
+        // cites keeps its metadata there, a new one brings its entries,
+        // zone maps and null counts under the target's schema id
+        def cite(target: TableState, name: String => String): TableState =
+          target.copy(files = branch.files.map { case (fl, m) =>
+            name(fl) -> target.files.getOrElse(name(fl),
+              FileMeta(m.entries, target.schemaId, m.stats, m.nulls))
+          })
         val newV =
           try SinkSource.publishCas(path, "fast_forward") { head =>
-            if (head != cur)
+            if (head.version != cur)
               throw new SinkConflictException(
                 s"cannot fast-forward $name onto $path: a commit raced " +
                   "the promotion (main diverged)")
-            SinkSource.Commit(entries, newStats = stats, newNulls = nulls)
+            cite(head, local)
           } catch {
             case e: SinkConflictException =>
               // lost the CAS: withdraw the copies so a retried
@@ -3824,15 +3510,8 @@ class SinkFastForwardProcedure(root: String)
         // bytes live in main's data dir now.
         SinkSource.writeBranches(path,
           SinkSource.branches(path) + (name -> newV))
-        SinkSource.publishCas(branchDir.toString, "fast_forward") { _ =>
-          SinkSource.Commit(
-            bEntries.map { case (k, fl, n) =>
-              (k, s"${SinkSource.BorrowedPrefix}${local(fl)}", n) },
-            newStats = bStats.map { case (fl, ss) =>
-              s"${SinkSource.BorrowedPrefix}${local(fl)}" -> ss },
-            newNulls = bNulls.map { case (fl, ns) =>
-              s"${SinkSource.BorrowedPrefix}${local(fl)}" -> ns })
-        }
+        SinkSource.publishCas(branchDir.toString, "fast_forward")(
+          cite(_, fl => s"${SinkSource.BorrowedPrefix}${local(fl)}"))
         // the branch head now cites the bytes in MAIN's data dir via
         // borrowed refs — the branch-side copies are redundant; drop
         // them last (a crash before this point leaks the copies, and
@@ -3844,7 +3523,7 @@ class SinkFastForwardProcedure(root: String)
           catch { case _: Exception => }
         }
         val row: InternalRow = new GenericInternalRow(Array[Any](
-          newV.toLong, moved, bEntries.map(_._3).sum))
+          newV.toLong, moved, branch.entries.map(_._3).sum))
         val result: Scan = new LocalScan {
           override def rows(): Array[InternalRow] = Array(row)
           override def readSchema(): StructType = StructType(Seq(
@@ -3978,7 +3657,7 @@ class SinkDeltaScan(path: String, op: SinkDeltaOperation,
   private lazy val scan: SinkScan = {
     val v = SinkSource.currentVersion(path)
     op.scannedVersion.set(v)
-    new SinkScan(path, Some(v).filter(_ > 0), readFields = readFields,
+    new SinkScan(path, Some(v), readFields = readFields,
       reportStats = false, mor = true)
   }
 
@@ -3999,10 +3678,10 @@ class SinkDvBatchWrite(path: String, queryId: String,
 
   // a MoR UPDATE's re-inserted rows are ordinary appends: they land
   // grouped under the CURRENT spec and stamped with its era
-  private lazy val spec: (Int, String, Int) =
-    SinkSource.currentSpecInfo(path)
-  private lazy val bloomPolicy: Seq[(Int, Int)] =
-    SinkSource.bloomPolicy(path)
+  private lazy val (spec, bloomPolicy) = {
+    val head = SinkSource.state(path)
+    (head.specInfo, SinkSource.bloomPolicy(head))
+  }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
     new SinkDvWriterFactory(path, queryId, fields, spec._2, spec._3,
@@ -4020,9 +3699,8 @@ class SinkDvBatchWrite(path: String, queryId: String,
     SinkSource.publishStaged(path, staging, "delta publish", staged) { head =>
       SinkSource.checkPremise(path, "delta publish", vectored,
         op.scannedVersion.get(), head)
-      staged.commit(SinkSource.entriesAt(path, head) ++ staged.entries,
-        sid, spec._1).copy(deletes = Some(
-          SinkSource.deleteSidecar(path, Some(head)) ++ staged.vectors))
+      staged.cite(head, sid, spec._1)
+        .copy(vectorSidecar = head.vectorSidecar ++ staged.vectors)
     }
   }
 }
@@ -4174,26 +3852,20 @@ class SinkRowLevelScan(path: String, op: SinkRowLevelOperation,
 
   // the snapshot the whole scan plans from (every re-plan after
   // runtime filtering reads the same one)
-  private lazy val version: Int = SinkSource.currentVersion(path)
+  private lazy val st: TableState = SinkSource.state(path)
 
-  private def entries: Seq[(Long, String, Long)] = {
-    val fsp = SinkSource.fileSpecs(path, Some(version))
-    val specDefs = SinkSource.partSpecs(path, Some(version))
-    SinkSource.entriesAt(path, version).filter { case (k, fl, _) =>
-      keep(k, SinkSource.layoutOf(specDefs(fsp.getOrElse(fl, 0)))) }
-  }
+  private def entries: Seq[(Long, String, Long)] =
+    st.entries.filter { case (k, fl, _) => keep(k, st.layoutOf(fl)) }
 
-  override def description(): String = {
-    val all = SinkSource.entriesAt(path, version).size
-    s"SinkRowLevelScan(groups=${entries.size}/$all)"
-  }
+  override def description(): String =
+    s"SinkRowLevelScan(groups=${entries.size}/${st.entries.size})"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    SinkSource.refuseRawRewrite(path, version, "copy-on-write DML")
+    SinkSource.refuseRawRewrite(path, st, "copy-on-write DML")
     val es = entries
     op.scannedFiles.set(es.map(_._2).distinct)
-    op.scannedVersion.set(version)
-    val fieldsOf = SinkSource.fileFields(path, Some(version))
+    op.scannedVersion.set(st.version)
+    val fieldsOf = SinkSource.fileFields(path, st)
     es.map(_._2).distinct.sorted
       .map(f => SinkInputPartition(new Path(path, s"data/$f").toString,
         fieldsOf(f)): InputPartition)
@@ -4222,10 +3894,10 @@ class SinkReplaceDataWrite(path: String, queryId: String,
   // spec — a row-level DML on an evolved table migrates the touched
   // groups into the live era as a side effect (the Iceberg behavior:
   // rewrites always write the current spec)
-  private lazy val spec: (Int, String, Int) =
-    SinkSource.currentSpecInfo(path)
-  private lazy val bloomPolicy: Seq[(Int, Int)] =
-    SinkSource.bloomPolicy(path)
+  private lazy val (spec, bloomPolicy) = {
+    val head = SinkSource.state(path)
+    (head.specInfo, SinkSource.bloomPolicy(head))
+  }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new SinkWriterFactory(path, queryId, trailingFields = true,
@@ -4237,8 +3909,7 @@ class SinkReplaceDataWrite(path: String, queryId: String,
     val replaced = op.scannedFiles.get().toSet
     SinkSource.publishStaged(path, staging, "row-level publish", staged)(
       SinkSource.publishRewrite(path, "row-level publish",
-        op.scannedVersion.get(), replaced,
-        staged.commit(staged.entries, sid, spec._1)))
+        op.scannedVersion.get(), replaced, staged.cite(_, sid, spec._1)))
     SinkSource.gcData(path, replaced)
   }
 }
@@ -4297,16 +3968,12 @@ class SinkScanBuilder(path: String, pinnedVersion: Option[Int],
   }
   override def pushedFilters(): Array[Filter] = skipFilters.toArray
 
-  // ---- metadata reads backing MIN/MAX pushdown (lazy: count-only
-  // pushes and plain scans never pay them) ------------------------------
-  private lazy val aggEntries = SinkSource.manifest(path, pinnedVersion)
-  private lazy val aggStats = SinkSource.manifestStats(path, pinnedVersion)
-  private lazy val aggNulls = SinkSource.manifestNulls(path, pinnedVersion)
-  private lazy val aggTombstoned = {
-    val v = pinnedVersion.getOrElse(SinkSource.currentVersion(path))
-    SinkSource.deleteSidecar(path, Some(v)).nonEmpty ||
-      SinkSource.eqDeletes(path, Some(v)).nonEmpty
-  }
+  // the ONE snapshot this plan reads: every metadata family, the
+  // pushdown proofs and the scan it builds come from it, so a commit
+  // landing mid-planning cannot tear the plan (files from v5, stats
+  // from v6) — the Iceberg "a scan is one snapshot" contract
+  private lazy val st: TableState = SinkSource.state(path, pinnedVersion)
+  private def tombstoned = st.vectorSidecar.nonEmpty || st.eqDeletes.nonEmpty
 
   /** TOP-N pushdown (`ORDER BY ... LIMIT n`): each partition reader
     * keeps a bounded n-row heap instead of emitting its whole file —
@@ -4414,18 +4081,16 @@ class SinkScanBuilder(path: String, pinnedVersion: Option[Int],
     // answer with bucket extremes. Both fall back to the row scan
     // when any cited file is non-identity-era; global COUNT stays
     // metadata (row counts are era-agnostic truth).
-    lazy val evolvedFiles = SinkSource.fileSpecs(path, pinnedVersion)
-    if ((groups.nonEmpty || minMaxIds.contains(1)) && evolvedFiles.nonEmpty)
+    if ((groups.nonEmpty || minMaxIds.contains(1)) &&
+        st.files.values.exists(_.spec != 0))
       return None
     if (minMaxIds.nonEmpty) {
       // MIN/MAX needs PROOF from metadata: rows exist, no tombstones,
       // and every cited file carries a stat for every asked field
       // (the key's stat IS the manifest entry)
-      val ok = aggEntries.nonEmpty && !aggTombstoned &&
-        aggEntries.map(_._2).distinct.forall { file =>
-          (minMaxIds - 1).forall(id =>
-            aggStats.get(file).exists(_.exists(_._1 == id)))
-        }
+      val ok = st.files.nonEmpty && !tombstoned &&
+        st.files.values.forall(m =>
+          (minMaxIds - 1).forall(id => m.stats.exists(_._1 == id)))
       if (!ok) return None
     }
     // GROUPED min/max/count read PER-FILE metadata per key group —
@@ -4435,18 +4100,15 @@ class SinkScanBuilder(path: String, pinnedVersion: Option[Int],
     val perFileStats = minMaxIds.nonEmpty ||
       flat.exists(_.isInstanceOf[SinkCountColSpec])
     if (groups.nonEmpty && perFileStats &&
-        aggEntries.groupBy(_._2).exists(_._2.map(_._1).distinct.size > 1))
+        st.files.values.exists(_.entries.map(_._1).distinct.size > 1))
       return None
     val countIds = flat.collect { case SinkCountColSpec(id, _) => id }.toSet
     if (countIds.nonEmpty) {
       // COUNT(col) needs the same proof discipline: no tombstones,
       // and every cited file carries a NULL record for every asked
       // field (the key is non-nullable — its count is the row count)
-      val ok = !aggTombstoned &&
-        aggEntries.map(_._2).distinct.forall { file =>
-          (countIds - 1).forall(id =>
-            aggNulls.get(file).exists(_.exists(_._1 == id)))
-        }
+      val ok = !tombstoned && st.files.values.forall(m =>
+        (countIds - 1).forall(id => m.nulls.exists(_._1 == id)))
       if (!ok) return None
     }
     Some(flat)
@@ -4478,17 +4140,10 @@ class SinkScanBuilder(path: String, pinnedVersion: Option[Int],
         req.fieldNames.toSeq.flatMap(n => known.find(_.name == n))
     }
     val resolvedSkips = SinkZoneMaps.resolve(skipFilters, fields)
-    // SNAPSHOT PINNING (round 18): resolve the table version ONCE per
-    // plan. A current-version scan that re-resolves per helper call
-    // pays a directory listing per metadata family AND can tear its
-    // snapshot (files from v5, stats from v6) if a commit lands
-    // mid-planning — the Iceberg "a scan is one snapshot" contract,
-    // applied at the one choke point every batch scan flows through.
-    // v0 (never committed) stays unpinned: there is nothing to tear,
-    // and the empty-table read path expects None.
+    // the scan reads the builder's snapshot; v0 (never committed) stays
+    // unpinned — there is nothing to tear
     val snapV: Option[Int] =
-      pinnedVersion.orElse(
-        Some(SinkSource.currentVersion(path)).filter(_ > 0))
+      pinnedVersion.orElse(Some(st.version).filter(_ > 0))
     // UNIFORMLY bucket-era tables report their layout as
     // KeyGroupedPartitioning(bucket(m, k)) — the read-side payoff
     // of q311's evolution: two tables evolved onto the same spec
@@ -4505,20 +4160,13 @@ class SinkScanBuilder(path: String, pinnedVersion: Option[Int],
     def uniformBucketEra: Option[Int] =
       if (topN.nonEmpty || plainLimit.nonEmpty || splitBytes.nonEmpty ||
           maxVersionsPerTrigger.nonEmpty || startingVersion.nonEmpty) None
-      else SinkSource.partSpecs(path, snapV)
-        .get(SinkSource.currentSpecId(path, snapV)) match {
-        case Some(("bucket", m)) =>
-          val csId = SinkSource.currentSpecId(path, snapV)
-          val fsp = SinkSource.fileSpecs(path, snapV)
-          val entries = SinkSource.manifest(path, snapV)
-          if (entries.nonEmpty &&
-              entries.forall(e => fsp.getOrElse(e._2, 0) == csId))
-            Some(m)
-          else None
+      else st.specs.get(st.currentSpec) match {
+        case Some(("bucket", m)) if st.files.nonEmpty &&
+            st.files.values.forall(_.spec == st.currentSpec) => Some(m)
         case _ => None
       }
-    if (pushedAgg) new SinkManifestAggScan(path, snapV,
-      pushedGroupByK, pushedSpecs)
+    if (pushedAgg) new SinkManifestAggScan(path, st, pushedGroupByK,
+      pushedSpecs)
     else uniformBucketEra match {
       case Some(m) => new SinkBucketGroupedScan(path, snapV,
         readFields, resolvedSkips, m, reportStats = stats, mor = mor)
@@ -4584,8 +4232,7 @@ class SinkBucketGroupedScan(path: String, pinnedVersion: Option[Int],
   // bucket id per file = the file's manifest key (uniform bucket era
   // by construction — the builder proved it before choosing this scan)
   private lazy val keyOf: Map[String, Long] =
-    SinkSource.manifest(path, pinnedVersion)
-      .groupBy(_._2).view.mapValues(_.head._1).toMap
+    state.files.map { case (f, m) => f -> m.entries.head._1 }
 
   // memoized per conjunct state (the filesCache discipline, round-18
   // ADVICE): one split planning pass per state, so the REPORTED
@@ -4595,9 +4242,9 @@ class SinkBucketGroupedScan(path: String, pinnedVersion: Option[Int],
       (Seq[(Int, org.apache.spark.sql.sources.Filter)],
         Array[InputPartition]) = null
   private def keyed: Array[InputPartition] = {
-    val state = conjunctState
+    val conj = conjunctState
     val cached = keyedCache
-    if (cached != null && cached._1 == state) cached._2
+    if (cached != null && cached._1 == conj) cached._2
     else {
       val k: Array[InputPartition] = super.planInputPartitions().map {
         case p: SinkInputPartition =>
@@ -4605,7 +4252,7 @@ class SinkBucketGroupedScan(path: String, pinnedVersion: Option[Int],
             keyOf(new Path(p.file).getName)): InputPartition
         case other => other // unreachable: splits are disabled here
       }
-      keyedCache = (state, k)
+      keyedCache = (conj, k)
       k
     }
   }
@@ -4640,7 +4287,7 @@ private[sources] case class SinkCountColSpec(fieldId: Int, name: String)
 /** The pushed-aggregate scan: rows come straight from manifest
   * arithmetic on the driver; the single input partition carries the
   * finished answer. */
-class SinkManifestAggScan(path: String, pinnedVersion: Option[Int],
+class SinkManifestAggScan(path: String, st: TableState,
     groupByK: Boolean,
     specs: Seq[SinkAggSpec] = Seq(SinkCountStarSpec))
     extends Scan with Batch {
@@ -4663,18 +4310,16 @@ class SinkManifestAggScan(path: String, pinnedVersion: Option[Int],
   override def toBatch: Batch = this
 
   private lazy val answer: Seq[Array[Long]] = {
-    val m = SinkSource.manifest(path, pinnedVersion)
-    lazy val stats = SinkSource.manifestStats(path, pinnedVersion)
-    lazy val nulls = SinkSource.manifestNulls(path, pinnedVersion)
+    val m = st.entries
     // the builder proved coverage; a gap here is a protocol bug, and
     // a loud failure beats a silently wrong extreme
     def statOf(file: String, id: Int): (Long, Long) =
-      stats.get(file).flatMap(_.find(_._1 == id))
+      st.files(file).stats.find(_._1 == id)
         .map { case (_, mn, mx) => (mn, mx) }
         .getOrElse(throw new IllegalStateException(
           s"pushed MIN/MAX lost its stat for field $id of $file under $path"))
     def nullOf(file: String, id: Int): Long =
-      nulls.get(file).flatMap(_.find(_._1 == id)).map(_._2)
+      st.files(file).nulls.find(_._1 == id).map(_._2)
         .getOrElse(throw new IllegalStateException(
           s"pushed COUNT lost its null record for field $id of $file " +
             s"under $path"))
@@ -4836,8 +4481,9 @@ class SinkScan(path: String, pinnedVersion: Option[Int] = None,
   // Iceberg lower-upper bound pruning re-expressed over the psv
   // manifest). Unprovable files are read and the engine's residual
   // Filter keeps rows honest.
-  private lazy val allFiles: Array[String] =
-    SinkSource.manifest(path, pinnedVersion).map(_._2).distinct.sorted.toArray
+  // the ONE snapshot the scan plans from, resolved once
+  protected lazy val state: TableState = SinkSource.state(path, pinnedVersion)
+  private lazy val allFiles: Array[String] = state.files.keys.toArray.sorted
   // NOT a plain lazy val: the runtime filter may arrive after
   // planning first touched the file list, and the post-filter plan
   // must see the pruned set (the SpjScan discipline). But NOT an
@@ -4853,20 +4499,14 @@ class SinkScan(path: String, pinnedVersion: Option[Int] = None,
     if (conjuncts.isEmpty) return allFiles
     val cached = filesCache
     if (cached != null && cached._1 == conjuncts) return cached._2
-    val entries = SinkSource.manifest(path, pinnedVersion)
-    val keysByFile = entries.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
-    val rowsByFile = entries.groupBy(_._2).view.mapValues(_.map(_._3).sum).toMap
-    val stats = SinkSource.manifestStats(path, pinnedVersion)
-    val nulls = SinkSource.manifestNulls(path, pinnedVersion)
-    val blooms = SinkSource.manifestBlooms(path, pinnedVersion)
-    val fsp = SinkSource.fileSpecs(path, pinnedVersion)
-    val specDefs = SinkSource.partSpecs(path, pinnedVersion)
     val bloomCache = scala.collection.mutable.Map.empty[String, Array[Byte]]
-    val out = allFiles.filter(f => SinkZoneMaps.mightMatch(
-      keysByFile(f), stats.get(f), conjuncts,
-      nulls.get(f), rowsByFile.getOrElse(f, -1L),
-      specDefs(fsp.getOrElse(f, 0))) &&
-      !SinkZoneMaps.bloomRejects(path, f, blooms, conjuncts, bloomCache))
+    val out = allFiles.filter { f =>
+      val m = state.files(f)
+      SinkZoneMaps.mightMatch(m.entries.map(_._1),
+        Option(m.stats).filter(_.nonEmpty), conjuncts,
+        Option(m.nulls).filter(_.nonEmpty), m.rows, state.specs(m.spec)) &&
+        !SinkZoneMaps.bloomRejects(path, m.blooms, conjuncts, bloomCache)
+    }
     filesCache = (conjuncts, out)
     out
   }
@@ -4894,8 +4534,7 @@ class SinkScan(path: String, pinnedVersion: Option[Int] = None,
         java.util.OptionalLong.empty()
     }
     val live = files.toSet
-    val entries = SinkSource.manifest(path, pinnedVersion)
-      .filter(e => live.contains(e._2))
+    val entries = state.entries.filter(e => live.contains(e._2))
     val rows = entries.map(_._3).sum
     // 8 bytes per projected non-null long; what matters to planning
     // is the ORDER of magnitude, and that it is exact-rows-based
@@ -4932,14 +4571,12 @@ class SinkScan(path: String, pinnedVersion: Option[Int] = None,
       : java.util.Map[
         org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
-    SinkSource.columnStatsOf(path, pinnedVersion, tableFields, entries,
-      exact = !mor)
+    SinkSource.columnStatsOf(state, tableFields, entries, exact = !mor)
 
   // the deletion stage's vectors, per data file, of the scan's snapshot
   private lazy val dvs: Map[String, Seq[String]] =
     if (!mor) Map.empty
-    else SinkSource.deleteSidecar(path, pinnedVersion)
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    else state.vectorSidecar.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
 
   override def description(): String =
     s"SinkScan(files=${files.length}" +
@@ -4966,18 +4603,17 @@ class SinkScan(path: String, pinnedVersion: Option[Int] = None,
     // each split carries ITS file's schema fields (resolved from the
     // manifest's per-entry sid, driver-side) — executors reconcile
     // against the read schema by field id with zero metadata I/O
-    val fieldsOf = SinkSource.fileFields(path, pinnedVersion)
+    val fieldsOf = SinkSource.fileFields(path, state)
     // equality deletes apply to a file iff its sequence number is
     // OLDER than the delete's — the pairing is computed here, once,
     // from headers (O(files × eq deletes) metadata, no data opened)
-    val eqs = if (mor) SinkSource.eqDeletes(path, pinnedVersion) else Seq.empty
-    lazy val seqs = SinkSource.fileSeqs(path, pinnedVersion)
+    val eqs = if (mor) state.eqDeletes else Seq.empty
     def under(dir: String, name: String) = new Path(path, s"$dir/$name").toString
     val whole = files.map { f =>
       SinkInputPartition(under("data", f), fieldsOf(f),
         dvFiles = dvs.getOrElse(f, Seq.empty).map(under("deletes", _)),
         eqFiles = eqs.collect { case (eqf, fid, s)
-          if seqs.getOrElse(f, 0) < s => (under("deletes", eqf), fid) })
+          if state.files(f).olderThan(s) => (under("deletes", eqf), fid) })
     }
     splitBytes match {
       case None => whole.map(p => p: InputPartition)
@@ -5191,13 +4827,10 @@ class SinkMicroBatchStream(path: String,
 
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] = {
-    val (s, e) = (versionOf(start), versionOf(end))
-    val before =
-      if (s == 0) Set.empty[String]
-      else SinkSource.manifest(path, Some(s)).map(_._2).toSet
-    val after = SinkSource.entriesAt(path, e).map(_._2).distinct
-    val fieldsOf = SinkSource.fileFields(path, Some(e))
-    after.filterNot(before).sorted
+    val before = SinkSource.state(path, Some(versionOf(start))).files
+    val after = SinkSource.state(path, Some(versionOf(end)))
+    val fieldsOf = SinkSource.fileFields(path, after)
+    after.files.keys.filterNot(before.contains).toSeq.sorted
       .map(f => SinkInputPartition(new Path(path, s"data/$f").toString,
         fieldsOf(f)): InputPartition)
       .toArray
@@ -5479,13 +5112,14 @@ case class SinkCommitMessage(entries: Seq[(Long, String, Long)],
     vectors: Seq[(String, String)] = Seq.empty)
     extends WriterCommitMessage {
 
-  /** The manifest publish citing `cited`, which includes these staged
-    * files: they carry the writer's schema id `sid` and spec era
-    * `specId`, and their zone maps, null counts and blooms. */
-  private[sources] def commit(cited: Seq[(Long, String, Long)], sid: Int,
-      specId: Int): SinkSource.Commit =
-    SinkSource.Commit(cited, newFileSchemaId = Some(sid), newStats = stats,
-      newNulls = nulls, newFileSpecId = Some(specId), newBlooms = blooms)
+  /** `st` also citing these staged files, each carrying the writer's
+    * schema id `sid` and spec era `specId`, and its zone maps, null
+    * counts and blooms. */
+  private[sources] def cite(st: TableState, sid: Int,
+      specId: Int): TableState =
+    st.cite(entries, f => FileMeta(Seq.empty, sid,
+      stats.getOrElse(f, Seq.empty), nulls.getOrElse(f, Seq.empty),
+      blooms.getOrElse(f, Seq.empty), spec = specId))
 }
 
 object SinkCommitMessage {
@@ -5523,10 +5157,10 @@ class SinkBatchWrite(path: String, queryId: String, truncate: Boolean,
   // factory creation and threads it here so a spec evolution between
   // staging and commit can't mis-stamp the era; scratch writes force
   // a spec their destination table dictates)
+  private lazy val layoutHead = SinkSource.state(path)
   private lazy val spec: (Int, String, Int) =
-    forcedSpec.getOrElse(SinkSource.currentSpecInfo(path))
-  private lazy val bloomPolicy: Seq[(Int, Int)] =
-    SinkSource.bloomPolicy(path)
+    forcedSpec.getOrElse(layoutHead.specInfo)
+  private lazy val bloomPolicy = SinkSource.bloomPolicy(layoutHead)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new SinkWriterFactory(path, queryId,
@@ -5542,7 +5176,6 @@ class SinkBatchWrite(path: String, queryId: String, truncate: Boolean,
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val staged = SinkCommitMessage.merge(messages)
-    val committed = staged.entries
     // overwrite-by-filter: matched keys' entries are swapped for the
     // staged files IN THIS version, everything else carried verbatim —
     // a partial truncate that never reads the kept groups.
@@ -5552,29 +5185,23 @@ class SinkBatchWrite(path: String, queryId: String, truncate: Boolean,
     // last-writer-wins (each version is internally consistent).
     var dropped: Seq[(Long, String, Long)] = Seq.empty
     var publishedFiles = Set.empty[String]
-    SinkSource.publishStaged(path, staging, "write publish", staged) { base =>
-      val head = SinkSource.entriesAt(path, base)
+    SinkSource.publishStaged(path, staging, "write publish", staged) { head =>
       // overwrite-by-filter is EXACT at manifest granularity only
       // when every matched group's key IS the rows' k — an evolved
       // (bucket-era) file's key is pmod(k, m) and the file holds
       // other keys too, so a key-filtered swap would silently drop
       // unmatched rows sharing the bucket. Refuse loudly; row-level
       // DELETE + append handles the evolved case exactly.
-      if (replace.isDefined &&
-          SinkSource.fileSpecs(path, Some(base)).nonEmpty)
+      if (replace.isDefined && head.files.values.exists(_.spec != 0))
         throw new UnsupportedOperationException(
           s"overwrite-by-filter on $path: the table carries files from " +
             "an evolved partition spec (their manifest keys are bucket " +
             "ids, not k values) — use row-level DELETE + append, or " +
             "rewrite_clustered to migrate eras first")
-      val (d, prior) =
-        if (truncate) (head, Seq.empty)
-        else replace match {
-          case Some(fs) => head.partition { case (k, _, _) =>
-            fs.forall(SinkKeyFilters.matches(k, _)) }
-          case None => (Seq.empty, head)
-        }
-      dropped = d
+      def swapped(k: Long): Boolean = truncate ||
+        replace.exists(_.forall(SinkKeyFilters.matches(k, _)))
+      dropped = head.entries.filter(e => swapped(e._1))
+      val prior = head.keepEntries((k, _) => !swapped(k))
       // DECLARED-SCHEMA reconciliation against the head THIS attempt
       // replaces (schema evolution on write): a truncate or a first
       // commit declares its fields outright (overwrite semantics);
@@ -5590,9 +5217,9 @@ class SinkBatchWrite(path: String, queryId: String, truncate: Boolean,
       // statement re-plans against the new snapshot.
       val declaredSid: Option[Int] =
         if (!declareSchema) None
-        else if (truncate || base == 0) Some(sid)
+        else if (truncate || head.version == 0) Some(sid)
         else {
-          val headFields = SinkSchemas.currentFields(path, Some(base))
+          val headFields = SinkSchemas.fields(path, head.schemaId)
           if (headFields == fields) Some(sid)
           else if (!mergeSchema)
             throw new SinkConflictException(
@@ -5618,9 +5245,10 @@ class SinkBatchWrite(path: String, queryId: String, truncate: Boolean,
             Some(SinkSchemas.ensure(path, merged))
           }
         }
-      publishedFiles = (prior ++ committed).map(_._2).toSet
-      staged.commit(prior ++ committed, sid, spec._1)
-        .copy(txn = txn, schemaId = declaredSid)
+      val next = staged.cite(prior, sid, spec._1)
+      publishedFiles = next.files.keySet
+      next.copy(txns = next.txns ++ txn,
+        schemaId = declaredSid.getOrElse(next.schemaId))
     }
     // GC only the files the REPLACED HEAD actually cited (both the
     // truncate and the deleteWhere branch), after the manifest stops
@@ -5682,10 +5310,10 @@ class SinkStreamingWrite(path: String, queryId: String,
   // resolved once per run, driver-side, and threaded into both the
   // writers (file grouping) and each epoch's commit (#fspec stamp) —
   // one snapshot decides the era end-to-end
-  private lazy val spec: (Int, String, Int) =
-    SinkSource.currentSpecInfo(path)
-  private lazy val bloomPolicy: Seq[(Int, Int)] =
-    SinkSource.bloomPolicy(path)
+  private lazy val (spec, bloomPolicy) = {
+    val head = SinkSource.state(path)
+    (head.specInfo, SinkSource.bloomPolicy(head))
+  }
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =

@@ -65,8 +65,9 @@ class ConcurrencyHardeningSpec extends SparkSpec {
       !f.exists(new Path(s"$root/t/data/$fl")),
       s"the replaced head's file $fl must be GC'd"))
     // the in-flight commit lands at v3 citing its file — readable
-    SinkSource.writeManifest(s"$root/t", 3, SinkSource.Commit(
-      SinkSource.manifest(s"$root/t") :+ ((7L, inflight, 1L))))
+    val v2 = SinkSource.state(s"$root/t")
+    SinkSource.writeManifest(s"$root/t", v2,
+      v2.cite(Seq((7L, inflight, 1L)), _ => SinkSource.FileMeta(Seq.empty)))
     val got = SinkSource.load(spark, s"$root/t").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((9L, 90L), (7L, 70L)), s"racing append lost rows: $got")
@@ -212,24 +213,23 @@ class ConcurrencyHardeningSpec extends SparkSpec {
     // a rollback that REVERTS the applying delete resurrects rows
     // with no metadata-derivable change set — refuse, like the add
     val eqAt2 = SinkSource.eqDeletes(s"$root/t", Some(2))
-    SinkSource.writeManifest(s"$root/t", 4, SinkSource.Commit(
-      SinkSource.manifest(s"$root/t"), eqOverride = Some(Seq.empty),
-      carrySeqs = SinkSource.fileSeqs(s"$root/t")))                  // v4
+    val v3 = SinkSource.state(s"$root/t")
+    SinkSource.writeManifest(s"$root/t", v3,
+      v3.copy(eqDeletes = Seq.empty))                                // v4
     val exRevert = intercept[UnsupportedOperationException] {
       SinkChanges.load(s, s"$root/t", 3, 4).collect()
     }
     assert(exRevert.getMessage.contains("EQUALITY"), exRevert.getMessage)
     // DEAD-header churn (seq at or below every cited file's seq —
     // applies to nothing): publishing it and pruning it both feed
-    SinkSource.writeManifest(s"$root/t", 5, SinkSource.Commit(
-      SinkSource.manifest(s"$root/t"),
-      eqOverride = Some(eqAt2.map { case (fl, fid, _) => (fl, fid, 0) }),
-      carrySeqs = SinkSource.fileSeqs(s"$root/t")))                  // v5
+    val v4 = SinkSource.state(s"$root/t")
+    SinkSource.writeManifest(s"$root/t", v4, v4.copy(
+      eqDeletes = eqAt2.map { case (fl, fid, _) => (fl, fid, 0) }))  // v5
     assert(SinkChanges.load(s, s"$root/t", 4, 5).collect().isEmpty,
       "adding a dead header must be a non-event")
-    SinkSource.writeManifest(s"$root/t", 6, SinkSource.Commit(
-      SinkSource.manifest(s"$root/t"), eqOverride = Some(Seq.empty),
-      carrySeqs = SinkSource.fileSeqs(s"$root/t")))                  // v6
+    val v5 = SinkSource.state(s"$root/t")
+    SinkSource.writeManifest(s"$root/t", v5,
+      v5.copy(eqDeletes = Seq.empty))                                // v6
     assert(SinkChanges.load(s, s"$root/t", 5, 6).collect().isEmpty,
       "pruning a dead header must be a non-event")
   }

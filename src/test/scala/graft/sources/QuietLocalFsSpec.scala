@@ -70,11 +70,12 @@ class QuietLocalFsSpec extends SparkSpec {
     val f = SinkSource.fs(root)
     val out = f.create(new Path(root, "data/extra.psv"), true)
     try out.write("2|20\n".getBytes("UTF-8")) finally out.close()
-    SinkSource.writeManifest(root, 2,
-      SinkSource.Commit(Seq((1L, "extra.psv", 1L))))
+    val v1 = SinkSource.state(root)
+    val extra = v1.copy(files =
+      Map("extra.psv" -> SinkSource.FileMeta(Seq((1L, 1L)))))
+    SinkSource.writeManifest(root, v1, extra)
     intercept[SinkCommitRaceException] {
-      SinkSource.writeManifest(root, 2,
-        SinkSource.Commit(Seq((1L, "extra.psv", 1L))))
+      SinkSource.writeManifest(root, v1, extra)
     }
   }
 

@@ -169,5 +169,17 @@ class SinkCommitSafetySpec extends SparkSpec {
     assert(s.sql("SELECT count(*) c FROM graft_dvb.t WHERE v < 4")
       .collect()(0).getLong(0) == 0L,
       "tombstoned rows resurrected through a planted sidecar")
+    // the BOUND sidecar vanishing under a present manifest is loud:
+    // reading it as "no tombstones" would resurrect the deleted rows
+    f.delete(new Path(s"$root/t/${bound.get}"), false)
+    intercept[java.io.FileNotFoundException] {
+      SinkSource.deleteSidecar(s"$root/t")
+    }
+    val lost = intercept[Exception] {
+      s.sql("SELECT count(*) c FROM graft_dvb.t WHERE v < 4").collect()
+    }
+    assert(Iterator.iterate[Throwable](lost)(_.getCause)
+      .takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException]), lost.toString)
   }
 }

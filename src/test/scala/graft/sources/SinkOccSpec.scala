@@ -36,11 +36,12 @@ class SinkOccSpec extends SparkSpec {
 
   test("the manifest publish is a CAS: an occupied version loses retryably") {
     val root = freshTable("cas")
-    // v1 exists; publishing AT v1 must fail with the race exception
-    // and leave no trace
+    // v1 exists; publishing AT v1 (planned on the empty v0) must fail
+    // with the race exception and leave no trace
     val before = SinkSource.manifest(root)
     intercept[SinkCommitRaceException] {
-      SinkSource.writeManifest(root, 1, SinkSource.Commit(before))
+      SinkSource.writeManifest(root, SinkSource.TableState.empty,
+        SinkSource.state(root))
     }
     assert(SinkSource.currentVersion(root) == 1)
     assert(SinkSource.manifest(root) == before)
@@ -59,11 +60,11 @@ class SinkOccSpec extends SparkSpec {
     val root = freshTable("k_races")
     val k = 3
     var attempts = 0
-    val v = SinkSource.publishCas(root, "test publish") { base =>
+    val v = SinkSource.publishCas(root, "test publish") { head =>
       attempts += 1
-      // a racer steals version base + 1 under the first k attempts
+      // a racer steals version head + 1 under the first k attempts
       if (attempts <= k) racingAppend(root, s"race_$attempts.psv")
-      SinkSource.Commit(SinkSource.entriesAt(root, base))
+      head
     }
     assert(attempts == k + 1, s"k lost races must cost k + 1 attempts: $attempts")
     assert(v == k + 2, s"v1 + k racing appends, then ours: $v")
@@ -75,10 +76,10 @@ class SinkOccSpec extends SparkSpec {
     val root = freshTable("always_races")
     var attempts = 0
     val ex = intercept[SinkConflictException] {
-      SinkSource.publishCas(root, "test publish", maxAttempts = 3) { base =>
+      SinkSource.publishCas(root, "test publish", maxAttempts = 3) { head =>
         attempts += 1
         racingAppend(root, s"race_$attempts.psv")
-        SinkSource.Commit(SinkSource.entriesAt(root, base))
+        head
       }
     }
     assert(attempts == 3, s"the cap bounds the attempts: $attempts")
@@ -181,6 +182,29 @@ class SinkOccSpec extends SparkSpec {
     assert(exEq.getMessage.contains("equality delete"), exEq.getMessage)
     assert(SinkSource.currentVersion(rootEq) == vBeforeEq,
       "a CoW commit racing an equality delete must not publish")
+    // a scanned snapshot expired before the commit leaves no premise
+    // to validate: the same retryable conflict as the MoR path
+    val rootX = freshTable("cow_expired")
+    val opX = new SinkRowLevelOperation(rootX,
+      org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE)
+    opX.newScanBuilder(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Collections.emptyMap())).build()
+      .toBatch.planInputPartitions()
+    import spark.implicits._
+    SinkSource.write(Seq((5L, 50L)).toDF("k", "v"), rootX, overwrite = false)
+    SinkSource.write(Seq((6L, 60L)).toDF("k", "v"), rootX, overwrite = false)
+    spark.sql(s"CALL graft_occ_w.expire('${new Path(rootX).getName}', 1)")
+      .collect()
+    stage(rootX, "occ_cow_x", "occ_cow_x_f1.psv", "1|10\n")
+    val vBeforeX = SinkSource.currentVersion(rootX)
+    val exX = intercept[SinkConflictException] {
+      new SinkReplaceDataWrite(rootX, "occ_cow_x", opX)
+        .commit(Array(SinkCommitMessage(Seq((1L, "occ_cow_x_f1.psv", 1L)))))
+    }
+    assert(exX.getMessage.contains("v1") &&
+      exX.getMessage.contains("expired"), exX.getMessage)
+    assert(SinkSource.currentVersion(rootX) == vBeforeX)
   }
 
   test("MoR delta validates concurrent tombstones on its files at commit") {
@@ -225,5 +249,29 @@ class SinkOccSpec extends SparkSpec {
     val vs = SinkSource.load(spark, root, mor = true).select("v")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(vs == Seq(2L, 20L), s"both tombstone sets must apply: $vs")
+    // a commit whose SCANNED snapshot was expired before it lands has
+    // no premise left to validate: the retryable conflict, naming the
+    // expired version, and nothing publishes
+    val rootX = freshTable("mor_expired")
+    val tableX = new Path(rootX).getName
+    val fileX = SinkSource.manifest(rootX).find(_._1 == 1L).get._2
+    val op3 = new SinkDeltaOperation(rootX,
+      org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE)
+    new SinkDeltaScan(rootX, op3).planInputPartitions()
+    assert(op3.scannedVersion.get() == 1)
+    import spark.implicits._
+    SinkSource.write(Seq((5L, 50L)).toDF("k", "v"), rootX, overwrite = false)
+    SinkSource.write(Seq((6L, 60L)).toDF("k", "v"), rootX, overwrite = false)
+    spark.sql(s"CALL graft_occ_m.expire('$tableX', 1)").collect()
+    stage(rootX, "occ_dv3", "occ_dv3_vec.psv", "0\n")
+    val vExpired = SinkSource.currentVersion(rootX)
+    val exExpired = intercept[SinkConflictException] {
+      new SinkDvBatchWrite(rootX, "occ_dv3", op3)
+        .commit(Array(SinkCommitMessage(Seq.empty,
+          vectors = Seq((fileX, "occ_dv3_vec.psv")))))
+    }
+    assert(exExpired.getMessage.contains("v1") &&
+      exExpired.getMessage.contains("expired"), exExpired.getMessage)
+    assert(SinkSource.currentVersion(rootX) == vExpired)
   }
 }

@@ -112,4 +112,29 @@ class SinkRollbackSpec extends SparkSpec {
     intercept[Exception] {
       s.sql("CALL graft_rbr.rollback('t', 0)").collect() }
   }
+
+  test("a re-cited file stays subject to the target's equality deletes") {
+    // the restored snapshot is the target's, file sequence numbers
+    // included: a file the head no longer cites comes back with the
+    // sequence number it had, not as a file born at the rollback
+    // (which would exempt it from the deletes and resurrect rows)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_rollback_eq").toString
+    val s = session()
+    import s.implicits._
+    SinkSource.write(Seq((0L, 1L), (0L, 2L)).toDF("k", "v").coalesce(1),
+      s"$root/t", overwrite = true)                                  // v1
+    val file = SinkSource.manifest(s"$root/t").head._2
+    SinkSource.equalityDelete(s"$root/t", "v", Seq(2L))              // v2
+    // un-cite the file without reclaiming its bytes
+    SinkSource.transact(s"$root/t")(_ => (Seq.empty, Set(file)))     // v3
+    s.conf.set("spark.sql.catalog.graft_rbq", classOf[SinkCatalog].getName)
+    s.conf.set("spark.sql.catalog.graft_rbq.root", root)
+    s.sql("CALL graft_rbq.rollback('t', 2)").collect()               // v4
+    assert(SinkSource.eqDeletes(s"$root/t") ==
+      SinkSource.eqDeletes(s"$root/t", Some(2)))
+    val vs = SinkSource.load(s, s"$root/t", mor = true).select("v")
+      .collect().map(_.getLong(0)).toSeq
+    assert(vs == Seq(1L), s"the rollback resurrected a deleted row: $vs")
+  }
 }

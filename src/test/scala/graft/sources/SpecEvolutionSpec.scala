@@ -210,7 +210,7 @@ class SpecEvolutionSpec extends SparkSpec {
   }
 
   /** Rollback must restore both the current-spec pointer and the
-    * re-introduced files' eras (carryFspecs): v3's bucket files leave
+    * re-introduced files' eras (their FileMeta): v3's bucket files leave
     * citation at v4 (rollback to v2) and return at v5 (rollback to
     * v3) with their era intact — bytes never moved, so both restores
     * are physically possible. */
@@ -232,7 +232,7 @@ class SpecEvolutionSpec extends SparkSpec {
       "rollback to v2 keeps the evolved pointer (the evolve was v2)")
     s.sql("CALL graft_pserb.rollback('t', 3)").collect()             // v5
     assert(SinkSource.fileSpecs(s"$root/t").nonEmpty,
-      "re-introduced files must get their era back (carryFspecs)")
+      "re-introduced files must get their era back (their FileMeta)")
     assert(rows(s, s"$root/t") ==
       (0L until 12L).map(i => (i % 3, i)).toSet)
     // and the restored eras still prune correctly: bucket id of k=1
