@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 import graft.etl.{SyntheticSources, Warehouse}
 
 /** End-to-end warehouse build main — the `process.py` equivalent
@@ -24,12 +26,13 @@ object Runner {
     wh.writeAll(outDir, stringifyDates = true)
     val elapsed = (System.nanoTime() - t0) / 1e9
 
-    val counts = (wh.allDims ++ wh.allFacts).map { case (name, _) =>
-      name -> spark.read.parquet(s"$outDir/$name").count()
-    }
-    val countsJson = counts.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"warehouse_build","value":$elapsed,"unit":"sec","factor":$factor,"counts":$countsJson}""")
+    val tables = (wh.allDims ++ wh.allFacts).keys.toSeq.sorted
+      .map(name => name -> spark.read.parquet(s"$outDir/$name"))
+    def perTable(value: DataFrame => Long): String = tables
+      .map { case (name, t) => s""""$name":${value(t)}""" }.mkString("{", ",", "}")
+    // per table: the rows written and the data files holding them
+    println(s"""{"metric":"warehouse_build","value":$elapsed,"unit":"sec","factor":$factor,""" +
+      s""""counts":${perTable(_.count())},"files":${perTable(_.inputFiles.length)}}""")
     spark.stop()
   }
 }

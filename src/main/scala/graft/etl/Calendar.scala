@@ -10,8 +10,10 @@ import org.apache.spark.sql.functions._
   * (`/root/reference/dimension.py:76-118`); `dim_hora` is read but never
   * built (`/root/reference/processing/service_process.py:104`), so we
   * define it as the full 24h x 60m grid. Both are generated inside the
-  * engine with `sequence` + `explode` — no driver-side loop, so the
-  * same code works at any scale and the dimension stays broadcastable.
+  * engine — `dim_fecha` by `sequence` + `explode` over a one-row seed,
+  * `dim_hora` as a sized range of minute ids ([[SyntheticSources.rows]])
+  * — no driver-side loop, so the same code works at any scale and the
+  * dimension stays broadcastable.
   */
 object Calendar {
 
@@ -37,7 +39,8 @@ object Calendar {
     * Sunday (pandas weekday 5/6, `/root/reference/dimension.py:112`).
     */
   def dimFecha(spark: SparkSession, start: String, end: String): DataFrame = {
-    val days = spark.range(1).select(
+    // one slice: a seed split per core would write empty partitions
+    val days = spark.range(0, 1, 1, 1).select(
       explode(sequence(
         to_date(lit(start)), to_date(lit(end)),
         expr("interval 1 day"))).as("fecha"))
@@ -71,13 +74,13 @@ object Calendar {
   /** dim_hora: 24x60 minute grid with an 'HH:mm:00' label, the join key
     * the service fact uses (`/root/reference/processing/service_process.py:148-149`).
     */
-  def dimHora(spark: SparkSession): DataFrame =
-    spark.range(24 * 60).select(
-      (col("id") / 60).cast("int").as("hora"),
-      (col("id") % 60).cast("int").as("minuto"))
-      .select(
-        col("hora"), col("minuto"),
-        concat(
-          lpad(col("hora").cast("string"), 2, "0"), lit(":"),
-          lpad(col("minuto").cast("string"), 2, "0"), lit(":00")).as("hora_label"))
+  def dimHora(spark: SparkSession): DataFrame = {
+    val hora = (col("id") / 60).cast("int")
+    val minuto = (col("id") % 60).cast("int")
+    SyntheticSources.rows(spark, 24 * 60)(
+      hora.as("hora"), minuto.as("minuto"),
+      concat(
+        lpad(hora.cast("string"), 2, "0"), lit(":"),
+        lpad(minuto.cast("string"), 2, "0"), lit(":00")).as("hora_label"))
+  }
 }

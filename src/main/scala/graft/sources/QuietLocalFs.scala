@@ -33,6 +33,18 @@ import org.apache.hadoop.fs.permission.FsPermission
   */
 class QuietRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, perm: FsPermission): Unit = ()
+
+  /** Deleting a file reports true only when THIS call removed it. The
+    * raw FS checks `exists`, then `isFile`; a file a racing caller
+    * unlinks in between falls through to `fullyDelete`, which reports
+    * true for the missing path, so two racing deletes of one file both
+    * claimed it (expire's per-call counts summed past the versions
+    * there were). One unlink decides instead. */
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    val f = pathToFile(p)
+    if (f.isDirectory) super.delete(p, recursive)
+    else java.nio.file.Files.deleteIfExists(f.toPath)
+  }
 }
 
 /** FileSystem-API flavor (plain `FileSystem.get` / data source paths).

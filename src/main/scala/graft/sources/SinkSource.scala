@@ -3403,7 +3403,8 @@ class SinkBranchProcedure(root: String)
   * (refuse-to-clobber), and the manifest lands as one CAS commit.
   * The branch stays alive, re-based onto the published version — a
   * caught-up branch fast-forwards as a no-op; `drop_branch` retires
-  * it.
+  * it. Guard rails: a branch carrying tombstones or a schema evolved
+  * away from main's is refused, like `branch`'s.
   * Scale notes (100 TB): promotion costs the moved files' RENAMES
   * plus one manifest — metadata-proportional, like every lifecycle
   * verb here; the audited candidate becomes visible to consumers
@@ -3446,6 +3447,12 @@ class SinkFastForwardProcedure(root: String)
         if (branch.vectorSidecar.nonEmpty || branch.eqDeletes.nonEmpty)
           throw new UnsupportedOperationException(
             s"branch $name carries tombstones; compact it first")
+        if (branch.schemaId != SinkSource.state(path, Some(cur)).schemaId)
+          throw new UnsupportedOperationException(
+            s"cannot fast-forward $name onto $path: the branch evolved " +
+              "its schema, and evolved schemas do not travel through " +
+              "the promotion (main would cite its files under its own " +
+              "schema and drop the new columns)")
         def local(fl: String): String =
           if (fl.startsWith(SinkSource.BorrowedPrefix))
             fl.stripPrefix(SinkSource.BorrowedPrefix)

@@ -11,7 +11,8 @@ import graft.SparkSpec
   * "land at exactly v(n+1) or lose the race"; the classpath's default
   * `file:` impl, Hive's ProxyLocalFileSystem, provided it, and raw
   * POSIX rename(2) silently clobbers — the first quiet cut regressed
-  * q304 exactly there).
+  * q304 exactly there) — and a file's delete reports true only to the
+  * call that removed it (expire's counts add up under a race).
   */
 class QuietLocalFsSpec extends SparkSpec {
 
@@ -36,6 +37,22 @@ class QuietLocalFsSpec extends SparkSpec {
     // the winning shape still works: rename to a fresh name
     assert(f.rename(a, new Path(root, "c")))
     assert(!f.exists(new Path(root, "a")))
+  }
+
+  test("racing deletes of one file: exactly one call reports removing it") {
+    val root = tmpDir("del")
+    val f = SinkSource.fs(root)
+    val n = 4000
+    (0 until n).foreach(i => java.nio.file.Files.write(
+      java.nio.file.Paths.get(root, s"f$i"), Array[Byte](1)))
+    val reported = new java.util.concurrent.atomic.AtomicInteger()
+    val racers = (1 to 2).map(_ => new Thread(() => (0 until n).foreach { i =>
+      if (f.delete(new Path(root, s"f$i"), false)) reported.incrementAndGet() }))
+    racers.foreach(_.start())
+    racers.foreach(_.join())
+    assert(reported.get == n, s"$n files, ${reported.get} deletes reported")
+    assert(new java.io.File(root).list().isEmpty)
+    assert(!f.delete(new Path(root, "f0"), false), "a missing file is not removed")
   }
 
   test("no .crc twin is written; reads ignore stale twins") {

@@ -12,7 +12,8 @@ import graft.SparkSpec
   * the branch head as borrowed refs (branch reads survive promotion),
   * a repeated fast-forward is a no-op, drop_branch releases the pins
   * without touching parent bytes, and the guard rails (tombstoned or
-  * evolved parents, diverged promotion) refuse.
+  * evolved parents, diverged promotion, a branch whose schema evolved)
+  * refuse.
   */
 class SinkBranchSpec extends SparkSpec {
 
@@ -131,5 +132,31 @@ class SinkBranchSpec extends SparkSpec {
       s.sql("CALL graft_brx.fast_forward('t3', 'dev')").collect() }
     assert(SinkSource.currentVersion(s"$root/t3") == vBefore,
       "a refused promotion must not publish")
+  }
+
+  test("fast-forward refuses a branch whose schema evolved; main keeps its schema") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_br_evolved").toString
+    val s = session()
+    import s.implicits._
+    SinkSource.write(Seq((0L, 1L)).toDF("k", "v"), s"$root/t",
+      overwrite = true)                                              // v1
+    s.conf.set("spark.sql.catalog.graft_bre", classOf[SinkCatalog].getName)
+    s.conf.set("spark.sql.catalog.graft_bre.root", root)
+    s.sql("CALL graft_bre.branch('t', 'dev')").collect()
+    SinkSource.writeEvolved(Seq((2L, 3L, 30L)).toDF("k", "v", "w"),
+      s"$root/t/_branch_dev")
+    assert(s.sql("SELECT * FROM graft_bre.t.branch_dev").columns.toSeq ==
+      Seq("k", "v", "w"))
+    val vBefore = SinkSource.currentVersion(s"$root/t")
+    val e = intercept[UnsupportedOperationException] {
+      s.sql("CALL graft_bre.fast_forward('t', 'dev')").collect() }
+    assert(e.getMessage.contains("schema"), e.getMessage)
+    assert(SinkSource.currentVersion(s"$root/t") == vBefore,
+      "a refused promotion must not publish")
+    val main = s.sql("SELECT * FROM graft_bre.t")
+    assert(main.columns.toSeq == Seq("k", "v"))
+    assert(main.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((0L, 1L)))
   }
 }
