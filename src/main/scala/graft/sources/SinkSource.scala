@@ -282,13 +282,20 @@ object SinkSource {
           Some(v)
         } else None // expired below the kept window, or bogus — re-list
       } catch { case _: Exception => None } // absent/torn/unparsable
-    hinted.getOrElse {
-      if (!f.exists(root)) 0
-      else f.listStatus(root).map(_.getPath.getName)
-        .collect { case n if n.startsWith("manifest.v") && n.endsWith(".psv") =>
-          n.stripPrefix("manifest.v").stripSuffix(".psv").toInt }
-        .foldLeft(0)(math.max)
-    }
+    hinted.getOrElse(versions(path).lastOption.getOrElse(0))
+  }
+
+  /** Every manifest version present under `path` (`manifest.v<n>.psv`),
+    * ascending — gaps where expiry removed history; empty when the
+    * directory is absent. One directory listing. */
+  private[graft] def versions(path: String): Seq[Int] = {
+    val f = fs(path)
+    val root = new Path(path)
+    if (!f.exists(root)) Seq.empty
+    else f.listStatus(root).map(_.getPath.getName)
+      .collect { case n if n.startsWith("manifest.v") && n.endsWith(".psv") =>
+        n.stripPrefix("manifest.v").stripSuffix(".psv").toInt }
+      .toSeq.sorted
   }
 
   /** Best-effort `_head` hint refresh after a publish: racing writers
@@ -716,14 +723,7 @@ object SinkSource {
     * no commit at or before the requested time (created later, or
     * that history was expired). */
   private[graft] def versionAt(path: String, tsMillis: Long): Int = {
-    val f = fs(path)
-    val root = new Path(path)
-    val present =
-      if (!f.exists(root)) Seq.empty[Int]
-      else f.listStatus(root).map(_.getPath.getName)
-        .collect { case n if n.startsWith("manifest.v") && n.endsWith(".psv") =>
-          n.stripPrefix("manifest.v").stripSuffix(".psv").toInt }
-        .toSeq.sorted
+    val present = versions(path)
     val eligible = present.filter(v =>
       commitTs(path, v).getOrElse(0L) <= tsMillis)
     if (eligible.isEmpty)
@@ -1243,10 +1243,8 @@ object SinkSource {
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("_branch_"))
       .flatMap { st =>
         val bp = st.getPath.toString
-        f.listStatus(st.getPath).map(_.getPath.getName)
-          .collect { case n if n.startsWith("manifest.v") && n.endsWith(".psv") =>
-            n.stripPrefix("manifest.v").stripSuffix(".psv").toInt }
-          .flatMap(v => stateIfPresent(bp, v).toSeq.flatMap(_.files.keys))
+        versions(bp).flatMap(v =>
+          stateIfPresent(bp, v).toSeq.flatMap(_.files.keys))
       }
       .collect { case n if n.startsWith(BorrowedPrefix) =>
         n.stripPrefix(BorrowedPrefix) }
@@ -1429,33 +1427,26 @@ class SinkCatalog extends CatalogPlugin with TableCatalog
     * surface production catalogs expose (Iceberg's
     * `rewrite_data_files` / `expire_snapshots` family): table upkeep
     * is a CATALOG verb with arguments and a result set, not an
-    * external script poking at files. One name → constructor table
-    * serves both the listing and the lookup. */
-  private def procedures: Seq[(String, () => org.apache.spark.sql
-      .connector.catalog.procedures.UnboundProcedure)] = Seq(
-    "compact" -> (() => new SinkCompactProcedure(root, mor)),
-    "tag" -> (() => new SinkTagProcedure(root)),
-    "expire" -> (() => new SinkExpireProcedure(root)),
-    "remove_orphans" -> (() => new SinkOrphanProcedure(root)),
-    "rollback" -> (() => new SinkRollbackProcedure(root)),
-    "rewrite_clustered" -> (() => new SinkRewriteProcedure(root, mor)),
-    "branch" -> (() => new SinkBranchProcedure(root)),
-    "fast_forward" -> (() => new SinkFastForwardProcedure(root)),
-    "drop_branch" -> (() => new SinkDropBranchProcedure(root)),
-    "build_bloom" -> (() => new SinkBloomProcedure(root)),
-    "evolve_spec" -> (() => new SinkEvolveSpecProcedure(root, bucketWrite)))
+    * external script poking at files. One list of [[SinkProcedure]]
+    * verbs serves both the listing and the lookup. */
+  private def procedures: Seq[SinkProcedure] = {
+    import SinkProcedure._
+    Seq(compact(root, mor), tag(root), expire(root), removeOrphans(root),
+      rollback(root), rewriteClustered(root, mor), branch(root),
+      fastForward(root), dropBranch(root), buildBloom(root),
+      evolveSpec(root, bucketWrite))
+  }
 
   override def listProcedures(namespace: Array[String])
       : Array[Identifier] =
     if (namespace.nonEmpty) Array.empty
-    else procedures.map(p => Identifier.of(Array.empty, p._1)).toArray
+    else procedures.map(p => Identifier.of(Array.empty, p.name())).toArray
 
   override def loadProcedure(ident: Identifier)
       : org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure =
-    procedures.collectFirst {
-      case (n, make) if ident.namespace.isEmpty && n == ident.name => make()
-    }.getOrElse(throw new java.util.NoSuchElementException(
-      s"unknown procedure: $ident"))
+    procedures.find(p => ident.namespace.isEmpty && p.name() == ident.name)
+      .getOrElse(throw new java.util.NoSuchElementException(
+        s"unknown procedure: $ident"))
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     if (namespace.nonEmpty) throw new NoSuchNamespaceException(namespace)
@@ -2310,195 +2301,6 @@ private[sources] object SinkZoneMaps {
     }
 }
 
-// ---- procedures ---------------------------------------------------------
-
-/** Small-file COMPACTION as a catalog procedure: merge every key group
-  * that spans multiple files into one file per key, swap the manifest
-  * entries atomically, and return a summary row. The rewrite itself is
-  * DISTRIBUTED — the procedure stages the multi-file keys' rows
-  * through a normal keyed write (`repartition(k)` → one file per key)
-  * into a scratch table, then does driver-side METADATA work only:
-  * move the compacted files in, publish the swapped manifest, GC the
-  * replaced files and the scratch dir. Readers see the old layout or
-  * the new one, never a mix.
-  * Scale notes (100 TB): compaction is the tax of streaming/frequent
-  * commits (q264 writes one file per key per epoch) — without it, file
-  * counts grow with commit frequency and scan planning drowns in
-  * splits. It must be (a) proportional to the multi-file groups, not
-  * the table, and (b) a metadata swap at publish — both held here.
-  */
-class SinkCompactProcedure(root: String, mor: Boolean = false)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "compact"
-  override def description(): String =
-    "merge multi-file key groups into one file per key" +
-      (if (mor) " and purge deletion vectors" else "")
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "compact"
-      override def description(): String = SinkCompactProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build())
-      override def isDeterministic: Boolean = false // rewrites files
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val path = new Path(root, table).toString
-        // the whole plan — targets, guards, the rewrite's read — is
-        // pinned to ONE snapshot, so the rewrite replaces exactly the
-        // rows it read; the publish re-plans onto the head by file name
-        val head = SinkSource.state(path)
-        val base = head.version
-        val m = head.entries
-        val perKey = m.groupBy(_._1).view
-          .mapValues(_.map(_._2).distinct).toMap
-        // a MoR compaction MATERIALIZES vectors and equality deletes
-        // (the rewritten files' new sequence numbers self-prune the
-        // eq headers); a raw one would resurrect their rows
-        if (!mor) SinkSource.refuseRawRewrite(path, head, "compact")
-        val dvd = head.vectorSidecar
-        val dvdFiles = dvd.map(_._1).toSet
-        val eqSubject: String => Boolean = fl =>
-          head.eqDeletes.exists { case (_, _, s) => head.files(fl).olderThan(s) }
-        // PARTITION-SPEC eras: compaction regroups rows BY MANIFEST
-        // KEY, which is only coherent when every cited file and the
-        // current spec agree on what a key means — a mixed table
-        // (identity k=5 next to bucket-id 5) would merge unrelated
-        // groups and, worse, the key-filtered re-read would drop
-        // bucket rows whose true k isn't in the target set. Uniform
-        // bucket-era tables compact fine (per bucket id, the grain
-        // streaming appends actually fragment); mixed tables migrate
-        // through rewrite_clustered first.
-        val curSpec = head.specInfo
-        val eras = (head.files.values.map(_.spec).toSeq :+ curSpec._1).distinct
-        if (eras.size > 1)
-          throw new UnsupportedOperationException(
-            s"table $path spans partition-spec eras " +
-              s"(${eras.sorted.mkString(", ")}) — migrate with " +
-              "rewrite_clustered before compacting")
-        // targets: keys split across files, plus (MoR) keys whose
-        // files carry deletion vectors or are subject to an equality
-        // delete — compacting those MATERIALIZES the tombstones and
-        // retires the vectors/headers
-        val targets = perKey.filter { case (k, fls) =>
-          fls.size > 1 || fls.exists(dvdFiles) ||
-            (mor && fls.exists(eqSubject))
-        }.keySet
-        val filesBefore = m.map(_._2).distinct.size.toLong
-        var filesAfter = filesBefore
-        if (targets.nonEmpty) {
-          val spark = org.apache.spark.sql.SparkSession.active
-          import org.apache.spark.sql.functions.{col, lit, pmod}
-          val scratch = new Path(path, s"_compact_${java.util.UUID.randomUUID()}")
-          // distributed rewrite: each target key lands whole in one
-          // task, so the scratch table holds exactly one file per key;
-          // on MoR tables the read MERGES the vectors, so tombstoned
-          // rows fall out of the rewrite. On an EVOLVED table the
-          // round-trip through the logical schema NORMALIZES: mixed
-          // file schemas read reconciled, the scratch write serializes
-          // the table's CURRENT fields (shipped explicitly — the
-          // scratch dir has no schema history), and the moved entries
-          // are stamped with the current sid.
-          val curSid = head.schemaId
-          val curFields = SinkSchemas.fields(path, curSid)
-          // group addressing in ROW terms: under the identity spec a
-          // manifest key is the rows' k; under bucket(m) it is
-          // pmod(k, m) — the same arithmetic the writer groups by, so
-          // the filtered re-read selects exactly the target groups'
-          // rows and the scratch write (forced onto the live spec)
-          // regroups them one file per target key
-          val groupCol = curSpec match {
-            case (_, "bucket", mm) => pmod(col("k"), lit(mm.toLong))
-            case _ => col("k")
-          }
-          SinkSource.write(
-            SinkSource.loadAt(spark, path, base, mor)
-              .filter(groupCol.isInCollection(targets))
-              .repartition(groupCol),
-            scratch.toString, overwrite = true,
-            fields = if (curSid == 0) None else Some(curFields),
-            forceSpec = if (curSpec._1 == 0) None else Some(curSpec))
-          val compacted = SinkSource.scratchMessage(scratch)
-          val replaced = m.filter { case (k, _, _) => targets.contains(k) }
-            .map(_._2).toSet
-          SinkSource.publishStaged(path, new Path(scratch, "data"),
-            "compact", compacted)(SinkSource.publishRewrite(path, "compact",
-              base, replaced, compacted.cite(_, curSid, curSpec._1)))
-          SinkSource.gcData(path, replaced)
-          SinkSource.gcVectors(path, dvd.filter(p => replaced(p._1)))
-          SinkSource.fs(path).delete(scratch, true)
-          filesAfter = filesBefore - replaced.size + compacted.entries.size
-        }
-        val row: InternalRow = new GenericInternalRow(Array[Any](
-          targets.size.toLong, filesBefore, filesAfter))
-        val result: Scan = new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("keys_compacted", LongType, nullable = false),
-            StructField("files_before", LongType, nullable = false),
-            StructField("files_after", LongType, nullable = false)))
-        }
-        util.Arrays.asList(result).iterator()
-      }
-    }
-}
-
-/** `CALL <cat>.tag('<table>', <version>, '<name>')` — set or MOVE a
-  * named snapshot reference. With q263's versioned snapshots this is
-  * the write-audit-publish primitive: appends create candidate
-  * versions, an audit reads the candidate BY NUMBER, and only the tag
-  * move makes it visible to consumers subscribed by NAME — publishing
-  * is a metadata pointer swap, unpublishing is moving it back.
-  * Scale notes (100 TB): WAP is how corpus releases ship — ingest
-  * continuously, gate consumers on 'published', and promotion costs
-  * one tiny file swap regardless of table size. Tagging a version 0
-  * or a GC'd snapshot fails loudly at READ time (q263's pinned-read
-  * contract), never silently serves the wrong data.
-  */
-class SinkTagProcedure(root: String)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "tag"
-  override def description(): String = "set or move a named snapshot tag"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "tag"
-      override def description(): String = SinkTagProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("version", LongType).build(),
-        ProcedureParameter.in("tag_name", StringType).build())
-      override def isDeterministic: Boolean = false
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val v = input.getLong(1).toInt
-        val tagName = input.getUTF8String(2).toString
-        val path = new Path(root, table).toString
-        val cur = SinkSource.currentVersion(path)
-        if (v < 1 || v > cur)
-          throw new IllegalArgumentException(
-            s"cannot tag version $v of $path (history is 1..$cur)")
-        SinkSource.writeTag(path, tagName, v)
-        val row: InternalRow = new GenericInternalRow(Array[Any](
-          org.apache.spark.unsafe.types.UTF8String.fromString(tagName),
-          v.toLong))
-        val result: Scan = new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("tag_name", StringType, nullable = false),
-            StructField("version", LongType, nullable = false)))
-        }
-        util.Arrays.asList(result).iterator()
-      }
-    }
-}
-
 /** Queryable METADATA TABLES over a sink table: `t.history` (one row
   * per live snapshot: file/row/vector counts and the tags pointing at
   * it) and `t.files` (one row per current manifest entry with its
@@ -2561,17 +2363,9 @@ class SinkMetaTable(path: String, kind: String)
         override def readSchema(): StructType = schema()
         override def rows(): Array[InternalRow] = kind match {
           case "history" =>
-            val f = SinkSource.fs(path)
             val tagsByV = SinkSource.tags(path).toSeq
               .groupBy(_._2).view.mapValues(_.map(_._1).sorted.mkString(","))
-            val present =
-              if (!f.exists(new Path(path))) Seq.empty[Int]
-              else f.listStatus(new Path(path)).map(_.getPath.getName)
-                .collect { case n
-                    if n.startsWith("manifest.v") && n.endsWith(".psv") =>
-                  n.stripPrefix("manifest.v").stripSuffix(".psv").toInt }
-                .toSeq.sorted
-            present.map { v =>
+            SinkSource.versions(path).map { v =>
               val st = SinkSource.state(path, Some(v))
               new GenericInternalRow(Array[Any](
                 v.toLong,
@@ -2611,982 +2405,975 @@ class SinkMetaTable(path: String, kind: String)
     }
 }
 
-/** `CALL <cat>.expire('<table>', <keep_last>)` — SNAPSHOT EXPIRY, the
-  * lifecycle verb that closes the versioned-manifest design: the
-  * publish path keeps every manifest version forever (that is what
-  * time travel and the changelog stream address), so at a production
-  * commit rate both the metadata AND any data files pinned only by
-  * old snapshots grow without bound. Expiry prunes history to the
-  * newest `keep_last` versions — TAG-PINNED versions are always kept,
-  * whatever their age (a tag is a promise to readers subscribed by
-  * name) — then garbage-collects exactly the files referenced ONLY by
-  * expired snapshots: a data or vector file cited by any surviving
-  * manifest/sidecar is untouched. Files referenced by NO manifest at
-  * all (crash orphans) are out of scope, the Iceberg split between
-  * expire_snapshots and remove_orphan_files — expiry must be safe to
-  * run beside live writers, and an unreferenced file might be a
-  * concurrent commit's just-renamed publish.
-  * A later `VERSION AS OF` on an expired version fails LOUDLY at plan
-  * time ([[SinkSource.manifest]]'s missing-manifest error — q263's
-  * pinned-read contract), never silently serves the wrong snapshot.
-  * Scale notes (100 TB): expiry is driver-side METADATA work plus
-  * per-file deletes proportional to what expired — never a data scan;
-  * it is the knob that turns "keep everything for reproducibility"
-  * into a bounded retention window with named releases (tags) kept
-  * forever.
+// ---- procedures ---------------------------------------------------------
+
+/** One catalog `CALL` verb: the ONE place a sink procedure is declared.
+  * A verb states its name, its description, the arguments it takes
+  * after `table`, the columns of its one-row result, and its body
+  * `(path, args) => row`. Everything the verbs share lives here once:
+  *  - the bound procedure, never deterministic (every verb publishes,
+  *    moves or deletes files);
+  *  - the IN parameters, `table` first;
+  *  - decoding the positional argument row into typed values. An
+  *    `IntegerType` argument is declared to Spark as BIGINT and
+  *    narrowed with a range check, so `expire('t', 4294967297)` is
+  *    refused before any file is touched instead of wrapping to
+  *    `keep_last = 1`; a NULL argument is refused by name;
+  *  - resolving `root/table`, refused with [[NoSuchTableException]]
+  *    (what `SinkCatalog.loadTable` throws) when the directory is
+  *    absent — a missing table would otherwise read as an empty
+  *    version 0, and `branch` would create it;
+  *  - the one-row [[LocalScan]] result: STRING values from any value's
+  *    text, BIGINT values from any integral number; no column is
+  *    nullable.
+  * [[SinkCatalog]] lists the verbs below; no other registration point
+  * exists.
   */
-class SinkExpireProcedure(root: String)
+final class SinkProcedure private (root: String, verb: String,
+    about: String, params: Seq[(String, DataType)],
+    result: Seq[(String, DataType)],
+    run: (String, SinkProcedure.Args) => Seq[Any])
     extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
   import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
 
-  override def name(): String = "expire"
-  override def description(): String =
-    "expire old snapshots to a keep_last horizon; tag-pinned versions survive"
+  private val declared = ("table" -> StringType) +: params
+
+  override def name(): String = verb
+  override def description(): String = about
 
   override def bind(inputType: StructType): BoundProcedure =
     new BoundProcedure {
-      override def name(): String = "expire"
-      override def description(): String = SinkExpireProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("keep_last", LongType).build())
-      override def isDeterministic: Boolean = false // removes files
+      override def name(): String = verb
+      override def description(): String = about
+      override def isDeterministic: Boolean = false
+      override def parameters(): Array[ProcedureParameter] =
+        declared.map { case (n, dt) =>
+          ProcedureParameter.in(n, if (dt == IntegerType) LongType else dt)
+            .build()
+        }.toArray
 
       override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val keepLast = input.getLong(1).toInt
-        if (keepLast < 1)
-          throw new IllegalArgumentException(
-            s"keep_last must be >= 1, got $keepLast")
-        val path = new Path(root, table).toString
-        val f = SinkSource.fs(path)
-        val cur = SinkSource.currentVersion(path)
-        // versions actually present (earlier expiries leave gaps)
-        val present = f.listStatus(new Path(path)).map(_.getPath.getName)
-          .collect { case n if n.startsWith("manifest.v") && n.endsWith(".psv") =>
-            n.stripPrefix("manifest.v").stripSuffix(".psv").toInt }.toSet
-        val horizon = cur - keepLast + 1
-        val pinned = SinkSource.tags(path).values.toSet
-        val kept = present.filter(v => v >= horizon || pinned.contains(v))
-        val expired = (present -- kept).toSeq.sorted
-        // CONCURRENT-IDEMPOTENT (round-16 judge ask): a manifest listed
-        // a moment ago can be GONE by read time if another expire races
-        // this one — a vanished expired manifest means the other call
-        // already handled that version, so SKIP it (its exclusive files
-        // are the other call's to GC), never abort mid-GC. The same
-        // tolerance on the KEPT side is consistency with a more
-        // aggressive concurrent horizon: a kept manifest that vanished
-        // was expired by the other call, which also owns its
-        // exclusively-cited files.
-        // Citations are read BEFORE the manifest deletions below:
-        // anything a kept snapshot reaches stays — data entries,
-        // sidecar vectors, AND equality-delete value files (cited by
-        // `#eq` headers, living under deletes/); doomed citations are
-        // reachable from expired snapshots ONLY
-        val keptStates = kept.toSeq.flatMap(SinkSource.stateIfPresent(path, _))
-        val expiredStates = expired.flatMap(SinkSource.stateIfPresent(path, _))
-        def deletes(st: TableState): Seq[String] =
-          st.vectorSidecar.map(_._2) ++ st.eqDeletes.map(_._1)
-        val doomedData = expiredStates.flatMap(_.files.keys).toSet --
-          keptStates.flatMap(_.files.keys) --
-          SinkSource.branchCitedData(path) // branches pin shared bytes
-        val doomedVecs = expiredStates.flatMap(deletes).toSet --
-          keptStates.flatMap(deletes)
-        // manifests go FIRST: a concurrent reader of an expired pin
-        // fails loudly at planning instead of mid-scan on vanished data
-        val removedVersions = expired.count { v =>
-          try f.delete(new Path(path, s"manifest.v$v.psv"), false)
-          catch { case _: Exception => false }
-        }
-        // sidecar FILES: everything a surviving manifest does not bind
-        // is dead — expired versions' sidecars AND orphans from lost
-        // commit races (salted names that no manifest header cites)
-        val boundSidecars = keptStates.flatMap(_.sidecar).toSet
-        f.listStatus(new Path(path)).map(_.getPath.getName)
-          .filter(n => n.startsWith("deletes.v") && n.endsWith(".psv"))
-          .filterNot(boundSidecars)
-          .foreach { n =>
-            try f.delete(new Path(path, n), false)
-            catch { case _: Exception => } }
-        // HONEST GC COUNTS (round-16 judge ask): files eagerly GC'd by
-        // earlier truncate/delete/overwrite no longer exist — report
-        // only deletes the filesystem actually performed, not the size
-        // of the doomed citation sets
-        val removedData = doomedData.count { fl =>
-          // the gcData guards, with expire's honest-count obligation:
-          // borrowed refs are never followed (they are another
-          // table's bytes) and report as not-removed
-          !fl.contains("/") &&
-            (try f.delete(new Path(path, s"data/$fl"), false)
-            catch { case _: Exception => false }) }
-        val removedVecs = doomedVecs.count { dv =>
-          try f.delete(new Path(path, s"deletes/$dv"), false)
-          catch { case _: Exception => false } }
-        val row: InternalRow = new GenericInternalRow(Array[Any](
-          removedVersions.toLong, kept.size.toLong,
-          removedData.toLong, removedVecs.toLong))
-        val result: Scan = new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("versions_expired", LongType, nullable = false),
-            StructField("versions_kept", LongType, nullable = false),
-            StructField("data_files_removed", LongType, nullable = false),
-            StructField("vector_files_removed", LongType, nullable = false)))
-        }
-        util.Arrays.asList(result).iterator()
-      }
-    }
-}
-
-/** `CALL <cat>.remove_orphans('<table>', <grace_ms>)` — ORPHAN-FILE
-  * cleanup, the other half of the Iceberg lifecycle split `expire`
-  * deliberately leaves out: files REFERENCED BY NO manifest at all
-  * (a crashed commit's just-renamed data files whose manifest never
-  * landed, lost-race deletion-vector sidecars' vectors, abandoned
-  * staging attempts). Expiry must not touch them because an
-  * unreferenced file might be a CONCURRENT commit's just-published
-  * rename — which is exactly what the GRACE WINDOW is for: only
-  * files whose modification time is at least `grace_ms` old are
-  * eligible, so anything younger than the longest plausible
-  * commit-in-flight survives (Iceberg's `older_than` contract).
-  * Citation set = every file reachable from ANY present manifest or
-  * its bound sidecar — history included, so time travel keeps
-  * working. Counts report only deletes the filesystem performed.
-  * Scale notes (100 TB): the verb is metadata + listing proportional
-  * — a directory listing diffed against manifest citations; it never
-  * opens a data file, and it is safe beside live writers by the
-  * grace contract rather than by locking.
-  */
-class SinkOrphanProcedure(root: String)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "remove_orphans"
-  override def description(): String =
-    "delete files no manifest references, older than a grace window"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "remove_orphans"
-      override def description(): String =
-        SinkOrphanProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("grace_ms", LongType).build())
-      override def isDeterministic: Boolean = false // removes files
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val grace = input.getLong(1)
-        if (grace < 0)
-          throw new IllegalArgumentException(s"grace_ms must be >= 0: $grace")
-        val path = new Path(root, table).toString
-        val f = SinkSource.fs(path)
-        val cutoff = System.currentTimeMillis() - grace
-        val versions = f.listStatus(new Path(path)).map(_.getPath.getName)
-          .collect { case n if n.startsWith("manifest.v") && n.endsWith(".psv") =>
-            n.stripPrefix("manifest.v").stripSuffix(".psv").toInt }.toSeq.sorted
-        // a vanished manifest mid-listing is a concurrent expire's work
-        val states = versions.flatMap(SinkSource.stateIfPresent(path, _))
-        val citedData = states.flatMap(_.files.keys).toSet ++
-          SinkSource.branchCitedData(path) // branches pin shared bytes
-        // equality-delete value files are deletes/-dir citations too
-        val citedVecs = states.flatMap(st =>
-          st.vectorSidecar.map(_._2) ++ st.eqDeletes.map(_._1)).toSet
-        def sweep(dir: String, cited: Set[String]): Long = {
-          val d = new Path(path, dir)
-          if (!f.exists(d)) return 0L
-          f.listStatus(d)
-            .filter(st => !cited.contains(st.getPath.getName) &&
-              st.getModificationTime <= cutoff)
-            .count { st =>
-              try f.delete(st.getPath, false)
-              catch { case _: Exception => false }
-            }.toLong
-        }
-        val dataRemoved = sweep("data", citedData)
-        val vecsRemoved = sweep("deletes", citedVecs)
-        // bloom sidecars: cited by `#bloom` headers; uncited bitsets
-        // (dropped files' blooms, lost build races) are orphans too —
-        // folded into the vector count (both are stats-sidecar debris)
-        val citedBlooms =
-          states.flatMap(_.files.values.flatMap(_.blooms.map(_._4))).toSet
-        val bloomsRemoved = sweep("blooms", citedBlooms)
-        // abandoned staging ATTEMPTS (crashed queries): whole attempt
-        // dirs whose newest content predates the grace cutoff —
-        // nothing under _staging is ever readable, so age is the only
-        // question
-        val staging = new Path(path, "_staging")
-        val stagingRemoved: Long =
-          if (!f.exists(staging)) 0L
-          else f.listStatus(staging).filter { st =>
-            def newest(p: Path): Long = {
-              val s = f.getFileStatus(p)
-              if (!s.isDirectory) s.getModificationTime
-              else (s.getModificationTime +:
-                f.listStatus(p).map(x => newest(x.getPath)).toSeq).max
-            }
-            newest(st.getPath) <= cutoff
-          }.count { st =>
-            try f.delete(st.getPath, true)
-            catch { case _: Exception => false }
-          }.toLong
-        val row: InternalRow = new GenericInternalRow(Array[Any](
-          dataRemoved, vecsRemoved + bloomsRemoved, stagingRemoved))
-        val result: Scan = new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("data_orphans_removed", LongType, nullable = false),
-            StructField("vector_orphans_removed", LongType, nullable = false),
-            StructField("staging_attempts_removed", LongType, nullable = false)))
-        }
-        util.Arrays.asList(result).iterator()
-      }
-    }
-}
-
-/** `CALL <cat>.rollback('<table>', <version>)` — HISTORY-PRESERVING
-  * restore (Iceberg's `rollback_to_snapshot`, Delta's RESTORE): the
-  * table's state returns to version v by publishing a NEW version
-  * whose entries, delete sidecar, schema id and zone maps are v's —
-  * the "bad" versions in between stay addressable by `VERSION AS OF`
-  * / `TIMESTAMP AS OF` (an incident post-mortem reads them; `expire`
-  * retires them), and every consumer contract is ordinary: the
-  * rollback is a commit like any other, not a rewind of the log.
-  * Consequences the spec pins: a change-data-feed window crossing
-  * the rollback REFUSES loudly (the rollback un-cites the bad
-  * commits' files — exactly the rewritten-history case the feed
-  * documents), and a rollback to a version whose files were eagerly
-  * reclaimed (truncate/metadata-delete GC) REFUSES up front rather
-  * than publishing a manifest that cites missing bytes.
-  * Scale notes (100 TB): rollback is pure manifest arithmetic —
-  * O(entries of v) metadata and zero data movement, which is the
-  * only undo shape that works when the bad commit touched terabytes;
-  * the restore costs the same whether it undoes one row or one
-  * billion.
-  */
-class SinkRollbackProcedure(root: String)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "rollback"
-  override def description(): String =
-    "restore the table to a prior version by publishing it as a new commit"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "rollback"
-      override def description(): String =
-        SinkRollbackProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("version", LongType).build())
-      override def isDeterministic: Boolean = false // publishes a commit
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val v = input.getLong(1).toInt
-        val path = new Path(root, table).toString
-        val cur = SinkSource.currentVersion(path)
-        if (v < 1 || v > cur)
-          throw new IllegalArgumentException(
-            s"cannot roll back to version $v of $path (history is 1..$cur)")
-        // the target's full snapshot state; an expired manifest fails
-        // loudly here (q263's pinned-read contract)
-        val target = SinkSource.state(path, Some(v))
-        // REFUSE when restore is physically impossible: truncate /
-        // metadata-delete / CoW / compaction reclaim data files
-        // eagerly, so a snapshot can be metadata-complete yet
-        // byte-incomplete — publishing it anyway would manufacture a
-        // manifest that cites missing files and every later read
-        // would fail mid-scan instead of here
-        val f = SinkSource.fs(path)
-        val missingData = target.files.keys.toSeq.sorted
-          .filterNot(fl => f.exists(new Path(path, s"data/$fl")))
-        val missingVecs = (target.vectorSidecar.map(_._2) ++
-          target.eqDeletes.map(_._1)).distinct.sorted
-          .filterNot(dv => f.exists(new Path(path, s"deletes/$dv")))
-        if (missingData.nonEmpty || missingVecs.nonEmpty)
-          throw new IllegalStateException(
-            s"cannot roll back $path to version $v: files it cites were " +
-              s"reclaimed (data: ${missingData.take(5).mkString(",")}; " +
-              s"vectors: ${missingVecs.take(5).mkString(",")})")
-        val newVersion =
-          if (v == cur) cur // restoring the head is a no-op, not a commit
-          else SinkSource.publishCas(path, "rollback") { head =>
-            // the restored state is absolute — files with their
-            // metadata, vectors, equality deletes, schema and current
-            // spec — so a lost race republishes the same snapshot on
-            // top of the new head; the spec list and the txn ledger
-            // stay the head's (append-only history)
-            target.copy(specs = head.specs, txns = head.txns)
-          }
-        val row: InternalRow = new GenericInternalRow(Array[Any](
-          v.toLong, newVersion.toLong,
-          target.files.size.toLong, target.entries.map(_._3).sum))
-        val result: Scan = new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("restored_version", LongType, nullable = false),
-            StructField("new_version", LongType, nullable = false),
-            StructField("n_files", LongType, nullable = false),
-            StructField("n_rows", LongType, nullable = false)))
-        }
-        util.Arrays.asList(result).iterator()
-      }
-    }
-}
-
-/** `CALL <cat>.rewrite_clustered('<table>', '<column>')` — CLUSTERED
-  * REWRITE, the data-layout half of the skipping story: q294's zone
-  * maps can only prune what the WRITE layout made prunable, and a
-  * table grown by many appends has every file spanning the full value
-  * range — `#stat` headers present but useless. This verb rewrites
-  * the table range-clustered by (key, column): the engine's
-  * repartitionByRange puts each (key, value-range) slice whole into
-  * one task, the keyed writer emits one file per key per task, so
-  * each file carries a TIGHT window of `column` — and the same
-  * selective predicate that opened everything before now opens a few
-  * files (Iceberg's rewrite_data_files with sort order / Delta
-  * OPTIMIZE ZORDER, over one dimension). The swap is atomic (scratch
-  * write → move → one manifest publish with fresh stats); MoR
-  * tombstones and equality deletes are MATERIALIZED by the rewrite —
-  * the same read path and guards as compaction.
-  * Scale notes (100 TB): clustering is THE difference between
-  * "selective scan reads the table" and "selective scan reads its
-  * answer" — the rewrite is a one-off distributed sort paid to make
-  * every later scan metadata-prunable; it never touches the driver
-  * with data and publishes O(entries) metadata.
-  */
-class SinkRewriteProcedure(root: String, mor: Boolean = false)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "rewrite_clustered"
-  override def description(): String =
-    "rewrite the table range-clustered by (key, column) for zone-map skipping"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "rewrite_clustered"
-      override def description(): String =
-        SinkRewriteProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("column", StringType).build(),
-        // the target range-partition count — the layout knob (files
-        // per key ≈ partitions / keys); explicit because the right
-        // grain is a SIZE decision the caller owns (Iceberg's
-        // rewrite options), not something to guess from session conf
-        ProcedureParameter.in("partitions", LongType).build())
-      override def isDeterministic: Boolean = false // rewrites files
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val column = input.getUTF8String(1).toString
-        val parts = input.getLong(2).toInt
-        if (parts < 1)
-          throw new IllegalArgumentException(
-            s"partitions must be >= 1, got $parts")
-        val path = new Path(root, table).toString
-        // planned and read at ONE snapshot; the publish re-plans onto
-        // the head by file name (see SinkSource.publishRewrite)
-        val head = SinkSource.state(path)
-        val base = head.version
-        val curSid = head.schemaId
-        val curFields = SinkSchemas.fields(path, curSid)
-        val fld = curFields.find(_.name == column).getOrElse(
-          throw new IllegalArgumentException(s"no column $column on $path"))
-        if (fld.dt != LongType)
-          throw new UnsupportedOperationException(
-            s"rewrite_clustered clusters by a BIGINT column (zone maps " +
-              s"cover BIGINT); $column is ${SinkSchemas.typeName(fld.dt)}")
-        if (!mor) SinkSource.refuseRawRewrite(path, head, "rewrite_clustered")
-        // clustered rewrite lays one file per (key, range slice) —
-        // the IDENTITY layout. Under an evolved current spec that
-        // would contradict what new writes produce, so it refuses;
-        // with the current spec back at identity it is the era
-        // MIGRATION verb: the full-table read takes rows from any
-        // era, the rewrite publishes everything as spec-0 files, and
-        // mixed-era refusals (compact, SHOW PARTITIONS, metadata
-        // delete) clear.
-        if (head.currentSpec != 0)
-          throw new UnsupportedOperationException(
-            s"rewrite_clustered on $path: the current partition spec " +
-              "is not identity — evolve_spec('" + table + "', " +
-              "'identity') first; the rewrite then migrates every " +
-              "old-era file")
-        val filesBefore = head.files.size.toLong
-        if (head.files.isEmpty)
-          throw new IllegalStateException(s"nothing to rewrite under $path")
-        val spark = org.apache.spark.sql.SparkSession.active
-        import org.apache.spark.sql.functions.col
-        val scratch = new Path(path, s"_rewrite_${java.util.UUID.randomUUID()}")
-        // the distributed sort: each (key, value-range) slice lands
-        // whole in one task; the keyed writer keeps the one-key-per-
-        // file layout invariant, so files split WITHIN a key by value
-        // range — the clustering the zone maps need. MoR reads merge
-        // vectors and equality deletes, so the rewrite materializes
-        // both.
-        SinkSource.write(
-          SinkSource.loadAt(spark, path, base, mor)
-            .repartitionByRange(parts, col("k"), col(column)),
-          scratch.toString, overwrite = true,
-          fields = if (curSid == 0) None else Some(curFields))
-        val rewritten = SinkSource.scratchMessage(scratch)
-        val oldFiles = head.files.keySet
-        // full swap: every entry read is replaced, tombstones are
-        // materialized
-        SinkSource.publishStaged(path, new Path(scratch, "data"),
-          "rewrite_clustered", rewritten)(SinkSource.publishRewrite(path,
-            "rewrite_clustered", base, oldFiles, rewritten.cite(_, curSid, 0)))
-        SinkSource.gcData(path, oldFiles)
-        SinkSource.gcVectors(path, head.vectorSidecar)
-        SinkSource.fs(path).delete(scratch, true)
-        val row: InternalRow = new GenericInternalRow(Array[Any](
-          filesBefore, rewritten.entries.map(_._2).distinct.size.toLong,
-          rewritten.entries.map(_._3).sum))
-        val result: Scan = new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("files_before", LongType, nullable = false),
-            StructField("files_after", LongType, nullable = false),
-            StructField("n_rows", LongType, nullable = false)))
-        }
-        util.Arrays.asList(result).iterator()
-      }
-    }
-}
-
-/** `CALL <cat>.evolve_spec('<table>', '<transform>')` — PARTITION
-  * SPEC EVOLUTION (Iceberg's `ALTER TABLE .. WRITE ORDERED/PARTITIONED
-  * BY` verb re-expressed over the psv manifest): change what layout
-  * NEW writes group files under — `'identity'` (one file group per k)
-  * or `'bucket(m)'` (one group per pmod(k, m)) — WITHOUT rewriting a
-  * byte. The commit is metadata-only: it re-cites the head's entries
-  * verbatim and publishes a new `#curspec` pointer plus an append-only
-  * `#pspec` definition; every existing file keeps its own era
-  * (`#fspec`), and readers interpret each file's manifest key under
-  * the file's OWN spec — identity keys prune k-filters exactly,
-  * bucket keys prune equality by bucket arithmetic and ranges by the
-  * per-file k stats bucket-era writers record.
-  *
-  * Why this is the layout verb a growing table hits FIRST at the
-  * 100 TB design point: identity(k) is right while the key domain is
-  * small (exact metadata deletes, per-key groups), and wrong once the
-  * domain explodes — millions of keys mean millions of file groups,
-  * planning drowns in entries, and streaming appends fragment every
-  * key. bucket(m) caps the group count at m forever. The cost of the
-  * cap is honesty about what stops being exact: key-filtered
-  * metadata deletes, partition DDL, and group-by-key agg pushdown all
-  * REFUSE (falling back to row-level paths) while any non-identity
-  * era is present — wrong-by-construction operations refuse rather
-  * than approximate, the format's standing posture.
-  *
-  * Refusals: malformed transforms, bucket(m < 2) (a 1-bucket table is
-  * a degenerate single group — almost certainly a typo), re-declaring
-  * the current spec, never-committed tables, tables with live
-  * branches (borrowed refs don't carry eras), and bucketWrite
-  * catalogs (their static bucket(8, k) declaration would conflict).
-  */
-class SinkEvolveSpecProcedure(root: String, bucketWrite: Boolean = false)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "evolve_spec"
-  override def description(): String =
-    "change the partition spec for new writes (identity | bucket(m)); " +
-      "existing files keep their era"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "evolve_spec"
-      override def description(): String =
-        SinkEvolveSpecProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("transform", StringType).build())
-      override def isDeterministic: Boolean = false // publishes a commit
-
-      private val BucketRe = """bucket\((\d+)\)""".r
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val transform = input.getUTF8String(1).toString.trim
-        if (bucketWrite)
-          throw new UnsupportedOperationException(
-            "evolve_spec through a bucketWrite catalog: the catalog " +
-              "statically declares bucket(8, k) — conflicting layout " +
-              "declarations; use a plain or partman catalog")
-        val d: (String, Int) = transform match {
-          case "identity" => ("identity", 0)
-          case BucketRe(m) =>
-            val mm = m.toInt
-            if (mm < 2) throw new IllegalArgumentException(
-              s"bucket($mm) is a degenerate single group — the modulus " +
-                "must be >= 2")
-            ("bucket", mm)
-          case other => throw new IllegalArgumentException(
-            s"unknown partition transform '$other' — supported: " +
-              "identity, bucket(<m>)")
-        }
-        val path = new Path(root, table).toString
-        if (SinkSource.currentVersion(path) == 0)
-          throw new IllegalStateException(
-            s"cannot evolve the spec of never-committed table $path")
-        if (SinkSource.branches(path).nonEmpty)
-          throw new UnsupportedOperationException(
-            s"cannot evolve the spec of $path: live branches borrow its " +
-              "files without era metadata — drop or promote them first")
-        // carry the head verbatim, swap only the spec pointer; a lost
-        // race re-checks against the new head (the no-op refusal must
-        // hold against what actually published)
-        // definitions are append-only: find-or-add, then point at it
-        var specId = 0
-        val newV = SinkSource.publishCas(path, "evolve_spec") { head =>
-          if (head.specs(head.currentSpec) == d)
-            throw new IllegalArgumentException(
-              s"$transform is already the current spec of $path")
-          specId = head.specs.collectFirst { case (id, `d`) => id }
-            .getOrElse(head.specs.keys.max + 1)
-          head.copy(specs = head.specs + (specId -> d), currentSpec = specId)
-        }
-        val row: InternalRow = new GenericInternalRow(Array[Any](
-          newV.toLong, specId.toLong,
-          org.apache.spark.unsafe.types.UTF8String.fromString(transform)))
-        val result: Scan = new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("new_version", LongType, nullable = false),
-            StructField("spec_id", LongType, nullable = false),
-            StructField("transform", StringType, nullable = false)))
-        }
-        util.Arrays.asList(result).iterator()
-      }
-    }
-}
-
-/** `CALL <cat>.build_bloom('<table>', '<column>', <bits_per_row>)` —
-  * per-file BLOOM FILTER indexes, the skipping mechanism for POINT
-  * lookups on columns clustering can't help: zone maps prune by
-  * range, so on an append-grown (or deliberately unclustered) table
-  * every file spans the domain and `v = X` opens everything; a bloom
-  * answers "X is definitely absent from this file" whatever the
-  * layout. The build is DISTRIBUTED — one task per data file hashes
-  * the column's values into a bitset sized from the file's exact row
-  * count (manifest metadata) and writes it as a sidecar under
-  * blooms/ (the Iceberg-puffin shape: stats files beside data files,
-  * referenced by metadata); the publish is one CAS manifest commit
-  * adding `#bloom` headers. Blooms describe immutable file bytes, so
-  * headers carry forward like zone maps and drop with their files —
-  * rewritten files (compact/rewrite) simply lose coverage until the
-  * next build, which is sound (absence = cannot skip). Tombstoned
-  * rows stay IN the bloom: an over-approximation of presence can
-  * only open more files, never lose rows.
-  * Scale notes (100 TB): plan-time probing reads only the CANDIDATE
-  * files' bitsets (small sidecar reads, parallel to how engines read
-  * parquet footers), and a bitset is bits_per_row × rows — ~1.25 KB
-  * per million rows per bit — metadata-proportional, never a data
-  * scan after the one-off build.
-  */
-class SinkBloomProcedure(root: String)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "build_bloom"
-  override def description(): String =
-    "build per-file bloom filters over a BIGINT column for point-lookup skipping"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "build_bloom"
-      override def description(): String =
-        SinkBloomProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("column", StringType).build(),
-        ProcedureParameter.in("bits_per_row", LongType).build())
-      override def isDeterministic: Boolean = false // writes sidecars
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val column = input.getUTF8String(1).toString
-        val bitsPerRow = input.getLong(2).toInt
-        if (bitsPerRow < 1 || bitsPerRow > 64)
-          throw new IllegalArgumentException(
-            s"bits_per_row must be in [1, 64], got $bitsPerRow")
-        val path = new Path(root, table).toString
-        val head = SinkSource.state(path)
-        val fld = SinkSchemas.fields(path, head.schemaId)
-          .find(_.name == column).getOrElse(
-            throw new IllegalArgumentException(s"no column $column on $path"))
-        if (fld.dt != LongType)
-          throw new UnsupportedOperationException(
-            s"bloom indexes cover BIGINT columns; $column is " +
-              SinkSchemas.typeName(fld.dt))
-        val fieldsOf = SinkSource.fileFields(path, head)
-        // (file, absPath, position of the field in the FILE's schema,
-        // mBits, kHashes) per file that HAS the field; files predating
-        // the column are skipped — their rows have no values to index
-        // and absence of a header is the sound "cannot skip"
-        val salt = java.util.UUID.randomUUID().toString.take(8)
-        val bloomsDir = new Path(path, "blooms").toString
-        // INCREMENTAL by construction: files already carrying a bloom
-        // for this field keep their header (a bloom describes
-        // immutable file bytes — rebuilding it buys nothing), so a
-        // repeated CALL costs only the uncovered files. With the
-        // write path maintaining blooms on every append (the head's
-        // headers ARE the policy, [[SinkSource.bloomPolicy]]), the
-        // steady state is ZERO uncovered files and the CALL is pure
-        // metadata — the one-off full pass happens exactly once.
-        val work = head.files.toSeq
-          // borrowed branch refs are another table's bytes — skipped;
-          // absence of a header is the sound "cannot skip"
-          .filterNot { case (fl, _) => fl.contains("/") }
-          .collect { case (fl, m) if !m.blooms.exists(_._1 == fld.id) =>
-            (fl, m.rows) }
-          .flatMap { case (fl, rows) =>
-            val pos = fieldsOf(fl).indexWhere(_.id == fld.id)
-            if (pos < 0) None
-            else {
-              val mBits = math.max(64L, rows * bitsPerRow)
-                .min(1L << 26).toInt // cap: 8 MB of bits per file
-              val k = math.max(1,
-                math.round(mBits.toDouble / math.max(1L, rows) * 0.693)).toInt
-              Some((fl, new Path(path, s"data/$fl").toString, pos, mBits, k))
-            }
-          }.zipWithIndex
-        val spark = org.apache.spark.sql.SparkSession.active
-        // distributed build: one task per file streams its lines,
-        // hashes the column into the bitset, writes the sidecar
-        val built = spark.sparkContext
-          .parallelize(work, math.max(1, work.size))
-          .map { case ((fl, abs, pos, mBits, k), idx) =>
-            val bits = new Array[Byte]((mBits + 7) / 8)
-            val ls = new SinkSource.LineStream(abs)
-            try while (ls.hasNext) {
-              val c = ls.next().split('|')
-              if (pos < c.length) {
-                val raw = c(pos)
-                if (raw != "\\N" && raw.nonEmpty)
-                  SinkSource.SinkBloom.add(bits, mBits, k, raw.toLong)
-              }
-            } finally ls.close()
-            val name = s"bl_${salt}_$idx.bin"
-            val f = SinkSource.fs(bloomsDir)
-            f.mkdirs(new Path(bloomsDir))
-            val out = f.create(new Path(bloomsDir, name), true)
-            try out.write(bits) finally out.close()
-            (fl, (mBits, k, name))
-          }.collect().toMap // file-count-sized: header metadata only
-        // fully covered already: publish nothing (a no-op CALL must
-        // not burn a version), report zero files indexed. Blooms
-        // commute with concurrent appends (their new files simply lack
-        // headers until the next build); the publish merges them with
-        // the file's other fields' blooms
-        if (built.nonEmpty)
-          SinkSource.publishCas(path, "bloom publish") { h =>
-            h.copy(files = h.files.map { case (fl, m) =>
-              fl -> built.get(fl).fold(m) { case (mBits, k, name) =>
-                m.copy(blooms = Seq((fld.id, mBits, k, name))) }
+        val args = new SinkProcedure.Args(declared.zipWithIndex.map {
+          case ((n, dt), i) =>
+            if (input.isNullAt(i))
+              throw new IllegalArgumentException(s"$n must not be NULL")
+            n -> (dt match {
+              case StringType => input.getUTF8String(i).toString
+              case LongType => input.getLong(i)
+              case IntegerType =>
+                val v = input.getLong(i)
+                if (!v.isValidInt)
+                  throw new IllegalArgumentException(
+                    s"$n must be within INT range, got $v")
+                v.toInt
             })
+        }.toMap)
+        val path = new Path(root, args.table)
+        if (!SinkSource.fs(path.toString).exists(path))
+          throw new NoSuchTableException(
+            Identifier.of(Array.empty, args.table))
+        val row: InternalRow = new GenericInternalRow(
+          result.zip(run(path.toString, args)).map {
+            case ((_, StringType), v) =>
+              org.apache.spark.unsafe.types.UTF8String.fromString(v.toString)
+            case ((_, LongType), v: Number) => v.longValue
+          }.toArray[Any])
+        val scan: Scan = new LocalScan {
+          override def rows(): Array[InternalRow] = Array(row)
+          override def readSchema(): StructType = StructType(result.map {
+            case (n, dt) => StructField(n, dt, nullable = false) })
+        }
+        util.Arrays.asList(scan).iterator()
+      }
+    }
+}
+
+object SinkProcedure {
+
+  /** A verb's decoded arguments, by parameter name. */
+  final class Args private[sources] (values: Map[String, Any]) {
+    def table: String = string("table")
+    def string(name: String): String = values(name).asInstanceOf[String]
+    def long(name: String): Long = values(name).asInstanceOf[Long]
+    def int(name: String): Int = values(name).asInstanceOf[Int]
+  }
+
+  private def apply(root: String, name: String, description: String,
+      params: Seq[(String, DataType)], result: Seq[(String, DataType)])(
+      run: (String, Args) => Seq[Any]): SinkProcedure =
+    new SinkProcedure(root, name, description, params, result, run)
+
+  /** The "version in 1..cur" guard of the verbs that address a version
+    * by number; `refusal` is the verb's message prefix. Returns cur. */
+  private def inHistory(path: String, v: Int, refusal: String): Int = {
+    val cur = SinkSource.currentVersion(path)
+    if (v < 1 || v > cur)
+      throw new IllegalArgumentException(
+        s"$refusal $v of $path (history is 1..$cur)")
+    cur
+  }
+
+  /** Small-file COMPACTION as a catalog procedure: merge every key group
+    * that spans multiple files into one file per key, swap the manifest
+    * entries atomically, and return a summary row. The rewrite itself is
+    * DISTRIBUTED — the procedure stages the multi-file keys' rows
+    * through a normal keyed write (`repartition(k)` → one file per key)
+    * into a scratch table, then does driver-side METADATA work only:
+    * move the compacted files in, publish the swapped manifest, GC the
+    * replaced files and the scratch dir. Readers see the old layout or
+    * the new one, never a mix.
+    * Scale notes (100 TB): compaction is the tax of streaming/frequent
+    * commits (q264 writes one file per key per epoch) — without it, file
+    * counts grow with commit frequency and scan planning drowns in
+    * splits. It must be (a) proportional to the multi-file groups, not
+    * the table, and (b) a metadata swap at publish — both held here.
+    */
+  def compact(root: String, mor: Boolean): SinkProcedure = SinkProcedure(
+      root, "compact",
+      "merge multi-file key groups into one file per key" +
+        (if (mor) " and purge deletion vectors" else ""),
+      Nil, Seq("keys_compacted" -> LongType, "files_before" -> LongType,
+        "files_after" -> LongType)) { (path, _) =>
+    // the whole plan — targets, guards, the rewrite's read — is
+    // pinned to ONE snapshot, so the rewrite replaces exactly the
+    // rows it read; the publish re-plans onto the head by file name
+    val head = SinkSource.state(path)
+    val base = head.version
+    val m = head.entries
+    val perKey = m.groupBy(_._1).view
+      .mapValues(_.map(_._2).distinct).toMap
+    // a MoR compaction MATERIALIZES vectors and equality deletes
+    // (the rewritten files' new sequence numbers self-prune the
+    // eq headers); a raw one would resurrect their rows
+    if (!mor) SinkSource.refuseRawRewrite(path, head, "compact")
+    val dvd = head.vectorSidecar
+    val dvdFiles = dvd.map(_._1).toSet
+    val eqSubject: String => Boolean = fl =>
+      head.eqDeletes.exists { case (_, _, s) => head.files(fl).olderThan(s) }
+    // PARTITION-SPEC eras: compaction regroups rows BY MANIFEST
+    // KEY, which is only coherent when every cited file and the
+    // current spec agree on what a key means — a mixed table
+    // (identity k=5 next to bucket-id 5) would merge unrelated
+    // groups and, worse, the key-filtered re-read would drop
+    // bucket rows whose true k isn't in the target set. Uniform
+    // bucket-era tables compact fine (per bucket id, the grain
+    // streaming appends actually fragment); mixed tables migrate
+    // through rewrite_clustered first.
+    val curSpec = head.specInfo
+    val eras = (head.files.values.map(_.spec).toSeq :+ curSpec._1).distinct
+    if (eras.size > 1)
+      throw new UnsupportedOperationException(
+        s"table $path spans partition-spec eras " +
+          s"(${eras.sorted.mkString(", ")}) — migrate with " +
+          "rewrite_clustered before compacting")
+    // targets: keys split across files, plus (MoR) keys whose
+    // files carry deletion vectors or are subject to an equality
+    // delete — compacting those MATERIALIZES the tombstones and
+    // retires the vectors/headers
+    val targets = perKey.filter { case (k, fls) =>
+      fls.size > 1 || fls.exists(dvdFiles) ||
+        (mor && fls.exists(eqSubject))
+    }.keySet
+    val filesBefore = m.map(_._2).distinct.size.toLong
+    var filesAfter = filesBefore
+    if (targets.nonEmpty) {
+      val spark = org.apache.spark.sql.SparkSession.active
+      import org.apache.spark.sql.functions.{col, lit, pmod}
+      val scratch = new Path(path, s"_compact_${java.util.UUID.randomUUID()}")
+      // distributed rewrite: each target key lands whole in one
+      // task, so the scratch table holds exactly one file per key;
+      // on MoR tables the read MERGES the vectors, so tombstoned
+      // rows fall out of the rewrite. On an EVOLVED table the
+      // round-trip through the logical schema NORMALIZES: mixed
+      // file schemas read reconciled, the scratch write serializes
+      // the table's CURRENT fields (shipped explicitly — the
+      // scratch dir has no schema history), and the moved entries
+      // are stamped with the current sid.
+      val curSid = head.schemaId
+      val curFields = SinkSchemas.fields(path, curSid)
+      // group addressing in ROW terms: under the identity spec a
+      // manifest key is the rows' k; under bucket(m) it is
+      // pmod(k, m) — the same arithmetic the writer groups by, so
+      // the filtered re-read selects exactly the target groups'
+      // rows and the scratch write (forced onto the live spec)
+      // regroups them one file per target key
+      val groupCol = curSpec match {
+        case (_, "bucket", mm) => pmod(col("k"), lit(mm.toLong))
+        case _ => col("k")
+      }
+      SinkSource.write(
+        SinkSource.loadAt(spark, path, base, mor)
+          .filter(groupCol.isInCollection(targets))
+          .repartition(groupCol),
+        scratch.toString, overwrite = true,
+        fields = if (curSid == 0) None else Some(curFields),
+        forceSpec = if (curSpec._1 == 0) None else Some(curSpec))
+      val compacted = SinkSource.scratchMessage(scratch)
+      val replaced = m.filter { case (k, _, _) => targets.contains(k) }
+        .map(_._2).toSet
+      SinkSource.publishStaged(path, new Path(scratch, "data"),
+        "compact", compacted)(SinkSource.publishRewrite(path, "compact",
+          base, replaced, compacted.cite(_, curSid, curSpec._1)))
+      SinkSource.gcData(path, replaced)
+      SinkSource.gcVectors(path, dvd.filter(p => replaced(p._1)))
+      SinkSource.fs(path).delete(scratch, true)
+      filesAfter = filesBefore - replaced.size + compacted.entries.size
+    }
+    Seq(targets.size, filesBefore, filesAfter)
+  }
+
+  /** `CALL <cat>.tag('<table>', <version>, '<name>')` — set or MOVE a
+    * named snapshot reference. With q263's versioned snapshots this is
+    * the write-audit-publish primitive: appends create candidate
+    * versions, an audit reads the candidate BY NUMBER, and only the tag
+    * move makes it visible to consumers subscribed by NAME — publishing
+    * is a metadata pointer swap, unpublishing is moving it back.
+    * Scale notes (100 TB): WAP is how corpus releases ship — ingest
+    * continuously, gate consumers on 'published', and promotion costs
+    * one tiny file swap regardless of table size. Tagging a version 0
+    * or a GC'd snapshot fails loudly at READ time (q263's pinned-read
+    * contract), never silently serves the wrong data.
+    */
+  def tag(root: String): SinkProcedure = SinkProcedure(
+      root, "tag", "set or move a named snapshot tag",
+      Seq("version" -> IntegerType, "tag_name" -> StringType),
+      Seq("tag_name" -> StringType, "version" -> LongType)) { (path, a) =>
+    val v = a.int("version")
+    val tagName = a.string("tag_name")
+    inHistory(path, v, "cannot tag version")
+    SinkSource.writeTag(path, tagName, v)
+    Seq(tagName, v)
+  }
+
+  /** `CALL <cat>.expire('<table>', <keep_last>)` — SNAPSHOT EXPIRY, the
+    * lifecycle verb that closes the versioned-manifest design: the
+    * publish path keeps every manifest version forever (that is what
+    * time travel and the changelog stream address), so at a production
+    * commit rate both the metadata AND any data files pinned only by
+    * old snapshots grow without bound. Expiry prunes history to the
+    * newest `keep_last` versions — TAG-PINNED versions are always kept,
+    * whatever their age (a tag is a promise to readers subscribed by
+    * name) — then garbage-collects exactly the files referenced ONLY by
+    * expired snapshots: a data or vector file cited by any surviving
+    * manifest/sidecar is untouched. Files referenced by NO manifest at
+    * all (crash orphans) are out of scope, the Iceberg split between
+    * expire_snapshots and remove_orphan_files — expiry must be safe to
+    * run beside live writers, and an unreferenced file might be a
+    * concurrent commit's just-renamed publish.
+    * A later `VERSION AS OF` on an expired version fails LOUDLY at plan
+    * time ([[SinkSource.manifest]]'s missing-manifest error — q263's
+    * pinned-read contract), never silently serves the wrong snapshot.
+    * Scale notes (100 TB): expiry is driver-side METADATA work plus
+    * per-file deletes proportional to what expired — never a data scan;
+    * it is the knob that turns "keep everything for reproducibility"
+    * into a bounded retention window with named releases (tags) kept
+    * forever.
+    */
+  def expire(root: String): SinkProcedure = SinkProcedure(
+      root, "expire",
+      "expire old snapshots to a keep_last horizon; tag-pinned versions survive",
+      Seq("keep_last" -> IntegerType),
+      Seq("versions_expired" -> LongType, "versions_kept" -> LongType,
+        "data_files_removed" -> LongType,
+        "vector_files_removed" -> LongType)) { (path, a) =>
+    val keepLast = a.int("keep_last")
+    if (keepLast < 1)
+      throw new IllegalArgumentException(
+        s"keep_last must be >= 1, got $keepLast")
+    val f = SinkSource.fs(path)
+    val cur = SinkSource.currentVersion(path)
+    // versions actually present (earlier expiries leave gaps)
+    val present = SinkSource.versions(path).toSet
+    val horizon = cur - keepLast + 1
+    val pinned = SinkSource.tags(path).values.toSet
+    val kept = present.filter(v => v >= horizon || pinned.contains(v))
+    val expired = (present -- kept).toSeq.sorted
+    // CONCURRENT-IDEMPOTENT: a manifest listed
+    // a moment ago can be GONE by read time if another expire races
+    // this one — a vanished expired manifest means the other call
+    // already handled that version, so SKIP it (its exclusive files
+    // are the other call's to GC), never abort mid-GC. The same
+    // tolerance on the KEPT side is consistency with a more
+    // aggressive concurrent horizon: a kept manifest that vanished
+    // was expired by the other call, which also owns its
+    // exclusively-cited files.
+    // Citations are read BEFORE the manifest deletions below:
+    // anything a kept snapshot reaches stays — data entries,
+    // sidecar vectors, AND equality-delete value files (cited by
+    // `#eq` headers, living under deletes/); doomed citations are
+    // reachable from expired snapshots ONLY
+    val keptStates = kept.toSeq.flatMap(SinkSource.stateIfPresent(path, _))
+    val expiredStates = expired.flatMap(SinkSource.stateIfPresent(path, _))
+    def deletes(st: TableState): Seq[String] =
+      st.vectorSidecar.map(_._2) ++ st.eqDeletes.map(_._1)
+    val doomedData = expiredStates.flatMap(_.files.keys).toSet --
+      keptStates.flatMap(_.files.keys) --
+      SinkSource.branchCitedData(path) // branches pin shared bytes
+    val doomedVecs = expiredStates.flatMap(deletes).toSet --
+      keptStates.flatMap(deletes)
+    // manifests go FIRST: a concurrent reader of an expired pin
+    // fails loudly at planning instead of mid-scan on vanished data
+    val removedVersions = expired.count { v =>
+      try f.delete(new Path(path, s"manifest.v$v.psv"), false)
+      catch { case _: Exception => false }
+    }
+    // sidecar FILES: everything a surviving manifest does not bind
+    // is dead — expired versions' sidecars AND orphans from lost
+    // commit races (salted names that no manifest header cites)
+    val boundSidecars = keptStates.flatMap(_.sidecar).toSet
+    f.listStatus(new Path(path)).map(_.getPath.getName)
+      .filter(n => n.startsWith("deletes.v") && n.endsWith(".psv"))
+      .filterNot(boundSidecars)
+      .foreach { n =>
+        try f.delete(new Path(path, n), false)
+        catch { case _: Exception => } }
+    // HONEST GC COUNTS: files eagerly GC'd by
+    // earlier truncate/delete/overwrite no longer exist — report
+    // only deletes the filesystem actually performed, not the size
+    // of the doomed citation sets
+    val removedData = doomedData.count { fl =>
+      // the gcData guards, with expire's honest-count obligation:
+      // borrowed refs are never followed (they are another
+      // table's bytes) and report as not-removed
+      !fl.contains("/") &&
+        (try f.delete(new Path(path, s"data/$fl"), false)
+        catch { case _: Exception => false }) }
+    val removedVecs = doomedVecs.count { dv =>
+      try f.delete(new Path(path, s"deletes/$dv"), false)
+      catch { case _: Exception => false } }
+    Seq(removedVersions, kept.size, removedData, removedVecs)
+  }
+
+  /** `CALL <cat>.remove_orphans('<table>', <grace_ms>)` — ORPHAN-FILE
+    * cleanup, the other half of the Iceberg lifecycle split `expire`
+    * deliberately leaves out: files REFERENCED BY NO manifest at all
+    * (a crashed commit's just-renamed data files whose manifest never
+    * landed, lost-race deletion-vector sidecars' vectors, abandoned
+    * staging attempts). Expiry must not touch them because an
+    * unreferenced file might be a CONCURRENT commit's just-published
+    * rename — which is exactly what the GRACE WINDOW is for: only
+    * files whose modification time is at least `grace_ms` old are
+    * eligible, so anything younger than the longest plausible
+    * commit-in-flight survives (Iceberg's `older_than` contract).
+    * Citation set = every file reachable from ANY present manifest or
+    * its bound sidecar — history included, so time travel keeps
+    * working. Counts report only deletes the filesystem performed.
+    * Scale notes (100 TB): the verb is metadata + listing proportional
+    * — a directory listing diffed against manifest citations; it never
+    * opens a data file, and it is safe beside live writers by the
+    * grace contract rather than by locking.
+    */
+  def removeOrphans(root: String): SinkProcedure = SinkProcedure(
+      root, "remove_orphans",
+      "delete files no manifest references, older than a grace window",
+      Seq("grace_ms" -> LongType),
+      Seq("data_orphans_removed" -> LongType,
+        "vector_orphans_removed" -> LongType,
+        "staging_attempts_removed" -> LongType)) { (path, a) =>
+    val grace = a.long("grace_ms")
+    if (grace < 0)
+      throw new IllegalArgumentException(s"grace_ms must be >= 0: $grace")
+    val f = SinkSource.fs(path)
+    val cutoff = System.currentTimeMillis() - grace
+    // a vanished manifest mid-listing is a concurrent expire's work
+    val states = SinkSource.versions(path)
+      .flatMap(SinkSource.stateIfPresent(path, _))
+    val citedData = states.flatMap(_.files.keys).toSet ++
+      SinkSource.branchCitedData(path) // branches pin shared bytes
+    // equality-delete value files are deletes/-dir citations too
+    val citedVecs = states.flatMap(st =>
+      st.vectorSidecar.map(_._2) ++ st.eqDeletes.map(_._1)).toSet
+    def sweep(dir: String, cited: Set[String]): Long = {
+      val d = new Path(path, dir)
+      if (!f.exists(d)) return 0L
+      f.listStatus(d)
+        .filter(st => !cited.contains(st.getPath.getName) &&
+          st.getModificationTime <= cutoff)
+        .count { st =>
+          try f.delete(st.getPath, false)
+          catch { case _: Exception => false }
+        }.toLong
+    }
+    val dataRemoved = sweep("data", citedData)
+    val vecsRemoved = sweep("deletes", citedVecs)
+    // bloom sidecars: cited by `#bloom` headers; uncited bitsets
+    // (dropped files' blooms, lost build races) are orphans too —
+    // folded into the vector count (both are stats-sidecar debris)
+    val citedBlooms =
+      states.flatMap(_.files.values.flatMap(_.blooms.map(_._4))).toSet
+    val bloomsRemoved = sweep("blooms", citedBlooms)
+    // abandoned staging ATTEMPTS (crashed queries): whole attempt
+    // dirs whose newest content predates the grace cutoff —
+    // nothing under _staging is ever readable, so age is the only
+    // question
+    val staging = new Path(path, "_staging")
+    val stagingRemoved: Long =
+      if (!f.exists(staging)) 0L
+      else f.listStatus(staging).filter { st =>
+        def newest(p: Path): Long = {
+          val s = f.getFileStatus(p)
+          if (!s.isDirectory) s.getModificationTime
+          else (s.getModificationTime +:
+            f.listStatus(p).map(x => newest(x.getPath)).toSeq).max
+        }
+        newest(st.getPath) <= cutoff
+      }.count { st =>
+        try f.delete(st.getPath, true)
+        catch { case _: Exception => false }
+      }.toLong
+    Seq(dataRemoved, vecsRemoved + bloomsRemoved, stagingRemoved)
+  }
+
+  /** `CALL <cat>.rollback('<table>', <version>)` — HISTORY-PRESERVING
+    * restore (Iceberg's `rollback_to_snapshot`, Delta's RESTORE): the
+    * table's state returns to version v by publishing a NEW version
+    * whose entries, delete sidecar, schema id and zone maps are v's —
+    * the "bad" versions in between stay addressable by `VERSION AS OF`
+    * / `TIMESTAMP AS OF` (an incident post-mortem reads them; `expire`
+    * retires them), and every consumer contract is ordinary: the
+    * rollback is a commit like any other, not a rewind of the log.
+    * Consequences the spec pins: a change-data-feed window crossing
+    * the rollback REFUSES loudly (the rollback un-cites the bad
+    * commits' files — exactly the rewritten-history case the feed
+    * documents), and a rollback to a version whose files were eagerly
+    * reclaimed (truncate/metadata-delete GC) REFUSES up front rather
+    * than publishing a manifest that cites missing bytes.
+    * Scale notes (100 TB): rollback is pure manifest arithmetic —
+    * O(entries of v) metadata and zero data movement, which is the
+    * only undo shape that works when the bad commit touched terabytes;
+    * the restore costs the same whether it undoes one row or one
+    * billion.
+    */
+  def rollback(root: String): SinkProcedure = SinkProcedure(
+      root, "rollback",
+      "restore the table to a prior version by publishing it as a new commit",
+      Seq("version" -> IntegerType),
+      Seq("restored_version" -> LongType, "new_version" -> LongType,
+        "n_files" -> LongType, "n_rows" -> LongType)) { (path, a) =>
+    val v = a.int("version")
+    val cur = inHistory(path, v, "cannot roll back to version")
+    // the target's full snapshot state; an expired manifest fails
+    // loudly here (q263's pinned-read contract)
+    val target = SinkSource.state(path, Some(v))
+    // REFUSE when restore is physically impossible: truncate /
+    // metadata-delete / CoW / compaction reclaim data files
+    // eagerly, so a snapshot can be metadata-complete yet
+    // byte-incomplete — publishing it anyway would manufacture a
+    // manifest that cites missing files and every later read
+    // would fail mid-scan instead of here
+    val f = SinkSource.fs(path)
+    val missingData = target.files.keys.toSeq.sorted
+      .filterNot(fl => f.exists(new Path(path, s"data/$fl")))
+    val missingVecs = (target.vectorSidecar.map(_._2) ++
+      target.eqDeletes.map(_._1)).distinct.sorted
+      .filterNot(dv => f.exists(new Path(path, s"deletes/$dv")))
+    if (missingData.nonEmpty || missingVecs.nonEmpty)
+      throw new IllegalStateException(
+        s"cannot roll back $path to version $v: files it cites were " +
+          s"reclaimed (data: ${missingData.take(5).mkString(",")}; " +
+          s"vectors: ${missingVecs.take(5).mkString(",")})")
+    val newVersion =
+      if (v == cur) cur // restoring the head is a no-op, not a commit
+      else SinkSource.publishCas(path, "rollback") { head =>
+        // the restored state is absolute — files with their
+        // metadata, vectors, equality deletes, schema and current
+        // spec — so a lost race republishes the same snapshot on
+        // top of the new head; the spec list and the txn ledger
+        // stay the head's (append-only history)
+        target.copy(specs = head.specs, txns = head.txns)
+      }
+    Seq(v, newVersion, target.files.size, target.entries.map(_._3).sum)
+  }
+
+  /** `CALL <cat>.rewrite_clustered('<table>', '<column>')` — CLUSTERED
+    * REWRITE, the data-layout half of the skipping story: q294's zone
+    * maps can only prune what the WRITE layout made prunable, and a
+    * table grown by many appends has every file spanning the full value
+    * range — `#stat` headers present but useless. This verb rewrites
+    * the table range-clustered by (key, column): the engine's
+    * repartitionByRange puts each (key, value-range) slice whole into
+    * one task, the keyed writer emits one file per key per task, so
+    * each file carries a TIGHT window of `column` — and the same
+    * selective predicate that opened everything before now opens a few
+    * files (Iceberg's rewrite_data_files with sort order / Delta
+    * OPTIMIZE ZORDER, over one dimension). The swap is atomic (scratch
+    * write → move → one manifest publish with fresh stats); MoR
+    * tombstones and equality deletes are MATERIALIZED by the rewrite —
+    * the same read path and guards as compaction.
+    * Scale notes (100 TB): clustering is THE difference between
+    * "selective scan reads the table" and "selective scan reads its
+    * answer" — the rewrite is a one-off distributed sort paid to make
+    * every later scan metadata-prunable; it never touches the driver
+    * with data and publishes O(entries) metadata.
+    */
+  def rewriteClustered(root: String, mor: Boolean): SinkProcedure =
+    SinkProcedure(root, "rewrite_clustered",
+        "rewrite the table range-clustered by (key, column) for zone-map skipping",
+        // `partitions` is the target range-partition count — the
+        // layout knob (files per key ≈ partitions / keys); explicit
+        // because the right grain is a SIZE decision the caller owns
+        // (Iceberg's rewrite options), not something to guess from
+        // session conf
+        Seq("column" -> StringType, "partitions" -> IntegerType),
+        Seq("files_before" -> LongType, "files_after" -> LongType,
+          "n_rows" -> LongType)) { (path, a) =>
+      val column = a.string("column")
+      val parts = a.int("partitions")
+      if (parts < 1)
+        throw new IllegalArgumentException(
+          s"partitions must be >= 1, got $parts")
+      // planned and read at ONE snapshot; the publish re-plans onto
+      // the head by file name (see SinkSource.publishRewrite)
+      val head = SinkSource.state(path)
+      val base = head.version
+      val curSid = head.schemaId
+      val curFields = SinkSchemas.fields(path, curSid)
+      val fld = curFields.find(_.name == column).getOrElse(
+        throw new IllegalArgumentException(s"no column $column on $path"))
+      if (fld.dt != LongType)
+        throw new UnsupportedOperationException(
+          s"rewrite_clustered clusters by a BIGINT column (zone maps " +
+            s"cover BIGINT); $column is ${SinkSchemas.typeName(fld.dt)}")
+      if (!mor) SinkSource.refuseRawRewrite(path, head, "rewrite_clustered")
+      // clustered rewrite lays one file per (key, range slice) —
+      // the IDENTITY layout. Under an evolved current spec that
+      // would contradict what new writes produce, so it refuses;
+      // with the current spec back at identity it is the era
+      // MIGRATION verb: the full-table read takes rows from any
+      // era, the rewrite publishes everything as spec-0 files, and
+      // mixed-era refusals (compact, SHOW PARTITIONS, metadata
+      // delete) clear.
+      if (head.currentSpec != 0)
+        throw new UnsupportedOperationException(
+          s"rewrite_clustered on $path: the current partition spec " +
+            "is not identity — evolve_spec('" + a.table + "', " +
+            "'identity') first; the rewrite then migrates every " +
+            "old-era file")
+      val filesBefore = head.files.size.toLong
+      if (head.files.isEmpty)
+        throw new IllegalStateException(s"nothing to rewrite under $path")
+      val spark = org.apache.spark.sql.SparkSession.active
+      import org.apache.spark.sql.functions.col
+      val scratch = new Path(path, s"_rewrite_${java.util.UUID.randomUUID()}")
+      // the distributed sort: each (key, value-range) slice lands
+      // whole in one task; the keyed writer keeps the one-key-per-
+      // file layout invariant, so files split WITHIN a key by value
+      // range — the clustering the zone maps need. MoR reads merge
+      // vectors and equality deletes, so the rewrite materializes
+      // both.
+      SinkSource.write(
+        SinkSource.loadAt(spark, path, base, mor)
+          .repartitionByRange(parts, col("k"), col(column)),
+        scratch.toString, overwrite = true,
+        fields = if (curSid == 0) None else Some(curFields))
+      val rewritten = SinkSource.scratchMessage(scratch)
+      val oldFiles = head.files.keySet
+      // full swap: every entry read is replaced, tombstones are
+      // materialized
+      SinkSource.publishStaged(path, new Path(scratch, "data"),
+        "rewrite_clustered", rewritten)(SinkSource.publishRewrite(path,
+          "rewrite_clustered", base, oldFiles, rewritten.cite(_, curSid, 0)))
+      SinkSource.gcData(path, oldFiles)
+      SinkSource.gcVectors(path, head.vectorSidecar)
+      SinkSource.fs(path).delete(scratch, true)
+      Seq(filesBefore, rewritten.entries.map(_._2).distinct.size,
+        rewritten.entries.map(_._3).sum)
+    }
+
+  /** `CALL <cat>.evolve_spec('<table>', '<transform>')` — PARTITION
+    * SPEC EVOLUTION (Iceberg's `ALTER TABLE .. WRITE ORDERED/PARTITIONED
+    * BY` verb re-expressed over the psv manifest): change what layout
+    * NEW writes group files under — `'identity'` (one file group per k)
+    * or `'bucket(m)'` (one group per pmod(k, m)) — WITHOUT rewriting a
+    * byte. The commit is metadata-only: it re-cites the head's entries
+    * verbatim and publishes a new `#curspec` pointer plus an append-only
+    * `#pspec` definition; every existing file keeps its own era
+    * (`#fspec`), and readers interpret each file's manifest key under
+    * the file's OWN spec — identity keys prune k-filters exactly,
+    * bucket keys prune equality by bucket arithmetic and ranges by the
+    * per-file k stats bucket-era writers record.
+    *
+    * Why this is the layout verb a growing table hits FIRST at the
+    * 100 TB design point: identity(k) is right while the key domain is
+    * small (exact metadata deletes, per-key groups), and wrong once the
+    * domain explodes — millions of keys mean millions of file groups,
+    * planning drowns in entries, and streaming appends fragment every
+    * key. bucket(m) caps the group count at m forever. The cost of the
+    * cap is honesty about what stops being exact: key-filtered
+    * metadata deletes, partition DDL, and group-by-key agg pushdown all
+    * REFUSE (falling back to row-level paths) while any non-identity
+    * era is present — wrong-by-construction operations refuse rather
+    * than approximate, the format's standing posture.
+    *
+    * Refusals: malformed transforms, bucket(m < 2) (a 1-bucket table is
+    * a degenerate single group — almost certainly a typo), re-declaring
+    * the current spec, never-committed tables, tables with live
+    * branches (borrowed refs don't carry eras), and bucketWrite
+    * catalogs (their static bucket(8, k) declaration would conflict).
+    */
+  def evolveSpec(root: String, bucketWrite: Boolean): SinkProcedure =
+    SinkProcedure(root, "evolve_spec",
+        "change the partition spec for new writes (identity | bucket(m)); " +
+          "existing files keep their era",
+        Seq("transform" -> StringType),
+        Seq("new_version" -> LongType, "spec_id" -> LongType,
+          "transform" -> StringType)) { (path, a) =>
+      val transform = a.string("transform").trim
+      if (bucketWrite)
+        throw new UnsupportedOperationException(
+          "evolve_spec through a bucketWrite catalog: the catalog " +
+            "statically declares bucket(8, k) — conflicting layout " +
+            "declarations; use a plain or partman catalog")
+      val BucketRe = """bucket\((\d+)\)""".r
+      val d: (String, Int) = transform match {
+        case "identity" => ("identity", 0)
+        case BucketRe(m) =>
+          val mm = m.toInt
+          if (mm < 2) throw new IllegalArgumentException(
+            s"bucket($mm) is a degenerate single group — the modulus " +
+              "must be >= 2")
+          ("bucket", mm)
+        case other => throw new IllegalArgumentException(
+          s"unknown partition transform '$other' — supported: " +
+            "identity, bucket(<m>)")
+      }
+      if (SinkSource.currentVersion(path) == 0)
+        throw new IllegalStateException(
+          s"cannot evolve the spec of never-committed table $path")
+      if (SinkSource.branches(path).nonEmpty)
+        throw new UnsupportedOperationException(
+          s"cannot evolve the spec of $path: live branches borrow its " +
+            "files without era metadata — drop or promote them first")
+      // carry the head verbatim, swap only the spec pointer; a lost
+      // race re-checks against the new head (the no-op refusal must
+      // hold against what actually published)
+      // definitions are append-only: find-or-add, then point at it
+      var specId = 0
+      val newV = SinkSource.publishCas(path, "evolve_spec") { head =>
+        if (head.specs(head.currentSpec) == d)
+          throw new IllegalArgumentException(
+            s"$transform is already the current spec of $path")
+        specId = head.specs.collectFirst { case (id, `d`) => id }
+          .getOrElse(head.specs.keys.max + 1)
+        head.copy(specs = head.specs + (specId -> d), currentSpec = specId)
+      }
+      Seq(newV, specId, transform)
+    }
+
+  /** `CALL <cat>.build_bloom('<table>', '<column>', <bits_per_row>)` —
+    * per-file BLOOM FILTER indexes, the skipping mechanism for POINT
+    * lookups on columns clustering can't help: zone maps prune by
+    * range, so on an append-grown (or deliberately unclustered) table
+    * every file spans the domain and `v = X` opens everything; a bloom
+    * answers "X is definitely absent from this file" whatever the
+    * layout. The build is DISTRIBUTED — one task per data file hashes
+    * the column's values into a bitset sized from the file's exact row
+    * count (manifest metadata) and writes it as a sidecar under
+    * blooms/ (the Iceberg-puffin shape: stats files beside data files,
+    * referenced by metadata); the publish is one CAS manifest commit
+    * adding `#bloom` headers. Blooms describe immutable file bytes, so
+    * headers carry forward like zone maps and drop with their files —
+    * rewritten files (compact/rewrite) simply lose coverage until the
+    * next build, which is sound (absence = cannot skip). Tombstoned
+    * rows stay IN the bloom: an over-approximation of presence can
+    * only open more files, never lose rows.
+    * Scale notes (100 TB): plan-time probing reads only the CANDIDATE
+    * files' bitsets (small sidecar reads, parallel to how engines read
+    * parquet footers), and a bitset is bits_per_row × rows — ~1.25 KB
+    * per million rows per bit — metadata-proportional, never a data
+    * scan after the one-off build.
+    */
+  def buildBloom(root: String): SinkProcedure = SinkProcedure(
+      root, "build_bloom",
+      "build per-file bloom filters over a BIGINT column for point-lookup skipping",
+      Seq("column" -> StringType, "bits_per_row" -> IntegerType),
+      Seq("files_indexed" -> LongType, "column" -> StringType)) { (path, a) =>
+    val column = a.string("column")
+    val bitsPerRow = a.int("bits_per_row")
+    if (bitsPerRow < 1 || bitsPerRow > 64)
+      throw new IllegalArgumentException(
+        s"bits_per_row must be in [1, 64], got $bitsPerRow")
+    val head = SinkSource.state(path)
+    val fld = SinkSchemas.fields(path, head.schemaId)
+      .find(_.name == column).getOrElse(
+        throw new IllegalArgumentException(s"no column $column on $path"))
+    if (fld.dt != LongType)
+      throw new UnsupportedOperationException(
+        s"bloom indexes cover BIGINT columns; $column is " +
+          SinkSchemas.typeName(fld.dt))
+    val fieldsOf = SinkSource.fileFields(path, head)
+    // (file, absPath, position of the field in the FILE's schema,
+    // mBits, kHashes) per file that HAS the field; files predating
+    // the column are skipped — their rows have no values to index
+    // and absence of a header is the sound "cannot skip"
+    val salt = java.util.UUID.randomUUID().toString.take(8)
+    val bloomsDir = new Path(path, "blooms").toString
+    // INCREMENTAL by construction: files already carrying a bloom
+    // for this field keep their header (a bloom describes
+    // immutable file bytes — rebuilding it buys nothing), so a
+    // repeated CALL costs only the uncovered files. With the
+    // write path maintaining blooms on every append (the head's
+    // headers ARE the policy, [[SinkSource.bloomPolicy]]), the
+    // steady state is ZERO uncovered files and the CALL is pure
+    // metadata — the one-off full pass happens exactly once.
+    val work = head.files.toSeq
+      // borrowed branch refs are another table's bytes — skipped;
+      // absence of a header is the sound "cannot skip"
+      .filterNot { case (fl, _) => fl.contains("/") }
+      .collect { case (fl, m) if !m.blooms.exists(_._1 == fld.id) =>
+        (fl, m.rows) }
+      .flatMap { case (fl, rows) =>
+        val pos = fieldsOf(fl).indexWhere(_.id == fld.id)
+        if (pos < 0) None
+        else {
+          val mBits = math.max(64L, rows * bitsPerRow)
+            .min(1L << 26).toInt // cap: 8 MB of bits per file
+          val k = math.max(1,
+            math.round(mBits.toDouble / math.max(1L, rows) * 0.693)).toInt
+          Some((fl, new Path(path, s"data/$fl").toString, pos, mBits, k))
+        }
+      }.zipWithIndex
+    val spark = org.apache.spark.sql.SparkSession.active
+    // distributed build: one task per file streams its lines,
+    // hashes the column into the bitset, writes the sidecar
+    val built = spark.sparkContext
+      .parallelize(work, math.max(1, work.size))
+      .map { case ((fl, abs, pos, mBits, k), idx) =>
+        val bits = new Array[Byte]((mBits + 7) / 8)
+        val ls = new SinkSource.LineStream(abs)
+        try while (ls.hasNext) {
+          val c = ls.next().split('|')
+          if (pos < c.length) {
+            val raw = c(pos)
+            if (raw != "\\N" && raw.nonEmpty)
+              SinkSource.SinkBloom.add(bits, mBits, k, raw.toLong)
           }
-        val row: InternalRow = new GenericInternalRow(Array[Any](
-          built.size.toLong,
-          org.apache.spark.unsafe.types.UTF8String.fromString(column)))
-        val result: Scan = new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("files_indexed", LongType, nullable = false),
-            StructField("column", StringType, nullable = false)))
-        }
-        util.Arrays.asList(result).iterator()
+        } finally ls.close()
+        val name = s"bl_${salt}_$idx.bin"
+        val f = SinkSource.fs(bloomsDir)
+        f.mkdirs(new Path(bloomsDir))
+        val out = f.create(new Path(bloomsDir, name), true)
+        try out.write(bits) finally out.close()
+        (fl, (mBits, k, name))
+      }.collect().toMap // file-count-sized: header metadata only
+    // fully covered already: publish nothing (a no-op CALL must
+    // not burn a version), report zero files indexed. Blooms
+    // commute with concurrent appends (their new files simply lack
+    // headers until the next build); the publish merges them with
+    // the file's other fields' blooms
+    if (built.nonEmpty)
+      SinkSource.publishCas(path, "bloom publish") { h =>
+        h.copy(files = h.files.map { case (fl, m) =>
+          fl -> built.get(fl).fold(m) { case (mBits, k, name) =>
+            m.copy(blooms = Seq((fld.id, mBits, k, name))) }
+        })
       }
+    Seq(built.size, column)
+  }
+
+  /** `CALL <cat>.branch('<table>', '<name>')` — SNAPSHOT BRANCHES: an
+    * isolated writable line of history over the SAME bytes (Iceberg
+    * branch refs / the write side of WAP, one step past q283's tags:
+    * tags pin immutable snapshots, a branch is a movable head you can
+    * COMMIT to). The branch is a full sink table under
+    * `t/_branch_<name>` whose first manifest cites the parent's data
+    * files by borrowed refs (`../../data/<f>`) — creation costs
+    * O(entries) metadata and zero data movement, and every table verb
+    * (reads, appends, time travel, CoW DML, compaction) works on the
+    * branch unchanged because it IS a table. Isolation is structural:
+    * branch commits publish under the branch dir, the parent's history
+    * never sees them; parent-side GC (truncate, delete, expire,
+    * orphans) treats branch citations as pins, so shared bytes survive
+    * whatever happens on main. Guard rails: branching a parent with an
+    * evolved schema, deletion vectors, or equality deletes is refused
+    * (the borrowed-ref form carries none of those sidecars).
+    * Scale notes (100 TB): staging a candidate corpus for audit must
+    * not copy the corpus — a branch is the metadata-only fork that
+    * makes write-audit-publish work at petabyte size.
+    */
+  def branch(root: String): SinkProcedure = SinkProcedure(
+      root, "branch", "fork a writable branch of the table over the same bytes",
+      Seq("branch_name" -> StringType),
+      Seq("branch_name" -> StringType, "base_version" -> LongType,
+        "n_files" -> LongType)) { (path, a) =>
+    val name = a.string("branch_name")
+    if (!name.forall(c => c.isLetterOrDigit || c == '_') || name.isEmpty)
+      throw new IllegalArgumentException(
+        s"branch names are [A-Za-z0-9_]+: '$name'")
+    val f = SinkSource.fs(path)
+    val branchDir = new Path(path, s"_branch_$name")
+    if (f.exists(branchDir))
+      throw new IllegalArgumentException(
+        s"branch $name already exists on $path")
+    val head = SinkSource.state(path)
+    if (head.schemaId != 0)
+      throw new UnsupportedOperationException(
+        s"cannot branch $path: evolved schemas do not travel through " +
+          "borrowed refs (compact/normalize first)")
+    if (head.vectorSidecar.nonEmpty || head.eqDeletes.nonEmpty)
+      throw new UnsupportedOperationException(
+        s"cannot branch $path: active tombstones do not travel " +
+          "through borrowed refs (compact to materialize them first)")
+    if (head.currentSpec != 0 || head.files.values.exists(_.spec != 0))
+      throw new UnsupportedOperationException(
+        s"cannot branch $path: evolved partition specs do not " +
+          "travel through borrowed refs (the branch manifest would " +
+          "lose file eras) — migrate with rewrite_clustered first")
+    f.mkdirs(branchDir)
+    SinkSource.publishCas(branchDir.toString, "branch") { b =>
+      b.copy(files = head.files.map { case (fl, m) =>
+        s"${SinkSource.BorrowedPrefix}$fl" ->
+          FileMeta(m.entries, stats = m.stats, nulls = m.nulls) })
     }
-}
+    SinkSource.writeBranches(path,
+      SinkSource.branches(path) + (name -> head.version))
+    Seq(name, head.version, head.files.size)
+  }
 
-/** `CALL <cat>.branch('<table>', '<name>')` — SNAPSHOT BRANCHES: an
-  * isolated writable line of history over the SAME bytes (Iceberg
-  * branch refs / the write side of WAP, one step past q283's tags:
-  * tags pin immutable snapshots, a branch is a movable head you can
-  * COMMIT to). The branch is a full sink table under
-  * `t/_branch_<name>` whose first manifest cites the parent's data
-  * files by borrowed refs (`../../data/<f>`) — creation costs
-  * O(entries) metadata and zero data movement, and every table verb
-  * (reads, appends, time travel, CoW DML, compaction) works on the
-  * branch unchanged because it IS a table. Isolation is structural:
-  * branch commits publish under the branch dir, the parent's history
-  * never sees them; parent-side GC (truncate, delete, expire,
-  * orphans) treats branch citations as pins, so shared bytes survive
-  * whatever happens on main. Guard rails: branching a parent with an
-  * evolved schema, deletion vectors, or equality deletes is refused
-  * (the borrowed-ref form carries none of those sidecars).
-  * Scale notes (100 TB): staging a candidate corpus for audit must
-  * not copy the corpus — a branch is the metadata-only fork that
-  * makes write-audit-publish work at petabyte size.
-  */
-class SinkBranchProcedure(root: String)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "branch"
-  override def description(): String =
-    "fork a writable branch of the table over the same bytes"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "branch"
-      override def description(): String =
-        SinkBranchProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("branch_name", StringType).build())
-      override def isDeterministic: Boolean = false
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val name = input.getUTF8String(1).toString
-        if (!name.forall(c => c.isLetterOrDigit || c == '_') || name.isEmpty)
-          throw new IllegalArgumentException(
-            s"branch names are [A-Za-z0-9_]+: '$name'")
-        val path = new Path(root, table).toString
-        val f = SinkSource.fs(path)
-        val branchDir = new Path(path, s"_branch_$name")
-        if (f.exists(branchDir))
-          throw new IllegalArgumentException(
-            s"branch $name already exists on $path")
-        val head = SinkSource.state(path)
-        if (head.schemaId != 0)
-          throw new UnsupportedOperationException(
-            s"cannot branch $path: evolved schemas do not travel through " +
-              "borrowed refs (compact/normalize first)")
-        if (head.vectorSidecar.nonEmpty || head.eqDeletes.nonEmpty)
-          throw new UnsupportedOperationException(
-            s"cannot branch $path: active tombstones do not travel " +
-              "through borrowed refs (compact to materialize them first)")
-        if (head.currentSpec != 0 || head.files.values.exists(_.spec != 0))
-          throw new UnsupportedOperationException(
-            s"cannot branch $path: evolved partition specs do not " +
-              "travel through borrowed refs (the branch manifest would " +
-              "lose file eras) — migrate with rewrite_clustered first")
-        f.mkdirs(branchDir)
-        SinkSource.publishCas(branchDir.toString, "branch") { b =>
-          b.copy(files = head.files.map { case (fl, m) =>
-            s"${SinkSource.BorrowedPrefix}$fl" ->
-              FileMeta(m.entries, stats = m.stats, nulls = m.nulls) })
-        }
-        SinkSource.writeBranches(path,
-          SinkSource.branches(path) + (name -> head.version))
-        val row: InternalRow = new GenericInternalRow(Array[Any](
-          org.apache.spark.unsafe.types.UTF8String.fromString(name),
-          head.version.toLong, head.files.size.toLong))
-        val result: Scan = new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("branch_name", StringType, nullable = false),
-            StructField("base_version", LongType, nullable = false),
-            StructField("n_files", LongType, nullable = false)))
-        }
-        util.Arrays.asList(result).iterator()
-      }
+  /** `CALL <cat>.fast_forward('<table>', '<name>')` — publish a
+    * branch's head onto main, the WAP promotion verb. Allowed ONLY when
+    * main has not moved since the branch last synchronized (the
+    * recorded base version) — there is no merge here, exactly Iceberg's
+    * fast-forward contract; a diverged main refuses loudly and the
+    * caller re-branches or rebases by hand. The publish translates the
+    * branch's entries: borrowed refs point back at main's own files
+    * (name restored), branch-local files MOVE into main's data dir
+    * (refuse-to-clobber), and the manifest lands as one CAS commit.
+    * The branch stays alive, re-based onto the published version — a
+    * caught-up branch fast-forwards as a no-op; `drop_branch` retires
+    * it. Guard rails: a branch carrying tombstones or a schema evolved
+    * away from main's is refused, like `branch`'s.
+    * Scale notes (100 TB): promotion costs the moved files' RENAMES
+    * plus one manifest — metadata-proportional, like every lifecycle
+    * verb here; the audited candidate becomes visible to consumers
+    * atomically.
+    */
+  def fastForward(root: String): SinkProcedure = SinkProcedure(
+      root, "fast_forward",
+      "publish a branch head onto main (refuses when main diverged)",
+      Seq("branch_name" -> StringType),
+      Seq("new_version" -> LongType, "files_moved" -> LongType,
+        "n_rows" -> LongType)) { (path, a) =>
+    val name = a.string("branch_name")
+    val f = SinkSource.fs(path)
+    val branchDir = new Path(path, s"_branch_$name")
+    val base = SinkSource.branches(path).getOrElse(name,
+      throw new java.util.NoSuchElementException(
+        s"no branch $name on $path"))
+    val cur = SinkSource.currentVersion(path)
+    if (cur != base)
+      throw new SinkConflictException(
+        s"cannot fast-forward $name onto $path: main advanced from " +
+          s"v$base to v$cur since the branch synchronized (no merge " +
+          "semantics here — re-branch or rebase)")
+    val branch = SinkSource.state(branchDir.toString)
+    if (branch.vectorSidecar.nonEmpty || branch.eqDeletes.nonEmpty)
+      throw new UnsupportedOperationException(
+        s"branch $name carries tombstones; compact it first")
+    if (branch.schemaId != SinkSource.state(path, Some(cur)).schemaId)
+      throw new UnsupportedOperationException(
+        s"cannot fast-forward $name onto $path: the branch evolved " +
+          "its schema, and evolved schemas do not travel through " +
+          "the promotion (main would cite its files under its own " +
+          "schema and drop the new columns)")
+    def local(fl: String): String =
+      if (fl.startsWith(SinkSource.BorrowedPrefix))
+        fl.stripPrefix(SinkSource.BorrowedPrefix)
+      else fl
+    // COPY branch-local files in first (refuse-to-clobber: names
+    // carry commit tags, a collision is a real conflict). Copy,
+    // not rename: the manifest CAS below can LOSE, and a moved
+    // file would leave the branch manifest citing bytes that left
+    // its directory (branch unreadable) while main never cites
+    // them (orphan sweep could delete them — unrecoverable loss
+    // of branch-only rows on a mere race). With a copy the branch
+    // stays intact until the CAS wins; the branch-side originals
+    // are deleted only AFTER the borrowed-ref republish, so a
+    // crash anywhere leaks bytes, never rows.
+    val dataDir = new Path(path, "data")
+    f.mkdirs(dataDir)
+    var moved = 0L
+    val localFiles = branch.files.keys.toSeq.sorted
+      .filterNot(_.startsWith(SinkSource.BorrowedPrefix))
+    localFiles.foreach { fl =>
+      val dest = new Path(dataDir, fl)
+      if (f.exists(dest))
+        throw new IllegalStateException(
+          s"refusing to publish over existing data file: $dest")
+      if (!org.apache.hadoop.fs.FileUtil.copy(
+          f, new Path(branchDir, s"data/$fl"), f, dest,
+          false, SinkSource.hadoopConf))
+        throw new IllegalStateException(
+          s"branch file publish failed: $fl")
+      moved += 1
     }
-}
-
-/** `CALL <cat>.fast_forward('<table>', '<name>')` — publish a
-  * branch's head onto main, the WAP promotion verb. Allowed ONLY when
-  * main has not moved since the branch last synchronized (the
-  * recorded base version) — there is no merge here, exactly Iceberg's
-  * fast-forward contract; a diverged main refuses loudly and the
-  * caller re-branches or rebases by hand. The publish translates the
-  * branch's entries: borrowed refs point back at main's own files
-  * (name restored), branch-local files MOVE into main's data dir
-  * (refuse-to-clobber), and the manifest lands as one CAS commit.
-  * The branch stays alive, re-based onto the published version — a
-  * caught-up branch fast-forwards as a no-op; `drop_branch` retires
-  * it. Guard rails: a branch carrying tombstones or a schema evolved
-  * away from main's is refused, like `branch`'s.
-  * Scale notes (100 TB): promotion costs the moved files' RENAMES
-  * plus one manifest — metadata-proportional, like every lifecycle
-  * verb here; the audited candidate becomes visible to consumers
-  * atomically.
-  */
-class SinkFastForwardProcedure(root: String)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "fast_forward"
-  override def description(): String =
-    "publish a branch head onto main (refuses when main diverged)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "fast_forward"
-      override def description(): String =
-        SinkFastForwardProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("branch_name", StringType).build())
-      override def isDeterministic: Boolean = false
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val name = input.getUTF8String(1).toString
-        val path = new Path(root, table).toString
-        val f = SinkSource.fs(path)
-        val branchDir = new Path(path, s"_branch_$name")
-        val base = SinkSource.branches(path).getOrElse(name,
-          throw new java.util.NoSuchElementException(
-            s"no branch $name on $path"))
-        val cur = SinkSource.currentVersion(path)
-        if (cur != base)
+    // the branch's files under `name`: a file the target already
+    // cites keeps its metadata there, a new one brings its entries,
+    // zone maps and null counts under the target's schema id
+    def cite(target: TableState, name: String => String): TableState =
+      target.copy(files = branch.files.map { case (fl, m) =>
+        name(fl) -> target.files.getOrElse(name(fl),
+          FileMeta(m.entries, target.schemaId, m.stats, m.nulls))
+      })
+    val newV =
+      try SinkSource.publishCas(path, "fast_forward") { head =>
+        if (head.version != cur)
           throw new SinkConflictException(
-            s"cannot fast-forward $name onto $path: main advanced from " +
-              s"v$base to v$cur since the branch synchronized (no merge " +
-              "semantics here — re-branch or rebase)")
-        val branch = SinkSource.state(branchDir.toString)
-        if (branch.vectorSidecar.nonEmpty || branch.eqDeletes.nonEmpty)
-          throw new UnsupportedOperationException(
-            s"branch $name carries tombstones; compact it first")
-        if (branch.schemaId != SinkSource.state(path, Some(cur)).schemaId)
-          throw new UnsupportedOperationException(
-            s"cannot fast-forward $name onto $path: the branch evolved " +
-              "its schema, and evolved schemas do not travel through " +
-              "the promotion (main would cite its files under its own " +
-              "schema and drop the new columns)")
-        def local(fl: String): String =
-          if (fl.startsWith(SinkSource.BorrowedPrefix))
-            fl.stripPrefix(SinkSource.BorrowedPrefix)
-          else fl
-        // COPY branch-local files in first (refuse-to-clobber: names
-        // carry commit tags, a collision is a real conflict). Copy,
-        // not rename: the manifest CAS below can LOSE, and a moved
-        // file would leave the branch manifest citing bytes that left
-        // its directory (branch unreadable) while main never cites
-        // them (orphan sweep could delete them — unrecoverable loss
-        // of branch-only rows on a mere race). With a copy the branch
-        // stays intact until the CAS wins; the branch-side originals
-        // are deleted only AFTER the borrowed-ref republish, so a
-        // crash anywhere leaks bytes, never rows.
-        val dataDir = new Path(path, "data")
-        f.mkdirs(dataDir)
-        var moved = 0L
-        val localFiles = branch.files.keys.toSeq.sorted
-          .filterNot(_.startsWith(SinkSource.BorrowedPrefix))
-        localFiles.foreach { fl =>
-          val dest = new Path(dataDir, fl)
-          if (f.exists(dest))
-            throw new IllegalStateException(
-              s"refusing to publish over existing data file: $dest")
-          if (!org.apache.hadoop.fs.FileUtil.copy(
-              f, new Path(branchDir, s"data/$fl"), f, dest,
-              false, SinkSource.hadoopConf))
-            throw new IllegalStateException(
-              s"branch file publish failed: $fl")
-          moved += 1
-        }
-        // the branch's files under `name`: a file the target already
-        // cites keeps its metadata there, a new one brings its entries,
-        // zone maps and null counts under the target's schema id
-        def cite(target: TableState, name: String => String): TableState =
-          target.copy(files = branch.files.map { case (fl, m) =>
-            name(fl) -> target.files.getOrElse(name(fl),
-              FileMeta(m.entries, target.schemaId, m.stats, m.nulls))
-          })
-        val newV =
-          try SinkSource.publishCas(path, "fast_forward") { head =>
-            if (head.version != cur)
-              throw new SinkConflictException(
-                s"cannot fast-forward $name onto $path: a commit raced " +
-                  "the promotion (main diverged)")
-            cite(head, local)
-          } catch {
-            case e: SinkConflictException =>
-              // lost the CAS: withdraw the copies so a retried
-              // promotion doesn't collide with its own strays; the
-              // branch directory was never touched, so the branch
-              // remains fully readable
-              localFiles.foreach { fl =>
-                try f.delete(new Path(dataDir, fl), false)
-                catch { case _: Exception => }
-              }
-              throw e
+            s"cannot fast-forward $name onto $path: a commit raced " +
+              "the promotion (main diverged)")
+        cite(head, local)
+      } catch {
+        case e: SinkConflictException =>
+          // lost the CAS: withdraw the copies so a retried
+          // promotion doesn't collide with its own strays; the
+          // branch directory was never touched, so the branch
+          // remains fully readable
+          localFiles.foreach { fl =>
+            try f.delete(new Path(dataDir, fl), false)
+            catch { case _: Exception => }
           }
-        // the branch is now CAUGHT UP: re-point its base at the
-        // published version, and republish the branch HEAD with its
-        // promoted files cited as borrowed refs — the authoritative
-        // bytes live in main's data dir now.
-        SinkSource.writeBranches(path,
-          SinkSource.branches(path) + (name -> newV))
-        SinkSource.publishCas(branchDir.toString, "fast_forward")(
-          cite(_, fl => s"${SinkSource.BorrowedPrefix}${local(fl)}"))
-        // the branch head now cites the bytes in MAIN's data dir via
-        // borrowed refs — the branch-side copies are redundant; drop
-        // them last (a crash before this point leaks the copies, and
-        // pre-promotion branch snapshots citing the old local names
-        // fail loudly on time travel — the usual vanished-file
-        // contract)
-        localFiles.foreach { fl =>
-          try f.delete(new Path(branchDir, s"data/$fl"), false)
-          catch { case _: Exception => }
-        }
-        val row: InternalRow = new GenericInternalRow(Array[Any](
-          newV.toLong, moved, branch.entries.map(_._3).sum))
-        val result: Scan = new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("new_version", LongType, nullable = false),
-            StructField("files_moved", LongType, nullable = false),
-            StructField("n_rows", LongType, nullable = false)))
-        }
-        util.Arrays.asList(result).iterator()
+          throw e
       }
+    // the branch is now CAUGHT UP: re-point its base at the
+    // published version, and republish the branch HEAD with its
+    // promoted files cited as borrowed refs — the authoritative
+    // bytes live in main's data dir now.
+    SinkSource.writeBranches(path,
+      SinkSource.branches(path) + (name -> newV))
+    SinkSource.publishCas(branchDir.toString, "fast_forward")(
+      cite(_, fl => s"${SinkSource.BorrowedPrefix}${local(fl)}"))
+    // the branch head now cites the bytes in MAIN's data dir via
+    // borrowed refs — the branch-side copies are redundant; drop
+    // them last (a crash before this point leaks the copies, and
+    // pre-promotion branch snapshots citing the old local names
+    // fail loudly on time travel — the usual vanished-file
+    // contract)
+    localFiles.foreach { fl =>
+      try f.delete(new Path(branchDir, s"data/$fl"), false)
+      catch { case _: Exception => }
     }
-}
+    Seq(newV, moved, branch.entries.map(_._3).sum)
+  }
 
-/** `CALL <cat>.drop_branch('<table>', '<name>')` — retire a branch:
-  * remove its ref and its directory. Branch-LOCAL files die with it;
-  * borrowed refs are citations, not bytes, so the parent's data is
-  * untouched — and dropping the branch releases its GC pins (the
-  * next expire/truncate may reclaim what only the branch kept
-  * alive). */
-class SinkDropBranchProcedure(root: String)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-
-  override def name(): String = "drop_branch"
-  override def description(): String =
-    "retire a branch (parent bytes are untouched; GC pins release)"
-
-  override def bind(inputType: StructType): BoundProcedure =
-    new BoundProcedure {
-      override def name(): String = "drop_branch"
-      override def description(): String =
-        SinkDropBranchProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("table", StringType).build(),
-        ProcedureParameter.in("branch_name", StringType).build())
-      override def isDeterministic: Boolean = false
-
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val name = input.getUTF8String(1).toString
-        val path = new Path(root, table).toString
-        val f = SinkSource.fs(path)
-        if (!SinkSource.branches(path).contains(name))
-          throw new java.util.NoSuchElementException(
-            s"no branch $name on $path")
-        SinkSource.writeBranches(path, SinkSource.branches(path) - name)
-        f.delete(new Path(path, s"_branch_$name"), true)
-        val row: InternalRow = new GenericInternalRow(Array[Any](
-          org.apache.spark.unsafe.types.UTF8String.fromString(name)))
-        val result: Scan = new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("dropped", StringType, nullable = false)))
-        }
-        util.Arrays.asList(result).iterator()
-      }
-    }
+  /** `CALL <cat>.drop_branch('<table>', '<name>')` — retire a branch:
+    * remove its ref and its directory. Branch-LOCAL files die with it;
+    * borrowed refs are citations, not bytes, so the parent's data is
+    * untouched — and dropping the branch releases its GC pins (the
+    * next expire/truncate may reclaim what only the branch kept
+    * alive). */
+  def dropBranch(root: String): SinkProcedure = SinkProcedure(
+      root, "drop_branch",
+      "retire a branch (parent bytes are untouched; GC pins release)",
+      Seq("branch_name" -> StringType), Seq("dropped" -> StringType)) {
+      (path, a) =>
+    val name = a.string("branch_name")
+    if (!SinkSource.branches(path).contains(name))
+      throw new java.util.NoSuchElementException(
+        s"no branch $name on $path")
+    SinkSource.writeBranches(path, SinkSource.branches(path) - name)
+    SinkSource.fs(path).delete(new Path(path, s"_branch_$name"), true)
+    Seq(name)
+  }
 }
 
 // ---- merge-on-read (deletion vectors) -----------------------------------
