@@ -970,7 +970,6 @@ object Dedup {
   // deterministic doc_id %% 2 half so the driver-side oracle (which
   // generates candidates from ANY shared shingle — a deliberately
   // independent, complete-but-quadratic-ish formulation) stays cheap.
-  private val SimJoinTau = 0.5
 
   // --------------------------------------------------------------------
   // q228 — PAIR EVIDENCE at span granularity: for every q32 verified

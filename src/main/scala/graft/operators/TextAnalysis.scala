@@ -1828,8 +1828,6 @@ object TextAnalysis {
   // space the same plan swaps bitmap_* for hll_sketch_agg /
   // hll_union_agg (Spark ships both; bounded state, approximate) —
   // the cube/rollup shape is unchanged.
-  val BitmapCubeLevels = Seq("corpus", "source", "source_lang")
-
   private[operators] def bitmapCube(docs: DataFrame): DataFrame =
     docs
       .select(col("source"), col("lang"),

@@ -240,36 +240,10 @@ class SinkChangesReaderFactory(readFields: Seq[SinkSchemas.SinkField])
 class SinkChangesMicroBatchStream(path: String, startingVersion: Int,
     maxVersionsPerTrigger: Option[Int],
     readFields: Seq[SinkSchemas.SinkField])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
-
-  private def offset(v: Int): Offset = new Offset {
-    override def json(): String = v.toString
-    override def toString: String = s"SinkChangesOffset($v)"
-  }
-  private def versionOf(o: Offset): Int = o.json().trim.toInt
+    extends SinkVersionStream(path, maxVersionsPerTrigger) {
+  import org.apache.spark.sql.connector.read.streaming.Offset
 
   override def initialOffset(): Offset = offset(math.max(0, startingVersion))
-  override def latestOffset(): Offset =
-    offset(SinkSource.currentVersion(path))
-  override def deserializeOffset(json: String): Offset =
-    offset(json.trim.toInt)
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxVersionsPerTrigger.map(n => SinkMaxVersions(n): ReadLimit)
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val cur = SinkSource.currentVersion(path)
-    limit match {
-      case SinkMaxVersions(n) => offset(math.min(cur, versionOf(start) + n))
-      case _ => offset(cur)
-    }
-  }
-
-  override def reportLatestOffset(): Offset =
-    offset(SinkSource.currentVersion(path))
 
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] =
@@ -277,9 +251,6 @@ class SinkChangesMicroBatchStream(path: String, startingVersion: Int,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new SinkChangesReaderFactory(readFields)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** Streams the partition's data file, emitting rows per its change

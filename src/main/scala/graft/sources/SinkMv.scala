@@ -43,11 +43,9 @@ object SinkMv {
     SinkSchemas.SinkField(2, "n_rows", org.apache.spark.sql.types.LongType),
     SinkSchemas.SinkField(3, "sum_v", org.apache.spark.sql.types.LongType))
 
-  private def fs(path: String) = SinkSource.fs(path)
-
   /** The source path recorded at create time (immutable metadata). */
   private[graft] def sourceOf(mvPath: String): String = {
-    val f = fs(mvPath)
+    val f = SinkSource.fs(mvPath)
     val mf = new Path(mvPath, "_mv.psv")
     if (!f.exists(mf))
       throw new java.util.NoSuchElementException(
@@ -73,14 +71,8 @@ object SinkMv {
       .groupBy(col("k"))
       .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
     publish(agg, mvPath, srcV)
-    val f = fs(mvPath)
-    val tmp = new Path(mvPath, s"_tmp_mv_${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write((srcPath + "\n").getBytes("UTF-8")) finally out.close()
-    if (!f.rename(tmp, new Path(mvPath, "_mv.psv"))) {
-      f.delete(tmp, true)
+    if (!SinkSource.publishFile(mvPath, "_mv.psv", srcPath + "\n"))
       throw new IllegalStateException(s"MV metadata publish failed: $mvPath")
-    }
     srcV
   }
 

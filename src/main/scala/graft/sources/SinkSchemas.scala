@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types._
 
 /** FIELD-ID'd schema versions for the sink format — the metadata that
@@ -136,30 +135,19 @@ object SinkSchemas {
     * schema version, not just the current one, so a dropped column's
     * id is never reused (reuse would make old files' bytes for the
     * dead column reappear under the new column's name). */
-  def maxFieldId(path: String): Int = {
-    val f = SinkSource.fs(path)
-    val root = new Path(path)
-    val historic =
-      if (!f.exists(root)) Seq.empty[Int]
-      else f.listStatus(root).map(_.getPath.getName)
-        .collect { case n if n.startsWith("_schema.v") && n.endsWith(".psv") =>
-          n.stripPrefix("_schema.v").stripSuffix(".psv").toInt }
-        .toSeq.flatMap(sid => fields(path, sid).map(_.id))
-    (historic ++ base.map(_.id)).max
-  }
+  def maxFieldId(path: String): Int =
+    (schemaIds(path).flatMap(sid => fields(path, sid).map(_.id)) ++
+      base.map(_.id)).max
+
+  /** Every stored schema id under `path` (`_schema.v<S>.psv`), ascending. */
+  private def schemaIds(path: String): Seq[Int] =
+    SinkSource.versionsOf(path, "_schema.v")
 
   /** Publish `newFields` as the next schema version (refuse-existing
     * rename — a concurrent store wins, and the loser gets the retryable
     * [[SinkCommitRaceException]]) and return its id. */
   def store(path: String, newFields: Seq[SinkField]): Int = {
-    val f = SinkSource.fs(path)
-    val root = new Path(path)
-    f.mkdirs(root)
-    val cur = f.listStatus(root).map(_.getPath.getName)
-      .collect { case n if n.startsWith("_schema.v") && n.endsWith(".psv") =>
-        n.stripPrefix("_schema.v").stripSuffix(".psv").toInt }
-      .foldLeft(0)(math.max)
-    val next = cur + 1
+    val next = schemaIds(path).lastOption.getOrElse(0) + 1
     val body = newFields
       .map { fl =>
         val head = s"${fl.id}|${fl.name}|${typeName(fl.dt)}"
@@ -167,14 +155,9 @@ object SinkSchemas {
           head + "|" + java.net.URLEncoder.encode(d, "UTF-8"))
       }
       .mkString("\n") + "\n"
-    val tmp = new Path(root, s"_tmp_schema_${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    if (!f.rename(tmp, new Path(root, s"_schema.v$next.psv"))) {
-      f.delete(tmp, true)
+    if (!SinkSource.publishFile(path, s"_schema.v$next.psv", body))
       throw new SinkCommitRaceException(
         s"lost a schema publish race at id $next under $path")
-    }
     next
   }
 
@@ -187,19 +170,11 @@ object SinkSchemas {
     * writes with the same fields resolve to the same id. */
   def ensure(path: String, newFields: Seq[SinkField]): Int = {
     if (newFields == base) return 0
-    val f = SinkSource.fs(path)
-    val root = new Path(path)
     // a lost store race re-lists (the winner may have published
     // exactly our fields — find-or-store must converge, not fail, now
     // that commit-time schema merges call this concurrently with ALTERs)
     SinkSource.retryRaces(path, "schema store", maxAttempts = 5) { _ =>
-      val existing =
-        if (!f.exists(root)) Seq.empty[Int]
-        else f.listStatus(root).map(_.getPath.getName)
-          .collect { case n if n.startsWith("_schema.v") && n.endsWith(".psv") =>
-            n.stripPrefix("_schema.v").stripSuffix(".psv").toInt }
-          .toSeq.sorted
-      existing.find(sid => fields(path, sid) == newFields)
+      schemaIds(path).find(sid => fields(path, sid) == newFields)
         .getOrElse(store(path, newFields))
     }
   }

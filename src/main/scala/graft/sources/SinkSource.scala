@@ -288,15 +288,53 @@ object SinkSource {
   /** Every manifest version present under `path` (`manifest.v<n>.psv`),
     * ascending — gaps where expiry removed history; empty when the
     * directory is absent. One directory listing. */
-  private[graft] def versions(path: String): Seq[Int] = {
-    val f = fs(path)
-    val root = new Path(path)
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).map(_.getPath.getName)
-      .collect { case n if n.startsWith("manifest.v") && n.endsWith(".psv") =>
-        n.stripPrefix("manifest.v").stripSuffix(".psv").toInt }
+  private[graft] def versions(path: String): Seq[Int] =
+    versionsOf(path, "manifest.v")
+
+  /** The versions `n` of the `<prefix><n>.psv` files in `dir`,
+    * ascending; empty when the directory is absent. Every versioned
+    * metadata family (manifests, schemas, constraints, refs) is listed
+    * through here. */
+  private[graft] def versionsOf(dir: String, prefix: String): Seq[Int] = {
+    val f = fs(dir)
+    val d = new Path(dir)
+    if (!f.exists(d)) Seq.empty
+    else f.listStatus(d).map(_.getPath.getName)
+      .collect { case n if n.startsWith(prefix) && n.endsWith(".psv") =>
+        n.stripPrefix(prefix).stripSuffix(".psv").toInt }
       .toSeq.sorted
   }
+
+  /** THE metadata-file publish: writes `body` to `dir/_tmp_<uuid>` and
+    * renames it to `dir/name`. The rename refuses an existing file, so
+    * of racing publishes of one name exactly one wins, and a reader at
+    * any instant sees the old file set or the new one, never a torn
+    * file. The loser deletes its tmp and gets `false`; each caller
+    * throws its own exception. Manifests, DV sidecars, schemas,
+    * constraints, refs and MV metadata all publish here; a crash
+    * between the create and the rename strands a `_tmp_` file for
+    * `remove_orphans`. */
+  private[graft] def publishFile(dir: String, name: String,
+      body: String): Boolean = {
+    val f = fs(dir)
+    val tmp = new Path(dir, s"_tmp_${java.util.UUID.randomUUID()}")
+    val out = f.create(tmp, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+    f.rename(tmp, new Path(dir, name)) || { f.delete(tmp, true); false }
+  }
+
+  /** A CAS over a versioned metadata family (`<prefix><n>.psv` in
+    * `dir`): `next(n)` renders the new version from the highest one, n
+    * (0 when none), and it publishes as n+1. A lost rename re-lists and
+    * re-plans, so racing updates all land and none is lost. */
+  private[sources] def publishNext(path: String, dir: String, prefix: String,
+      what: String)(next: Int => String): Unit =
+    retryRaces(path, what) { _ =>
+      val v = versionsOf(dir, prefix).lastOption.getOrElse(0)
+      if (!publishFile(dir, s"$prefix${v + 1}.psv", next(v)))
+        throw new SinkCommitRaceException(
+          s"lost a $what publish race at version ${v + 1} under $path")
+    }
 
   /** Best-effort `_head` hint refresh after a publish: racing writers
     * may interleave (last write wins — any of their values is a valid
@@ -777,9 +815,7 @@ object SinkSource {
   private[sources] def writeManifest(path: String, base: TableState,
       st: TableState): Int = {
     val next = base.version + 1
-    val f = fs(path)
-    val root = new Path(path)
-    f.mkdirs(root)
+    fs(path).mkdirs(new Path(path))
     val eqAll = st.eqDeletes
     val files = st.files.toSeq.sortBy(_._1).map { case (fl, m) =>
       val fresh = m.blooms.map(_._1).toSet
@@ -794,14 +830,9 @@ object SinkSource {
         java.util.UUID.randomUUID().toString.take(8)}.psv"
       val scBody = dvs.sorted.map { case (df, dv) => s"$df|$dv" }
         .mkString("\n") + "\n"
-      val scTmp = new Path(root, s"_tmp_sidecar_${java.util.UUID.randomUUID()}")
-      val scOut = f.create(scTmp, true)
-      try scOut.write(scBody.getBytes("UTF-8")) finally scOut.close()
-      if (!f.rename(scTmp, new Path(root, scName))) {
-        f.delete(scTmp, true)
+      if (!publishFile(path, scName, scBody))
         throw new IllegalStateException(
           s"sidecar publish failed under $path (salted name collision?)")
-      }
       s"#dv|$scName\n"
     }
     def perFile(tag: String)(body: FileMeta => Seq[String]): String =
@@ -831,14 +862,9 @@ object SinkSource {
       val sid = st.files(fl).sid
       if (sid == 0) s"$k|$fl|$n" else s"$k|$fl|$n|$sid"
     }.mkString("\n") + "\n"
-    val tmp = new Path(root, s"_tmp_manifest_${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    if (!f.rename(tmp, new Path(root, s"manifest.v$next.psv"))) {
-      f.delete(tmp, true)
+    if (!publishFile(path, s"manifest.v$next.psv", body))
       throw new SinkCommitRaceException(
         s"lost a manifest publish race at version $next under $path")
-    }
     writeHeadHint(path, next)
     next
   }
@@ -884,7 +910,8 @@ object SinkSource {
     * [[SinkCommitRaceException]] and giving up with
     * [[SinkConflictException]] after `maxAttempts`. Any other exception
     * (a failed validation) propagates at once. Manifest publishes ride
-    * it through [[publishCas]]; schema stores ride it directly. */
+    * it through [[publishCas]]; schema, constraint and ref updates ride
+    * it directly. */
   private[sources] def retryRaces[T](path: String, what: String,
       maxAttempts: Int = 10)(attempt: Int => T): T = {
     var n = 1
@@ -1085,38 +1112,53 @@ object SinkSource {
     }
   }
 
-  /** Named snapshot tags (`name -> version`); empty if never tagged. */
-  private[sources] def tags(path: String): Map[String, Int] = {
-    val f = fs(path)
-    val tf = new Path(path, "tags.psv")
-    if (!f.exists(tf)) Map.empty
-    else {
-      val in = f.open(tf)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      body.linesIterator.filter(_.nonEmpty).map { line =>
-        val c = line.split('|')
-        c(0) -> c(1).toInt
-      }.toMap
-    }
+  /** A table's REFS — named snapshot tags (`name -> version`) and
+    * branches (`name -> the MAIN version the branch last synchronized
+    * with`, at creation or fast-forward) — one map, as Iceberg keeps
+    * them. */
+  private[sources] final case class Refs(tags: Map[String, Int],
+      branches: Map[String, Int]) {
+    def body: String =
+      (tags.toSeq.sorted.map { case (n, v) => s"tag|$n|$v\n" } ++
+        branches.toSeq.sorted.map { case (n, v) => s"branch|$n|$v\n" }).mkString
   }
 
-  /** Set/move a tag: rewrite the tags file via tmp + swap. Tags are
-    * tiny metadata; the swap window is the same
-    * delete-then-rename discipline deleteWhere documents. */
-  private[sources] def writeTag(path: String, name: String, v: Int): Unit = {
-    val f = fs(path)
-    val all = tags(path) + (name -> v)
-    val body = all.toSeq.sorted.map { case (n, ver) => s"$n|$ver" }
-      .mkString("\n") + "\n"
-    val tmp = new Path(path, s"_tmp_tags_${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    val dest = new Path(path, "tags.psv")
-    if (f.exists(dest)) f.delete(dest, false)
-    if (!f.rename(tmp, dest))
-      throw new IllegalStateException(s"tag publish failed under $path")
-  }
+  /** Refs are a versioned family in their own directory
+    * (`_refs/v<n>.psv`, lines `tag|<name>|<v>` and `branch|<name>|<v>`):
+    * listing them stays O(ref updates), not O(manifests). Versions are
+    * never deleted, so a reader that listed version n can always open
+    * it. */
+  private def refsDir(path: String): String = new Path(path, "_refs").toString
+
+  private def refsAt(path: String, v: Int): Refs =
+    if (v == 0) Refs(Map.empty, Map.empty)
+    else {
+      val in = fs(path).open(new Path(refsDir(path), s"v$v.psv"))
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
+        .getLines().filter(_.nonEmpty).toList
+      finally in.close()
+      // kind|name|version — a tag name may itself hold '|'
+      def of(kind: String): Map[String, Int] = lines
+        .filter(_.startsWith(kind + "|")).map { l =>
+          val i = l.lastIndexOf('|')
+          l.substring(kind.length + 1, i) -> l.substring(i + 1).toInt
+        }.toMap
+      Refs(of("tag"), of("branch"))
+    }
+
+  /** The table's current refs: the highest refs version (none → empty). */
+  private[sources] def refs(path: String): Refs =
+    refsAt(path, versionsOf(refsDir(path), "v").lastOption.getOrElse(0))
+
+  private[sources] def tags(path: String): Map[String, Int] = refs(path).tags
+  private[graft] def branches(path: String): Map[String, Int] = refs(path).branches
+
+  /** Update the refs through their CAS ([[publishNext]]): racing tag
+    * and branch updates both land, and no reader ever sees a ref set
+    * with one of them missing. */
+  private[sources] def updateRefs(path: String, what: String)(
+      change: Refs => Refs): Unit =
+    publishNext(path, refsDir(path), "v", what)(v => change(refsAt(path, v)).body)
 
   // ---- bloom filters ------------------------------------------------------
 
@@ -1195,38 +1237,6 @@ object SinkSource {
     * which no locally-written file ever does — that is the GC guard's
     * discriminator. */
   private[sources] val BorrowedPrefix = "../../data/"
-
-  /** Branch refs of a table (`branches.psv`: name → the MAIN version
-    * the branch last synchronized with — creation or fast-forward). */
-  private[graft] def branches(path: String): Map[String, Int] = {
-    val f = fs(path)
-    val bf = new Path(path, "branches.psv")
-    if (!f.exists(bf)) Map.empty
-    else {
-      val in = f.open(bf)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      body.linesIterator.filter(_.nonEmpty).map { line =>
-        val c = line.split('|')
-        c(0) -> c(1).toInt
-      }.toMap
-    }
-  }
-
-  private[sources] def writeBranches(path: String,
-      all: Map[String, Int]): Unit = {
-    val f = fs(path)
-    val dest = new Path(path, "branches.psv")
-    if (all.isEmpty) { f.delete(dest, false); return }
-    val body = all.toSeq.sorted.map { case (n, v) => s"$n|$v" }
-      .mkString("\n") + "\n"
-    val tmp = new Path(path, s"_tmp_branches_${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    if (f.exists(dest)) f.delete(dest, false)
-    if (!f.rename(tmp, dest))
-      throw new IllegalStateException(s"branch-ref publish failed under $path")
-  }
 
   /** Parent data files any live branch still cites (borrowed refs
     * translated back to local names), across the branches' FULL
@@ -1568,21 +1578,22 @@ class SinkCatalog extends CatalogPlugin with TableCatalog
       case add: TableChange.AddConstraint =>
         add.constraint() match {
           case c: org.apache.spark.sql.connector.catalog.constraints.Check =>
-            val cur = SinkConstraints.load(path)
-            if (cur.exists(_._1 == c.name))
-              throw new IllegalArgumentException(
-                s"constraint ${c.name} already exists on $path")
-            SinkConstraints.store(path,
-              cur :+ ((c.name, c.enforced(), c.predicateSql())))
+            SinkConstraints.update(path, "ADD CONSTRAINT") { cur =>
+              if (cur.exists(_._1 == c.name))
+                throw new IllegalArgumentException(
+                  s"constraint ${c.name} already exists on $path")
+              cur :+ ((c.name, c.enforced(), c.predicateSql()))
+            }
           case other => throw new UnsupportedOperationException(
             s"only CHECK constraints are supported: $other")
         }
       case drop: TableChange.DropConstraint =>
-        val cur = SinkConstraints.load(path)
-        if (!cur.exists(_._1 == drop.name) && !drop.ifExists)
-          throw new IllegalArgumentException(
-            s"no constraint ${drop.name} on $path")
-        SinkConstraints.store(path, cur.filterNot(_._1 == drop.name))
+        SinkConstraints.update(path, "DROP CONSTRAINT") { cur =>
+          if (!cur.exists(_._1 == drop.name) && !drop.ifExists)
+            throw new IllegalArgumentException(
+              s"no constraint ${drop.name} on $path")
+          cur.filterNot(_._1 == drop.name)
+        }
       case other => throw new UnsupportedOperationException(
         s"alter not supported: $other")
     }
@@ -2046,67 +2057,44 @@ class SinkPartitionedTable(path: String, mor: Boolean = false)
 
 /** Constraint persistence: one `name<TAB>enforced<TAB>predicateSql`
   * line per constraint, published as VERSIONED files
-  * (`_constraints.v<N>.psv`, refuse-existing rename — the manifest's
-  * own discipline, round-16 judge ask). load() reads the highest
-  * version, so there is no delete-then-rename window in which a write
-  * plan observes ZERO constraints (an enforced CHECK silently not
-  * compiled in) or a crash loses them all; concurrent ALTERs race the
-  * same next version and the loser fails LOUDLY instead of silently
-  * dropping the other's change (no lost update). Dropping the last
+  * (`_constraints.v<N>.psv`, through [[SinkSource.publishFile]] — the
+  * manifest's own discipline). load() reads the highest version, so
+  * there is no delete-then-rename window in which a write plan
+  * observes ZERO constraints (an enforced CHECK silently not compiled
+  * in) or a crash loses them all. An update plans against version N
+  * and publishes N+1; a racing ALTER that took N+1 first makes it
+  * re-read and re-plan, so neither change is lost. Dropping the last
   * constraint publishes an EMPTY version — still atomic. Legacy
   * unversioned `_constraints.psv` files read as version 0. */
 private[sources] object SinkConstraints {
-  private def versionOf(name: String): Option[Int] =
-    if (name.startsWith("_constraints.v") && name.endsWith(".psv"))
-      name.stripPrefix("_constraints.v").stripSuffix(".psv").toIntOption
-    else None
-
-  private def currentFile(path: String): Option[Path] = {
+  private def at(path: String, v: Int): Seq[(String, Boolean, String)] = {
     val f = SinkSource.fs(path)
-    val root = new Path(path)
-    if (!f.exists(root)) return None
-    val versioned = f.listStatus(root).map(_.getPath.getName)
-      .flatMap(versionOf)
-    if (versioned.nonEmpty)
-      Some(new Path(path, s"_constraints.v${versioned.max}.psv"))
+    val file = new Path(path,
+      if (v == 0) "_constraints.psv" else s"_constraints.v$v.psv")
+    if (v == 0 && !f.exists(file)) Seq.empty
     else {
-      val legacy = new Path(path, "_constraints.psv")
-      if (f.exists(legacy)) Some(legacy) else None
+      val in = f.open(file)
+      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+      body.linesIterator.filter(_.nonEmpty).map { line =>
+        val c = line.split('\t')
+        (c(0), c(1).toBoolean, c(2))
+      }.toSeq
     }
   }
 
   def load(path: String): Seq[(String, Boolean, String)] =
-    currentFile(path) match {
-      case None => Seq.empty
-      case Some(file) =>
-        val f = SinkSource.fs(path)
-        val in = f.open(file)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        body.linesIterator.filter(_.nonEmpty).map { line =>
-          val c = line.split('\t')
-          (c(0), c(1).toBoolean, c(2))
-        }.toSeq
-    }
+    at(path, SinkSource.versionsOf(path, "_constraints.v").lastOption.getOrElse(0))
 
-  def store(path: String, cs: Seq[(String, Boolean, String)]): Unit = {
-    val f = SinkSource.fs(path)
-    val next = currentFile(path).flatMap(p => versionOf(p.getName))
-      .getOrElse(0) + 1
-    val body =
-      if (cs.isEmpty) ""
-      else cs.map { case (n, e, sql) => s"$n\t$e\t$sql" }
-        .mkString("\n") + "\n"
-    val tmp = new Path(path, s"_tmp_constraints_${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    val dest = new Path(path, s"_constraints.v$next.psv")
-    if (!f.rename(tmp, dest)) {
-      f.delete(tmp, true)
-      throw new IllegalStateException(
-        s"lost a constraint publish race at version $next under $path — retry")
-    }
-  }
+  /** Publish `change(current constraints)` as the next version, re-planned
+    * on every lost race. */
+  def update(path: String, what: String)(change: Seq[(String, Boolean,
+      String)] => Seq[(String, Boolean, String)]): Unit =
+    SinkSource.publishNext(path, path, "_constraints.v", what)(v =>
+      change(at(path, v)).map { case (n, e, sql) => s"$n\t$e\t$sql\n" }.mkString)
+
+  def store(path: String, cs: Seq[(String, Boolean, String)]): Unit =
+    update(path, "constraint store")(_ => cs)
 }
 
 /** Key-aligned predicate arithmetic shared by the metadata-exact
@@ -2630,7 +2618,7 @@ object SinkProcedure {
     * is a metadata pointer swap, unpublishing is moving it back.
     * Scale notes (100 TB): WAP is how corpus releases ship — ingest
     * continuously, gate consumers on 'published', and promotion costs
-    * one tiny file swap regardless of table size. Tagging a version 0
+    * one tiny refs publish regardless of table size. Tagging a version 0
     * or a GC'd snapshot fails loudly at READ time (q263's pinned-read
     * contract), never silently serves the wrong data.
     */
@@ -2641,7 +2629,8 @@ object SinkProcedure {
     val v = a.int("version")
     val tagName = a.string("tag_name")
     inHistory(path, v, "cannot tag version")
-    SinkSource.writeTag(path, tagName, v)
+    SinkSource.updateRefs(path, "tag")(r =>
+      r.copy(tags = r.tags + (tagName -> v)))
     Seq(tagName, v)
   }
 
@@ -2749,7 +2738,8 @@ object SinkProcedure {
     * deliberately leaves out: files REFERENCED BY NO manifest at all
     * (a crashed commit's just-renamed data files whose manifest never
     * landed, lost-race deletion-vector sidecars' vectors, abandoned
-    * staging attempts). Expiry must not touch them because an
+    * staging attempts, `_tmp_` files of crashed metadata publishes).
+    * Expiry must not touch them because an
     * unreferenced file might be a CONCURRENT commit's just-published
     * rename — which is exactly what the GRACE WINDOW is for: only
     * files whose modification time is at least `grace_ms` old are
@@ -2783,25 +2773,29 @@ object SinkProcedure {
     // equality-delete value files are deletes/-dir citations too
     val citedVecs = states.flatMap(st =>
       st.vectorSidecar.map(_._2) ++ st.eqDeletes.map(_._1)).toSet
-    def sweep(dir: String, cited: Set[String]): Long = {
-      val d = new Path(path, dir)
+    def sweep(d: Path)(orphan: String => Boolean): Long = {
       if (!f.exists(d)) return 0L
       f.listStatus(d)
-        .filter(st => !cited.contains(st.getPath.getName) &&
+        .filter(st => orphan(st.getPath.getName) &&
           st.getModificationTime <= cutoff)
         .count { st =>
           try f.delete(st.getPath, false)
           catch { case _: Exception => false }
         }.toLong
     }
-    val dataRemoved = sweep("data", citedData)
-    val vecsRemoved = sweep("deletes", citedVecs)
+    val dataRemoved = sweep(new Path(path, "data"))(!citedData(_))
+    val vecsRemoved = sweep(new Path(path, "deletes"))(!citedVecs(_))
     // bloom sidecars: cited by `#bloom` headers; uncited bitsets
     // (dropped files' blooms, lost build races) are orphans too —
     // folded into the vector count (both are stats-sidecar debris)
     val citedBlooms =
       states.flatMap(_.files.values.flatMap(_.blooms.map(_._4))).toSet
-    val bloomsRemoved = sweep("blooms", citedBlooms)
+    val bloomsRemoved = sweep(new Path(path, "blooms"))(!citedBlooms(_))
+    // crashed metadata publishes: a `_tmp_` file that never got its
+    // rename (beside the manifests, or among the refs) — nothing reads
+    // one, so age is the only question; counted as staging debris
+    val tmpsRemoved = Seq(new Path(path), new Path(path, "_refs"))
+      .map(sweep(_)(_.startsWith("_tmp_"))).sum
     // abandoned staging ATTEMPTS (crashed queries): whole attempt
     // dirs whose newest content predates the grace cutoff —
     // nothing under _staging is ever readable, so age is the only
@@ -2821,7 +2815,7 @@ object SinkProcedure {
         try f.delete(st.getPath, true)
         catch { case _: Exception => false }
       }.toLong
-    Seq(dataRemoved, vecsRemoved + bloomsRemoved, stagingRemoved)
+    Seq(dataRemoved, vecsRemoved + bloomsRemoved, stagingRemoved + tmpsRemoved)
   }
 
   /** `CALL <cat>.rollback('<table>', <version>)` — HISTORY-PRESERVING
@@ -3225,8 +3219,8 @@ object SinkProcedure {
         s"${SinkSource.BorrowedPrefix}$fl" ->
           FileMeta(m.entries, stats = m.stats, nulls = m.nulls) })
     }
-    SinkSource.writeBranches(path,
-      SinkSource.branches(path) + (name -> head.version))
+    SinkSource.updateRefs(path, "branch")(r =>
+      r.copy(branches = r.branches + (name -> head.version)))
     Seq(name, head.version, head.files.size)
   }
 
@@ -3338,8 +3332,8 @@ object SinkProcedure {
     // published version, and republish the branch HEAD with its
     // promoted files cited as borrowed refs — the authoritative
     // bytes live in main's data dir now.
-    SinkSource.writeBranches(path,
-      SinkSource.branches(path) + (name -> newV))
+    SinkSource.updateRefs(path, "fast_forward")(r =>
+      r.copy(branches = r.branches + (name -> newV)))
     SinkSource.publishCas(branchDir.toString, "fast_forward")(
       cite(_, fl => s"${SinkSource.BorrowedPrefix}${local(fl)}"))
     // the branch head now cites the bytes in MAIN's data dir via
@@ -3370,7 +3364,8 @@ object SinkProcedure {
     if (!SinkSource.branches(path).contains(name))
       throw new java.util.NoSuchElementException(
         s"no branch $name on $path")
-    SinkSource.writeBranches(path, SinkSource.branches(path) - name)
+    SinkSource.updateRefs(path, "drop_branch")(r =>
+      r.copy(branches = r.branches - name))
     SinkSource.fs(path).delete(new Path(path, s"_branch_$name"), true)
     Seq(name)
   }
@@ -4548,16 +4543,6 @@ class SinkTopNReader(file: String, cols: Seq[(Int, Boolean)], n: Int)
   override def close(): Unit = ()
 }
 
-/** CHANGELOG streaming reads over the sink: every committed manifest
-  * version is an OFFSET, and a micro-batch reads exactly the data
-  * files version `end` lists beyond version `start` — so any table
-  * written through the commit protocol is incrementally consumable
-  * with no extra change log (Delta-CDF's shape: the table IS the
-  * queue). Offsets are checkpointed by the engine and survive
-  * restarts; an append-only history replays exactly (a truncate
-  * rewrites file identity, which is precisely when a changelog
-  * consumer must resync anyway).
-  */
 /** The connector's unit of admission: at most `n` manifest VERSIONS
   * per micro-batch — the changelog analogue of Kafka's
   * maxOffsetsPerTrigger / the file source's maxFilesPerTrigger.
@@ -4568,40 +4553,31 @@ class SinkTopNReader(file: String, cols: Seq[(Int, Boolean)], n: Int)
 case class SinkMaxVersions(n: Int)
     extends org.apache.spark.sql.connector.read.streaming.ReadLimit
 
-class SinkMicroBatchStream(path: String,
-    maxVersionsPerTrigger: Option[Int] = None,
-    startingVersion: Option[Int] = None,
-    readFields: Seq[SinkSchemas.SinkField] = SinkSchemas.base)
+/** A micro-batch stream over a sink table whose OFFSETS are manifest
+  * versions. The offset JSON is the bare version number — checkpoints
+  * store it, so it never changes shape. With `maxVersionsPerTrigger=n`
+  * a trigger admits at most n versions beyond the start offset; the
+  * engine keeps triggering until the backlog drains, so a consumer that
+  * fell behind catches up in BOUNDED batches instead of one unbounded
+  * one. Without the option the default is all-available. Subclasses
+  * choose the initial offset and what a version window reads. */
+abstract class SinkVersionStream(path: String,
+    maxVersionsPerTrigger: Option[Int])
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
-  private def offset(v: Int): Offset = new Offset {
+  protected def offset(v: Int): Offset = new Offset {
     override def json(): String = v.toString
     override def toString: String = s"SinkOffset($v)"
   }
-  private def versionOf(o: Offset): Int = o.json().trim.toInt
+  protected def versionOf(o: Offset): Int = o.json().trim.toInt
 
-  /** `startingVersion = n` begins the changelog AT version n (delivers
-    * n and later): history before n is someone else's problem — the
-    * bootstrapping contract Delta's startingVersion / Kafka's
-    * startingOffsets give a NEW consumer that should not replay a
-    * table's whole past. Only consulted when no checkpoint exists; a
-    * restart resumes from the checkpointed offset as always. */
-  override def initialOffset(): Offset =
-    offset(startingVersion.fold(0)(v => math.max(0, v - 1)))
   override def latestOffset(): Offset =
     offset(SinkSource.currentVersion(path))
   override def deserializeOffset(json: String): Offset =
     offset(json.trim.toInt)
 
-  // ---- admission control (rate limiting) -------------------------------
-  /** With `maxVersionsPerTrigger=n`, a trigger admits at most n
-    * versions beyond the start offset; the engine keeps triggering
-    * until the backlog drains, so a consumer that fell behind catches
-    * up in BOUNDED batches instead of one unbounded one. Without the
-    * option the default is all-available (q267's behavior, unchanged).
-    */
   override def getDefaultReadLimit: ReadLimit =
     maxVersionsPerTrigger.map(n => SinkMaxVersions(n): ReadLimit)
       .getOrElse(ReadLimit.allAvailable())
@@ -4619,6 +4595,36 @@ class SinkMicroBatchStream(path: String,
   override def reportLatestOffset(): Offset =
     offset(SinkSource.currentVersion(path))
 
+  override def commit(end: Offset): Unit = ()
+  override def stop(): Unit = ()
+}
+
+/** CHANGELOG streaming reads over the sink: every committed manifest
+  * version is an OFFSET, and a micro-batch reads exactly the data
+  * files version `end` lists beyond version `start` — so any table
+  * written through the commit protocol is incrementally consumable
+  * with no extra change log (Delta-CDF's shape: the table IS the
+  * queue). Offsets are checkpointed by the engine and survive
+  * restarts; an append-only history replays exactly (a truncate
+  * rewrites file identity, which is precisely when a changelog
+  * consumer must resync anyway).
+  */
+class SinkMicroBatchStream(path: String,
+    maxVersionsPerTrigger: Option[Int] = None,
+    startingVersion: Option[Int] = None,
+    readFields: Seq[SinkSchemas.SinkField] = SinkSchemas.base)
+    extends SinkVersionStream(path, maxVersionsPerTrigger) {
+  import org.apache.spark.sql.connector.read.streaming.Offset
+
+  /** `startingVersion = n` begins the changelog AT version n (delivers
+    * n and later): history before n is someone else's problem — the
+    * bootstrapping contract Delta's startingVersion / Kafka's
+    * startingOffsets give a NEW consumer that should not replay a
+    * table's whole past. Only consulted when no checkpoint exists; a
+    * restart resumes from the checkpointed offset as always. */
+  override def initialOffset(): Offset =
+    offset(startingVersion.fold(0)(v => math.max(0, v - 1)))
+
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] = {
     val before = SinkSource.state(path, Some(versionOf(start))).files
@@ -4632,9 +4638,6 @@ class SinkMicroBatchStream(path: String,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new SinkReaderFactory(readFields = readFields)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** Streams one split, emitting the requested projection over the

@@ -73,6 +73,17 @@ class WarehouseSpec extends SparkSpec {
       r.getAs[Int]("medicamento_id") > 0 && r.getAs[Int]("fecha_id") > 0))
   }
 
+  test("fact_medical_formula keys resolve to January 2006 and the medicine types") {
+    val rows = wh.factMedicalFormula
+      .join(wh.dimFecha, Seq("fecha_id"))
+      .join(wh.dimMedicamento, Seq("medicamento_id"))
+      .collect()
+    assert(rows.forall(r => r.getAs[Int]("anio") == 2006 && r.getAs[Int]("mes_numero") == 1))
+    // A,B,C (F1) + A (F2); A,C generic, B comercial
+    val byTipo = rows.groupBy(_.getAs[String]("tipo_medicamento")).view.mapValues(_.length).toMap
+    assert(byTipo == Map("Genérico" -> 3, "Comercial" -> 1))
+  }
+
   test("fact_facturacion drops payments without preexistences (J7→J12) and fills empresa_id 0") {
     val rows = wh.factFacturacion.orderBy("valor_pagado").collect()
     assert(rows.length == 2) // C2's payment silently dropped
@@ -86,6 +97,17 @@ class WarehouseSpec extends SparkSpec {
     assert(rows.length == 1) // C1 @ I1 'Medellin' → 'Medellín' → region joins
     assert(rows.head.getAs[String]("cambio_a_eps") == "EPS Rival")
     assert(rows.head.getAs[Int]("region_id") > 0)
+  }
+
+  test("fact_retiro keys resolve to region Andina and a member from another EPS") {
+    val rows = wh.factRetiro
+      .join(wh.dimRegion, Seq("region_id"))
+      .join(wh.dimCotizante(keepProvieneOtraEps = true)
+        .select("cotizante_id", "proviene_otra_eps"), Seq("cotizante_id"))
+      .collect()
+    assert(rows.length == 1)
+    assert(rows.head.getAs[String]("region") == "Andina")
+    assert(rows.head.getAs[Boolean]("proviene_otra_eps"))
   }
 
   test("fact_servicio: positional union, role-playing dims, J27→J28 drop") {

@@ -79,4 +79,29 @@ class SinkOrphanSpec extends SparkSpec {
       .collect()(0)
     assert(r2.getLong(0) == 1L, s"backdated orphan must go: $r2")
   }
+
+  test("aged publish tmp files at the table root go; fresh ones stay") {
+    // a crash between a metadata publish's tmp create and its rename
+    // strands a `_tmp_*` file beside the manifests
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_orph_tmp").toString
+    import spark.implicits._
+    SinkSource.write(Seq((1L, 1L)).toDF("k", "v").coalesce(1),
+      s"$root/t", overwrite = true)
+    val f = SinkSource.fs(root)
+    plant(f, s"$root/t/_tmp_manifest_x")
+    plant(f, s"$root/t/_tmp_manifest_y")
+    f.setTimes(new Path(s"$root/t/_tmp_manifest_x"),
+      System.currentTimeMillis() - 120000L, -1)
+    catalogOn(root, "graft_orpht")
+    val r = spark.sql("CALL graft_orpht.remove_orphans('t', 60000)")
+      .collect()(0)
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((0L, 0L, 1L)),
+      s"counts: $r")
+    assert(!f.exists(new Path(s"$root/t/_tmp_manifest_x")),
+      "the aged publish tmp must go")
+    assert(f.exists(new Path(s"$root/t/_tmp_manifest_y")),
+      "a publish tmp inside the grace window may be in flight")
+    assert(SinkSource.load(spark, s"$root/t").count() == 1)
+  }
 }
