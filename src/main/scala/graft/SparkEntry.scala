@@ -6,44 +6,36 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Relational.q01PricingSummary(spark, "/root/testdata/sf0.001")
 
+  /** One registered query: its name, its builder, and the equivalent
+    * ANSI SQL DuckDB runs on the same parquet tables as its oracle. */
+  final case class Query(name: String,
+      run: (SparkSession, String) => DataFrame, oracle: String)
+
+  /** Every module's registry, concatenated once. */
+  lazy val registry: Seq[Query] = Seq(
+    graft.queries.Relational.registry,
+    graft.queries.StarSchema.registry,
+    graft.queries.EventsQueries.registry,
+    graft.queries.EtlParity.registry,
+    graft.operators.TextAnalysis.registry,
+    graft.operators.Dedup.registry,
+    graft.operators.Similarity.registry,
+    graft.operators.Multimodal.registry,
+    graft.queries.Profiling.registry,
+    graft.streaming.StreamingQueries.registry,
+    graft.queries.OperatorQueries.registry,
+    graft.sources.FormatQueries.registry,
+    graft.queries.StatsQueries.registry,
+    graft.queries.TimeSeriesQueries.registry,
+    graft.operators.Curation.registry,
+    graft.operators.ZOrder.registry,
+    graft.queries.PlannerMechanisms.registry).flatten
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.StarSchema.queries ++
-      graft.queries.EventsQueries.queries ++
-      graft.queries.EtlParity.queries ++
-      graft.operators.TextAnalysis.queries ++
-      graft.operators.Dedup.queries ++
-      graft.operators.Similarity.queries ++
-      graft.operators.Multimodal.queries ++
-      graft.queries.Profiling.queries ++
-      graft.streaming.StreamingQueries.queries ++
-      graft.queries.OperatorQueries.queries ++
-      graft.sources.FormatQueries.queries ++
-      graft.queries.StatsQueries.queries ++
-      graft.queries.TimeSeriesQueries.queries ++
-      graft.operators.Curation.queries ++
-      graft.operators.ZOrder.queries ++
-      graft.queries.PlannerMechanisms.queries
+    registry.map(q => q.name -> q.run).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+  /** For each key in queries, its oracle SQL. */
   def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracleSql ++
-      graft.queries.StarSchema.oracleSql ++
-      graft.queries.EventsQueries.oracleSql ++
-      graft.queries.EtlParity.oracleSql ++
-      graft.operators.TextAnalysis.oracleSql ++
-      graft.operators.Dedup.oracleSql ++
-      graft.operators.Similarity.oracleSql ++
-      graft.operators.Multimodal.oracleSql ++
-      graft.queries.Profiling.oracleSql ++
-      graft.streaming.StreamingQueries.oracleSql ++
-      graft.queries.OperatorQueries.oracleSql ++
-      graft.sources.FormatQueries.oracleSql ++
-      graft.queries.StatsQueries.oracleSql ++
-      graft.queries.TimeSeriesQueries.oracleSql ++
-      graft.operators.Curation.oracleSql ++
-      graft.operators.ZOrder.oracleSql ++
-      graft.queries.PlannerMechanisms.oracleSql
+    registry.map(q => q.name -> q.oracle).toMap
 }

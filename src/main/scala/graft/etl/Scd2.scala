@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -46,19 +46,4 @@ object Scd2 {
       (Seq(naturalKey) ++ attrs ++ Seq("version", "valid_from", "valid_to", "is_current"))
         .map(col): _*)
   }
-
-  /** As-of lookup: join facts to the dimension version that was valid
-    * at the fact's event date — the SCD2 dual of the reference's
-    * key-by-natural-key joins. LEFT join: facts dated before the key's
-    * first version (or with keys absent from the dimension) keep their
-    * row with null version columns instead of silently vanishing.
-    */
-  def asOfJoin(facts: DataFrame, dim: DataFrame, naturalKey: String,
-      eventDate: Column): DataFrame =
-    facts.join(dim,
-      facts(naturalKey) === dim(naturalKey) &&
-        eventDate >= dim("valid_from") &&
-        (dim("valid_to").isNull || eventDate < dim("valid_to")),
-      "left")
-      .drop(dim(naturalKey))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1812,67 +1813,35 @@ object Curation {
        |  doc_id, a, b
        |FROM segs ORDER BY shard, win, seg""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q202_packing_masks" -> q202PackingMasks,
-    "q199_observed_gate" -> q199ObservedGate,
-    "q197_release_diff" -> q197ReleaseDiff,
-    "q192_selection_pipeline" -> q192SelectionPipeline,
-    "q182_release_pipeline" -> q182ReleasePipeline,
-    "q172_boilerplate_scrub" -> q172BoilerplateScrub,
-    "q168_k_anonymity" -> q168KAnonymity,
-    "q160_interleave_order" -> q160InterleaveOrder,
-    "q148_source_entropy" -> q148SourceEntropy,
-    "q149_temperature_mixture" -> q149TemperatureMixture,
-    "q134_kfold_split" -> q134KfoldSplit,
-    "q135_source_cap" -> q135SourceCap,
-    "q136_weighted_sample" -> q136WeightedSample,
-    "q212_contamination_levels" -> q212ContaminationLevels,
-    "q214_packing_waste" -> q214PackingWaste,
-    "q226_l_diversity" -> q226LDiversity,
-    "q230_dataset_card" -> q230DatasetCard,
-    "q67_contamination" -> q67Contamination,
-    "q68_tfidf_topterms" -> q68TfidfTopterms,
-    "q69_repetition" -> q69Repetition,
-    "q70_pii_scrub" -> q70PiiScrub,
-    "q71_source_mixture" -> q71SourceMixture,
-    "q74_sequence_packing" -> q74SequencePacking,
-    "q78_shard_manifest" -> q78ShardManifest,
-    "q81_training_pipeline" -> q81TrainingPipeline,
-    "q82_curation_pipeline" -> q82CurationPipeline,
-    "q86_bloom_contamination" -> q86BloomContamination,
-    "q89_compact_shards" -> q89CompactShards,
-    "q90_split_packing" -> q90SplitPacking,
-    "q104_token_mixture" -> q104TokenMixture)
-
-  def oracleSql: Map[String, String] = Map(
-    "q202_packing_masks" -> q202Oracle,
-    "q199_observed_gate" -> q199Oracle,
-    "q197_release_diff" -> q197Oracle,
-    "q192_selection_pipeline" -> q192Oracle,
-    "q182_release_pipeline" -> q182Oracle,
-    "q172_boilerplate_scrub" -> q172Oracle,
-    "q168_k_anonymity" -> q168Oracle,
-    "q160_interleave_order" -> q160Oracle,
-    "q148_source_entropy" -> q148Oracle,
-    "q149_temperature_mixture" -> q149Oracle,
-    "q134_kfold_split" -> q134Oracle,
-    "q135_source_cap" -> q135Oracle,
-    "q136_weighted_sample" -> q136Oracle,
-    "q212_contamination_levels" -> q212Oracle,
-    "q214_packing_waste" -> q214Oracle,
-    "q226_l_diversity" -> q226Oracle,
-    "q230_dataset_card" -> q230Oracle,
-    "q67_contamination" -> q67Oracle,
-    "q68_tfidf_topterms" -> q68Oracle,
-    "q69_repetition" -> q69Oracle,
-    "q70_pii_scrub" -> q70Oracle,
-    "q71_source_mixture" -> q71Oracle,
-    "q74_sequence_packing" -> q74Oracle,
-    "q78_shard_manifest" -> q78Oracle,
-    "q81_training_pipeline" -> q81Oracle,
-    "q82_curation_pipeline" -> q82Oracle,
-    "q86_bloom_contamination" -> q86Oracle,
-    "q89_compact_shards" -> q89Oracle,
-    "q90_split_packing" -> q90Oracle,
-    "q104_token_mixture" -> q104Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q202_packing_masks", q202PackingMasks, q202Oracle),
+    Query("q199_observed_gate", q199ObservedGate, q199Oracle),
+    Query("q197_release_diff", q197ReleaseDiff, q197Oracle),
+    Query("q192_selection_pipeline", q192SelectionPipeline, q192Oracle),
+    Query("q182_release_pipeline", q182ReleasePipeline, q182Oracle),
+    Query("q172_boilerplate_scrub", q172BoilerplateScrub, q172Oracle),
+    Query("q168_k_anonymity", q168KAnonymity, q168Oracle),
+    Query("q160_interleave_order", q160InterleaveOrder, q160Oracle),
+    Query("q148_source_entropy", q148SourceEntropy, q148Oracle),
+    Query("q149_temperature_mixture", q149TemperatureMixture, q149Oracle),
+    Query("q134_kfold_split", q134KfoldSplit, q134Oracle),
+    Query("q135_source_cap", q135SourceCap, q135Oracle),
+    Query("q136_weighted_sample", q136WeightedSample, q136Oracle),
+    Query("q212_contamination_levels", q212ContaminationLevels, q212Oracle),
+    Query("q214_packing_waste", q214PackingWaste, q214Oracle),
+    Query("q226_l_diversity", q226LDiversity, q226Oracle),
+    Query("q230_dataset_card", q230DatasetCard, q230Oracle),
+    Query("q67_contamination", q67Contamination, q67Oracle),
+    Query("q68_tfidf_topterms", q68TfidfTopterms, q68Oracle),
+    Query("q69_repetition", q69Repetition, q69Oracle),
+    Query("q70_pii_scrub", q70PiiScrub, q70Oracle),
+    Query("q71_source_mixture", q71SourceMixture, q71Oracle),
+    Query("q74_sequence_packing", q74SequencePacking, q74Oracle),
+    Query("q78_shard_manifest", q78ShardManifest, q78Oracle),
+    Query("q81_training_pipeline", q81TrainingPipeline, q81Oracle),
+    Query("q82_curation_pipeline", q82CurationPipeline, q82Oracle),
+    Query("q86_bloom_contamination", q86BloomContamination, q86Oracle),
+    Query("q89_compact_shards", q89CompactShards, q89Oracle),
+    Query("q90_split_packing", q90SplitPacking, q90Oracle),
+    Query("q104_token_mixture", q104TokenMixture, q104Oracle))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge
@@ -1351,43 +1352,23 @@ object Dedup {
       |FROM sc WHERE 3 * inter >= n_a + n_b
       |ORDER BY doc_a, doc_b""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q195_prefix_filter_join" -> q195PrefixFilterJoin,
-    "q157_cdc_chunks" -> q157CdcChunks,
-    "q159_dedup_provenance" -> q159DedupProvenance,
-    "q31_exact_dedup" -> q31ExactDedup,
-    "q32_minhash_neardup" -> q32MinhashNeardup,
-    "q33_simhash" -> q33Simhash,
-    "q40_ngram_jaccard" -> q40NgramJaccard,
-    "q56_dedup_keepers" -> q56DedupKeepers,
-    "q75_simhash_pairs" -> q75SimhashPairs,
-    "q76_dedup_clusters" -> q76DedupClusters,
-    "q211_dedup_yield" -> q211DedupYield,
-    "q215_lsh_recall_eval" -> q215LshRecallEval,
-    "q217_sketch_fidelity" -> q217SketchFidelity,
-    "q219_source_copy_matrix" -> q219SourceCopyMatrix,
-    "q228_pair_evidence" -> q228PairEvidence,
-    "q85_incremental_dedup" -> q85IncrementalDedup,
-    "q92_eval_split" -> q92EvalSplit,
-    "q95_dup_span_fraction" -> q95DupSpanFraction)
-
-  def oracleSql: Map[String, String] = Map(
-    "q195_prefix_filter_join" -> q195Oracle,
-    "q157_cdc_chunks" -> q157Oracle,
-    "q159_dedup_provenance" -> q159Oracle,
-    "q31_exact_dedup" -> q31Oracle,
-    "q32_minhash_neardup" -> q32Oracle,
-    "q33_simhash" -> q33Oracle,
-    "q40_ngram_jaccard" -> q40Oracle,
-    "q56_dedup_keepers" -> q56Oracle,
-    "q75_simhash_pairs" -> q75Oracle,
-    "q76_dedup_clusters" -> q76Oracle,
-    "q211_dedup_yield" -> q211Oracle,
-    "q215_lsh_recall_eval" -> q215Oracle,
-    "q217_sketch_fidelity" -> q217Oracle,
-    "q219_source_copy_matrix" -> q219Oracle,
-    "q228_pair_evidence" -> q228Oracle,
-    "q85_incremental_dedup" -> q85Oracle,
-    "q92_eval_split" -> q92Oracle,
-    "q95_dup_span_fraction" -> q95Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q195_prefix_filter_join", q195PrefixFilterJoin, q195Oracle),
+    Query("q157_cdc_chunks", q157CdcChunks, q157Oracle),
+    Query("q159_dedup_provenance", q159DedupProvenance, q159Oracle),
+    Query("q31_exact_dedup", q31ExactDedup, q31Oracle),
+    Query("q32_minhash_neardup", q32MinhashNeardup, q32Oracle),
+    Query("q33_simhash", q33Simhash, q33Oracle),
+    Query("q40_ngram_jaccard", q40NgramJaccard, q40Oracle),
+    Query("q56_dedup_keepers", q56DedupKeepers, q56Oracle),
+    Query("q75_simhash_pairs", q75SimhashPairs, q75Oracle),
+    Query("q76_dedup_clusters", q76DedupClusters, q76Oracle),
+    Query("q211_dedup_yield", q211DedupYield, q211Oracle),
+    Query("q215_lsh_recall_eval", q215LshRecallEval, q215Oracle),
+    Query("q217_sketch_fidelity", q217SketchFidelity, q217Oracle),
+    Query("q219_source_copy_matrix", q219SourceCopyMatrix, q219Oracle),
+    Query("q228_pair_evidence", q228PairEvidence, q228Oracle),
+    Query("q85_incremental_dedup", q85IncrementalDedup, q85Oracle),
+    Query("q92_eval_split", q92EvalSplit, q92Oracle),
+    Query("q95_dup_span_fraction", q95DupSpanFraction, q95Oracle))
 }

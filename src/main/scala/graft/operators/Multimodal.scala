@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -458,21 +459,12 @@ object Multimodal {
        |FROM sbits s LEFT JOIN comp c USING (doc_id)
        |ORDER BY doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q184_media_clusters" -> q184MediaClusters,
-    "q37_binary_meta" -> q37BinaryMeta,
-    "q38_multimodal_decode" -> q38MultimodalDecode,
-    "q53_frame_sample" -> q53FrameSample,
-    "q97_phash_dedup" -> q97PhashDedup,
-    "q171_phash64_dedup" -> q171Phash64Dedup,
-    "q154_crossmodal_keepers" -> q154CrossModalKeepers)
-
-  def oracleSql: Map[String, String] = Map(
-    "q184_media_clusters" -> q184Oracle,
-    "q37_binary_meta" -> q37Oracle,
-    "q38_multimodal_decode" -> q38Oracle,
-    "q53_frame_sample" -> q53Oracle,
-    "q97_phash_dedup" -> q97Oracle,
-    "q171_phash64_dedup" -> q171Oracle,
-    "q154_crossmodal_keepers" -> q154Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q184_media_clusters", q184MediaClusters, q184Oracle),
+    Query("q37_binary_meta", q37BinaryMeta, q37Oracle),
+    Query("q38_multimodal_decode", q38MultimodalDecode, q38Oracle),
+    Query("q53_frame_sample", q53FrameSample, q53Oracle),
+    Query("q97_phash_dedup", q97PhashDedup, q97Oracle),
+    Query("q171_phash64_dedup", q171Phash64Dedup, q171Oracle),
+    Query("q154_crossmodal_keepers", q154CrossModalKeepers, q154Oracle))
 }

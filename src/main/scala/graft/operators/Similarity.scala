@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -40,7 +41,7 @@ object Similarity {
   private def cosine(dotCol: Column, na: Column, nb: Column): Column =
     round(dotCol.cast("double") / sqrt(na.cast("double")) / sqrt(nb.cast("double")), 6)
 
-  private def withScaledNorm(df: DataFrame): DataFrame =
+  private[operators] def withScaledNorm(df: DataFrame): DataFrame =
     df.withColumn("sv", scaled).withColumn("nrm", dot(col("sv"), col("sv")))
 
   private val SqlScaled =
@@ -343,7 +344,7 @@ object Similarity {
   /** Band keys: element b is band b's bucket id, offset so keys are
     * globally unique across bands (b·2^rows + sign bits).
     */
-  private def bandKeysCol: Column = array((0 until PairBands).map { b =>
+  private[operators] def bandKeysCol: Column = array((0 until PairBands).map { b =>
     ((0 until PairRows).map { j =>
       val lits = array(pairPlanes(b * PairRows + j).map(v => lit(v.toLong)): _*)
       val proj = graft.functions.DotProductLong.dot_product_long(col("sv"), lits)
@@ -389,18 +390,6 @@ object Similarity {
         cosine(dot(col("asv"), col("sv")), col("anrm"), col("nrm")).as("cos"),
         (col("label_a") === col("label")).as("same_label"))
       .filter(col("cos") >= minCos)
-  }
-
-  /** Diagnostic: the largest single band-bucket's share of one band's
-    * rows. BandSkewSpec uses it to certify its fixture really
-    * concentrates a band's rows under one key.
-    */
-  private[operators] def bandedTopBucketShare(raw: DataFrame): Double = {
-    val all = withScaledNorm(raw).withColumn("bkeys", bandKeysCol)
-    val top = all.select(explode(col("bkeys")).as("bkey"))
-      .groupBy(col("bkey")).agg(count(lit(1)).as("n"))
-      .agg(max(col("n")).cast("double").as("mx")).collect()(0).getDouble(0)
-    top / raw.count()
   }
 
   def q77EmbeddingNeardupBucketed(spark: SparkSession, dir: String): DataFrame =
@@ -1408,45 +1397,24 @@ object Similarity {
        |ORDER BY u2.blk, u2.i""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q227_power_iteration" -> q227PowerIteration,
-    "q231_robust_scaling" -> q231RobustScaling,
-    "q209_subspace_cov" -> q209SubspaceCov,
-    "q210_knn_hubness" -> q210KnnHubness,
-    "q196_int8_quantize" -> q196Int8Quantize,
-    "q190_semantic_dedup" -> q190SemanticDedup,
-    "q188_hybrid_rrf" -> q188HybridRrf,
-    "q143_contrastive_pairs" -> q143ContrastivePairs,
-    "q161_dimension_stats" -> q161DimensionStats,
-    "q121_centroid_drift" -> q121CentroidDrift,
-    "q34_cosine_topk" -> q34CosineTopk,
-    "q35_lsh_ann" -> q35LshAnn,
-    "q36_embedding_neardup" -> q36EmbeddingNeardup,
-    "q77_embedding_neardup_bucketed" -> q77EmbeddingNeardupBucketed,
-    "q79_embedding_keepers" -> q79EmbeddingKeepers,
-    "q83_combined_keepers" -> q83CombinedKeepers,
-    "q87_quantized_rerank" -> q87QuantizedRerank,
-    "q156_knn_graph" -> q156KnnGraph,
-    "q165_jl_sketch" -> q165JlSketch)
-
-  def oracleSql: Map[String, String] = Map(
-    "q227_power_iteration" -> q227Oracle,
-    "q231_robust_scaling" -> q231Oracle,
-    "q209_subspace_cov" -> q209Oracle,
-    "q210_knn_hubness" -> q210Oracle,
-    "q196_int8_quantize" -> q196Oracle,
-    "q190_semantic_dedup" -> q190Oracle,
-    "q188_hybrid_rrf" -> q188Oracle,
-    "q143_contrastive_pairs" -> q143Oracle,
-    "q161_dimension_stats" -> q161Oracle,
-    "q121_centroid_drift" -> q121Oracle,
-    "q34_cosine_topk" -> q34Oracle,
-    "q35_lsh_ann" -> q35Oracle,
-    "q36_embedding_neardup" -> q36Oracle,
-    "q77_embedding_neardup_bucketed" -> q77Oracle,
-    "q79_embedding_keepers" -> q79Oracle,
-    "q83_combined_keepers" -> q83Oracle,
-    "q87_quantized_rerank" -> q87Oracle,
-    "q156_knn_graph" -> q156Oracle,
-    "q165_jl_sketch" -> q165Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q227_power_iteration", q227PowerIteration, q227Oracle),
+    Query("q231_robust_scaling", q231RobustScaling, q231Oracle),
+    Query("q209_subspace_cov", q209SubspaceCov, q209Oracle),
+    Query("q210_knn_hubness", q210KnnHubness, q210Oracle),
+    Query("q196_int8_quantize", q196Int8Quantize, q196Oracle),
+    Query("q190_semantic_dedup", q190SemanticDedup, q190Oracle),
+    Query("q188_hybrid_rrf", q188HybridRrf, q188Oracle),
+    Query("q143_contrastive_pairs", q143ContrastivePairs, q143Oracle),
+    Query("q161_dimension_stats", q161DimensionStats, q161Oracle),
+    Query("q121_centroid_drift", q121CentroidDrift, q121Oracle),
+    Query("q34_cosine_topk", q34CosineTopk, q34Oracle),
+    Query("q35_lsh_ann", q35LshAnn, q35Oracle),
+    Query("q36_embedding_neardup", q36EmbeddingNeardup, q36Oracle),
+    Query("q77_embedding_neardup_bucketed", q77EmbeddingNeardupBucketed, q77Oracle),
+    Query("q79_embedding_keepers", q79EmbeddingKeepers, q79Oracle),
+    Query("q83_combined_keepers", q83CombinedKeepers, q83Oracle),
+    Query("q87_quantized_rerank", q87QuantizedRerank, q87Oracle),
+    Query("q156_knn_graph", q156KnnGraph, q156Oracle),
+    Query("q165_jl_sketch", q165JlSketch, q165Oracle))
 }

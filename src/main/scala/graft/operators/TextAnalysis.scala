@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1944,67 +1945,35 @@ object TextAnalysis {
       |  TRUE AS direct_in_band, TRUE AS union_in_band
       |FROM tk GROUP BY 1 ORDER BY source""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q238_hll_rollup" -> q238HllRollup,
-    "q234_bitmap_cube" -> q234BitmapCube,
-    "q232_tokenizer_apply" -> q232TokenizerApply,
-    "q216_vocab_growth" -> q216VocabGrowth,
-    "q218_lang_fertility" -> q218LangFertility,
-    "q221_langid_confusion" -> q221LangIdConfusion,
-    "q222_rag_chunking" -> q222RagChunking,
-    "q229_curriculum_phases" -> q229CurriculumPhases,
-    "q224_ngram_diff" -> q224VocabDiff,
-    "q205_quality_calibration" -> q205QualityCalibration,
-    "q204_bpe_train" -> q204BpeTrain,
-    "q189_dsir_weights" -> q189DsirWeights,
-    "q187_bm25_retrieval" -> q187Bm25Retrieval,
-    "q179_unk_rewrite" -> q179UnkRewrite,
-    "q175_pmi_collocations" -> q175PmiCollocations,
-    "q152_array_surface" -> q152ArraySurface,
-    "q144_inverted_index" -> q144InvertedIndex,
-    "q138_boilerplate" -> q138Boilerplate,
-    "q139_source_overlap" -> q139SourceOverlap,
-    "q140_bpe_merges" -> q140BpeMerges,
-    "q141_vocab_coverage" -> q141VocabCoverage,
-    "q111_fuzzy_join" -> q111FuzzyJoin,
-    "q58_stratified_sample" -> q58StratifiedSample,
-    "q27_token_stats" -> q27TokenStats,
-    "q28_lang_id" -> q28LangId,
-    "q29_quality_score" -> q29QualityScore,
-    "q30_fingerprint" -> q30Fingerprint,
-    "q52_bpe_tokens" -> q52BpeTokens,
-    "q94_unigram_lm_score" -> q94UnigramLmScore,
-    "q158_bigram_lm_score" -> q158BigramLmScore)
-
-  def oracleSql: Map[String, String] = Map(
-    "q238_hll_rollup" -> q238Oracle,
-    "q234_bitmap_cube" -> q234Oracle,
-    "q216_vocab_growth" -> q216Oracle,
-    "q218_lang_fertility" -> q218Oracle,
-    "q221_langid_confusion" -> q221Oracle,
-    "q222_rag_chunking" -> q222Oracle,
-    "q229_curriculum_phases" -> q229Oracle,
-    "q224_ngram_diff" -> q224Oracle,
-    "q205_quality_calibration" -> q205Oracle,
-    "q204_bpe_train" -> q204Oracle,
-    "q232_tokenizer_apply" -> q232Oracle,
-    "q189_dsir_weights" -> q189Oracle,
-    "q187_bm25_retrieval" -> q187Oracle,
-    "q179_unk_rewrite" -> q179Oracle,
-    "q175_pmi_collocations" -> q175Oracle,
-    "q152_array_surface" -> q152Oracle,
-    "q144_inverted_index" -> q144Oracle,
-    "q138_boilerplate" -> q138Oracle,
-    "q139_source_overlap" -> q139Oracle,
-    "q140_bpe_merges" -> q140Oracle,
-    "q141_vocab_coverage" -> q141Oracle,
-    "q111_fuzzy_join" -> q111Oracle,
-    "q58_stratified_sample" -> q58Oracle,
-    "q27_token_stats" -> q27Oracle,
-    "q28_lang_id" -> q28Oracle,
-    "q29_quality_score" -> q29Oracle,
-    "q30_fingerprint" -> q30Oracle,
-    "q52_bpe_tokens" -> q52Oracle,
-    "q94_unigram_lm_score" -> q94Oracle,
-    "q158_bigram_lm_score" -> q158Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q238_hll_rollup", q238HllRollup, q238Oracle),
+    Query("q234_bitmap_cube", q234BitmapCube, q234Oracle),
+    Query("q232_tokenizer_apply", q232TokenizerApply, q232Oracle),
+    Query("q216_vocab_growth", q216VocabGrowth, q216Oracle),
+    Query("q218_lang_fertility", q218LangFertility, q218Oracle),
+    Query("q221_langid_confusion", q221LangIdConfusion, q221Oracle),
+    Query("q222_rag_chunking", q222RagChunking, q222Oracle),
+    Query("q229_curriculum_phases", q229CurriculumPhases, q229Oracle),
+    Query("q224_ngram_diff", q224VocabDiff, q224Oracle),
+    Query("q205_quality_calibration", q205QualityCalibration, q205Oracle),
+    Query("q204_bpe_train", q204BpeTrain, q204Oracle),
+    Query("q189_dsir_weights", q189DsirWeights, q189Oracle),
+    Query("q187_bm25_retrieval", q187Bm25Retrieval, q187Oracle),
+    Query("q179_unk_rewrite", q179UnkRewrite, q179Oracle),
+    Query("q175_pmi_collocations", q175PmiCollocations, q175Oracle),
+    Query("q152_array_surface", q152ArraySurface, q152Oracle),
+    Query("q144_inverted_index", q144InvertedIndex, q144Oracle),
+    Query("q138_boilerplate", q138Boilerplate, q138Oracle),
+    Query("q139_source_overlap", q139SourceOverlap, q139Oracle),
+    Query("q140_bpe_merges", q140BpeMerges, q140Oracle),
+    Query("q141_vocab_coverage", q141VocabCoverage, q141Oracle),
+    Query("q111_fuzzy_join", q111FuzzyJoin, q111Oracle),
+    Query("q58_stratified_sample", q58StratifiedSample, q58Oracle),
+    Query("q27_token_stats", q27TokenStats, q27Oracle),
+    Query("q28_lang_id", q28LangId, q28Oracle),
+    Query("q29_quality_score", q29QualityScore, q29Oracle),
+    Query("q30_fingerprint", q30Fingerprint, q30Oracle),
+    Query("q52_bpe_tokens", q52BpeTokens, q52Oracle),
+    Query("q94_unigram_lm_score", q94UnigramLmScore, q94Oracle),
+    Query("q158_bigram_lm_score", q158BigramLmScore, q158Oracle))
 }

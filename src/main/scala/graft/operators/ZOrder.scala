@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -72,9 +73,6 @@ object ZOrder {
        |FROM base
        |ORDER BY o_orderkey""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q102_zorder" -> q102ZOrder)
-
-  def oracleSql: Map[String, String] = Map(
-    "q102_zorder" -> q102Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q102_zorder", q102ZOrder, q102Oracle))
 }

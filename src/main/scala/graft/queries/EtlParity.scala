@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -403,15 +404,9 @@ object EtlParity {
       |JOIN dim_fecha f ON rt.fecha_retiro = f.fecha
       |ORDER BY 1, 2, 3, 4, 5""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q26_etl_medical_formula" -> q26EtlMedicalFormula,
-    "q41_etl_facturacion" -> q41EtlFacturacion,
-    "q42_etl_servicio" -> q42EtlServicio,
-    "q43_etl_retiro" -> q43EtlRetiro)
-
-  def oracleSql: Map[String, String] = Map(
-    "q26_etl_medical_formula" -> q26Oracle,
-    "q41_etl_facturacion" -> q41Oracle,
-    "q42_etl_servicio" -> q42Oracle,
-    "q43_etl_retiro" -> q43Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q26_etl_medical_formula", q26EtlMedicalFormula, q26Oracle),
+    Query("q41_etl_facturacion", q41EtlFacturacion, q41Oracle),
+    Query("q42_etl_servicio", q42EtlServicio, q42Oracle),
+    Query("q43_etl_retiro", q43EtlRetiro, q43Oracle))
 }

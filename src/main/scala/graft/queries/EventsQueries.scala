@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -757,41 +758,22 @@ object EventsQueries {
       |    AS transcript
       |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q180_conversation_assembly" -> q180ConversationAssembly,
-    "q178_session_funnel" -> q178SessionFunnel,
-    "q176_rate_anomalies" -> q176RateAnomalies,
-    "q173_decayed_value" -> q173DecayedValue,
-    "q174_group_trend" -> q174GroupTrend,
-    "q142_trailing_wau" -> q142TrailingWau,
-    "q130_transitions" -> q130Transitions,
-    "q132_hopping_windows" -> q132HoppingWindows,
-    "q124_regex_extract" -> q124RegexExtract,
-    "q126_type_signature" -> q126TypeSignature,
-    "q23_event_windows" -> q23EventWindows,
-    "q24_sessionization" -> q24Sessionization,
-    "q25_json_extract" -> q25JsonExtract,
-    "q98_funnel" -> q98Funnel,
-    "q99_retention" -> q99Retention,
-    "q105_incremental_agg" -> q105IncrementalAgg,
-    "q162_retractable_agg" -> q162RetractableAgg)
-
-  def oracleSql: Map[String, String] = Map(
-    "q180_conversation_assembly" -> q180Oracle,
-    "q178_session_funnel" -> q178Oracle,
-    "q176_rate_anomalies" -> q176Oracle,
-    "q173_decayed_value" -> q173Oracle,
-    "q174_group_trend" -> q174Oracle,
-    "q142_trailing_wau" -> q142Oracle,
-    "q130_transitions" -> q130Oracle,
-    "q132_hopping_windows" -> q132Oracle,
-    "q124_regex_extract" -> q124Oracle,
-    "q126_type_signature" -> q126Oracle,
-    "q23_event_windows" -> q23Oracle,
-    "q24_sessionization" -> q24Oracle,
-    "q25_json_extract" -> q25Oracle,
-    "q98_funnel" -> q98Oracle,
-    "q99_retention" -> q99Oracle,
-    "q105_incremental_agg" -> q105Oracle,
-    "q162_retractable_agg" -> q162Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q180_conversation_assembly", q180ConversationAssembly, q180Oracle),
+    Query("q178_session_funnel", q178SessionFunnel, q178Oracle),
+    Query("q176_rate_anomalies", q176RateAnomalies, q176Oracle),
+    Query("q173_decayed_value", q173DecayedValue, q173Oracle),
+    Query("q174_group_trend", q174GroupTrend, q174Oracle),
+    Query("q142_trailing_wau", q142TrailingWau, q142Oracle),
+    Query("q130_transitions", q130Transitions, q130Oracle),
+    Query("q132_hopping_windows", q132HoppingWindows, q132Oracle),
+    Query("q124_regex_extract", q124RegexExtract, q124Oracle),
+    Query("q126_type_signature", q126TypeSignature, q126Oracle),
+    Query("q23_event_windows", q23EventWindows, q23Oracle),
+    Query("q24_sessionization", q24Sessionization, q24Oracle),
+    Query("q25_json_extract", q25JsonExtract, q25Oracle),
+    Query("q98_funnel", q98Funnel, q98Oracle),
+    Query("q99_retention", q99Retention, q99Oracle),
+    Query("q105_incremental_agg", q105IncrementalAgg, q105Oracle),
+    Query("q162_retractable_agg", q162RetractableAgg, q162Oracle))
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -249,29 +250,21 @@ object OperatorQueries {
   // pruning, exactly as q185. Compaction of accumulated small delta
   // files inside a cell partition is q89's job.
   def q200IvfDeltaMerge(spark: SparkSession, dir: String): DataFrame = {
-    val idxRoot = graft.sources.ShardPaths.resolve(spark, "q200_index", dir)
+    // the root is this run's alone (ShardPaths.fresh: single-writer,
+    // emptied per run): a failure between the standing write and the
+    // delta append throws before a frame is returned, and the next run
+    // starts empty, so no standing-only layout is ever served with the
+    // delta slice missing. The append itself still touches ONLY delta
+    // rows — the incremental semantics under test.
+    val idxRoot = graft.sources.ShardPaths.fresh(spark, "q200_index", dir)
     val all = Tables.embeddingsSharded(spark, dir)
       .select(col("vec_id"), col("embedding"))
     val standing = all.filter(col("vec_id") % 10 =!= 0)
     val delta = all.filter(col("vec_id") % 10 === 0)
     val index = IvfAnn.buildIndexFrom(standing, k = 8)
-    // STAGED publish: the standing write + delta append land in a temp
-    // dir and rename into place, so a failure (or a concurrent session
-    // on the same root) between the two writes can never leave a
-    // standing-only layout that later reads serve with the delta slice
-    // silently missing. The append itself still touches ONLY delta
-    // rows — the incremental semantics under test.
-    val cellsPath = new org.apache.hadoop.fs.Path(s"$idxRoot/cells")
-    val tmpPath = new org.apache.hadoop.fs.Path(s"$idxRoot/cells__tmp")
-    val fs = cellsPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(tmpPath)) fs.delete(tmpPath, true)
-    index.cells.write.mode("overwrite").partitionBy("cell")
-      .parquet(tmpPath.toString)
+    index.cells.write.partitionBy("cell").parquet(s"$idxRoot/cells")
     IvfAnn.assignTo(index, delta).write.mode("append").partitionBy("cell")
-      .parquet(tmpPath.toString)
-    if (fs.exists(cellsPath)) fs.delete(cellsPath, true)
-    if (!fs.rename(tmpPath, cellsPath))
-      throw new IllegalStateException(s"q200 cells publish failed: $cellsPath")
+      .parquet(s"$idxRoot/cells")
     val cells = spark.read.parquet(s"$idxRoot/cells")
       .select(col("vec_id"), col("cell").cast("int").as("cell"),
         col("sv"), col("nrm"))
@@ -1510,61 +1503,32 @@ object OperatorQueries {
        |FROM rr WHERE rerank_rk <= 3
        |ORDER BY query_id, rerank_rk""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q233_cross_rerank" -> q233CrossRerank,
-    "q213_recall_at_k" -> q213RecallAtK,
-    "q220_cell_balance" -> q220CellBalance,
-    "q223_hard_negatives" -> q223HardNegatives,
-    "q207_probe_sweep" -> q207ProbeSweep,
-    "q206_bitext_margin" -> q206BitextMargin,
-    "q201_bitext_mining" -> q201BitextMining,
-    "q198_filtered_ann" -> q198FilteredAnn,
-    "q147_triangles" -> q147Triangles,
-    "q137_pagerank" -> q137Pagerank,
-    "q57_topk_agg" -> q57TopkAgg,
-    "q66_asof_native" -> q66AsofNative,
-    "q47_asof_join" -> q47AsofJoin,
-    "q48_scd2_versions" -> q48Scd2Versions,
-    "q49_ivf_ann" -> q49IvfAnn,
-    "q185_ivf_persist" -> q185IvfPersist,
-    "q200_ivf_delta_merge" -> q200IvfDeltaMerge,
-    "q50_salted_count" -> q50SaltedCount,
-    "q51_salted_join" -> q51SaltedJoin,
-    "q93_merge_upsert" -> q93MergeUpsert,
-    "q100_ivf_trained" -> q100IvfTrained,
-    "q191_retrieval_eval" -> q191RetrievalEval,
-    "q109_snapshot_diff" -> q109SnapshotDiff,
-    "q115_hierarchy_closure" -> q115HierarchyClosure,
-    "q240_recursive_cte" -> q240RecursiveCte,
-    "q120_temporal_lookup" -> q120TemporalLookup,
-    "q127_attribution" -> q127Attribution)
-
-  def oracleSql: Map[String, String] = Map(
-    "q213_recall_at_k" -> q213Oracle,
-    "q233_cross_rerank" -> q233Oracle,
-    "q220_cell_balance" -> q220Oracle,
-    "q223_hard_negatives" -> q223Oracle,
-    "q207_probe_sweep" -> q207Oracle,
-    "q206_bitext_margin" -> q206Oracle,
-    "q201_bitext_mining" -> q201Oracle,
-    "q198_filtered_ann" -> q198Oracle,
-    "q147_triangles" -> q147Oracle,
-    "q137_pagerank" -> q137Oracle,
-    "q57_topk_agg" -> q57Oracle,
-    "q66_asof_native" -> q47Oracle,
-    "q47_asof_join" -> q47Oracle,
-    "q48_scd2_versions" -> q48Oracle,
-    "q49_ivf_ann" -> q49Oracle,
-    "q185_ivf_persist" -> q185Oracle,
-    "q200_ivf_delta_merge" -> q200Oracle,
-    "q50_salted_count" -> q50Oracle,
-    "q51_salted_join" -> q51Oracle,
-    "q93_merge_upsert" -> q93Oracle,
-    "q100_ivf_trained" -> q100Oracle,
-    "q191_retrieval_eval" -> q191Oracle,
-    "q109_snapshot_diff" -> q109Oracle,
-    "q115_hierarchy_closure" -> q115Oracle,
-    "q240_recursive_cte" -> q240Oracle,
-    "q120_temporal_lookup" -> q120Oracle,
-    "q127_attribution" -> q127Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q233_cross_rerank", q233CrossRerank, q233Oracle),
+    Query("q213_recall_at_k", q213RecallAtK, q213Oracle),
+    Query("q220_cell_balance", q220CellBalance, q220Oracle),
+    Query("q223_hard_negatives", q223HardNegatives, q223Oracle),
+    Query("q207_probe_sweep", q207ProbeSweep, q207Oracle),
+    Query("q206_bitext_margin", q206BitextMargin, q206Oracle),
+    Query("q201_bitext_mining", q201BitextMining, q201Oracle),
+    Query("q198_filtered_ann", q198FilteredAnn, q198Oracle),
+    Query("q147_triangles", q147Triangles, q147Oracle),
+    Query("q137_pagerank", q137Pagerank, q137Oracle),
+    Query("q57_topk_agg", q57TopkAgg, q57Oracle),
+    Query("q66_asof_native", q66AsofNative, q47Oracle),
+    Query("q47_asof_join", q47AsofJoin, q47Oracle),
+    Query("q48_scd2_versions", q48Scd2Versions, q48Oracle),
+    Query("q49_ivf_ann", q49IvfAnn, q49Oracle),
+    Query("q185_ivf_persist", q185IvfPersist, q185Oracle),
+    Query("q200_ivf_delta_merge", q200IvfDeltaMerge, q200Oracle),
+    Query("q50_salted_count", q50SaltedCount, q50Oracle),
+    Query("q51_salted_join", q51SaltedJoin, q51Oracle),
+    Query("q93_merge_upsert", q93MergeUpsert, q93Oracle),
+    Query("q100_ivf_trained", q100IvfTrained, q100Oracle),
+    Query("q191_retrieval_eval", q191RetrievalEval, q191Oracle),
+    Query("q109_snapshot_diff", q109SnapshotDiff, q109Oracle),
+    Query("q115_hierarchy_closure", q115HierarchyClosure, q115Oracle),
+    Query("q240_recursive_cte", q240RecursiveCte, q240Oracle),
+    Query("q120_temporal_lookup", q120TemporalLookup, q120Oracle),
+    Query("q127_attribution", q127Attribution, q127Oracle))
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -642,33 +643,18 @@ object PlannerMechanisms {
       |FROM c JOIN s ON c.k = s.k
       |ORDER BY nationkey""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q273_reported_ordering" -> q273ReportedOrdering,
-    "q268_v2_columnar_scan" -> q268V2ColumnarScan,
-    "q266_v2_runtime_filter" -> q266V2RuntimeFilter,
-    "q259_v2_function_catalog" -> q259V2FunctionCatalog,
-    "q257_aqe_join_demotion" -> q257AqeJoinDemotion,
-    "q245_null_aware_anti_join" -> q245NullAwareAntiJoin,
-    "q246_collation_group" -> q246CollationGroup,
-    "q247_exchange_reuse" -> q247ExchangeReuse,
-    "q248_aqe_empty_relation" -> q248AqeEmptyRelation,
-    "q249_existence_join" -> q249ExistenceJoin,
-    "q251_storage_partitioned_join" -> q251StoragePartitionedJoin,
-    "q254_sql_functions" -> q254SqlFunctions,
-    "q255_manifest_pruning" -> q255ManifestPruning)
-
-  def oracleSql: Map[String, String] = Map(
-    "q273_reported_ordering" -> q273Oracle,
-    "q268_v2_columnar_scan" -> q268Oracle,
-    "q266_v2_runtime_filter" -> q266Oracle,
-    "q259_v2_function_catalog" -> q259Oracle,
-    "q257_aqe_join_demotion" -> q257Oracle,
-    "q245_null_aware_anti_join" -> q245Oracle,
-    "q246_collation_group" -> q246Oracle,
-    "q247_exchange_reuse" -> q247Oracle,
-    "q248_aqe_empty_relation" -> q248Oracle,
-    "q249_existence_join" -> q249Oracle,
-    "q251_storage_partitioned_join" -> q251Oracle,
-    "q254_sql_functions" -> q254Oracle,
-    "q255_manifest_pruning" -> q255Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q273_reported_ordering", q273ReportedOrdering, q273Oracle),
+    Query("q268_v2_columnar_scan", q268V2ColumnarScan, q268Oracle),
+    Query("q266_v2_runtime_filter", q266V2RuntimeFilter, q266Oracle),
+    Query("q259_v2_function_catalog", q259V2FunctionCatalog, q259Oracle),
+    Query("q257_aqe_join_demotion", q257AqeJoinDemotion, q257Oracle),
+    Query("q245_null_aware_anti_join", q245NullAwareAntiJoin, q245Oracle),
+    Query("q246_collation_group", q246CollationGroup, q246Oracle),
+    Query("q247_exchange_reuse", q247ExchangeReuse, q247Oracle),
+    Query("q248_aqe_empty_relation", q248AqeEmptyRelation, q248Oracle),
+    Query("q249_existence_join", q249ExistenceJoin, q249Oracle),
+    Query("q251_storage_partitioned_join", q251StoragePartitionedJoin, q251Oracle),
+    Query("q254_sql_functions", q254SqlFunctions, q254Oracle),
+    Query("q255_manifest_pruning", q255ManifestPruning, q255Oracle))
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -11,8 +12,8 @@ import graft.sources.Tables
   * scans. At 100 TB the same shape runs with
   * `approx_count_distinct` (HyperLogLog++, one pass, no shuffle of
   * distinct values); the exact form here is what the DuckDB gate can
-  * reproduce bit-for-bit. See ProfilingSpec for the HLL variant's
-  * accuracy check.
+  * reproduce bit-for-bit. q166 is the sketch form: per-group HLL
+  * sketches, merged.
   */
 object Profiling {
 
@@ -36,13 +37,6 @@ object Profiling {
     s"""SELECT COUNT(*) AS n_rows,
        |  $aggs
        |FROM lineitem""".stripMargin
-  }
-
-  /** The scale form: one pass, HLL sketches, no exact-distinct shuffle. */
-  def approxProfile(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    li.agg(count(lit(1)).as("n_rows"),
-      ProfiledCols.map(c => approx_count_distinct(col(c)).as(s"andv_$c")): _*)
   }
 
   // --------------------------------------------------------------------
@@ -308,19 +302,11 @@ object Profiling {
        |  FROM counts), s
        |WHERE rk <= $SkewTopK ORDER BY rk""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q177_key_skew_report" -> q177KeySkewReport,
-    "q39_profile_ndv" -> q39ProfileNdv,
-    "q101_dq_report" -> q101DqReport,
-    "q166_hll_profile" -> q166HllProfile,
-    "q169_quantile_profile" -> q169QuantileProfile,
-    "q170_cms_heavy_hitters" -> q170CmsHeavyHitters)
-
-  def oracleSql: Map[String, String] = Map(
-    "q177_key_skew_report" -> q177Oracle,
-    "q39_profile_ndv" -> q39Oracle,
-    "q101_dq_report" -> q101Oracle,
-    "q166_hll_profile" -> q166Oracle,
-    "q169_quantile_profile" -> q169Oracle,
-    "q170_cms_heavy_hitters" -> q170Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q177_key_skew_report", q177KeySkewReport, q177Oracle),
+    Query("q39_profile_ndv", q39ProfileNdv, q39Oracle),
+    Query("q101_dq_report", q101DqReport, q101Oracle),
+    Query("q166_hll_profile", q166HllProfile, q166Oracle),
+    Query("q169_quantile_profile", q169QuantileProfile, q169Oracle),
+    Query("q170_cms_heavy_hitters", q170CmsHeavyHitters, q170Oracle))
 }

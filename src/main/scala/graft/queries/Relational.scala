@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -10,7 +11,7 @@ import graft.sources.Tables
   * reference's operator inventory (SURVEY.md §2) re-expressed on the
   * TPC-H-ish tables so the driver's DuckDB oracle can check them.
   *
-  * Each query has a matching DuckDB oracle in [[Relational.oracleSql]];
+  * Each query has a matching DuckDB oracle in [[Relational.registry]];
   * the pair must produce bit-identical sorted results (driver gate).
   *
   * Determinism rules used throughout (oracle hash-compare is exact):
@@ -599,43 +600,23 @@ object Relational {
       |WHERE p_brand = 'Brand#13'
       |GROUP BY 1 ORDER BY p_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q237_runtime_filter" -> q237RuntimeFilter,
-    "q242_cbo_reorder" -> q242CboReorder,
-    "q243_aqe_skew_join" -> q243AqeSkewJoin,
-    "q01_pricing_summary" -> q01PricingSummary,
-    "q02_project_rename" -> q02ProjectRename,
-    "q03_filter" -> q03Filter,
-    "q04_star_join" -> q04StarJoin,
-    "q05_left_join_fill" -> q05LeftJoinFill,
-    "q06_left_then_inner" -> q06LeftThenInner,
-    "q07_natural_key_lookup" -> q07NaturalKeyLookup,
-    "q08_union_positional" -> q08UnionPositional,
-    "q09_union_by_name" -> q09UnionByName,
-    "q10_dedup_distinct" -> q10DedupDistinct,
-    "q11_split_explode" -> q11SplitExplode,
-    "q12_case_when" -> q12CaseWhen,
-    "q13_semi_join" -> q13SemiJoin,
-    "q14_anti_join" -> q14AntiJoin,
-    "q15_scalar_funcs" -> q15ScalarFuncs)
-
-  def oracleSql: Map[String, String] = Map(
-    "q237_runtime_filter" -> q237Oracle,
-    "q242_cbo_reorder" -> q242Oracle,
-    "q243_aqe_skew_join" -> q243Oracle,
-    "q01_pricing_summary" -> q01Oracle,
-    "q02_project_rename" -> q02Oracle,
-    "q03_filter" -> q03Oracle,
-    "q04_star_join" -> q04Oracle,
-    "q05_left_join_fill" -> q05Oracle,
-    "q06_left_then_inner" -> q06Oracle,
-    "q07_natural_key_lookup" -> q07Oracle,
-    "q08_union_positional" -> q08Oracle,
-    "q09_union_by_name" -> q09Oracle,
-    "q10_dedup_distinct" -> q10Oracle,
-    "q11_split_explode" -> q11Oracle,
-    "q12_case_when" -> q12Oracle,
-    "q13_semi_join" -> q13Oracle,
-    "q14_anti_join" -> q14Oracle,
-    "q15_scalar_funcs" -> q15Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q237_runtime_filter", q237RuntimeFilter, q237Oracle),
+    Query("q242_cbo_reorder", q242CboReorder, q242Oracle),
+    Query("q243_aqe_skew_join", q243AqeSkewJoin, q243Oracle),
+    Query("q01_pricing_summary", q01PricingSummary, q01Oracle),
+    Query("q02_project_rename", q02ProjectRename, q02Oracle),
+    Query("q03_filter", q03Filter, q03Oracle),
+    Query("q04_star_join", q04StarJoin, q04Oracle),
+    Query("q05_left_join_fill", q05LeftJoinFill, q05Oracle),
+    Query("q06_left_then_inner", q06LeftThenInner, q06Oracle),
+    Query("q07_natural_key_lookup", q07NaturalKeyLookup, q07Oracle),
+    Query("q08_union_positional", q08UnionPositional, q08Oracle),
+    Query("q09_union_by_name", q09UnionByName, q09Oracle),
+    Query("q10_dedup_distinct", q10DedupDistinct, q10Oracle),
+    Query("q11_split_explode", q11SplitExplode, q11Oracle),
+    Query("q12_case_when", q12CaseWhen, q12Oracle),
+    Query("q13_semi_join", q13SemiJoin, q13Oracle),
+    Query("q14_anti_join", q14AntiJoin, q14Oracle),
+    Query("q15_scalar_funcs", q15ScalarFuncs, q15Oracle))
 }

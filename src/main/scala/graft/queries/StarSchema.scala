@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -395,31 +396,17 @@ object StarSchema {
       |FROM orders JOIN dim ON o_custkey = c_custkey
       |GROUP BY 1 ORDER BY segmento""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q150_late_dimension" -> q150LateDimension,
-    "q117_unpivot" -> q117Unpivot,
-    "q118_window_surface" -> q118WindowSurface,
-    "q44_pivot" -> q44Pivot,
-    "q16_date_dim" -> q16DateDim,
-    "q17_surrogate_fact" -> q17SurrogateFact,
-    "q18_role_playing_dates" -> q18RolePlayingDates,
-    "q19_top_per_group" -> q19TopPerGroup,
-    "q241_lateral_topk" -> q241LateralTopk,
-    "q20_running_total" -> q20RunningTotal,
-    "q21_rollup" -> q21Rollup,
-    "q22_cube" -> q22Cube)
-
-  def oracleSql: Map[String, String] = Map(
-    "q150_late_dimension" -> q150Oracle,
-    "q117_unpivot" -> q117Oracle,
-    "q118_window_surface" -> q118Oracle,
-    "q44_pivot" -> q44Oracle,
-    "q16_date_dim" -> q16Oracle,
-    "q17_surrogate_fact" -> q17Oracle,
-    "q18_role_playing_dates" -> q18Oracle,
-    "q19_top_per_group" -> q19Oracle,
-    "q241_lateral_topk" -> q241Oracle,
-    "q20_running_total" -> q20Oracle,
-    "q21_rollup" -> q21Oracle,
-    "q22_cube" -> q22Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q150_late_dimension", q150LateDimension, q150Oracle),
+    Query("q117_unpivot", q117Unpivot, q117Oracle),
+    Query("q118_window_surface", q118WindowSurface, q118Oracle),
+    Query("q44_pivot", q44Pivot, q44Oracle),
+    Query("q16_date_dim", q16DateDim, q16Oracle),
+    Query("q17_surrogate_fact", q17SurrogateFact, q17Oracle),
+    Query("q18_role_playing_dates", q18RolePlayingDates, q18Oracle),
+    Query("q19_top_per_group", q19TopPerGroup, q19Oracle),
+    Query("q241_lateral_topk", q241LateralTopk, q241Oracle),
+    Query("q20_running_total", q20RunningTotal, q20Oracle),
+    Query("q21_rollup", q21Rollup, q21Oracle),
+    Query("q22_cube", q22Cube, q22Oracle))
 }

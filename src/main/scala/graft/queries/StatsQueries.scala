@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -776,41 +777,22 @@ object StatsQueries {
       |  round((n - expected) * (n - expected) / expected, 6) AS chi2_contrib
       |FROM ex ORDER BY half, bucket""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q208_drift_chi2" -> q208DriftChi2,
-    "q186_equidepth_buckets" -> q186EquiDepthBuckets,
-    "q131_grouping_sets" -> q131GroupingSets,
-    "q133_mode_per_group" -> q133ModePerGroup,
-    "q65_sql_surface" -> q65SqlSurface,
-    "q60_group_quantiles" -> q60GroupQuantiles,
-    "q61_histogram" -> q61Histogram,
-    "q62_corr_exact" -> q62CorrExact,
-    "q108_winsorize" -> q108Winsorize,
-    "q112_zscore_outliers" -> q112ZscoreOutliers,
-    "q114_correlated_subquery" -> q114CorrelatedSubquery,
-    "q116_global_median" -> q116GlobalMedian,
-    "q155_global_percentiles" -> q155GlobalPercentiles,
-    "q119_set_ops" -> q119SetOps,
-    "q123_equidepth_hist" -> q123EquidepthHist,
-    "q125_share_of_total" -> q125ShareOfTotal,
-    "q128_percent_of_parent" -> q128PercentOfParent)
-
-  def oracleSql: Map[String, String] = Map(
-    "q208_drift_chi2" -> q208Oracle,
-    "q186_equidepth_buckets" -> q186Oracle,
-    "q131_grouping_sets" -> q131Sql,
-    "q133_mode_per_group" -> q133Oracle,
-    "q65_sql_surface" -> q65Sql,
-    "q60_group_quantiles" -> q60Oracle,
-    "q61_histogram" -> q61Oracle,
-    "q62_corr_exact" -> q62Oracle,
-    "q108_winsorize" -> q108Oracle,
-    "q112_zscore_outliers" -> q112Oracle,
-    "q114_correlated_subquery" -> q114Sql,
-    "q116_global_median" -> q116Oracle,
-    "q155_global_percentiles" -> q155Oracle,
-    "q119_set_ops" -> q119Oracle,
-    "q123_equidepth_hist" -> q123Oracle,
-    "q125_share_of_total" -> q125Sql,
-    "q128_percent_of_parent" -> q128Sql)
+  def registry: Seq[Query] = Seq(
+    Query("q208_drift_chi2", q208DriftChi2, q208Oracle),
+    Query("q186_equidepth_buckets", q186EquiDepthBuckets, q186Oracle),
+    Query("q131_grouping_sets", q131GroupingSets, q131Sql),
+    Query("q133_mode_per_group", q133ModePerGroup, q133Oracle),
+    Query("q65_sql_surface", q65SqlSurface, q65Sql),
+    Query("q60_group_quantiles", q60GroupQuantiles, q60Oracle),
+    Query("q61_histogram", q61Histogram, q61Oracle),
+    Query("q62_corr_exact", q62CorrExact, q62Oracle),
+    Query("q108_winsorize", q108Winsorize, q108Oracle),
+    Query("q112_zscore_outliers", q112ZscoreOutliers, q112Oracle),
+    Query("q114_correlated_subquery", q114CorrelatedSubquery, q114Sql),
+    Query("q116_global_median", q116GlobalMedian, q116Oracle),
+    Query("q155_global_percentiles", q155GlobalPercentiles, q155Oracle),
+    Query("q119_set_ops", q119SetOps, q119Oracle),
+    Query("q123_equidepth_hist", q123EquidepthHist, q123Oracle),
+    Query("q125_share_of_total", q125ShareOfTotal, q125Sql),
+    Query("q128_percent_of_parent", q128PercentOfParent, q128Sql))
 }

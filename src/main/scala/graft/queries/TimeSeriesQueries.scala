@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -253,15 +254,9 @@ object TimeSeriesQueries {
       |SELECT day, max_concurrent, n_active
       |FROM peak JOIN active USING (day) ORDER BY day""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q106_range_join" -> q106RangeJoin,
-    "q107_rolling_features" -> q107RollingFeatures,
-    "q110_gap_fill" -> q110GapFill,
-    "q113_max_concurrency" -> q113MaxConcurrency)
-
-  def oracleSql: Map[String, String] = Map(
-    "q106_range_join" -> q106Oracle,
-    "q107_rolling_features" -> q107Oracle,
-    "q110_gap_fill" -> q110Oracle,
-    "q113_max_concurrency" -> q113Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q106_range_join", q106RangeJoin, q106Oracle),
+    Query("q107_rolling_features", q107RollingFeatures, q107Oracle),
+    Query("q110_gap_fill", q110GapFill, q110Oracle),
+    Query("q113_max_concurrency", q113MaxConcurrency, q113Oracle))
 }

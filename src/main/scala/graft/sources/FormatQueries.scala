@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.SparkEntry.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -638,14 +639,13 @@ object FormatQueries {
   // driver-side manifest swap as the only atomic point, task retries
   // resolved by attempt-unique staged names + message-listed winners.
   def q260V2CommitWrite(spark: SparkSession, dir: String): DataFrame = {
-    val root = ShardPaths.resolve(spark, "q260", dir)
+    val root = ShardPaths.fresh(spark, "q260", dir)
     val keyed = Tables.events(spark, dir)
-      .select((col("event_id") % 101).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(101))
       .repartition(8, col("k"))
     SinkSource.write(keyed, root, overwrite = true)
     SinkSource.load(spark, root)
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .orderBy(col("k"))
   }
 
@@ -673,18 +673,15 @@ object FormatQueries {
   // that safe to automate.
   def q261V2MetadataDelete(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q261", dir)
+    val root = ShardPaths.fresh(s, "q261", dir)
     val keyed = Tables.events(s, dir)
-      .select((col("event_id") % 101).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(101))
       .repartition(8, col("k"))
     SinkSource.write(keyed, s"$root/t", overwrite = true)
-    s.conf.set("spark.sql.catalog.graft_sink",
-      classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_sink.root", root)
+    SinkCatalog.register(s, "graft_sink", root)
     s.sql("DELETE FROM graft_sink.t WHERE k >= 64 OR k = 3")
     SinkSource.load(s, s"$root/t")
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .orderBy(col("k"))
   }
 
@@ -718,19 +715,17 @@ object FormatQueries {
   // cost.
   def q263TimeTravel(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q263", dir)
     // deterministic two-version history per invocation
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q263", dir)
     def keyed(pred: org.apache.spark.sql.Column) =
       Tables.events(s, dir).filter(pred)
-        .select((col("event_id") % 101).as("k"), col("event_id").as("v"))
+        .transform(Tables.keyed(101))
         .repartition(8, col("k"))
     SinkSource.write(keyed(col("event_id") % 3 =!= 0), s"$root/t",
       overwrite = true)                                     // manifest v1
     SinkSource.write(keyed(col("event_id") % 3 === 0), s"$root/t",
       overwrite = false)                                    // manifest v2
-    s.conf.set("spark.sql.catalog.graft_sink", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_sink.root", root)
+    SinkCatalog.register(s, "graft_sink", root)
     s.sql(
       """SELECT cur.k, snap.n_v1, cur.n_cur FROM
         |  (SELECT k, COUNT(*) AS n_cur FROM graft_sink.t GROUP BY k) cur
@@ -771,9 +766,9 @@ object FormatQueries {
   // petabyte scan, and it only works because the commit protocol
   // (q260) makes the stats exact, not estimates.
   def q265ManifestAgg(spark: SparkSession, dir: String): DataFrame = {
-    val root = ShardPaths.resolve(spark, "q265", dir)
+    val root = ShardPaths.fresh(spark, "q265", dir)
     val keyed = Tables.events(spark, dir)
-      .select((col("event_id") % 29).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(29))
       .repartition(8, col("k"))
     SinkSource.write(keyed, s"$root/t", overwrite = true)
     SinkSource.load(spark, s"$root/t")
@@ -811,9 +806,9 @@ object FormatQueries {
   // within-partition sort is what makes downstream range/merge scans
   // and run-length encodings effective.
   def q269ClusteredWrite(spark: SparkSession, dir: String): DataFrame = {
-    val root = ShardPaths.resolve(spark, "q269", dir)
+    val root = ShardPaths.fresh(spark, "q269", dir)
     val keyed = Tables.events(spark, dir)
-      .select((col("event_id") % 101).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(101))
     // no caller-side repartition: the sink's required distribution
     // inserts the cluster-by-k exchange and the (k, v) sort
     SinkSource.write(keyed, s"$root/t", overwrite = true, clustered = true)
@@ -822,8 +817,7 @@ object FormatQueries {
       .map { case (k, es) => (k, es.map(_._2).distinct.size.toLong) }
     val filesDf = spark.createDataFrame(files).toDF("k", "n_files")
     SinkSource.load(spark, s"$root/t")
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .join(broadcast(filesDf), Seq("k"))
       .select(col("k"), col("n_files"), col("n_rows"), col("sum_v"))
       .orderBy(col("k"))
@@ -855,9 +849,9 @@ object FormatQueries {
   // network carries n × partitions candidates. The plain-LIMIT path
   // matters for `LIMIT 100` peeks: readers stop mid-file.
   def q270TopNPushdown(spark: SparkSession, dir: String): DataFrame = {
-    val root = ShardPaths.resolve(spark, "q270", dir)
+    val root = ShardPaths.fresh(spark, "q270", dir)
     val keyed = Tables.events(spark, dir)
-      .select((col("event_id") % 101).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(101))
       .repartition(8, col("k"))
     SinkSource.write(keyed, s"$root/t", overwrite = true)
     SinkSource.load(spark, s"$root/t")
@@ -887,9 +881,9 @@ object FormatQueries {
   // which is the entire point of keeping exact counts in commit
   // metadata.
   def q271ReportedStats(spark: SparkSession, dir: String): DataFrame = {
-    val root = ShardPaths.resolve(spark, "q271", dir)
+    val root = ShardPaths.fresh(spark, "q271", dir)
     val ev = Tables.events(spark, dir)
-      .select((col("event_id") % 101).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(101))
     SinkSource.write(
       ev.groupBy(col("k")).agg(count(lit(1)).as("v")).repartition(4, col("k")),
       s"$root/dim", overwrite = true)
@@ -935,20 +929,17 @@ object FormatQueries {
   // manifest publish, so readers never see a half-updated table.
   def q274RowLevelUpdate(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q274", dir)
     // UPDATE is not idempotent: rebuild the table every invocation
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q274", dir)
     val keyed = Tables.events(s, dir)
-      .select((col("event_id") % 101).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(101))
       .repartition(8, col("k"))
     SinkSource.write(keyed, s"$root/t", overwrite = true)
-    s.conf.set("spark.sql.catalog.graft_sink", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_sink.root", root)
+    SinkCatalog.register(s, "graft_sink", root)
     s.sql("UPDATE graft_sink.t SET v = v + 1000000 " +
       "WHERE k % 10 = 3 AND v % 2 = 0")
     SinkSource.load(s, s"$root/t")
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .orderBy(col("k"))
   }
 
@@ -974,17 +965,15 @@ object FormatQueries {
   // publish so a failed merge is a no-op, not a half-upsert.
   def q275MergeUpsert(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q275", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q275", dir)
     def keyed(pred: org.apache.spark.sql.Column) =
       Tables.events(s, dir).filter(pred)
-        .select((col("event_id") % 61).as("k"), col("event_id").as("v"))
+        .transform(Tables.keyed(61))
     SinkSource.write(keyed(col("event_id") % 3 =!= 0).repartition(8, col("k")),
       s"$root/t", overwrite = true)
     keyed(col("event_id") % 3 === 0 || col("event_id") % 6 === 1)
       .createOrReplaceTempView("graft_q275_changes")
-    s.conf.set("spark.sql.catalog.graft_sink", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_sink.root", root)
+    SinkCatalog.register(s, "graft_sink", root)
     s.sql(
       """MERGE INTO graft_sink.t
         |USING graft_q275_changes c ON t.k = c.k AND t.v = c.v
@@ -992,8 +981,7 @@ object FormatQueries {
         |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (c.k, c.v)
         |""".stripMargin)
     SinkSource.load(s, s"$root/t")
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .orderBy(col("k"))
   }
 
@@ -1027,26 +1015,23 @@ object FormatQueries {
   // publish must stay a metadata swap so readers never block.
   def q276CompactProcedure(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q276", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q276", dir)
     def keyed(pred: org.apache.spark.sql.Column) =
       Tables.events(s, dir).filter(pred)
-        .select((col("event_id") % 47).as("k"), col("event_id").as("v"))
+        .transform(Tables.keyed(47))
         .repartition(4) // round-robin: every task sees every key
     SinkSource.write(keyed(col("event_id") % 2 === 0), s"$root/t",
       overwrite = true)
     SinkSource.write(keyed(col("event_id") % 2 =!= 0), s"$root/t",
       overwrite = false)
-    s.conf.set("spark.sql.catalog.graft_sink", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_sink.root", root)
+    SinkCatalog.register(s, "graft_sink", root)
     s.sql("CALL graft_sink.compact('t')").collect()
     val files = SinkSource.manifest(s"$root/t")
       .groupBy(_._1).toSeq
       .map { case (k, es) => (k, es.map(_._2).distinct.size.toLong) }
     val filesDf = s.createDataFrame(files).toDF("k", "n_files")
     SinkSource.load(s, s"$root/t")
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .join(broadcast(filesDf), Seq("k"))
       .select(col("k"), col("n_files"), col("n_rows"), col("sum_v"))
       .orderBy(col("k"))
@@ -1082,15 +1067,12 @@ object FormatQueries {
   // tombstones, so MoR reads must go through the merging scan.
   def q277MorDelete(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q277", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q277", dir)
     val keyed = Tables.events(s, dir)
-      .select((col("event_id") % 73).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(73))
       .repartition(8, col("k"))
     SinkSource.write(keyed, s"$root/t", overwrite = true)
-    s.conf.set("spark.sql.catalog.graft_mor", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mor.root", root)
-    s.conf.set("spark.sql.catalog.graft_mor.mor", "true")
+    SinkCatalog.register(s, "graft_mor", root, "mor" -> "true")
     s.sql("DELETE FROM graft_mor.t WHERE v % 5 = 2")
     s.sql("DELETE FROM graft_mor.t WHERE v % 7 = 3 AND k < 40")
     s.sql(
@@ -1129,15 +1111,12 @@ object FormatQueries {
   // production pipelines use most.
   def q279MorUpdate(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q279", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q279", dir)
     val keyed = Tables.events(s, dir)
-      .select((col("event_id") % 67).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(67))
       .repartition(8, col("k"))
     SinkSource.write(keyed, s"$root/t", overwrite = true)
-    s.conf.set("spark.sql.catalog.graft_mor", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mor.root", root)
-    s.conf.set("spark.sql.catalog.graft_mor.mor", "true")
+    SinkCatalog.register(s, "graft_mor", root, "mor" -> "true")
     s.sql("UPDATE graft_mor.t SET v = v + 10000000 WHERE v % 11 = 6")
     // second pass hits some rows the first APPENDED (their new v
     // keeps v % 11 = 6 + 10000000 ≡ ...), plus fresh originals
@@ -1179,15 +1158,12 @@ object FormatQueries {
   // the manifest swap, so readers never see a half-vacuumed table.
   def q280MorVacuum(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q280", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q280", dir)
     val keyed = Tables.events(s, dir)
-      .select((col("event_id") % 59).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(59))
       .repartition(8, col("k"))
     SinkSource.write(keyed, s"$root/t", overwrite = true)
-    s.conf.set("spark.sql.catalog.graft_mor", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mor.root", root)
-    s.conf.set("spark.sql.catalog.graft_mor.mor", "true")
+    SinkCatalog.register(s, "graft_mor", root, "mor" -> "true")
     s.sql("DELETE FROM graft_mor.t WHERE v % 6 = 5")
     s.sql("UPDATE graft_mor.t SET v = v + 20000000 WHERE v % 17 = 4")
     s.sql("CALL graft_mor.compact('t')").collect()
@@ -1196,8 +1172,7 @@ object FormatQueries {
       .map { case (k, es) => (k, es.map(_._2).distinct.size.toLong) }
     val filesDf = s.createDataFrame(files).toDF("k", "n_files")
     SinkSource.load(s, s"$root/t", mor = true)
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .join(broadcast(filesDf), Seq("k"))
       .select(col("k"), col("n_files"), col("n_rows"), col("sum_v"))
       .orderBy(col("k"))
@@ -1233,15 +1208,13 @@ object FormatQueries {
   // real: the candidate is immutable while under review.
   def q283WriteAuditPublish(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q283", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q283", dir)
     def keyed(i: Int) =
       Tables.events(s, dir).filter(col("event_id") % 3 === i)
-        .select((col("event_id") % 19).as("k"), col("event_id").as("v"))
+        .transform(Tables.keyed(19))
         .repartition(8, col("k"))
     SinkSource.write(keyed(0), s"$root/t", overwrite = true)  // v1
-    s.conf.set("spark.sql.catalog.graft_sink", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_sink.root", root)
+    SinkCatalog.register(s, "graft_sink", root)
     s.sql("CALL graft_sink.tag('t', 1, 'published')").collect()
     SinkSource.write(keyed(1), s"$root/t", overwrite = false) // v2 candidate
     // the audit reads the CANDIDATE by number; here it checks row
@@ -1287,14 +1260,11 @@ object FormatQueries {
   // what a targeted deletion vector then addresses.
   def q284MorLineage(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q284", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q284", dir)
     val keyed = Tables.events(s, dir)
-      .select((col("event_id") % 53).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(53))
     SinkSource.write(keyed, s"$root/t", overwrite = true, clustered = true)
-    s.conf.set("spark.sql.catalog.graft_mor", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mor.root", root)
-    s.conf.set("spark.sql.catalog.graft_mor.mor", "true")
+    SinkCatalog.register(s, "graft_mor", root, "mor" -> "true")
     s.sql(
       """SELECT k,
         |  COUNT(DISTINCT _file) AS n_files,
@@ -1335,18 +1305,16 @@ object FormatQueries {
   // into a bounded retention window with named releases kept forever.
   def q285ExpireSnapshots(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q285", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q285", dir)
     def keyed(i: Int) =
       Tables.events(s, dir).filter(col("event_id") % 4 === i)
-        .select((col("event_id") % 23).as("k"), col("event_id").as("v"))
+        .transform(Tables.keyed(23))
         .repartition(4, col("k"))
     SinkSource.write(keyed(0), s"$root/t", overwrite = true)  // v1
     SinkSource.write(keyed(1), s"$root/t", overwrite = false) // v2
     SinkSource.write(keyed(2), s"$root/t", overwrite = false) // v3
     SinkSource.write(keyed(3), s"$root/t", overwrite = false) // v4
-    s.conf.set("spark.sql.catalog.graft_sink", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_sink.root", root)
+    SinkCatalog.register(s, "graft_sink", root)
     s.sql("CALL graft_sink.tag('t', 2, 'release')").collect()
     val sum = s.sql("CALL graft_sink.expire('t', 2)").collect()(0)
     // the expired v1 pin must now fail loudly, never serve stale data
@@ -1406,8 +1374,7 @@ object FormatQueries {
   // rows where the data is billions.
   def q286MetadataTables(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q286", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q286", dir)
     def keyed(i: Int) =
       Tables.events(s, dir).filter(col("event_id") % 3 === i)
         .select(((col("event_id") % 7) * 3 + i).as("k"),
@@ -1420,8 +1387,7 @@ object FormatQueries {
       clustered = true)                                          // v2
     SinkSource.write(keyed(2), s"$root/t", overwrite = false,
       clustered = true)                                          // v3
-    s.conf.set("spark.sql.catalog.graft_sink", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_sink.root", root)
+    SinkCatalog.register(s, "graft_sink", root)
     s.sql("CALL graft_sink.tag('t', 2, 'audited')").collect()
     // files-table cross-check: bounded 1-row metadata aggregate
     val fa = s.sql(
@@ -1476,14 +1442,10 @@ object FormatQueries {
   // keys × tasks) and trustworthy read-side SPJ follow.
   def q287BucketTransformWrite(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q287", dir)
-    SinkSource.fs(root)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    s.conf.set("spark.sql.catalog.graft_bt", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_bt.root", root)
-    s.conf.set("spark.sql.catalog.graft_bt.bucketWrite", "true")
+    val root = ShardPaths.fresh(s, "q287", dir)
+    SinkCatalog.register(s, "graft_bt", root, "bucketWrite" -> "true")
     Tables.events(s, dir)
-      .select((col("event_id") % 40).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(40))
       .writeTo("graft_bt.t").create()
     // bucket-wholeness from the commit metadata: distinct writer task
     // ids per bucket (file names carry p<pid>_) — the transform
@@ -1539,17 +1501,14 @@ object FormatQueries {
   // upsert economics.
   def q288MorMerge(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q288", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q288", dir)
     val base = Tables.events(s, dir)
-      .select((col("event_id") % 31).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(31))
     SinkSource.write(base, s"$root/t", overwrite = true, clustered = true)
-    s.conf.set("spark.sql.catalog.graft_mor", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mor.root", root)
-    s.conf.set("spark.sql.catalog.graft_mor.mor", "true")
+    SinkCatalog.register(s, "graft_mor", root, "mor" -> "true")
     val updates = Tables.events(s, dir)
       .filter(col("event_id") % 5 === 0)
-      .select((col("event_id") % 31).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(31))
     val inserts = Tables.events(s, dir)
       .filter(col("event_id") % 7 === 0)
       .select(lit(77L).as("k"),
@@ -1602,13 +1561,11 @@ object FormatQueries {
   // truncating more than intended.
   def q289OverwriteByFilter(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q289", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q289", dir)
     val base = Tables.events(s, dir)
-      .select((col("event_id") % 13).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(13))
     SinkSource.write(base, s"$root/t", overwrite = true)          // v1
-    s.conf.set("spark.sql.catalog.graft_sink", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_sink.root", root)
+    SinkCatalog.register(s, "graft_sink", root)
     // the backfill: corrected rows for keys 3 and 4 only, scope DECLARED
     Tables.events(s, dir)
       .filter((col("event_id") % 13).isin(3L, 4L))
@@ -1618,8 +1575,7 @@ object FormatQueries {
       .overwrite(col("k") === 3L || col("k") === 4L)              // v2
     val nVersions = SinkSource.currentVersion(s"$root/t").toLong
     s.table("graft_sink.t")
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .withColumn("n_versions", lit(nVersions))
       .orderBy(col("k"))
   }
@@ -1651,23 +1607,19 @@ object FormatQueries {
   // open a data file.
   def q290PartitionDdl(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q290", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q290", dir)
     SinkSource.write(
       Tables.events(s, dir)
-        .select((col("event_id") % 11).as("k"), col("event_id").as("v")),
+        .transform(Tables.keyed(11)),
       s"$root/t", overwrite = true)
-    s.conf.set("spark.sql.catalog.graft_pm", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_pm.root", root)
-    s.conf.set("spark.sql.catalog.graft_pm.partman", "true")
+    SinkCatalog.register(s, "graft_pm", root, "partman" -> "true")
     s.sql("ALTER TABLE graft_pm.t DROP PARTITION (k = 7)")
     val parts = s.sql("SHOW PARTITIONS graft_pm.t")
       .select(col("partition").as("part"),
         regexp_extract(col("partition"), "k=(\\d+)", 1)
           .cast("long").as("k"))
     s.table("graft_pm.t")
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .join(broadcast(parts), Seq("k"))
       .select(col("part"), col("n_rows"), col("sum_v"))
       .orderBy(col("part"))
@@ -1704,14 +1656,12 @@ object FormatQueries {
   // writer's discipline, and it costs one predicate per written row.
   def q291CheckConstraint(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q291", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q291", dir)
     SinkSource.write(
       Tables.events(s, dir)
-        .select((col("event_id") % 29).as("k"), col("event_id").as("v")),
+        .transform(Tables.keyed(29)),
       s"$root/t", overwrite = true)
-    s.conf.set("spark.sql.catalog.graft_ck", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_ck.root", root)
+    SinkCatalog.register(s, "graft_ck", root)
     s.sql("ALTER TABLE graft_ck.t ADD CONSTRAINT v_nonneg CHECK (v >= 0)")
     // the poison write must fail BEFORE publishing anything
     val vBefore = SinkSource.currentVersion(s"$root/t")
@@ -1723,8 +1673,7 @@ object FormatQueries {
     // a valid append passes the same gate
     s.sql("INSERT INTO graft_ck.t VALUES (28, 4000000000)")
     s.table("graft_ck.t")
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .withColumn("rejected", lit(rejected))
       .withColumn("atomic", lit(atomic))
       .orderBy(col("k"))
@@ -1766,15 +1715,13 @@ object FormatQueries {
   // normalizes mixed-schema groups when it rewrites them anyway.
   def q292SinkSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q292", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q292", dir)
     // batch 1: the base (k, v) contract
     SinkSource.write(
       Tables.events(s, dir)
-        .select((col("event_id") % 13).as("k"), col("event_id").as("v")),
+        .transform(Tables.keyed(13)),
       s"$root/t", overwrite = true)
-    s.conf.set("spark.sql.catalog.graft_ev", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_ev.root", root)
+    SinkCatalog.register(s, "graft_ev", root)
     Tables.events(s, dir).createOrReplaceTempView("ev292")
     // evolve: + weight, batch 2 fills it
     s.sql("ALTER TABLE graft_ev.t ADD COLUMN weight BIGINT")
@@ -1846,8 +1793,7 @@ object FormatQueries {
   // "what training saw at 3am" costs the same on any table size.
   def q293TimestampTravel(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q293", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q293", dir)
     def batch(m: Long) = Tables.events(s, dir)
       .select((col("event_id") % 17).as("k"),
         (col("event_id") + m).as("v"))
@@ -1860,8 +1806,7 @@ object FormatQueries {
       s"$root/t", overwrite = false)                                // v3
     val ts1 = SinkSource.commitTs(s"$root/t", 1).get
     val ts2 = SinkSource.commitTs(s"$root/t", 2).get
-    s.conf.set("spark.sql.catalog.graft_tt", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_tt.root", root)
+    SinkCatalog.register(s, "graft_tt", root)
     // a read BEFORE the table existed must fail loudly, not serve
     // an empty table — the flag rides the hash
     val earlyFails =
@@ -1871,8 +1816,7 @@ object FormatQueries {
         0L
       } catch { case _: Exception => 1L }
     def arm(name: String, df: DataFrame): DataFrame =
-      df.groupBy(col("k"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      SinkMv.keySums(df)
         .withColumn("arm", lit(name))
     val at1 = arm("at_v1", s.sql(
       s"SELECT k, v FROM graft_tt.t TIMESTAMP AS OF timestamp_millis($ts1)"))
@@ -1928,13 +1872,12 @@ object FormatQueries {
   // proportional only in the surviving files. Stats ride the manifest
   // the reader already parses: zero extra round trips.
   def q294ZoneMapSkipping(spark: SparkSession, dir: String): DataFrame = {
-    val root = ShardPaths.resolve(spark, "q294", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(spark, "q294", dir)
     // range-cluster on v so each file carries a tight v-window — the
     // write-side discipline that makes value zone maps selective
     SinkSource.write(
       Tables.events(spark, dir)
-        .select((col("event_id") % 8).as("k"), col("event_id").as("v"))
+        .transform(Tables.keyed(8))
         .repartitionByRange(16, col("v")),
       s"$root/t", overwrite = true)
     // kill-shot inside the query: drop every file the v-zone-map
@@ -1957,8 +1900,7 @@ object FormatQueries {
     val skippedProof = if (ruledOut.nonEmpty) 1L else 0L
     SinkSource.load(spark, s"$root/t")
       .filter(col("v") < cutoff && col("k") >= 2)
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .withColumn("skipped_proof", lit(skippedProof))
       .orderBy(col("k"))
   }
@@ -1995,11 +1937,10 @@ object FormatQueries {
   // corpus tables; serving extremes from commit metadata makes it an
   // O(manifest) driver read instead of a petabyte scan.
   def q295StatsMinmax(spark: SparkSession, dir: String): DataFrame = {
-    val root = ShardPaths.resolve(spark, "q295", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(spark, "q295", dir)
     SinkSource.write(
       Tables.events(spark, dir)
-        .select((col("event_id") % 23).as("k"), col("event_id").as("v"))
+        .transform(Tables.keyed(23))
         .repartition(8, col("k")),
       s"$root/t", overwrite = true)
     // the kill-shot rides the query: metadata must answer alone
@@ -2047,16 +1988,13 @@ object FormatQueries {
   // planning is manifest arithmetic, driver-side, zero data opened.
   def q296ChangeDataFeed(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q296", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q296", dir)
     def batch(m: Long) = Tables.events(s, dir)
       .select((col("event_id") % 19).as("k"), (col("event_id") + m).as("v"))
     SinkSource.write(batch(0), s"$root/t", overwrite = true)          // v1
     SinkSource.write(batch(1000000).filter(col("v") % 3 === 1),
       s"$root/t", overwrite = false)                                  // v2
-    s.conf.set("spark.sql.catalog.graft_cdf", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_cdf.root", root)
-    s.conf.set("spark.sql.catalog.graft_cdf.mor", "true")
+    SinkCatalog.register(s, "graft_cdf", root, "mor" -> "true")
     s.sql("DELETE FROM graft_cdf.t WHERE v % 7 = 3")                  // v3
     // a rewritten history must refuse, loudly, at plan time — the
     // flag rides the hash
@@ -2116,8 +2054,7 @@ object FormatQueries {
   // bookkeeping store.
   def q297IncrementalMv(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q297", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q297", dir)
     def batch(m: Long) = Tables.events(s, dir)
       .select((col("event_id") % 11).as("k"), (col("event_id") + m).as("v"))
     SinkSource.write(batch(0), s"$root/src", overwrite = true)        // v1
@@ -2127,9 +2064,7 @@ object FormatQueries {
     SinkSource.write(batch(2000000).filter(col("v") % 5 === 2),
       s"$root/src", overwrite = false)                                // v3
     val w2 = SinkMv.refresh(s, s"$root/mv").toLong
-    s.conf.set("spark.sql.catalog.graft_mvq", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_mvq.root", root)
-    s.conf.set("spark.sql.catalog.graft_mvq.mor", "true")
+    SinkCatalog.register(s, "graft_mvq", root, "mor" -> "true")
     s.sql("DELETE FROM graft_mvq.src WHERE v % 9 = 4")                // v4
     val w3 = SinkMv.refresh(s, s"$root/mv").toLong
     // refresh at head: watermark unchanged, NOTHING published
@@ -2184,16 +2119,14 @@ object FormatQueries {
   // read-side half of incremental view maintenance.
   def q298MvRewrite(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q298", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q298", dir)
     def batch(m: Long) = Tables.events(s, dir)
       .select((col("event_id") % 7).as("k"), (col("event_id") + m).as("v"))
     SinkSource.write(batch(0), s"$root/src", overwrite = true)        // v1
     SinkMv.create(s, s"$root/mv", s"$root/src")
     s.conf.set("graft.mv.registry", s"$root/mv")
     def agg(name: String) = SinkSource.load(s, s"$root/src")
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .withColumn("arm", lit(name))
     // STALE arm: the source advanced past the watermark — the rule
     // must fall back to the real scan (rewriting would hash-fail)
@@ -2248,16 +2181,13 @@ object FormatQueries {
   // not locks.
   def q299RemoveOrphans(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q299", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q299", dir)
     def batch(m: Long) = Tables.events(s, dir)
       .select((col("event_id") % 9).as("k"), (col("event_id") + m).as("v"))
     SinkSource.write(batch(0), s"$root/t", overwrite = true)          // v1
     SinkSource.write(batch(1000000).filter(col("v") % 4 === 3),
       s"$root/t", overwrite = false)                                  // v2
-    s.conf.set("spark.sql.catalog.graft_orph", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_orph.root", root)
-    s.conf.set("spark.sql.catalog.graft_orph.mor", "true")
+    SinkCatalog.register(s, "graft_orph", root, "mor" -> "true")
     s.sql("DELETE FROM graft_orph.t WHERE v % 11 = 5")                // v3: vectors
     // plant crash debris: an uncited data file (renamed, manifest
     // never landed), an uncited vector file, an abandoned staging dir
@@ -2286,8 +2216,7 @@ object FormatQueries {
           s"$root/t/data/qdeadbeef_p9_t9_k0.psv"))) 1L else 0L
     // the table (MoR view, vectors intact) is untouched
     SinkSource.load(s, s"$root/t", mor = true)
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .withColumn("grace_protects", lit(graceProtects))
       .withColumn("reclaimed", lit(reclaimed))
       .orderBy(col("k"))
@@ -2329,8 +2258,7 @@ object FormatQueries {
   // directory listing, metadata-proportional.
   def q301SplitPlanning(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q301", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q301", dir)
     // one BIG single-key file (repartition(1): one task, one key)...
     SinkSource.write(
       Tables.events(s, dir)
@@ -2390,11 +2318,10 @@ object FormatQueries {
   // addressable until `expire` retires them.
   def q302Rollback(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q302", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q302", dir)
     val ev = Tables.events(s, dir)
     SinkSource.write(ev
-      .select((col("event_id") % 11).as("k"), col("event_id").as("v")),
+      .transform(Tables.keyed(11)),
       s"$root/t", overwrite = true)                                  // v1
     SinkSource.write(ev.filter(col("event_id") % 3 === 0)
       .select((col("event_id") % 11).as("k"),
@@ -2405,8 +2332,7 @@ object FormatQueries {
       .select((col("event_id") % 11).as("k"),
         (col("event_id") + 5000000).as("v")),
       s"$root/t", overwrite = false)                                 // v3
-    s.conf.set("spark.sql.catalog.graft_rb", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_rb.root", root)
+    SinkCatalog.register(s, "graft_rb", root)
     val res = s.sql("CALL graft_rb.rollback('t', 2)").collect()(0)
     val restoredOk =
       if (res.getLong(0) == 2L && res.getLong(1) == 4L) 1L else 0L
@@ -2428,8 +2354,7 @@ object FormatQueries {
       try { s.sql("CALL graft_rb.rollback('t', 99)").collect(); 0L }
       catch { case _: Exception => 1L }
     def arm(name: String, df: DataFrame): DataFrame =
-      df.groupBy(col("k"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      SinkMv.keySums(df)
         .withColumn("arm", lit(name))
     // current head == v2's state; the incident snapshot stays readable
     arm("restored", s.table("graft_rb.t").select("k", "v"))
@@ -2482,13 +2407,11 @@ object FormatQueries {
   // file rewrites, with old files readable forever by field id.
   def q303TypeWidening(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q303", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q303", dir)
     SinkSource.write(Tables.events(s, dir)
-      .select((col("event_id") % 13).as("k"), col("event_id").as("v")),
+      .transform(Tables.keyed(13)),
       s"$root/t", overwrite = true)                                  // v1
-    s.conf.set("spark.sql.catalog.graft_tw", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_tw.root", root)
+    SinkCatalog.register(s, "graft_tw", root)
     Tables.events(s, dir).createOrReplaceTempView("q303_ev")
     s.sql("ALTER TABLE graft_tw.t ADD COLUMN cnt INT")               // v2
     s.sql("""INSERT INTO graft_tw.t
@@ -2583,12 +2506,11 @@ object FormatQueries {
   // loser aborts without having destroyed anything.
   def q304OccTransact(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q304", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q304", dir)
     val t = s"$root/t"
     val ev = Tables.events(s, dir)
     SinkSource.write(ev
-      .select((col("event_id") % 9).as("k"), col("event_id").as("v")),
+      .transform(Tables.keyed(9)),
       t, overwrite = true)                                           // v1
     val f = SinkSource.fs(t)
     // arm 1: append-vs-append. The transaction's own file is staged
@@ -2627,15 +2549,13 @@ object FormatQueries {
     // arm 3: the premise is destroyed BEFORE the transaction commits —
     // a metadata DELETE drops (and eagerly GCs) the pinned files
     val pinned = SinkSource.manifest(t).filter(_._1 == 2L).map(_._2).toSet
-    s.conf.set("spark.sql.catalog.graft_occ", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_occ.root", root)
+    SinkCatalog.register(s, "graft_occ", root)
     s.sql("DELETE FROM graft_occ.t WHERE k = 2")
     val conflict =
       try { SinkSource.transact(t)(_ => (Seq.empty, pinned)); 0L }
       catch { case _: SinkConflictException => 1L }
     SinkSource.load(s, t)
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .withColumn("a1_retried", lit(if (attempts1 == 2) 1L else 0L))
       .withColumn("a2_retried", lit(if (attempts2 == 2) 1L else 0L))
       .withColumn("conflict_aborts", lit(conflict))
@@ -2677,12 +2597,11 @@ object FormatQueries {
   // older than the delete, and compaction retires even that.
   def q305EqualityDeletes(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q305", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q305", dir)
     val t = s"$root/t"
     val ev = Tables.events(s, dir)
     SinkSource.write(ev
-      .select((col("event_id") % 7).as("k"), col("event_id").as("v")),
+      .transform(Tables.keyed(7)),
       t, overwrite = true)                                           // v1
     // the takedown list: driver-held values (takedown lists are
     // driver-sized by nature; ~1% of events here)
@@ -2692,27 +2611,23 @@ object FormatQueries {
     // re-insert HALF the deleted values: newer sequence → they survive
     SinkSource.write(ev
       .filter(col("event_id") % 101 === 0 && col("event_id") % 2 === 0)
-      .select((col("event_id") % 7).as("k"), col("event_id").as("v")),
+      .transform(Tables.keyed(7)),
       t, overwrite = false)                                          // v3
     // a positional row-level DELETE composes on the same table
-    s.conf.set("spark.sql.catalog.graft_eq", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_eq.root", root)
-    s.conf.set("spark.sql.catalog.graft_eq.mor", "true")
+    SinkCatalog.register(s, "graft_eq", root, "mor" -> "true")
     s.sql("DELETE FROM graft_eq.t WHERE k = 3 AND v % 5 = 1")        // v4
     val cdfRefuses =
       try { SinkChanges.load(s, t, 1, 2).collect(); 0L }
       catch { case _: Exception => 1L }
     // raw compaction would resurrect rows — refused; MoR compaction
     // materializes the deletes and self-prunes the header
-    s.conf.set("spark.sql.catalog.graft_eqr", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_eqr.root", root)
+    SinkCatalog.register(s, "graft_eqr", root)
     val rawCompactRefuses =
       try { s.sql("CALL graft_eqr.compact('t')").collect(); 0L }
       catch { case _: Exception => 1L }
     def arm(name: String): DataFrame =
       SinkSource.load(s, t, mor = true)
-        .groupBy(col("k"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+        .transform(SinkMv.keySums)
         .withColumn("arm", lit(name))
     val before = arm("merged")
     s.sql("CALL graft_eq.compact('t')").collect()
@@ -2765,15 +2680,14 @@ object FormatQueries {
   // permanently useless on append-grown tables.
   def q306ClusteredRewrite(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q306", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q306", dir)
     val t = s"$root/t"
     val ev = Tables.events(s, dir)
     // four interleaved appends: each slice covers the FULL v range,
     // so every file's zone map spans everything — unskippable layout
     (0 until 4).foreach(i =>
       SinkSource.write(ev.filter(col("event_id") % 4 === i)
-        .select((col("event_id") % 5).as("k"), col("event_id").as("v"))
+        .transform(Tables.keyed(5))
         .repartition(4, col("k")),
         t, overwrite = i == 0))
     val cut = ev.agg(max(col("event_id"))).head.getLong(0) / 2
@@ -2784,8 +2698,7 @@ object FormatQueries {
           id == 2 && mn >= cut }))
     }
     val beforeUnskippable = if (ruledOut().isEmpty) 1L else 0L
-    s.conf.set("spark.sql.catalog.graft_zr", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_zr.root", root)
+    SinkCatalog.register(s, "graft_zr", root)
     s.sql("CALL graft_zr.rewrite_clustered('t', 'v', 32)").collect()
     // kill-shot: the rewrite made files skippable — drop them from
     // disk; the filtered read below must never plan them
@@ -2796,8 +2709,7 @@ object FormatQueries {
       f.delete(new org.apache.hadoop.fs.Path(s"$t/data/$fl"), false))
     SinkSource.load(s, t)
       .filter(col("v") < cut)
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .withColumn("before_unskippable", lit(beforeUnskippable))
       .withColumn("after_skippable", lit(afterSkippable))
       .orderBy(col("k"))
@@ -2836,15 +2748,13 @@ object FormatQueries {
   // lives.
   def q307Branches(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q307", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q307", dir)
     val t = s"$root/t"
     val ev = Tables.events(s, dir)
     SinkSource.write(ev
-      .select((col("event_id") % 6).as("k"), col("event_id").as("v")),
+      .transform(Tables.keyed(6)),
       t, overwrite = true)                                           // main v1
-    s.conf.set("spark.sql.catalog.graft_br", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_br.root", root)
+    SinkCatalog.register(s, "graft_br", root)
     ev.createOrReplaceTempView("q307_ev")
     s.sql("CALL graft_br.branch('t', 'dev')").collect()
     s.sql("""INSERT INTO graft_br.t.branch_dev
@@ -2867,8 +2777,7 @@ object FormatQueries {
       catch { case _: Exception => 1L }
     s.sql("CALL graft_br.drop_branch('t', 'dev2')").collect()
     def arm(name: String, df: DataFrame): DataFrame =
-      df.groupBy(col("k"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      SinkMv.keySums(df)
         .withColumn("arm", lit(name))
     arm("main_before", s.sql("SELECT k, v FROM graft_br.t VERSION AS OF 1"))
       .unionByName(arm("main_after",
@@ -2926,8 +2835,7 @@ object FormatQueries {
   // (`WHERE label IS NOT NULL`) that dominates curation reads.
   def q308NullStats(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q308", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q308", dir)
     val fields3 = Seq(SinkSchemas.SinkField(1, "k",
         org.apache.spark.sql.types.LongType),
       SinkSchemas.SinkField(2, "v", org.apache.spark.sql.types.LongType),
@@ -3034,14 +2942,12 @@ object FormatQueries {
   // costs one metadata publish and zero data movement.
   def q309ColumnDefaults(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q309", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q309", dir)
     val ev = Tables.events(s, dir)
     SinkSource.write(ev
-      .select((col("event_id") % 7).as("k"), col("event_id").as("v")),
+      .transform(Tables.keyed(7)),
       s"$root/t", overwrite = true)                                  // v1
-    s.conf.set("spark.sql.catalog.graft_dv", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_dv.root", root)
+    SinkCatalog.register(s, "graft_dv", root)
     ev.createOrReplaceTempView("q309_ev")
     s.sql("ALTER TABLE graft_dv.t ADD COLUMN status BIGINT DEFAULT 7")
     s.sql("ALTER TABLE graft_dv.t ADD COLUMN tag STRING DEFAULT 'none'")
@@ -3117,14 +3023,13 @@ object FormatQueries {
   // sidecar metadata, probed with candidate-proportional small reads.
   def q310BloomIndex(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q310", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q310", dir)
     val t = s"$root/t"
     val ev = Tables.events(s, dir)
     // append-grown, unclustered: every file spans the v domain
     (0 until 4).foreach(i =>
       SinkSource.write(ev.filter(col("event_id") % 4 === i)
-        .select((col("event_id") % 5).as("k"), col("event_id").as("v"))
+        .transform(Tables.keyed(5))
         .repartition(4, col("k")),
         t, overwrite = i == 0))
     // the needles: a deterministic, oracle-replayable choice
@@ -3138,8 +3043,7 @@ object FormatQueries {
       stats.get(fl).exists(_.exists { case (id, mn, mx) =>
         id == 2 && targets.forall(x => x < mn || x > mx) }))
     val zoneUseless = if (zoneRuled.isEmpty) 1L else 0L
-    s.conf.set("spark.sql.catalog.graft_bl", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_bl.root", root)
+    SinkCatalog.register(s, "graft_bl", root)
     s.sql("CALL graft_bl.build_bloom('t', 'v', 10)").collect()
     // files whose blooms reject every needle — then the kill-shot
     val blooms = SinkSource.manifestBlooms(t)
@@ -3158,8 +3062,7 @@ object FormatQueries {
       f.delete(new org.apache.hadoop.fs.Path(s"$t/data/$fl"), false))
     SinkSource.load(s, t)
       .filter(col("v").isInCollection(targets))
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .withColumn("zone_useless", lit(zoneUseless))
       .withColumn("bloom_skips", lit(bloomSkips))
       .orderBy(col("k"))
@@ -3201,16 +3104,14 @@ object FormatQueries {
   // matrix).
   def q311SpecEvolution(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q311", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q311", dir)
     val t = s"$root/t"
     val ev = Tables.events(s, dir)
-      .select((col("event_id") % 50).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(50))
     // v1: the identity era — one file group per k
     SinkSource.write(ev.filter(col("v") % 3 === 0).repartition(8, col("k")),
       t, overwrite = true)
-    s.conf.set("spark.sql.catalog.graft_pse", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_pse.root", root)
+    SinkCatalog.register(s, "graft_pse", root)
     // v2: evolve — metadata-only, no file moves
     s.sql("CALL graft_pse.evolve_spec('t', 'bucket(8)')").collect()
     // v3: the bucket era — the same appends now land in 8 groups
@@ -3235,8 +3136,7 @@ object FormatQueries {
     val killShot = if (doomed.nonEmpty) 1L else 0L
     SinkSource.load(s, t)
       .filter(col("k") === 12)
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+      .transform(SinkMv.keySums)
       .withColumn("eras_mixed", lit(erasMixed))
       .withColumn("kill_shot", lit(killShot))
   }
@@ -3270,15 +3170,13 @@ object FormatQueries {
   // (MergeSchemaSpec pins the race matrix).
   def q312MergeSchemaWrite(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q312", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q312", dir)
     val t = s"$root/t"
     val ev = Tables.events(s, dir)
     SinkSource.write(ev.filter(col("event_id") % 3 === 0)
-      .select((col("event_id") % 7).as("k"), col("event_id").as("v")),
+      .transform(Tables.keyed(7)),
       t, overwrite = true)                                           // v1
-    s.conf.set("spark.sql.catalog.graft_msw", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_msw.root", root)
+    SinkCatalog.register(s, "graft_msw", root)
     s.sql("ALTER TABLE graft_msw.t ADD COLUMN flag BIGINT")          // v2
     // the evolving append: carries `score` (new) and not `flag` —
     // the commit unions both evolutions
@@ -3325,13 +3223,10 @@ object FormatQueries {
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val root = ShardPaths.resolve(s, "q313", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
-    s.conf.set("spark.sql.catalog.graft_spj3", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_spj3.root", root)
+    val root = ShardPaths.fresh(s, "q313", dir)
+    SinkCatalog.register(s, "graft_spj3", root)
     val ev = Tables.events(s, dir)
-    val facts = ev.select((col("event_id") % 40).as("k"),
-      col("event_id").as("v"))
+    val facts = ev.transform(Tables.keyed(40))
     val dims = ev.groupBy((col("event_id") % 40).as("k"))
       .agg(sum(col("event_id") % 100).as("v"))
     def stageBucketed(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
@@ -3383,18 +3278,16 @@ object FormatQueries {
   // from the raw rows.
   def q314PartitionsMeta(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q314", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(s, "q314", dir)
     val t = s"$root/t"
     val ev = Tables.events(s, dir)
     SinkSource.write(ev.filter(col("event_id") % 2 === 0)
-      .select((col("event_id") % 10).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(10))
       .repartition(4, col("k")), t, overwrite = true)                // v1
-    s.conf.set("spark.sql.catalog.graft_pmt", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_pmt.root", root)
+    SinkCatalog.register(s, "graft_pmt", root)
     s.sql("CALL graft_pmt.evolve_spec('t', 'bucket(4)')").collect()  // v2
     SinkSource.write(ev.filter(col("event_id") % 2 =!= 0)
-      .select((col("event_id") % 10).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(10))
       .repartition(2, col("k")), t, overwrite = false)               // v3
     // n_files is layout-noise (task counts); the pinned shape is
     // (group value, era, transform, exact rows)
@@ -3430,16 +3323,13 @@ object FormatQueries {
   // reuses the broadcast — zero extra passes.
   def q315RuntimeFilePruning(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q315", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
-    s.conf.set("spark.sql.catalog.graft_dfp", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_dfp.root", root)
+    val root = ShardPaths.fresh(s, "q315", dir)
+    SinkCatalog.register(s, "graft_dfp", root)
     // a seventh of events is plenty of fact volume (7 is coprime
     // with the key modulus, so every group stays populated) — the
     // mechanism under test is the runtime prune, not write throughput
     val ev = Tables.events(s, dir).filter(col("event_id") % 7 === 0)
-    SinkSource.write(ev.select((col("event_id") % 20).as("k"),
-      col("event_id").as("v")).repartition(8, col("k")),
+    SinkSource.write(ev.transform(Tables.keyed(20)).repartition(8, col("k")),
       s"$root/fact", overwrite = true)
     // the dim: 20 rows, v = k * 7 — the query filters on v, so the
     // surviving KEY set {1, 3} is only derivable at run time
@@ -3499,14 +3389,10 @@ object FormatQueries {
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val root = ShardPaths.resolve(s, "q316", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
-    s.conf.set("spark.sql.catalog.graft_spjm", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_spjm.root", root)
-    s.conf.set("spark.sql.catalog.graft_spjm.mor", "true")
+    val root = ShardPaths.fresh(s, "q316", dir)
+    SinkCatalog.register(s, "graft_spjm", root, "mor" -> "true")
     val ev = Tables.events(s, dir)
-    val facts = ev.select((col("event_id") % 40).as("k"),
-      col("event_id").as("v"))
+    val facts = ev.transform(Tables.keyed(40))
     val dims = ev.groupBy((col("event_id") % 40).as("k"))
       .agg(sum(col("event_id") % 100).as("v"))
     def stageBucketed(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
@@ -3566,14 +3452,11 @@ object FormatQueries {
   // column or that clustering is wasted.
   def q317RuntimePruneNonKey(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.isolated(spark)
-    val root = ShardPaths.resolve(s, "q317", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
-    s.conf.set("spark.sql.catalog.graft_dfpv", classOf[SinkCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_dfpv.root", root)
+    val root = ShardPaths.fresh(s, "q317", dir)
+    SinkCatalog.register(s, "graft_dfpv", root)
     val ev = Tables.events(s, dir)
     // range-partitioned on v at write time → tight per-file v zones
-    SinkSource.write(ev.select((col("event_id") % 10).as("k"),
-      col("event_id").as("v")).repartitionByRange(4, col("v")),
+    SinkSource.write(ev.transform(Tables.keyed(10)).repartitionByRange(4, col("v")),
       s"$root/fact", overwrite = true)
     import s.implicits._
     // dim keys are MULTIPLES OF 11 (present at every SF); the filter
@@ -3630,11 +3513,9 @@ object FormatQueries {
   // statistics make the optimizer's inputs a by-product of writing
   // the data — always fresh, never sampled, free at plan time.
   def q318ColumnStats(spark: SparkSession, dir: String): DataFrame = {
-    val root = ShardPaths.resolve(spark, "q318", dir)
-    SinkSource.fs(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = ShardPaths.fresh(spark, "q318", dir)
     val ev = Tables.events(spark, dir)
-    SinkSource.write(ev.select((col("event_id") % 13).as("k"),
-      col("event_id").as("v")).repartition(4, col("k")),
+    SinkSource.write(ev.transform(Tables.keyed(13)).repartition(4, col("k")),
       s"$root/t", overwrite = true)
     import scala.jdk.CollectionConverters._
     val cs = new SinkScan(s"$root/t").estimateStatistics().columnStats()
@@ -3677,131 +3558,67 @@ object FormatQueries {
       |FROM events
       |ORDER BY col""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q318_column_stats" -> q318ColumnStats,
-    "q317_runtime_prune_nonkey" -> q317RuntimePruneNonKey,
-    "q316_mor_bucket_spj" -> q316MorBucketSpj,
-    "q315_runtime_file_pruning" -> q315RuntimeFilePruning,
-    "q314_partitions_meta" -> q314PartitionsMeta,
-    "q313_bucket_spj" -> q313BucketSpj,
-    "q312_merge_schema_write" -> q312MergeSchemaWrite,
-    "q311_spec_evolution" -> q311SpecEvolution,
-    "q310_bloom_index" -> q310BloomIndex,
-    "q309_column_defaults" -> q309ColumnDefaults,
-    "q308_null_stats" -> q308NullStats,
-    "q307_branches" -> q307Branches,
-    "q306_clustered_rewrite" -> q306ClusteredRewrite,
-    "q305_equality_deletes" -> q305EqualityDeletes,
-    "q304_occ_transact" -> q304OccTransact,
-    "q303_type_widening" -> q303TypeWidening,
-    "q302_rollback" -> q302Rollback,
-    "q301_split_planning" -> q301SplitPlanning,
-    "q299_remove_orphans" -> q299RemoveOrphans,
-    "q298_mv_rewrite" -> q298MvRewrite,
-    "q297_incremental_mv" -> q297IncrementalMv,
-    "q296_change_data_feed" -> q296ChangeDataFeed,
-    "q295_stats_minmax" -> q295StatsMinmax,
-    "q294_zonemap_skipping" -> q294ZoneMapSkipping,
-    "q293_timestamp_travel" -> q293TimestampTravel,
-    "q292_sink_schema_evolution" -> q292SinkSchemaEvolution,
-    "q291_check_constraint" -> q291CheckConstraint,
-    "q290_partition_ddl" -> q290PartitionDdl,
-    "q289_overwrite_by_filter" -> q289OverwriteByFilter,
-    "q288_mor_merge" -> q288MorMerge,
-    "q287_bucket_transform_write" -> q287BucketTransformWrite,
-    "q286_metadata_tables" -> q286MetadataTables,
-    "q285_expire_snapshots" -> q285ExpireSnapshots,
-    "q284_mor_lineage" -> q284MorLineage,
-    "q283_write_audit_publish" -> q283WriteAuditPublish,
-    "q280_mor_vacuum" -> q280MorVacuum,
-    "q279_mor_update" -> q279MorUpdate,
-    "q277_mor_delete" -> q277MorDelete,
-    "q276_compact_procedure" -> q276CompactProcedure,
-    "q275_merge_upsert" -> q275MergeUpsert,
-    "q274_rowlevel_update" -> q274RowLevelUpdate,
-    "q271_reported_stats" -> q271ReportedStats,
-    "q270_topn_pushdown" -> q270TopNPushdown,
-    "q269_clustered_write" -> q269ClusteredWrite,
-    "q265_manifest_agg" -> q265ManifestAgg,
-    "q263_time_travel" -> q263TimeTravel,
-    "q260_v2_commit_write" -> q260V2CommitWrite,
-    "q261_v2_metadata_delete" -> q261V2MetadataDelete,
-    "q258_file_provenance" -> q258FileProvenance,
-    "q252_agg_pushdown" -> q252AggPushdown,
-    "q239_xml_roundtrip" -> q239XmlRoundtrip,
-    "q236_variant_json" -> q236VariantJson,
-    "q235_nested_pruning" -> q235NestedPruning,
-    "q164_dynamic_overwrite" -> q164DynamicOverwrite,
-    "q145_dynamic_pruning" -> q145DynamicPruning,
-    "q129_bucketed_join" -> q129BucketedJoin,
-    "q54_csv_roundtrip" -> q54CsvRoundtrip,
-    "q55_json_roundtrip" -> q55JsonRoundtrip,
-    "q96_orc_roundtrip" -> q96OrcRoundtrip,
-    "q59_corrupt_tolerant" -> q59CorruptTolerant,
-    "q63_partition_pruning" -> q63PartitionPruning,
-    "q64_schema_evolution" -> q64SchemaEvolution)
-
-  def oracleSql: Map[String, String] = Map(
-    "q318_column_stats" -> q318Oracle,
-    "q317_runtime_prune_nonkey" -> q317Oracle,
-    "q316_mor_bucket_spj" -> q316Oracle,
-    "q315_runtime_file_pruning" -> q315Oracle,
-    "q314_partitions_meta" -> q314Oracle,
-    "q313_bucket_spj" -> q313Oracle,
-    "q312_merge_schema_write" -> q312Oracle,
-    "q311_spec_evolution" -> q311Oracle,
-    "q310_bloom_index" -> q310Oracle,
-    "q309_column_defaults" -> q309Oracle,
-    "q308_null_stats" -> q308Oracle,
-    "q307_branches" -> q307Oracle,
-    "q306_clustered_rewrite" -> q306Oracle,
-    "q305_equality_deletes" -> q305Oracle,
-    "q304_occ_transact" -> q304Oracle,
-    "q303_type_widening" -> q303Oracle,
-    "q302_rollback" -> q302Oracle,
-    "q301_split_planning" -> q301Oracle,
-    "q299_remove_orphans" -> q299Oracle,
-    "q298_mv_rewrite" -> q298Oracle,
-    "q297_incremental_mv" -> q297Oracle,
-    "q296_change_data_feed" -> q296Oracle,
-    "q295_stats_minmax" -> q295Oracle,
-    "q294_zonemap_skipping" -> q294Oracle,
-    "q293_timestamp_travel" -> q293Oracle,
-    "q292_sink_schema_evolution" -> q292Oracle,
-    "q291_check_constraint" -> q291Oracle,
-    "q290_partition_ddl" -> q290Oracle,
-    "q289_overwrite_by_filter" -> q289Oracle,
-    "q288_mor_merge" -> q288Oracle,
-    "q287_bucket_transform_write" -> q287Oracle,
-    "q286_metadata_tables" -> q286Oracle,
-    "q285_expire_snapshots" -> q285Oracle,
-    "q284_mor_lineage" -> q284Oracle,
-    "q283_write_audit_publish" -> q283Oracle,
-    "q280_mor_vacuum" -> q280Oracle,
-    "q279_mor_update" -> q279Oracle,
-    "q277_mor_delete" -> q277Oracle,
-    "q276_compact_procedure" -> q276Oracle,
-    "q275_merge_upsert" -> q275Oracle,
-    "q274_rowlevel_update" -> q274Oracle,
-    "q271_reported_stats" -> q271Oracle,
-    "q270_topn_pushdown" -> q270Oracle,
-    "q269_clustered_write" -> q269Oracle,
-    "q265_manifest_agg" -> q265Oracle,
-    "q263_time_travel" -> q263Oracle,
-    "q260_v2_commit_write" -> q260Oracle,
-    "q261_v2_metadata_delete" -> q261Oracle,
-    "q258_file_provenance" -> q258Oracle,
-    "q252_agg_pushdown" -> q252Oracle,
-    "q239_xml_roundtrip" -> q239Oracle,
-    "q236_variant_json" -> q236Oracle,
-    "q235_nested_pruning" -> q235Oracle,
-    "q164_dynamic_overwrite" -> q164Oracle,
-    "q145_dynamic_pruning" -> q145Oracle,
-    "q129_bucketed_join" -> q129Oracle,
-    "q54_csv_roundtrip" -> q54Oracle,
-    "q55_json_roundtrip" -> q55Oracle,
-    "q96_orc_roundtrip" -> q96Oracle,
-    "q59_corrupt_tolerant" -> q59Oracle,
-    "q63_partition_pruning" -> q63Oracle,
-    "q64_schema_evolution" -> q64Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q318_column_stats", q318ColumnStats, q318Oracle),
+    Query("q317_runtime_prune_nonkey", q317RuntimePruneNonKey, q317Oracle),
+    Query("q316_mor_bucket_spj", q316MorBucketSpj, q316Oracle),
+    Query("q315_runtime_file_pruning", q315RuntimeFilePruning, q315Oracle),
+    Query("q314_partitions_meta", q314PartitionsMeta, q314Oracle),
+    Query("q313_bucket_spj", q313BucketSpj, q313Oracle),
+    Query("q312_merge_schema_write", q312MergeSchemaWrite, q312Oracle),
+    Query("q311_spec_evolution", q311SpecEvolution, q311Oracle),
+    Query("q310_bloom_index", q310BloomIndex, q310Oracle),
+    Query("q309_column_defaults", q309ColumnDefaults, q309Oracle),
+    Query("q308_null_stats", q308NullStats, q308Oracle),
+    Query("q307_branches", q307Branches, q307Oracle),
+    Query("q306_clustered_rewrite", q306ClusteredRewrite, q306Oracle),
+    Query("q305_equality_deletes", q305EqualityDeletes, q305Oracle),
+    Query("q304_occ_transact", q304OccTransact, q304Oracle),
+    Query("q303_type_widening", q303TypeWidening, q303Oracle),
+    Query("q302_rollback", q302Rollback, q302Oracle),
+    Query("q301_split_planning", q301SplitPlanning, q301Oracle),
+    Query("q299_remove_orphans", q299RemoveOrphans, q299Oracle),
+    Query("q298_mv_rewrite", q298MvRewrite, q298Oracle),
+    Query("q297_incremental_mv", q297IncrementalMv, q297Oracle),
+    Query("q296_change_data_feed", q296ChangeDataFeed, q296Oracle),
+    Query("q295_stats_minmax", q295StatsMinmax, q295Oracle),
+    Query("q294_zonemap_skipping", q294ZoneMapSkipping, q294Oracle),
+    Query("q293_timestamp_travel", q293TimestampTravel, q293Oracle),
+    Query("q292_sink_schema_evolution", q292SinkSchemaEvolution, q292Oracle),
+    Query("q291_check_constraint", q291CheckConstraint, q291Oracle),
+    Query("q290_partition_ddl", q290PartitionDdl, q290Oracle),
+    Query("q289_overwrite_by_filter", q289OverwriteByFilter, q289Oracle),
+    Query("q288_mor_merge", q288MorMerge, q288Oracle),
+    Query("q287_bucket_transform_write", q287BucketTransformWrite, q287Oracle),
+    Query("q286_metadata_tables", q286MetadataTables, q286Oracle),
+    Query("q285_expire_snapshots", q285ExpireSnapshots, q285Oracle),
+    Query("q284_mor_lineage", q284MorLineage, q284Oracle),
+    Query("q283_write_audit_publish", q283WriteAuditPublish, q283Oracle),
+    Query("q280_mor_vacuum", q280MorVacuum, q280Oracle),
+    Query("q279_mor_update", q279MorUpdate, q279Oracle),
+    Query("q277_mor_delete", q277MorDelete, q277Oracle),
+    Query("q276_compact_procedure", q276CompactProcedure, q276Oracle),
+    Query("q275_merge_upsert", q275MergeUpsert, q275Oracle),
+    Query("q274_rowlevel_update", q274RowLevelUpdate, q274Oracle),
+    Query("q271_reported_stats", q271ReportedStats, q271Oracle),
+    Query("q270_topn_pushdown", q270TopNPushdown, q270Oracle),
+    Query("q269_clustered_write", q269ClusteredWrite, q269Oracle),
+    Query("q265_manifest_agg", q265ManifestAgg, q265Oracle),
+    Query("q263_time_travel", q263TimeTravel, q263Oracle),
+    Query("q260_v2_commit_write", q260V2CommitWrite, q260Oracle),
+    Query("q261_v2_metadata_delete", q261V2MetadataDelete, q261Oracle),
+    Query("q258_file_provenance", q258FileProvenance, q258Oracle),
+    Query("q252_agg_pushdown", q252AggPushdown, q252Oracle),
+    Query("q239_xml_roundtrip", q239XmlRoundtrip, q239Oracle),
+    Query("q236_variant_json", q236VariantJson, q236Oracle),
+    Query("q235_nested_pruning", q235NestedPruning, q235Oracle),
+    Query("q164_dynamic_overwrite", q164DynamicOverwrite, q164Oracle),
+    Query("q145_dynamic_pruning", q145DynamicPruning, q145Oracle),
+    Query("q129_bucketed_join", q129BucketedJoin, q129Oracle),
+    Query("q54_csv_roundtrip", q54CsvRoundtrip, q54Oracle),
+    Query("q55_json_roundtrip", q55JsonRoundtrip, q55Oracle),
+    Query("q96_orc_roundtrip", q96OrcRoundtrip, q96Oracle),
+    Query("q59_corrupt_tolerant", q59CorruptTolerant, q59Oracle),
+    Query("q63_partition_pruning", q63PartitionPruning, q63Oracle),
+    Query("q64_schema_evolution", q64SchemaEvolution, q64Oracle))
 }

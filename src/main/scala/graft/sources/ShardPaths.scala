@@ -22,6 +22,13 @@ import org.apache.spark.sql.SparkSession
   * scale factors apart: Bench warms at sf0.001 then measures at sf0.1
   * in one session, and a shared path would let one scale factor's
   * shards answer the other's manifest.
+  *
+  * Fixture roots are SINGLE-WRITER: one query run owns its root from
+  * [[fresh]] until the frame it returns has been read. [[fresh]] wipes
+  * the root with no lock or rename, so two runs of one query over one
+  * input dir (two sessions, one base) must not overlap; a run that
+  * fails throws before it returns a frame, and the next run starts
+  * empty.
   */
 object ShardPaths {
 
@@ -34,6 +41,24 @@ object ShardPaths {
     */
   def resolveCheckpoint(spark: SparkSession, query: String, dir: String): String =
     qualify(spark, new Path(base(spark), sub(query, dir) + "_ckpt"))
+
+  /** [[resolve]]'s root, deleted recursively: the empty root a fixture
+    * run starts from, so no fixture table carries an earlier run's
+    * history. */
+  def fresh(spark: SparkSession, query: String, dir: String): String =
+    wipe(spark, resolve(spark, query, dir))
+
+  /** [[resolveCheckpoint]]'s root, deleted recursively. A stream's
+    * table and checkpoint are one unit: a fresh table under a stale
+    * checkpoint would replay nothing. */
+  def freshCheckpoint(spark: SparkSession, query: String, dir: String): String =
+    wipe(spark, resolveCheckpoint(spark, query, dir))
+
+  private def wipe(spark: SparkSession, root: String): String = {
+    val p = new Path(root)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    root
+  }
 
   private def base(spark: SparkSession): Path =
     new Path(spark.conf.get("graft.shards.dir",

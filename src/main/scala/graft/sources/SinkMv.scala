@@ -43,6 +43,13 @@ object SinkMv {
     SinkSchemas.SinkField(2, "n_rows", org.apache.spark.sql.types.LongType),
     SinkSchemas.SinkField(3, "sum_v", org.apache.spark.sql.types.LongType))
 
+  /** The aggregate the MV stores, `(k, n_rows, sum_v)` per key of a
+    * keyed `(k, v)` frame, unordered. The sink and streaming fixtures
+    * read their tables back through it too. */
+  def keySums(keyed: DataFrame): DataFrame =
+    keyed.groupBy(col("k"))
+      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+
   /** The source path recorded at create time (immutable metadata). */
   private[graft] def sourceOf(mvPath: String): String = {
     val f = SinkSource.fs(mvPath)
@@ -67,9 +74,7 @@ object SinkMv {
     if (srcV == 0)
       throw new IllegalStateException(
         s"cannot create an MV over never-committed $srcPath")
-    val agg = SinkSource.load(spark, srcPath)
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+    val agg = keySums(SinkSource.load(spark, srcPath))
     publish(agg, mvPath, srcV)
     if (!SinkSource.publishFile(mvPath, "_mv.psv", srcPath + "\n"))
       throw new IllegalStateException(s"MV metadata publish failed: $mvPath")

@@ -1766,6 +1766,19 @@ class SinkCatalog extends CatalogPlugin with TableCatalog
     throw new UnsupportedOperationException("rename not supported")
 }
 
+object SinkCatalog {
+  /** Register a [[SinkCatalog]] as `name` over `root` in session `s`;
+    * each of `options` (`"mor" -> "true"`, `"bucketWrite" -> "true"`,
+    * `"partman" -> "true"`) becomes one catalog option. */
+  def register(s: SparkSession, name: String, root: String,
+      options: (String, String)*): Unit = {
+    s.conf.set(s"spark.sql.catalog.$name", classOf[SinkCatalog].getName)
+    (("root" -> root) +: options).foreach { case (k, v) =>
+      s.conf.set(s"spark.sql.catalog.$name.$k", v)
+    }
+  }
+}
+
 class SinkTable(path: String, pinnedVersion: Option[Int] = None,
     clustered: Boolean = false, stats: Boolean = true,
     maxVersionsPerTrigger: Option[Int] = None, mor: Boolean = false,

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Loaders for the driver-generated testdata star schema (TESTDATA.md).
   *
@@ -100,4 +101,10 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame    = load(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
+
+  /** The sink and streaming fixtures' keyed shape of an events frame:
+    * `(event_id % m AS k, event_id AS v)`. Use as
+    * `events.transform(Tables.keyed(101))`, batch or streaming. */
+  def keyed(m: Int)(events: DataFrame): DataFrame =
+    events.select((col("event_id") % m).as("k"), col("event_id").as("v"))
 }

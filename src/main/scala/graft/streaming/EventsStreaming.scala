@@ -312,17 +312,22 @@ object EventsStreaming {
     s
   }
 
-  /** Run a streaming query to completion against the (finite) parquet
-    * source through a memory sink; returns the collected result. Used
-    * by tests and demos — a production run would use a real sink with
-    * checkpointing and keep the query running. The stream executes in
+  /** Run a streaming query to completion against its (finite) source
+    * through a memory sink named `name`; returns the collected result.
+    * The registry's streaming queries drain through it, and so do
+    * tests; a production run would use a real sink and keep the query
+    * running. `checkpoint` pins the checkpoint location (a caller that
+    * reads the checkpoint afterwards, e.g. its state store, needs one);
+    * without it Spark uses a temporary one. The stream executes in
     * whatever session `df` was BUILT against — callers construct their
     * source via [[streamSession]] so the [[StatePartitions]] pin stays
     * session-local; this method mutates no global state.
     */
   def runToMemory(df: DataFrame, name: String,
-      mode: OutputMode = OutputMode.Append): DataFrame = {
-    val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+      mode: OutputMode = OutputMode.Append,
+      checkpoint: Option[String] = None): DataFrame = {
+    val w = df.writeStream.outputMode(mode).format("memory").queryName(name)
+    val q = checkpoint.fold(w)(w.option("checkpointLocation", _)).start()
     q.processAllAvailable()
     q.stop()
     df.sparkSession.table(name)

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.SparkEntry.Query
+import graft.sources.{ShardPaths, SinkCatalog, SinkChanges, SinkMv, SinkSource, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -115,7 +117,7 @@ object StreamingQueries {
     // carries the schema readEventsStream infers back from the files.
     // flush rows: one synthetic event per user, 30 days past the max
     // raw event time — their only job is to advance the watermark
-    val raw = graft.sources.Tables.events(ss, dir)
+    val raw = Tables.events(ss, dir)
     val maxSec = raw.agg(max(col("ts").cast("long"))).head().getLong(0)
     val flush = raw.select(col("user_id")).distinct()
       .select((-col("user_id") - 1).as("event_id"),
@@ -279,14 +281,10 @@ object StreamingQueries {
   // checkpoint log — both scale with keys and files, not history.
   def q244StreamRestart(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
-    val outDir = graft.sources.ShardPaths.resolve(ss, "q244", dir)
-    val ckptDir = graft.sources.ShardPaths.resolveCheckpoint(ss, "q244", dir)
-    val stage = graft.sources.ShardPaths.resolve(ss, "q244_stage", dir)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(ss.sessionState.newHadoopConf())
-    Seq(outDir, ckptDir, stage).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    val raw = graft.sources.Tables.events(ss, dir)
+    val outDir = ShardPaths.fresh(ss, "q244", dir)
+    val ckptDir = ShardPaths.freshCheckpoint(ss, "q244", dir)
+    val stage = ShardPaths.fresh(ss, "q244_stage", dir)
+    val raw = Tables.events(ss, dir)
     raw.filter(col("event_id") % 2 === 0)
       .coalesce(1).write.parquet(s"$stage/a1.parquet")
     q244Run(ss, stage, ckptDir, outDir)
@@ -351,12 +349,8 @@ object StreamingQueries {
   // from O(state) to O(delta).
   def q250RocksdbState(spark: SparkSession, dir: String): DataFrame = {
     val ss = rocksSession(spark)
-    val outDir = graft.sources.ShardPaths.resolve(ss, "q250", dir)
-    val ckptDir = graft.sources.ShardPaths.resolveCheckpoint(ss, "q250", dir)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(ss.sessionState.newHadoopConf())
-    Seq(outDir, ckptDir).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
+    val outDir = ShardPaths.fresh(ss, "q250", dir)
+    val ckptDir = ShardPaths.freshCheckpoint(ss, "q250", dir)
     q250Run(ss, dir, ckptDir, outDir)
     spark.read.parquet(outDir)
       .select(col("user_id"), col("n_events"),
@@ -429,14 +423,10 @@ object StreamingQueries {
   // well-defined.
   def q253StreamAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
-    val outDir = graft.sources.ShardPaths.resolve(ss, "q253", dir)
-    val ckptDir = graft.sources.ShardPaths.resolveCheckpoint(ss, "q253", dir)
-    val stage = graft.sources.ShardPaths.resolve(ss, "q253_stage", dir)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(ss.sessionState.newHadoopConf())
-    Seq(outDir, ckptDir, stage).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    val raw = graft.sources.Tables.events(ss, dir)
+    val outDir = ShardPaths.fresh(ss, "q253", dir)
+    val ckptDir = ShardPaths.freshCheckpoint(ss, "q253", dir)
+    val stage = ShardPaths.fresh(ss, "q253_stage", dir)
+    val raw = Tables.events(ss, dir)
     // two staged splits → two rate-limited micro-batches per run: the
     // mechanism under demonstration is MULTIPLE bounded batches + self-
     // termination, which 2 batches exercises identically to 4 at half
@@ -514,14 +504,10 @@ object StreamingQueries {
   def q256StreamIncrementalPublish(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
     ss.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val outDir = graft.sources.ShardPaths.resolve(ss, "q256", dir)
-    val ckptDir = graft.sources.ShardPaths.resolveCheckpoint(ss, "q256", dir)
-    val stage = graft.sources.ShardPaths.resolve(ss, "q256_stage", dir)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(ss.sessionState.newHadoopConf())
-    Seq(outDir, ckptDir, stage).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    val raw = graft.sources.Tables.events(ss, dir)
+    val outDir = ShardPaths.fresh(ss, "q256", dir)
+    val ckptDir = ShardPaths.freshCheckpoint(ss, "q256", dir)
+    val stage = ShardPaths.fresh(ss, "q256_stage", dir)
+    val raw = Tables.events(ss, dir)
       .withColumn("day", expr("CAST(ts AS LONG) DIV 86400"))
     raw.filter(col("day") < PublishSplitDay).drop("day")
       .coalesce(1).write.parquet(s"$stage/a1.parquet")
@@ -745,15 +731,11 @@ object StreamingQueries {
 
   def q80StreamShardSink(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
-    val outDir = graft.sources.ShardPaths.resolve(ss, "q80", dir)
-    val ckptDir = graft.sources.ShardPaths.resolveCheckpoint(ss, "q80", dir)
     // deterministic rerun: a kept checkpoint over a finite source would
     // skip the already-seen file and leave a stale outDir answering the
     // manifest — reset both before starting
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(ss.sessionState.newHadoopConf())
-    Seq(outDir, ckptDir).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
+    val outDir = ShardPaths.fresh(ss, "q80", dir)
+    val ckptDir = ShardPaths.freshCheckpoint(ss, "q80", dir)
     val q = shardSinkStart(EventsStreaming.readEventsStream(ss, dir), outDir, ckptDir)
     q.processAllAvailable()
     q.stop()
@@ -914,7 +896,7 @@ object StreamingQueries {
         when(col("source") === "src0", "8000")
           .when(col("source") === "src1", "4000").otherwise("2000"))
     // stage 2 — k-anonymity cohorts from the reference corpus
-    val cohorts = graft.sources.Tables.documents(ss, dir)
+    val cohorts = Tables.documents(ss, dir)
       .select(col("lang"), col("source"),
         expr("n_chars div 100").as("len_bucket"))
       .groupBy(col("lang"), col("source"), col("len_bucket"))
@@ -1005,7 +987,7 @@ object StreamingQueries {
   // arrives exactly once.
   def q181StreamPrivacyGate(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
-    val cohorts = graft.sources.Tables.documents(ss, dir)
+    val cohorts = Tables.documents(ss, dir)
       .select(col("lang"), col("source"),
         expr("n_chars div 100").as("len_bucket"))
       .groupBy(col("lang"), col("source"), col("len_bucket"))
@@ -1050,7 +1032,7 @@ object StreamingQueries {
       graft.functions.DotProductLong.dot_product_long(a, b)
     val sv = transform(col("embedding"),
       x => round(x.cast("double") * 1000000).cast("bigint"))
-    val vecs = graft.sources.Tables.embeddings(ss, dir)
+    val vecs = Tables.embeddings(ss, dir)
       .select(col("vec_id"), sv.as("sv"))
       .withColumn("nrm", dot(col("sv"), col("sv")))
     val watch = vecs.filter(col("vec_id") % 97 === 0)
@@ -1126,7 +1108,7 @@ object StreamingQueries {
     // statistics a monitor recalibrates against), not from the memory
     // sink — which also avoids the MemoryPlan self-join, whose leaves
     // fail analyzer reference deduplication
-    val stats = graft.sources.Tables.events(ss, dir)
+    val stats = Tables.events(ss, dir)
       .select(col("event_type"), expr("CAST(ts AS LONG) div 3600").as("hr"))
       .groupBy(col("event_type"), col("hr")).agg(count(lit(1)).as("bcnt"))
       .groupBy(col("event_type")).agg(
@@ -1201,8 +1183,8 @@ object StreamingQueries {
   def q91StreamEnrich(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
     val events = EventsStreaming.readEventsStream(ss, dir)
-    val dims = graft.sources.Tables.customer(ss, dir)
-      .join(graft.sources.Tables.nation(ss, dir),
+    val dims = Tables.customer(ss, dir)
+      .join(Tables.nation(ss, dir),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("c_mktsegment"), col("n_name"))
     val enriched = events.join(dims, col("user_id") === col("c_custkey"))
@@ -1242,7 +1224,7 @@ object StreamingQueries {
 
   def q103StreamDedupStatic(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
-    val index = graft.sources.Tables.documents(ss, dir)
+    val index = Tables.documents(ss, dir)
       .filter(col("doc_id") % 3 =!= 0)
       .select(shingleFingerprint.as("fp")).distinct()
     val kept = readDocumentsStream(ss, dir)
@@ -1398,19 +1380,14 @@ object StreamingQueries {
     // finite staging, so skip it (guide §2.4). CurationSinkSpec's
     // >=2-batch-directory pin is on the DATA batches, unchanged.
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val outDir = graft.sources.ShardPaths.resolve(ss, "q153", dir)
-    val ckptDir = graft.sources.ShardPaths.resolveCheckpoint(ss, "q153", dir)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(ss.sessionState.newHadoopConf())
-    Seq(outDir, ckptDir).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
+    val outDir = ShardPaths.fresh(ss, "q153", dir)
+    val ckptDir = ShardPaths.freshCheckpoint(ss, "q153", dir)
     // at-least-once staging: copy the documents file twice into a
     // staging dir and feed it with maxFilesPerTrigger=1, so the
     // duplicate arrivals land in a LATER micro-batch than the originals
     // — the dedup state provably survives a real batch boundary (the
     // union-with-self form would put both copies in one batch).
-    val stage = graft.sources.ShardPaths.resolve(ss, "q153_stage", dir)
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+    val stage = ShardPaths.fresh(ss, "q153_stage", dir)
     val raw = ss.read.schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
     raw.coalesce(1).write.parquet(s"$stage/a1.parquet")
@@ -1455,14 +1432,10 @@ object StreamingQueries {
   // and the join becomes the q85 asymmetric form.
   def q163StreamIndexUpdate(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
-    val outDir = graft.sources.ShardPaths.resolve(ss, "q163", dir)
-    val idxDir = graft.sources.ShardPaths.resolve(ss, "q163_index", dir)
-    val ckptDir = graft.sources.ShardPaths.resolveCheckpoint(ss, "q163", dir)
-    val stage = graft.sources.ShardPaths.resolve(ss, "q163_stage", dir)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(ss.sessionState.newHadoopConf())
-    Seq(outDir, idxDir, ckptDir, stage).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
+    val outDir = ShardPaths.fresh(ss, "q163", dir)
+    val idxDir = ShardPaths.fresh(ss, "q163_index", dir)
+    val ckptDir = ShardPaths.freshCheckpoint(ss, "q163", dir)
+    val stage = ShardPaths.fresh(ss, "q163_stage", dir)
     val raw = ss.read.schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
     // static base: the corpus third already admitted before this run
@@ -1614,16 +1587,12 @@ object StreamingQueries {
   // window between publishing files and recording the epoch.
   def q264StreamV2Sink(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
-    val root = graft.sources.ShardPaths.resolve(ss, "q264", dir)
-    val ckpt = graft.sources.ShardPaths.resolveCheckpoint(ss, "q264", dir)
     // table and checkpoint are one unit: a fresh table with a stale
     // checkpoint would replay nothing and read back empty
-    graft.sources.SinkSource.fs(root)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    graft.sources.SinkSource.fs(ckpt)
-      .delete(new org.apache.hadoop.fs.Path(ckpt), true)
+    val root = ShardPaths.fresh(ss, "q264", dir)
+    val ckpt = ShardPaths.freshCheckpoint(ss, "q264", dir)
     val keyed = EventsStreaming.readEventsStream(ss, dir)
-      .select((col("event_id") % 53).as("k"), col("event_id").as("v"))
+      .transform(Tables.keyed(53))
     val q = keyed.writeStream
       .format("graft.sources.SinkSource")
       .option("path", s"$root/t")
@@ -1632,9 +1601,8 @@ object StreamingQueries {
       .start()
     q.processAllAvailable()
     q.stop()
-    graft.sources.SinkSource.load(ss, s"$root/t")
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
+    SinkSource.load(ss, s"$root/t")
+      .transform(SinkMv.keySums)
       .orderBy(col("k"))
   }
 
@@ -1665,30 +1633,21 @@ object StreamingQueries {
   // of rescanning history.
   def q267StreamSinkCdc(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
-    val root = graft.sources.ShardPaths.resolve(ss, "q267", dir)
-    val ckpt = graft.sources.ShardPaths.resolveCheckpoint(ss, "q267", dir)
-    graft.sources.SinkSource.fs(root)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    graft.sources.SinkSource.fs(ckpt)
-      .delete(new org.apache.hadoop.fs.Path(ckpt), true)
+    val root = ShardPaths.fresh(ss, "q267", dir)
+    val ckpt = ShardPaths.freshCheckpoint(ss, "q267", dir)
     def keyed(pred: org.apache.spark.sql.Column) =
-      graft.sources.Tables.events(ss, dir).filter(pred)
-        .select((col("event_id") % 41).as("k"), col("event_id").as("v"))
+      Tables.events(ss, dir).filter(pred)
+        .transform(Tables.keyed(41))
         .repartition(8, col("k"))
-    graft.sources.SinkSource.write(keyed(col("event_id") % 4 =!= 0),
+    SinkSource.write(keyed(col("event_id") % 4 =!= 0),
       s"$root/t", overwrite = true)                          // version 1
-    graft.sources.SinkSource.write(keyed(col("event_id") % 4 === 0),
+    SinkSource.write(keyed(col("event_id") % 4 === 0),
       s"$root/t", overwrite = false)                         // version 2
     val stream = ss.readStream.format("graft.sources.SinkSource")
       .option("path", s"$root/t").load()
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
-    val q = stream.writeStream.outputMode(OutputMode.Complete)
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("q267_mem").start()
-    q.processAllAvailable()
-    q.stop()
-    ss.table("q267_mem").orderBy(col("k"))
+      .transform(SinkMv.keySums)
+    EventsStreaming.runToMemory(stream, "q267_mem", OutputMode.Complete,
+      Some(ckpt)).orderBy(col("k"))
   }
 
   val q267Oracle: String =
@@ -1719,31 +1678,22 @@ object StreamingQueries {
   // in — and keeps state-store updates and sink commits amortized.
   def q272StreamRateLimit(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
-    val root = graft.sources.ShardPaths.resolve(ss, "q272", dir)
-    val ckpt = graft.sources.ShardPaths.resolveCheckpoint(ss, "q272", dir)
-    graft.sources.SinkSource.fs(root)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    graft.sources.SinkSource.fs(ckpt)
-      .delete(new org.apache.hadoop.fs.Path(ckpt), true)
+    val root = ShardPaths.fresh(ss, "q272", dir)
+    val ckpt = ShardPaths.freshCheckpoint(ss, "q272", dir)
     def keyed(i: Int) =
-      graft.sources.Tables.events(ss, dir)
+      Tables.events(ss, dir)
         .filter(col("event_id") % 4 === i)
-        .select((col("event_id") % 37).as("k"), col("event_id").as("v"))
+        .transform(Tables.keyed(37))
         .repartition(8, col("k"))
-    graft.sources.SinkSource.write(keyed(0), s"$root/t", overwrite = true)
+    SinkSource.write(keyed(0), s"$root/t", overwrite = true)
     (1 to 3).foreach(i =>
-      graft.sources.SinkSource.write(keyed(i), s"$root/t", overwrite = false))
+      SinkSource.write(keyed(i), s"$root/t", overwrite = false))
     val stream = ss.readStream.format("graft.sources.SinkSource")
       .option("path", s"$root/t")
       .option("maxVersionsPerTrigger", "1").load()
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
-    val q = stream.writeStream.outputMode(OutputMode.Complete)
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("q272_mem").start()
-    q.processAllAvailable()
-    q.stop()
-    ss.table("q272_mem").orderBy(col("k"))
+      .transform(SinkMv.keySums)
+    EventsStreaming.runToMemory(stream, "q272_mem", OutputMode.Complete,
+      Some(ckpt)).orderBy(col("k"))
   }
 
   val q272Oracle: String =
@@ -1772,25 +1722,17 @@ object StreamingQueries {
   // introspection scales with state partitions like any other scan.
   def q278StreamStateReader(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
-    val root = graft.sources.ShardPaths.resolve(ss, "q278", dir)
-    val ckpt = graft.sources.ShardPaths.resolveCheckpoint(ss, "q278", dir)
-    graft.sources.SinkSource.fs(root)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    graft.sources.SinkSource.fs(ckpt)
-      .delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    val keyed = graft.sources.Tables.events(ss, dir)
-      .select((col("event_id") % 43).as("k"), col("event_id").as("v"))
+    val root = ShardPaths.fresh(ss, "q278", dir)
+    val ckpt = ShardPaths.freshCheckpoint(ss, "q278", dir)
+    val keyed = Tables.events(ss, dir)
+      .transform(Tables.keyed(43))
       .repartition(8, col("k"))
-    graft.sources.SinkSource.write(keyed, s"$root/t", overwrite = true)
-    val q = ss.readStream.format("graft.sources.SinkSource")
+    SinkSource.write(keyed, s"$root/t", overwrite = true)
+    val stream = ss.readStream.format("graft.sources.SinkSource")
       .option("path", s"$root/t").load()
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
-      .writeStream.outputMode(OutputMode.Complete)
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("q278_mem").start()
-    q.processAllAvailable()
-    q.stop()
+      .transform(SinkMv.keySums)
+    EventsStreaming.runToMemory(stream, "q278_mem", OutputMode.Complete,
+      Some(ckpt))
     // the answer comes from the CHECKPOINT'S STATE, not the sink
     ss.read.format("statestore").load(ckpt)
       .select(col("key.k").as("k"), col("value.count").as("n_rows"),
@@ -1826,18 +1768,14 @@ object StreamingQueries {
   // few thousand keys, timers shard with the state store.
   def q281StreamTimers(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.stateV2Session(spark)
-    val root = graft.sources.ShardPaths.resolve(ss, "q281", dir)
-    val ckpt = graft.sources.ShardPaths.resolveCheckpoint(ss, "q281", dir)
-    graft.sources.SinkSource.fs(root)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    graft.sources.SinkSource.fs(ckpt)
-      .delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    val keyed = graft.sources.Tables.events(ss, dir)
-      .select((col("event_id") % 31).as("k"), col("event_id").as("v"))
+    val root = ShardPaths.fresh(ss, "q281", dir)
+    val ckpt = ShardPaths.freshCheckpoint(ss, "q281", dir)
+    val keyed = Tables.events(ss, dir)
+      .transform(Tables.keyed(31))
       .repartition(8, col("k"))
-    graft.sources.SinkSource.write(keyed, s"$root/t", overwrite = true)
+    SinkSource.write(keyed, s"$root/t", overwrite = true)
     import ss.implicits._
-    graft.sources.SinkSource.write(
+    SinkSource.write(
       Seq((-1L, 9000000000L)).toDF("k", "v").coalesce(1),
       s"$root/t", overwrite = false) // the flush version
     val timed = ss.readStream.format("graft.sources.SinkSource")
@@ -1850,14 +1788,10 @@ object StreamingQueries {
       .select(col("k"), col("v").as("sec"),
         timestamp_seconds(col("v") + 1000).as("ts"))
       .withWatermark("ts", "10 seconds")
-    val q = EventsStreaming.inactivityCloses(ss, timed, gapMs = 60000L)
-      .toDF()
-      .writeStream.outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("q281_mem").start()
-    q.processAllAvailable()
-    q.stop()
-    ss.table("q281_mem").filter(col("k") >= 0)
+    EventsStreaming.runToMemory(
+      EventsStreaming.inactivityCloses(ss, timed, gapMs = 60000L).toDF(),
+      "q281_mem", OutputMode.Append, Some(ckpt))
+      .filter(col("k") >= 0)
       .select(col("k"), col("n_events"), col("last_sec"))
       .orderBy(col("k"))
   }
@@ -1884,31 +1818,22 @@ object StreamingQueries {
   // turns onboarding from a full-history replay into a pointer.
   def q282StreamStartingVersion(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
-    val root = graft.sources.ShardPaths.resolve(ss, "q282", dir)
-    val ckpt = graft.sources.ShardPaths.resolveCheckpoint(ss, "q282", dir)
-    graft.sources.SinkSource.fs(root)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    graft.sources.SinkSource.fs(ckpt)
-      .delete(new org.apache.hadoop.fs.Path(ckpt), true)
+    val root = ShardPaths.fresh(ss, "q282", dir)
+    val ckpt = ShardPaths.freshCheckpoint(ss, "q282", dir)
     def keyed(i: Int) =
-      graft.sources.Tables.events(ss, dir)
+      Tables.events(ss, dir)
         .filter(col("event_id") % 3 === i)
-        .select((col("event_id") % 23).as("k"), col("event_id").as("v"))
+        .transform(Tables.keyed(23))
         .repartition(8, col("k"))
-    graft.sources.SinkSource.write(keyed(0), s"$root/t", overwrite = true)
-    graft.sources.SinkSource.write(keyed(1), s"$root/t", overwrite = false)
-    graft.sources.SinkSource.write(keyed(2), s"$root/t", overwrite = false)
-    val q = ss.readStream.format("graft.sources.SinkSource")
+    SinkSource.write(keyed(0), s"$root/t", overwrite = true)
+    SinkSource.write(keyed(1), s"$root/t", overwrite = false)
+    SinkSource.write(keyed(2), s"$root/t", overwrite = false)
+    val stream = ss.readStream.format("graft.sources.SinkSource")
       .option("path", s"$root/t")
       .option("startingVersion", "2").load()
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"))
-      .writeStream.outputMode(OutputMode.Complete)
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("q282_mem").start()
-    q.processAllAvailable()
-    q.stop()
-    ss.table("q282_mem").orderBy(col("k"))
+      .transform(SinkMv.keySums)
+    EventsStreaming.runToMemory(stream, "q282_mem", OutputMode.Complete,
+      Some(ckpt)).orderBy(col("k"))
   }
 
   val q282Oracle: String =
@@ -1940,43 +1865,32 @@ object StreamingQueries {
   // proportional to churn.
   def q300StreamChangeFeed(spark: SparkSession, dir: String): DataFrame = {
     val ss = EventsStreaming.streamSession(spark)
-    val root = graft.sources.ShardPaths.resolve(ss, "q300", dir)
-    val ckpt = graft.sources.ShardPaths.resolveCheckpoint(ss, "q300", dir)
-    graft.sources.SinkSource.fs(root)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    graft.sources.SinkSource.fs(ckpt)
-      .delete(new org.apache.hadoop.fs.Path(ckpt), true)
+    val root = ShardPaths.fresh(ss, "q300", dir)
+    val ckpt = ShardPaths.freshCheckpoint(ss, "q300", dir)
     def keyed(m: Long, pred: org.apache.spark.sql.Column) =
-      graft.sources.Tables.events(ss, dir)
+      Tables.events(ss, dir)
         .select((col("event_id") % 31).as("k"),
           (col("event_id") + m).as("v"))
         .filter(pred)
         .repartition(8, col("k"))
-    graft.sources.SinkSource.write(keyed(0, lit(true)),
+    SinkSource.write(keyed(0, lit(true)),
       s"$root/t", overwrite = true)                            // v1
-    graft.sources.SinkSource.write(
+    SinkSource.write(
       keyed(1000000, col("v") % 3 === 1),
       s"$root/t", overwrite = false)                           // v2
-    ss.conf.set("spark.sql.catalog.graft_cdc3",
-      classOf[graft.sources.SinkCatalog].getName)
-    ss.conf.set("spark.sql.catalog.graft_cdc3.root", root)
-    ss.conf.set("spark.sql.catalog.graft_cdc3.mor", "true")
+    SinkCatalog.register(ss, "graft_cdc3", root, "mor" -> "true")
     ss.sql("DELETE FROM graft_cdc3.t WHERE v % 7 = 2")         // v3
     ss.sql("UPDATE graft_cdc3.t SET v = v + 5000000 WHERE v % 13 = 1") // v4
     val sign = when(col("_change_type") === "insert", lit(1L))
       .otherwise(lit(-1L))
-    val live = graft.sources.SinkChanges
+    val live = SinkChanges
       .readStream(ss, s"$root/t", 0, Some(1))
       .select(col("k"), sign.as("s"), col("v"))
       .groupBy(col("k"))
       .agg(sum(col("s")).as("n_rows"),
         sum(col("s") * col("v")).as("sum_v"))
-    val q = live.writeStream.outputMode(OutputMode.Complete)
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("q300_mem").start()
-    q.processAllAvailable()
-    q.stop()
-    ss.table("q300_mem").filter(col("n_rows") > 0).orderBy(col("k"))
+    EventsStreaming.runToMemory(live, "q300_mem", OutputMode.Complete,
+      Some(ckpt)).filter(col("n_rows") > 0).orderBy(col("k"))
   }
 
   val q300Oracle: String =
@@ -1992,73 +1906,38 @@ object StreamingQueries {
       |SELECT k, COUNT(*) AS n_rows, CAST(SUM(v) AS BIGINT) AS sum_v
       |FROM live GROUP BY k ORDER BY k""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q300_stream_change_feed" -> q300StreamChangeFeed,
-    "q282_stream_starting_version" -> q282StreamStartingVersion,
-    "q281_stream_timers" -> q281StreamTimers,
-    "q278_stream_state_reader" -> q278StreamStateReader,
-    "q272_stream_rate_limit" -> q272StreamRateLimit,
-    "q267_stream_sink_cdc" -> q267StreamSinkCdc,
-    "q264_stream_v2_sink" -> q264StreamV2Sink,
-    "q262_stream_union_watermarks" -> q262StreamUnionWatermarks,
-    "q225_stream_rag_chunks" -> q225StreamRagChunks,
-    "q153_stream_curation_pipeline" -> q153StreamCurationPipeline,
-    "q163_stream_index_update" -> q163StreamIndexUpdate,
-    "q122_stream_user_totals" -> q122StreamUserTotals,
-    "q45_stream_hourly" -> q45StreamHourly,
-    "q46_stream_sessions" -> q46StreamSessions,
-    "q146_stream_session_window" -> q146StreamSessionWindow,
-    "q151_stream_hopping" -> q151StreamHopping,
-    "q72_stream_dedup" -> q72StreamDedup,
-    "q244_stream_restart" -> q244StreamRestart,
-    "q250_stream_rocksdb" -> q250RocksdbState,
-    "q253_stream_available_now" -> q253StreamAvailableNow,
-    "q256_stream_incremental_publish" -> q256StreamIncrementalPublish,
-    "q73_stream_join" -> q73StreamJoin,
-    "q167_stream_outer_join" -> q167StreamOuterJoin,
-    "q181_stream_privacy_gate" -> q181StreamPrivacyGate,
-    "q183_stream_rate_monitor" -> q183StreamRateMonitor,
-    "q193_stream_dsir_gate" -> q193StreamDsirGate,
-    "q194_stream_admission_stack" -> q194StreamAdmissionStack,
-    "q203_stream_semantic_watchlist" -> q203StreamSemanticWatchlist,
-    "q80_stream_shard_sink" -> q80StreamShardSink,
-    "q84_stream_dedup_watermark" -> q84StreamDedupWatermark,
-    "q88_stream_curation_gate" -> q88StreamCurationGate,
-    "q91_stream_enrich" -> q91StreamEnrich,
-    "q103_stream_dedup_static" -> q103StreamDedupStatic)
-
-  def oracleSql: Map[String, String] = Map(
-    "q300_stream_change_feed" -> q300Oracle,
-    "q282_stream_starting_version" -> q282Oracle,
-    "q281_stream_timers" -> q281Oracle,
-    "q278_stream_state_reader" -> q278Oracle,
-    "q272_stream_rate_limit" -> q272Oracle,
-    "q267_stream_sink_cdc" -> q267Oracle,
-    "q264_stream_v2_sink" -> q264Oracle,
-    "q262_stream_union_watermarks" -> q262Oracle,
-    "q225_stream_rag_chunks" -> q225Oracle,
-    "q153_stream_curation_pipeline" -> q153Oracle,
-    "q163_stream_index_update" -> q163Oracle,
-    "q122_stream_user_totals" -> q122Oracle,
-    "q45_stream_hourly" -> q45Oracle,
-    "q46_stream_sessions" -> q46Oracle,
-    "q146_stream_session_window" -> q146Oracle,
-    "q151_stream_hopping" -> q151Oracle,
-    "q72_stream_dedup" -> q72Oracle,
-    "q244_stream_restart" -> q244Oracle,
-    "q250_stream_rocksdb" -> q250Oracle,
-    "q253_stream_available_now" -> q253Oracle,
-    "q256_stream_incremental_publish" -> q256Oracle,
-    "q73_stream_join" -> q73Oracle,
-    "q167_stream_outer_join" -> q167Oracle,
-    "q181_stream_privacy_gate" -> q181Oracle,
-    "q183_stream_rate_monitor" -> q183Oracle,
-    "q193_stream_dsir_gate" -> q193Oracle,
-    "q194_stream_admission_stack" -> q194Oracle,
-    "q203_stream_semantic_watchlist" -> q203Oracle,
-    "q80_stream_shard_sink" -> q80Oracle,
-    "q84_stream_dedup_watermark" -> q84Oracle,
-    "q88_stream_curation_gate" -> q88Oracle,
-    "q91_stream_enrich" -> q91Oracle,
-    "q103_stream_dedup_static" -> q103Oracle)
+  def registry: Seq[Query] = Seq(
+    Query("q300_stream_change_feed", q300StreamChangeFeed, q300Oracle),
+    Query("q282_stream_starting_version", q282StreamStartingVersion, q282Oracle),
+    Query("q281_stream_timers", q281StreamTimers, q281Oracle),
+    Query("q278_stream_state_reader", q278StreamStateReader, q278Oracle),
+    Query("q272_stream_rate_limit", q272StreamRateLimit, q272Oracle),
+    Query("q267_stream_sink_cdc", q267StreamSinkCdc, q267Oracle),
+    Query("q264_stream_v2_sink", q264StreamV2Sink, q264Oracle),
+    Query("q262_stream_union_watermarks", q262StreamUnionWatermarks, q262Oracle),
+    Query("q225_stream_rag_chunks", q225StreamRagChunks, q225Oracle),
+    Query("q153_stream_curation_pipeline", q153StreamCurationPipeline, q153Oracle),
+    Query("q163_stream_index_update", q163StreamIndexUpdate, q163Oracle),
+    Query("q122_stream_user_totals", q122StreamUserTotals, q122Oracle),
+    Query("q45_stream_hourly", q45StreamHourly, q45Oracle),
+    Query("q46_stream_sessions", q46StreamSessions, q46Oracle),
+    Query("q146_stream_session_window", q146StreamSessionWindow, q146Oracle),
+    Query("q151_stream_hopping", q151StreamHopping, q151Oracle),
+    Query("q72_stream_dedup", q72StreamDedup, q72Oracle),
+    Query("q244_stream_restart", q244StreamRestart, q244Oracle),
+    Query("q250_stream_rocksdb", q250RocksdbState, q250Oracle),
+    Query("q253_stream_available_now", q253StreamAvailableNow, q253Oracle),
+    Query("q256_stream_incremental_publish", q256StreamIncrementalPublish, q256Oracle),
+    Query("q73_stream_join", q73StreamJoin, q73Oracle),
+    Query("q167_stream_outer_join", q167StreamOuterJoin, q167Oracle),
+    Query("q181_stream_privacy_gate", q181StreamPrivacyGate, q181Oracle),
+    Query("q183_stream_rate_monitor", q183StreamRateMonitor, q183Oracle),
+    Query("q193_stream_dsir_gate", q193StreamDsirGate, q193Oracle),
+    Query("q194_stream_admission_stack", q194StreamAdmissionStack, q194Oracle),
+    Query("q203_stream_semantic_watchlist", q203StreamSemanticWatchlist, q203Oracle),
+    Query("q80_stream_shard_sink", q80StreamShardSink, q80Oracle),
+    Query("q84_stream_dedup_watermark", q84StreamDedupWatermark, q84Oracle),
+    Query("q88_stream_curation_gate", q88StreamCurationGate, q88Oracle),
+    Query("q91_stream_enrich", q91StreamEnrich, q91Oracle),
+    Query("q103_stream_dedup_static", q103StreamDedupStatic, q103Oracle))
 }

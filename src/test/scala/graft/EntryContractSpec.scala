@@ -1,9 +1,9 @@
 package graft
 
 /** The driver contract: `SparkEntry.entry` must return rows on the
-  * sf0.001 fixture (the driver's smoke check), and every `oracleSql`
+  * sf0.001 fixture (the driver's smoke check), every `oracleSql`
   * key must name a registered query (a dangling oracle would be
-  * silently ignored by the gate).
+  * silently ignored by the gate), and no query is registered twice.
   */
 class EntryContractSpec extends SparkSpec {
 
@@ -18,6 +18,18 @@ class EntryContractSpec extends SparkSpec {
       .map(_.drop(1).takeWhile(_.isDigit).toInt)
     val missing = (1 to nums.max).toSet.diff(nums)
     assert(missing.isEmpty, s"registry numbering holes: ${missing.toSeq.sorted}")
+  }
+
+  test("no query name or number is registered twice") {
+    // the views are Maps: a second entry under one name would silently
+    // replace the first, so check the concatenated registry itself
+    val names = SparkEntry.registry.map(_.name)
+    val twice = names.diff(names.distinct)
+    assert(twice.isEmpty, s"names registered twice: $twice")
+    val nums = names.map(_.drop(1).takeWhile(_.isDigit).toInt)
+    val numTwice = nums.diff(nums.distinct)
+    assert(numTwice.isEmpty, s"numbers registered twice: $numTwice")
+    assert(SparkEntry.queries.size == names.size)
   }
 
   test("bench cost table covers the whole registry") {

@@ -34,18 +34,4 @@ class Scd2Spec extends SparkSpec {
     assert(c1.head.getAs[Date]("valid_to") == d("2007-01-01"))
     assert(c1.last.getAs[Boolean]("is_current") && c1.last.getAs[Date]("valid_to") == null)
   }
-
-  test("as-of join picks the version valid at the event date") {
-    import spark.implicits._
-    val facts = Seq(("C1", d("2006-08-15")), ("C1", d("2008-01-01")),
-      ("C2", d("2006-04-01"))).toDF("cedula", "fecha_evento")
-    val joined = Scd2.asOfJoin(facts, dim, "cedula", col("fecha_evento"))
-      .select("cedula", "fecha_evento", "municipio", "estracto").collect()
-    assert(joined.length == 3)
-    val byDate = joined.map(r => (r.getAs[String]("cedula"), r.getAs[Date]("fecha_evento").toString) ->
-      (r.getAs[String]("municipio"), r.getAs[Int]("estracto"))).toMap
-    assert(byDate(("C1", "2006-08-15")) == ("Bogotá D.C.", 3)) // before the move
-    assert(byDate(("C1", "2008-01-01")) == ("Medellín", 3)) // current version
-    assert(byDate(("C2", "2006-04-01")) == ("Cali", 4)) // middle version
-  }
 }

@@ -36,6 +36,17 @@ class BandSkewSpec extends SparkSpec {
     rows.toDF("vec_id", "label", "embedding")
   }
 
+  /** The largest single band-bucket's share of one band's rows: how
+    * hard the fixture concentrates a band's rows under one key. */
+  private def bandedTopBucketShare(raw: DataFrame): Double = {
+    val all = Similarity.withScaledNorm(raw)
+      .withColumn("bkeys", Similarity.bandKeysCol)
+    val top = all.select(explode(col("bkeys")).as("bkey"))
+      .groupBy(col("bkey")).agg(count(lit(1)).as("n"))
+      .agg(max(col("n")).cast("double").as("mx")).collect()(0).getDouble(0)
+    top / raw.count()
+  }
+
   /** Runs `f` while recording per-task shuffle-read record counts. */
   private def withTaskReads[A](f: => A): (A, Seq[Long]) = {
     val reads = scala.collection.concurrent.TrieMap.empty[Long, Long]
@@ -74,7 +85,7 @@ class BandSkewSpec extends SparkSpec {
     val emb = skewedEmbeddings.cache()
     // fixture sanity: the cluster really is one bucket per band —
     // the top band key holds >= 400 of the 500 rows in its band
-    val hot = Similarity.bandedTopBucketShare(emb)
+    val hot = bandedTopBucketShare(emb)
     assert(hot >= 0.8, f"fixture not skewed: top bucket share $hot%.2f")
 
     // thresholds scaled to the fixture (the hot partitions are a few

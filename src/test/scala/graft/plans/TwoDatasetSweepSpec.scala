@@ -14,7 +14,8 @@ import graft.{SparkEntry, SparkSpec}
   * way the UDF and nested-loop bans were:
   *
   *  1. COMPLETENESS (mechanical): scan `src/main` for every hazard-
-  *     primitive call site — StageBoundary / ShardPaths.resolve tags,
+  *     primitive call site — StageBoundary / ShardPaths.resolve /
+  *     ShardPaths.fresh tags (and their Checkpoint forms),
   *     saveAsTable metastore writes — and require each to be either in
   *     the A-B-A run set or in an AUDITED exemption with a verified
   *     justification. A new query that adopts one of these primitives
@@ -31,7 +32,8 @@ import graft.{SparkEntry, SparkSpec}
   *    family by their specs); a 3× stream choreography per query is
   *    cost without additional coverage.
   *  - FormatQueries sink queries: mechanically VERIFIED here to
-  *    delete their resolved root at the start of every invocation —
+  *    delete their resolved root at the start of every invocation
+  *    (`ShardPaths.fresh`, an explicit delete, or an overwrite) —
   *    self-wiping state cannot survive to answer for the wrong
   *    dataset.
   */
@@ -55,11 +57,11 @@ class TwoDatasetSweepSpec extends SparkSpec {
 
   // hazard-primitive call sites with a LITERAL query tag
   private val tagRe =
-    ("""(?:StageBoundary|ShardPaths\.resolve(?:Checkpoint)?)""" +
+    ("""(?:StageBoundary|ShardPaths\.(?:resolve|fresh)(?:Checkpoint)?)""" +
       """\(\s*[\w.]+\s*,\s*"(q\d+)""").r
   // ... and ALL call sites, tagged or not
   private val anyCallRe =
-    """(?:StageBoundary|ShardPaths\.resolve(?:Checkpoint)?)\(""".r
+    """(?:StageBoundary|ShardPaths\.(?:resolve|fresh)(?:Checkpoint)?)\(""".r
 
   /** Registry key for a query number (q32 -> q32_minhash_neardup). */
   private def keyOf(n: Int): String =
@@ -94,6 +96,10 @@ class TwoDatasetSweepSpec extends SparkSpec {
     val byFile: Seq[(String, Int)] = sources.flatMap { case (name, text) =>
       tagRe.findAllMatchIn(text).map(m => name -> m.group(1).drop(1).toInt)
     }
+    // the sink fixtures are the bulk of the tagged sites: a pattern
+    // that stops matching their call form must fail, not sweep nothing
+    assert(byFile.exists(_._1 == "FormatQueries.scala"),
+      "no tagged ShardPaths call site found in FormatQueries.scala")
     val exempt = scala.collection.mutable.Set.empty[Int]
     val toRun = scala.collection.mutable.Set.empty[Int]
     for ((file, n) <- byFile.distinct) {
@@ -108,10 +114,12 @@ class TwoDatasetSweepSpec extends SparkSpec {
         val next = "def q(\\d+)".r.findAllMatchIn(text)
           .map(_.start).find(_ > defIdx).getOrElse(text.length)
         val body = text.substring(defIdx, next)
-        // either form re-establishes the root from THIS run's dataset:
-        // an explicit root delete, or a truncating overwrite write
-        // (the sink's manifest swap makes old state unreachable)
-        assert(body.contains(
+        // each form re-establishes the root from THIS run's dataset:
+        // ShardPaths.fresh on this query's tag, an explicit root
+        // delete, or a truncating overwrite write (the sink's manifest
+        // swap makes old state unreachable)
+        val freshRe = s"""ShardPaths\\.fresh\\(\\s*[\\w.]+\\s*,\\s*"q$n(?!\\d)""".r
+        assert(freshRe.findFirstIn(body).isDefined || body.contains(
           ".delete(new org.apache.hadoop.fs.Path(root), true)") ||
           body.contains("overwrite = true"),
           s"q$n resolves a ShardPaths root but does not self-wipe it — " +
